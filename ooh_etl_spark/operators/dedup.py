@@ -22,6 +22,7 @@ from ooh_etl_spark.functions.text import (
     tokenize,
     word_shingles_from_tokens,
 )
+from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import parallelize_rows
 
 
@@ -197,10 +198,9 @@ def jaccard_pairs_prefix(
     # checkpoint the shingle sets: they feed the inverted index (which
     # itself feeds the frequency table AND the prefix ranking) and both
     # verification sides — the shingling pass ran 4x otherwise.
-    sh = (
+    sh = materialize(
         _shingle_sets(df, text_col, id_col, n)
         .withColumn("sz", F.size("sh"))
-        .localCheckpoint()
     )
     inv = sh.select("id", "sz", F.explode_outer("sh").alias("shingle"))
     dfreq = inv.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_"))

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ooh_etl_spark.stages import materialize
+
 
 def symmetrize(pairs: DataFrame, src: str, dst: str) -> DataFrame:
     """Both orientations of every edge as (src, dst) — via ONE explode,
@@ -42,12 +44,11 @@ def connected_components(
     # Materialize the edge list once — every iteration joins against it,
     # and without the checkpoint each join would re-derive the (possibly
     # expensive) upstream pair-generation pipeline.
-    edges = symmetrize(pairs, src, dst).distinct().localCheckpoint()
-    labels = (
+    edges = materialize(symmetrize(pairs, src, dst).distinct())
+    labels = materialize(
         edges.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("label", F.col("id"))
-        .localCheckpoint()
     )
     # Each round interleaves one edge-propagation step with one
     # POINTER-JUMPING step (label := label-of-label — Shiloach-Vishkin
@@ -71,7 +72,7 @@ def connected_components(
         parent = labels.select(
             F.col("id").alias("p_id"), F.col("label").alias("p_label")
         )
-        labels = (
+        labels = materialize(
             labels.join(parent, labels.label == parent.p_id, "left")
             .select(
                 "id",
@@ -79,7 +80,6 @@ def connected_components(
                     F.col("label"), F.coalesce(F.col("p_label"), F.col("label"))
                 ).alias("label"),
             )
-            .localCheckpoint()
         )
         new_sum = labels.agg(F.sum("label")).collect()[0][0]
         if new_sum == prev_sum:
@@ -106,7 +106,7 @@ def k_core(
     round costs one degree aggregate + one semi-join of edges against
     the surviving nodes, both keyed shuffles; no step ever materializes
     more than the current induced edge list."""
-    edges = symmetrize(pairs, src, dst).distinct().localCheckpoint()
+    edges = materialize(symmetrize(pairs, src, dst).distinct())
     prev_n = None
     for _ in range(max_iter):
         deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
@@ -115,10 +115,9 @@ def k_core(
         if n == prev_n:
             break
         prev_n = n
-        edges = (
+        edges = materialize(
             edges.join(keep, "src", "left_semi")
             .join(keep.select(F.col("src").alias("dst")), "dst", "left_semi")
-            .localCheckpoint()
         )
     return (
         edges.groupBy("src")
@@ -148,17 +147,16 @@ def pagerank(
     1-row aggregate broadcast back as a literal. max_iter bounds the
     worst case; the residual test usually exits in O(log(1/tol) /
     log(1/d)) rounds."""
-    e = edges.select("src", "dst").distinct().localCheckpoint()
+    e = materialize(edges.select("src", "dst").distinct())
     # endpoint census via explode (one pass over the checkpointed edges,
     # not two union branches)
-    nodes = (
+    nodes = materialize(
         e.select(F.explode(F.array("src", "dst")).alias("node"))
         .distinct()
-        .localCheckpoint()
     )
     n = nodes.count()
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).localCheckpoint()
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n)).localCheckpoint()
+    outdeg = materialize(e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
+    ranks = materialize(nodes.withColumn("rank", F.lit(1.0 / n)))
     base = (1.0 - damping) / n
     for _ in range(max_iter):
         contrib = (
@@ -175,7 +173,7 @@ def pagerank(
             .collect()[0][0]
             or 0.0
         )
-        new_ranks = (
+        new_ranks = materialize(
             nodes.join(contrib, "node", "left")
             .select(
                 "node",
@@ -184,7 +182,6 @@ def pagerank(
                     + damping * (F.coalesce(F.col("inflow"), F.lit(0.0)) + dangling / n)
                 ).alias("rank"),
             )
-            .localCheckpoint()
         )
         residual = (
             ranks.select("node", F.col("rank").alias("old"))
@@ -219,17 +216,16 @@ def sssp(
     join + min-aggregate per round, co-partitioned on node id, scalar
     driver traffic only. Unreachable nodes carry NULL (absent rows)."""
     w = F.col(weight_col) if weight_col else F.lit(1)
-    e = edges.select("src", "dst", w.alias("w")).localCheckpoint()
+    e = materialize(edges.select("src", "dst", w.alias("w")))
     dist = e.sparkSession.createDataFrame([(seed, 0)], "node long, dist long")
     prev_sum = 0
     for _ in range(max_iter):
-        relaxed = (
+        relaxed = materialize(
             e.join(dist, e.src == dist.node)
             .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
             .unionByName(dist)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()
         )
         agg = relaxed.agg(
             F.count(F.lit(1)).alias("n"), F.sum("dist").alias("s")

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ooh_etl_spark.queries.registry import register
+from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_table
 
 
@@ -166,14 +167,13 @@ def q129_funnel_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stage N+1 and its own count, so without the checkpoints the
     # count chain re-ran the whole funnel per stage (audited: 6
     # parquet scans of events in one plan; now 3 — one per stage).
-    s1 = (
+    s1 = materialize(
         ev.filter(F.col("event_type") == "signup")
         .groupBy("user_id")
         .agg(F.min("ts").alias("t1"))
-        .localCheckpoint()
     )
-    s2 = stage(s1, "t1", "click", "t2").localCheckpoint()
-    s3 = stage(s2, "t2", "purchase", "t3").localCheckpoint()
+    s2 = materialize(stage(s1, "t1", "click", "t2"))
+    s3 = materialize(stage(s2, "t2", "purchase", "t3"))
     c1 = s1.agg(F.count(F.lit(1)).alias("n_signup"))
     c2 = s2.agg(F.count(F.lit(1)).alias("n_then_click"))
     c3 = s3.agg(F.count(F.lit(1)).alias("n_then_purchase"))
@@ -799,7 +799,7 @@ def q254_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     mx = ev.agg(F.max("ts").alias("now_ts"))
-    per_user = (
+    per_user = materialize(
         ev.filter(F.col("event_type") == "purchase")
         .crossJoin(F.broadcast(mx))
         .groupBy("user_id", "now_ts")
@@ -818,7 +818,7 @@ def q254_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             "frequency",
             "monetary_c",
         )
-        .localCheckpoint()  # |purchasers| rows; feeds the percentile
+        # |purchasers| rows; feeds the percentile
         # cuts AND segment assignment (purchase rollup ran twice)
     )
     cuts = per_user.agg(
@@ -1014,12 +1014,12 @@ def q288_mix_shift_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # checkpoint the 10-row pivot: it feeds the totals AND the output
     # (the fact aggregate — including its bounds scan — ran twice).
-    w = seg.groupBy("segment").agg(
+    w = materialize(seg.groupBy("segment").agg(
         F.max(F.when(F.col("period") == 0, F.col("n")).otherwise(0)).alias("n0"),
         F.max(F.when(F.col("period") == 1, F.col("n")).otherwise(0)).alias("n1"),
         F.max(F.when(F.col("period") == 0, F.col("rev_c")).otherwise(0)).alias("r0"),
         F.max(F.when(F.col("period") == 1, F.col("rev_c")).otherwise(0)).alias("r1"),
-    ).localCheckpoint()
+    ))
     tot = w.agg(F.sum("n0").alias("tn0"), F.sum("n1").alias("tn1"))
     rate0 = F.col("r0") * 1.0 / F.col("n0")
     return (
@@ -1339,7 +1339,7 @@ def q391_reorder_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("d"),
     ).agg(F.sum(F.round("l_quantity").cast("bigint")).cast("bigint").alias("q"))
-    daily = daily.localCheckpoint()
+    daily = materialize(daily)
     span = daily.agg(
         (F.max("d") - F.min("d") + 1).cast("bigint").alias("n_days")
     )

@@ -16,6 +16,7 @@ from ooh_etl_spark.operators.dedup import (
     simhash_pairs,
 )
 from ooh_etl_spark.queries.registry import register
+from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_table
 
 _DUCK_TOKS = "regexp_split_to_array(lower(trim(text)), '\\s+')"
@@ -276,12 +277,12 @@ def _semdedup(
     # self-join consume it, and without the checkpoint the K-centroid
     # argmin fold (the expensive stage) executed twice (audited: 4
     # parquet scans of embeddings in one plan; now 1).
-    av = assign.select(
+    av = materialize(assign.select(
         "vec_id",
         "e",
         F.sqrt(dot(F.col("e"), F.col("e"))).alias("nrm"),
         "cluster",
-    ).localCheckpoint()
+    ))
     x = av.select(
         "cluster",
         F.col("vec_id").alias("id_a"),
@@ -605,7 +606,7 @@ def q268_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ooh_etl_spark.functions.text import tokenize
 
     toks = docs.select("doc_id", tokenize(F.col("text")).alias("toks"))
-    sh = toks.select(
+    sh = materialize(toks.select(
         "doc_id",
         F.when(
             F.size("toks") >= 3,
@@ -620,7 +621,7 @@ def q268_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(F.array(F.array_join(F.col("toks"), " ")))
         .alias("sh"),
-    ).localCheckpoint()  # shingle sets feed the size table AND both
+    ))  # shingle sets feed the size table AND both
     # inverted-index sides (the tokenize pass ran 4x otherwise)
     sz = sh.select("doc_id", F.size("sh").alias("sz"))
     inv = sh.select("doc_id", F.explode("sh").alias("shingle"))
@@ -899,14 +900,14 @@ def q345_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     # threshold=0.0 keeps every candidate pair (>=1 shared shingle)
-    pairs = (
+    pairs = materialize(
         jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.0)
         .select(
             "id_a",
             "id_b",
             F.round(10000.0 * F.col("jaccard")).cast("bigint").alias("j_bp"),
         )
-        .localCheckpoint()  # one pair computation feeds every threshold
+        # one pair computation feeds every threshold
     )
     n = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     grid = spark.createDataFrame(
@@ -1012,9 +1013,9 @@ def q350_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cut")
     ).collect()[0]
     cut = int(cut_row["cut"])
-    sh = docs.select(
+    sh = materialize(docs.select(
         "doc_id", word_shingles(F.col("text"), 3).alias("sh")
-    ).localCheckpoint()  # shingle sets feed index, probe, and sizes
+    ))  # shingle sets feed index, probe, and sizes
     sz = sh.select("doc_id", F.size("sh").alias("sz"))
     inv = sh.select("doc_id", F.explode("sh").alias("shingle"))
     old = inv.filter(F.col("doc_id") < cut).select(
@@ -1124,7 +1125,7 @@ def q379_sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     idf = tf.groupBy("w").agg(
         F.log(F.lit(float(n_docs)) / F.countDistinct("doc_id")).alias("idf")
     )
-    vec = (
+    vec = materialize(
         tf.join(idf, "w")
         .select(
             "doc_id",
@@ -1132,7 +1133,6 @@ def q379_sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(1000000 * F.col("tf") * F.col("idf")).cast("bigint").alias("x_u"),
         )
         .filter(F.col("x_u") > 0)
-        .localCheckpoint()
     )
     nrm = vec.groupBy("doc_id").agg(
         F.sqrt(
@@ -1220,7 +1220,7 @@ def q392_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = F.split(F.lower(F.col("text")), " ")
     # NOTE: Spark's sequence(1, 0) is DESCENDING, not empty — docs
     # shorter than the shingle width must be filtered BEFORE sequence()
-    sh = (
+    sh = materialize(
         docs.filter(
             F.size(F.split(F.lower(F.col("text")), " ")) >= _SRC_SHINGLE_N
         )
@@ -1235,7 +1235,6 @@ def q392_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("source", F.md5(F.col("g")).alias("h"))
         .distinct()
-        .localCheckpoint()
     )
     per_src = sh.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_shingles")
@@ -1697,10 +1696,9 @@ def _leakage_audit(spark: SparkSession, docs: DataFrame) -> DataFrame:
 
     from ooh_etl_spark.operators.graph import connected_components
 
-    pairs = (
+    pairs = materialize(
         jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.5)
         .select("id_a", "id_b")
-        .localCheckpoint()
     )
     cc = connected_components(pairs)
     xcl = F.min("doc_id").over(Window.partitionBy("text"))
@@ -1710,7 +1708,7 @@ def _leakage_audit(spark: SparkSession, docs: DataFrame) -> DataFrame:
             "int"
         )
 
-    asg = (
+    asg = materialize(
         docs.select("doc_id", xcl.alias("xcl"))
         .join(cc, F.col("doc_id") == F.col("id"), "left")
         .select(
@@ -1724,7 +1722,6 @@ def _leakage_audit(spark: SparkSession, docs: DataFrame) -> DataFrame:
         # side (non-cached subtrees are re-executed per consumer — the
         # round-6 union-recompute audit class). The checkpointed frame
         # is narrow: doc_id + three ints.
-        .localCheckpoint()
     )
     a = asg.select(
         F.col("doc_id").alias("id_a"),
@@ -2096,10 +2093,9 @@ def q426_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ooh_etl_spark.operators.graph import connected_components
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = (
+    pairs = materialize(
         jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.5)
         .select("id_a", "id_b")
-        .localCheckpoint()
     )
     cc = connected_components(pairs)
     members = cc.join(
@@ -2594,7 +2590,7 @@ def q442_softdedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("toks") >= _SD_N,
         F.sequence(F.lit(1), F.size("toks") - (_SD_N - 1)),
     ).otherwise(F.array().cast("array<int>"))
-    g = t.select(
+    g = materialize(t.select(
         "doc_id",
         "source",
         F.explode(
@@ -2605,7 +2601,7 @@ def q442_softdedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
         ).alias("gram"),
-    ).localCheckpoint()  # gram stream feeds the freq table AND the join back
+    ))  # gram stream feeds the freq table AND the join back
     freq = g.groupBy("gram").agg(F.count(F.lit(1)).alias("c"))
     per_doc = (
         g.join(freq, "gram")
@@ -2689,12 +2685,12 @@ def q450_norm_dedup_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     al = F.regexp_replace(
         F.regexp_replace(lo, "[^a-z0-9 ]", ""), r"\s+", " "
     )
-    n = docs.select(
+    n = materialize(docs.select(
         F.col("text").alias("raw"),
         lo.alias("lo"),
         ws.alias("ws"),
         al.alias("al"),
-    ).localCheckpoint()  # four rungs read the same normalized frame
+    ))  # four rungs read the same normalized frame
 
     def rung(i, name, col):
         return n.agg(
@@ -3837,10 +3833,10 @@ def q477_prototypicality_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("a.cid").alias("cid"),
         F.expr(f"a.d2 div {_D4_BUCKET}").alias("bucket"),
     )
-    c3 = (
+    c3 = materialize(
         asn.groupBy("cid", "bucket", "label")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()  # <= K x buckets x labels rows; feeds the
+        # <= K x buckets x labels rows; feeds the
         # threshold derivation AND the final census — without the cut
         # each branch would re-run the corpus assignment pass
     )

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ooh_etl_spark.queries.registry import register
+from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_table
 
 _CONV_DAYS = 7
@@ -731,12 +732,12 @@ def q242_leakage_safe_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min(F.col("ts").cast("date")).alias("lo"),
         F.max(F.col("ts").cast("date")).alias("hi"),
     )
-    cut = bounds.select(
+    cut = materialize(bounds.select(
         F.date_add(
             F.col("lo"),
             F.floor(F.datediff(F.col("hi"), F.col("lo")) / 2.0).cast("int"),
         ).alias("t0")
-    ).localCheckpoint()  # 1 row; both disjoint passes consume it (the
+    ))  # 1 row; both disjoint passes consume it (the
     # bounds scan would otherwise run once per pass)
     tagged = ev.crossJoin(F.broadcast(cut))
     feat = (
@@ -818,7 +819,7 @@ def q250_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint the distinct (user, type) relation: it feeds the
     # degree table and BOTH self-join sides (the distinct shuffle ran
     # 4x otherwise).
-    ut = ev.select("user_id", "event_type").distinct().localCheckpoint()
+    ut = materialize(ev.select("user_id", "event_type").distinct())
     deg = ut.groupBy("event_type").agg(F.count(F.lit(1)).alias("d"))
     a = ut.select("user_id", F.col("event_type").alias("ta"))
     b = ut.select("user_id", F.col("event_type").alias("tb"))
@@ -1187,7 +1188,7 @@ def q273_revenue_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = ev.filter(F.col("event_type") == "purchase")
     wk = F.date_trunc("week", F.col("ts"))
     fp = p.groupBy("user_id").agg(F.min(wk).alias("cohort_wk"))
-    rev = (
+    rev = materialize(
         p.join(fp, "user_id")
         .select(
             "cohort_wk",
@@ -1201,7 +1202,7 @@ def q273_revenue_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("cohort_wk", "week_offset")
         .agg(F.sum("v_c").alias("rev_c"))
-        .localCheckpoint()  # (cohort, offset) rows; feeds the week-0
+        # (cohort, offset) rows; feeds the week-0
         # base AND the final join (the purchase rollup ran twice)
     )
     base = rev.filter(F.col("week_offset") == 0).select(
@@ -1392,7 +1393,7 @@ def q304_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sides of the marginal-contribution join (and phi below feeds the
     # efficiency total) — without it each consumer re-runs the corpus
     # user-mask rollup (audited: 4 user-shuffles in the plan).
-    vs = vs.localCheckpoint()
+    vs = materialize(vs)
     ch = spark.createDataFrame(
         [(1, "view"), (2, "click"), (4, "signup"), (8, "error")],
         "bit int, channel string",
@@ -1406,12 +1407,12 @@ def q304_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(6.0)
         / 24.0
     )
-    phi = (
+    phi = materialize(
         ch.join(vs0, F.expr("(s0 & bit) = 0"))
         .join(vs1, F.expr("s1 = s0 + bit"))
         .groupBy("channel")
         .agg(F.sum(w * (F.col("v1") - F.col("v0"))).alias("phi"))
-    ).localCheckpoint()  # 4 rows; feeds both the output and the total
+    )  # 4 rows; feeds both the output and the total
     tot = phi.agg(F.sum("phi").alias("t"))
     return (
         phi.crossJoin(F.broadcast(tot))
@@ -1477,7 +1478,7 @@ def q344_coec_position_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     examination-model correction (PBM weights swap in for ctr)."""
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    o = ev.select(
+    o = materialize(ev.select(
         "event_type",
         F.least(
             F.row_number().over(w).cast("bigint"), F.lit(_COEC_MAX_POS)
@@ -1485,7 +1486,7 @@ def q344_coec_position_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("event_type") == "click", 1).otherwise(0).alias(
             "is_click"
         ),
-    ).localCheckpoint()  # the positioned stream feeds the per-position
+    ))  # the positioned stream feeds the per-position
     # CTR table AND the segment aggregate (one rank window, not two)
     pctr = o.groupBy("pos").agg(
         (F.sum("is_click") * 1.0 / F.count(F.lit(1))).alias("ctr")
@@ -1570,11 +1571,11 @@ def q347_markov_heldout_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same broadcast scores a live stream per micro-batch."""
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
+    seq = materialize(ev.select(
         (F.col("user_id") % 2).alias("fold"),
         "event_type",
         F.lead("event_type").over(w).alias("next_type"),
-    ).localCheckpoint()  # ONE window pass feeds train, vocab, and test
+    ))  # ONE window pass feeds train, vocab, and test
     train = (
         seq.filter((F.col("fold") == 0) & F.col("next_type").isNotNull())
         .groupBy("event_type", "next_type")

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ooh_etl_spark.queries.registry import register
+from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_table
 
 _BUCKETS = 10
@@ -830,11 +831,10 @@ def q211_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the observation build, `obs` feeds the total count AND the life
     # table — without the checkpoints the funnel re-ran per consumer
     # (audited: 6 parquet scans of events in one plan; now 3).
-    s = (
+    s = materialize(
         ev.filter(F.col("event_type") == "signup")
         .groupBy("user_id")
         .agg(F.min("ts").alias("signup_ts"))
-        .localCheckpoint()
     )
     m = ev.agg(F.max("ts").alias("max_ts"))
     p = (
@@ -844,7 +844,7 @@ def q211_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.min("ts").alias("conv_ts"))
     )
-    obs = (
+    obs = materialize(
         s.join(p, "user_id", "left")
         .crossJoin(F.broadcast(m))
         .select(
@@ -859,7 +859,6 @@ def q211_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("t_h"),
             F.when(F.col("conv_ts").isNotNull(), 1).otherwise(0).alias("ev"),
         )
-        .localCheckpoint()
     )
     n_total = obs.agg(F.count(F.lit(1)).alias("n_total"))
     km = obs.groupBy("t_h").agg(
@@ -1195,9 +1194,9 @@ def q235_diff_in_differences(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint the 4-cell table: the four pick() consumers would
     # otherwise each re-run the corpus aggregate (audited: 8 parquet
     # scans of events in one plan).
-    cell = tagged.groupBy("arm", "post").agg(
+    cell = materialize(tagged.groupBy("arm", "post").agg(
         F.count(F.lit(1)).alias("n"), F.sum("vc").alias("sx")
-    ).localCheckpoint()
+    ))
 
     def pick(arm: int, post: int, pre: str):
         return (
@@ -1669,9 +1668,9 @@ def q289_novelty_effect_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("user_id") % 2).alias("arm"),
         F.round(F.col("value") * 100).cast("bigint").alias("vc"),
     )
-    cell = wk.groupBy("w", "arm").agg(
+    cell = materialize(wk.groupBy("w", "arm").agg(
         F.count(F.lit(1)).alias("n"), F.sum("vc").alias("sx")
-    ).localCheckpoint()  # weeks x 2 rows; feeds both arm projections
+    ))  # weeks x 2 rows; feeds both arm projections
     # (the fact aggregate — including its min-week scan — ran twice)
     a = cell.filter(F.col("arm") == 0).select(
         "w", (F.col("sx") * 1.0 / F.col("n")).alias("ma")
@@ -1835,7 +1834,7 @@ def q300_eb_rate_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
-    seg = (
+    seg = materialize(
         orders.join(cust, orders.o_custkey == cust.c_custkey)
         .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
         .groupBy(F.col("n_name").alias("segment"))
@@ -1847,7 +1846,7 @@ def q300_eb_rate_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("conv"),
         )
-        .localCheckpoint()  # |segments| rows; feeds pooled mean,
+        # |segments| rows; feeds pooled mean,
         # between-variance, and the shrunk output — without it the
         # star join re-ran per consumer (audited: 3 scans per table)
     )
@@ -2044,10 +2043,9 @@ def q318_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     # set, class sizes, global histogram, and total all derive from
     # it — computing each from `d` re-scanned the corpus per consumer
     # (audited: 4 parquet scans of documents in one plan; now 1).
-    cell = (
+    cell = materialize(
         d.groupBy("lang", "source", "b")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()
     )
     buckets = cell.select("b").distinct()
     n_buckets = buckets.count()
@@ -2186,7 +2184,7 @@ def q321_matching_att(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate pair set."""
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
-    spend = (
+    spend = materialize(
         cust.select(F.col("c_custkey").alias("k"))
         .join(
             orders.groupBy(F.col("o_custkey").alias("k")).agg(
@@ -2198,7 +2196,7 @@ def q321_matching_att(spark: SparkSession, sf_dir: str) -> DataFrame:
             "left",
         )
         .select("k", F.coalesce("s", F.lit(0)).cast("bigint").alias("out_c"))
-        .localCheckpoint()  # |customers| rows; feeds BOTH the treated
+        # |customers| rows; feeds BOTH the treated
         # and matched-control outcome joins (the orders rollup would
         # otherwise run twice)
     )
@@ -2517,14 +2515,14 @@ def q356_copeland_tournament(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded, never event-rows; the win matrix is
     |items|^2."""
     ev = load_table(spark, sf_dir, "events")
-    day = ev.groupBy(
+    day = materialize(ev.groupBy(
         F.col("event_type").alias("item"), F.col("ts").cast("date").alias("d")
     ).agg(
         F.sum(F.round(F.col("value") * 100).cast("bigint"))
         .cast("bigint")
         .alias("s"),
         F.count(F.lit(1)).alias("n"),
-    ).localCheckpoint()  # the day table feeds both duel sides
+    ))  # the day table feeds both duel sides
     a = day.select(
         F.col("item").alias("ia"), "d", F.col("s").alias("sa"),
         F.col("n").alias("na"),
@@ -2594,14 +2592,14 @@ def q357_bradley_terry_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: everything after the day rollup runs on the
     |items|^2 win matrix; the duel generation is the q356 plan."""
     ev = load_table(spark, sf_dir, "events")
-    day = ev.groupBy(
+    day = materialize(ev.groupBy(
         F.col("event_type").alias("item"), F.col("ts").cast("date").alias("d")
     ).agg(
         F.sum(F.round(F.col("value") * 100).cast("bigint"))
         .cast("bigint")
         .alias("s"),
         F.count(F.lit(1)).alias("n"),
-    ).localCheckpoint()
+    ))
     a = day.select(
         F.col("item").alias("ia"), "d", F.col("s").alias("sa"),
         F.col("n").alias("na"),
@@ -2617,9 +2615,9 @@ def q357_bradley_terry_step(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("ia") < F.col("ib"))
         )
     )
-    wins = duel.groupBy(
+    wins = materialize(duel.groupBy(
         F.col("ia").alias("wi"), F.col("ib").alias("li")
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("w")).localCheckpoint()
+    ).agg(F.count(F.lit(1)).cast("bigint").alias("w")))
     pairs = wins.select(
         F.col("wi").alias("i"), F.col("li").alias("j"), "w"
     ).unionByName(
@@ -2627,7 +2625,9 @@ def q357_bradley_terry_step(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("li").alias("i"), F.col("wi").alias("j"), F.lit(0).cast("bigint").alias("w")
         )
     )
-    agg = pairs.groupBy("i", "j").agg(F.sum("w").cast("bigint").alias("w_ij")).localCheckpoint()
+    agg = materialize(
+        pairs.groupBy("i", "j").agg(F.sum("w").cast("bigint").alias("w_ij"))
+    )
     rev = agg.select(
         F.col("i").alias("j2"), F.col("j").alias("i2"), F.col("w_ij").alias("w_ji")
     )
@@ -2878,7 +2878,7 @@ def q368_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.min("ts").alias("conv_ts"))
     )
-    obs = (
+    obs = materialize(
         s.join(p, "user_id", "left")
         .crossJoin(F.broadcast(m))
         .select(
@@ -2894,7 +2894,6 @@ def q368_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("t_h"),
             F.when(F.col("conv_ts").isNotNull(), 1).otherwise(0).alias("ev"),
         )
-        .localCheckpoint()
     )
     tot = obs.agg(
         F.sum(F.when(F.col("g") == 1, 1).otherwise(0)).cast("bigint").alias("n1"),
@@ -3018,14 +3017,14 @@ def q393_fwl_partial_out(spark: SparkSession, sf_dir: str) -> DataFrame:
     round the same two passes."""
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
-    d = orders.join(
+    d = materialize(orders.join(
         F.broadcast(cust.select("c_custkey", "c_acctbal", "c_nationkey")),
         F.col("o_custkey") == F.col("c_custkey"),
     ).select(
         F.round(F.col("c_acctbal") * 100).cast("bigint").alias("x"),
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("y"),
         F.col("c_nationkey").cast("bigint").alias("z"),
-    ).localCheckpoint()
+    ))
     zm = d.groupBy("z").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("x").cast("bigint").alias("sx"),
@@ -3425,20 +3424,20 @@ def q410_jackknife_ratio_se(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 25-row group frame feeds tot, the replicates, and the final
     # select: checkpoint so the corpus agg runs ONCE (the q296-class
     # multi-consumer rule)
-    g = o.groupBy("nk").agg(
+    g = materialize(o.groupBy("nk").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("vc").cast("bigint").alias("s"),
-    ).localCheckpoint()
+    ))
     tot = g.agg(
         F.sum("n").cast("bigint").alias("nn"),
         F.sum("s").cast("bigint").alias("ss"),
         F.count(F.lit(1)).cast("bigint").alias("gg"),
     )
-    tot = tot.localCheckpoint()
-    loo = g.crossJoin(F.broadcast(tot)).select(
+    tot = materialize(tot)
+    loo = materialize(g.crossJoin(F.broadcast(tot)).select(
         "nk",
         ((F.col("ss") - F.col("s")) * 1.0 / (F.col("nn") - F.col("n"))).alias("r_i"),
-    ).localCheckpoint()
+    ))
     rbar = loo.agg(F.avg("r_i").alias("rbar"))
     jk = (
         loo.crossJoin(F.broadcast(rbar))

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ooh_etl_spark.queries.registry import register
+from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_table, load_tables
 
 _LAT_K = 2
@@ -250,12 +251,11 @@ def q173_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint: the edge list is consumed by the degree census AND
     # the orientation join — without it each consumer re-runs the
     # order-keyed self-join (the q296 Union-recompute class).
-    e = (
+    e = materialize(
         a.join(b, "k")
         .filter(F.col("u") < F.col("v"))
         .select("u", "v")
         .distinct()
-        .localCheckpoint()
     )
 
     deg = (
@@ -274,11 +274,11 @@ def q173_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint: the oriented edge list feeds three consumers (both
     # wedge legs + the closure probe); without it each re-runs the
     # degree joins.
-    oriented = ed.select(
+    oriented = materialize(ed.select(
         F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
         F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
         F.when(u_first, F.col("deg_v")).otherwise(F.col("deg_u")).alias("deg_dst"),
-    ).localCheckpoint()
+    ))
     # Wedges at the low end: two out-edges of src, legs ordered by the
     # dst (deg, id) rank so the closing edge's orientation is known.
     o1 = oriented.select("src", F.col("dst").alias("x"), F.col("deg_dst").alias("dx"))
@@ -499,7 +499,7 @@ def q191_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode symmetrization (one execution of the co-purchase self-
     # join, not two union branches) + checkpoint: `und` feeds the
     # degree census AND both wedge legs.
-    und = (
+    und = materialize(
         e.select(
             F.explode(
                 F.array(
@@ -509,7 +509,6 @@ def q191_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("e")
         )
         .select("e.z", "e.x")
-        .localCheckpoint()
     )
     deg = und.groupBy(F.col("z").alias("n")).agg(F.count(F.lit(1)).alias("d"))
     wa = und.select("z", F.col("x").alias("part_a"))
@@ -635,7 +634,7 @@ def _capped_link_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("u", "v")
         .agg(F.count(F.lit(1)).alias("w"))
     )
-    und = (
+    und = materialize(
         ew.select(
             F.explode(
                 F.array(
@@ -649,7 +648,6 @@ def _capped_link_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("e")
         )
         .select("e.z", "e.x", "e.w")
-        .localCheckpoint()
     )
     deg = und.groupBy(F.col("z").alias("n")).agg(F.count(F.lit(1)).alias("d"))
     rn = F.row_number().over(
@@ -879,12 +877,11 @@ def q255_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # degree census + symmetrization via explode, not self-unions
     # (the q296 Union-recompute class — each branch re-ran the
     # co-purchase self-join).
-    e0 = (
+    e0 = materialize(
         a.join(b, "k")
         .filter(F.col("u") < F.col("v"))
         .select("u", "v")
         .distinct()
-        .localCheckpoint()
     )
     deg = (
         e0.select(F.explode(F.array("u", "v")).alias("node"))
@@ -967,10 +964,9 @@ def q333_hits_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fixed unroll for the q116-style checkpointed loop."""
     li = load_table(spark, sf_dir, "lineitem")
     # checkpoint: the edge list feeds all three propagation joins
-    items = (
+    items = materialize(
         li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
         .distinct()
-        .localCheckpoint()
     )
     a1 = items.groupBy("p").agg(F.count(F.lit(1)).cast("bigint").alias("a"))
     h1 = (
@@ -978,11 +974,11 @@ def q333_hits_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o")
         .agg(F.sum("a").cast("bigint").alias("h"))
     )
-    a2 = (
+    a2 = materialize(
         items.join(h1, "o")
         .groupBy("p")
         .agg(F.sum("h").cast("bigint").alias("a2"))
-        .localCheckpoint()  # feeds the max AND the output
+        # feeds the max AND the output
     )
     mx = a2.agg(F.max("a2").alias("m"))
     return (
@@ -1057,20 +1053,19 @@ def q354_label_spreading(spark: SparkSession, sf_dir: str) -> DataFrame:
     items = li.select("l_orderkey", "l_partkey").distinct()
     a = items.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("u"))
     b = items.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("v"))
-    e = (
+    e = materialize(
         a.join(b, "k")
         .filter(F.col("u") != F.col("v"))
         .select("u", "v")
         .distinct()
-        .localCheckpoint()  # the edge list feeds the vote join AND the
+        # the edge list feeds the vote join AND the
         # (implicit) seed-side anti-join
     )
-    seeds = (
+    seeds = materialize(
         li.select(F.col("l_partkey").alias("node"))
         .distinct()
         .filter(F.col("node") % _LS_SEED_MOD == 0)
         .select("node", (F.col("node") % 3).alias("label"))
-        .localCheckpoint()
     )
     votes = (
         e.join(seeds.select(F.col("node").alias("v"), "label"), "v")
@@ -1169,16 +1164,15 @@ def q374_copurchase_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
     a = op.select("ok", F.col("pk").alias("pa"))
     b = op.select(F.col("ok").alias("ok2"), F.col("pk").alias("pb"))
-    e = (
+    e = materialize(
         a.join(b, (F.col("ok") == F.col("ok2")) & (F.col("pa") < F.col("pb")))
         .groupBy("pa", "pb")
         .agg(F.count(F.lit(1)).cast("bigint").alias("w"))
-        .localCheckpoint()
     )
-    comm = part.select(
+    comm = materialize(part.select(
         F.col("p_partkey").alias("pk"),
         F.element_at(F.split(F.col("p_name"), " "), 2).alias("c"),
-    ).localCheckpoint()
+    ))
     m = e.agg(F.sum("w").cast("bigint").alias("m"))
     deg = (
         e.select(F.col("pa").alias("pk"), "w")

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ooh_etl_spark.queries.registry import register
+from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_table
 
 # --- q166: blocked entity-resolution candidates -------------------------
@@ -91,12 +92,11 @@ def q166_entity_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
     # blocking passes consume it, and without the checkpoint the
     # distinct-shuffle re-ran 4x (audited: 4 parquet scans of part in
     # one plan; now 1).
-    n = (
+    n = materialize(
         p.groupBy(F.col("p_name").alias("nm"))
         .agg(F.count(F.lit(1)).alias("support"))
         .withColumn("b1", F.split(F.col("nm"), " ")[0])
         .withColumn("b2", F.element_at(F.split(F.col("nm"), " "), -1))
-        .localCheckpoint()
     )
 
     def pass_pairs(key: str) -> DataFrame:
@@ -358,7 +358,7 @@ def q194_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # core-core edges, border assignment), each of which would
     # otherwise re-derive the radius join (audited: 41 parquet scans
     # in the un-checkpointed physical plan).
-    und = (
+    und = materialize(
         pairs.select(
             F.explode(
                 F.array(
@@ -368,7 +368,6 @@ def q194_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("e")
         )
         .select("e.n", "e.m")
-        .localCheckpoint()
     )
     deg = und.groupBy("n").agg(F.count(F.lit(1)).alias("d"))
     core = deg.filter(F.col("d") >= _DB_MINPTS - 1).select("n")
@@ -584,10 +583,9 @@ def q307_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # derives from it instead of re-scanning; the variant set is
     # checkpointed because BOTH self-join sides consume it (audited: 4
     # parquet scans of customer in one plan; now 2).
-    blocks = (
+    blocks = materialize(
         names.groupBy(F.substring("name", 1, _BLK_PREFIX).alias("blk"))
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()
     )
     n_tot = blocks.agg(F.sum("c").cast("bigint").alias("n"))
     cand = blocks.agg(
@@ -598,7 +596,7 @@ def q307_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("n_cand")
     )
-    v = names.select(
+    v = materialize(names.select(
         "name",
         F.explode(
             F.expr(
@@ -607,7 +605,7 @@ def q307_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "substr(name, i + 1, length(name)))), name)"
             )
         ).alias("variant"),
-    ).distinct().localCheckpoint()
+    ).distinct())
     a = v.select(F.col("name").alias("na"), "variant")
     b = v.select(F.col("name").alias("nb"), "variant")
     truth = (
@@ -949,9 +947,9 @@ def q361_jaro_winkler_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = part.select(
         F.explode(F.split(F.col("p_name"), " ")).alias("w")
     )
-    use = words.groupBy("w").agg(
+    use = materialize(words.groupBy("w").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_parts")
-    ).localCheckpoint()
+    ))
     # r13 opt: carry each side's usage count THROUGH the vocab pair
     # join instead of re-attaching it with two more broadcast joins
     # (and their two broadcast-build jobs) after the UDF filter — the

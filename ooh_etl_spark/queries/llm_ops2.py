@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ooh_etl_spark.functions.text import tokenize
 from ooh_etl_spark.queries.registry import register
+from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_table, parallelize_rows
 
 _CHUNK = 8  # tokens per chunk
@@ -963,9 +964,9 @@ def q359_length_bucket_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     from ooh_etl_spark.functions.text import tokenize
 
-    d = docs.select(
+    d = materialize(docs.select(
         "doc_id", F.size(tokenize(F.col("text"))).alias("n_toks")
-    ).localCheckpoint()  # the length table feeds both batchings
+    ))  # the length table feeds both batchings
     wa_w = Window.orderBy("doc_id")
     wb_w = Window.orderBy("n_toks", "doc_id")
 

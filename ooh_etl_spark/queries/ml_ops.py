@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ooh_etl_spark.queries.registry import register
+from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_table, parallelize_rows
 
 _DIM = 64
@@ -428,16 +429,15 @@ def q188_naive_bayes_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from `tok` re-ran the corpus tokenization per consumer (audited:
     # 10 parquet scans of documents in one plan; now 2 tokenizing
     # passes: one to train, one to score).
-    ct = (
+    ct = materialize(
         tok.groupBy(F.col("actual").alias("lang"), "token")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint()
     )
     nl = ct.groupBy("lang").agg(F.sum("cnt").alias("n_l"))
     v = ct.agg(F.countDistinct("token").alias("v"))
     d = docs.agg(F.count(F.lit(1)).alias("d"))
     dl = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("d_l"))
-    params = (
+    params = materialize(
         nl.join(dl, "lang")
         .crossJoin(F.broadcast(v))
         .crossJoin(F.broadcast(d))
@@ -452,7 +452,7 @@ def q188_naive_bayes_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("default_micro"),
         )
-        .localCheckpoint()  # |classes| rows; feeds scoring AND loglik
+        # |classes| rows; feeds scoring AND loglik
     )
     ll = ct.join(params, "lang").select(
         "lang",
@@ -1391,7 +1391,7 @@ def q294_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel PAVA merge in applyInPandas, which this query
     deliberately avoids needing."""
     s = _scored(spark, sf_dir)
-    b = (
+    b = materialize(
         s.select(
             F.least(F.floor(F.col("p") * 10).cast("bigint"), F.lit(9)).alias(
                 "bin"
@@ -1400,7 +1400,7 @@ def q294_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("bin")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("y").cast("bigint").alias("pos"))
-        .localCheckpoint()  # 10 rows; feeds cumsums, bin rows, output
+        # 10 rows; feeds cumsums, bin rows, output
     )
     wc = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
     c = b.select(
@@ -1527,12 +1527,12 @@ def q298_conformal_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     # interval radii): each feeds two consumers, and without the
     # checkpoints the corpus aggregate re-ran per consumer (audited:
     # 7 parquet scans of events in one plan; now 3).
-    pred = ev.groupBy("event_type").agg(
+    pred = materialize(ev.groupBy("event_type").agg(
         F.sum(F.when(F.col("is_cal"), F.col("vc"))).cast("bigint").alias("s_cal"),
         F.sum(F.when(F.col("is_cal"), 1).otherwise(0))
         .cast("bigint")
         .alias("n_cal"),
-    ).localCheckpoint()
+    ))
     res = ev.join(pred, "event_type").select(
         "event_type",
         "event_id",
@@ -1551,10 +1551,10 @@ def q298_conformal_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_cal",
         F.row_number().over(wr).alias("rk"),
     )
-    radius = ranked.filter(
+    radius = materialize(ranked.filter(
         F.col("rk")
         == F.ceil(_CONF_LEVEL_BP / 10000.0 * (F.col("n_cal") + 1)).cast("bigint")
-    ).select("event_type", F.col("r_e4").alias("rad_e4")).localCheckpoint()
+    ).select("event_type", F.col("r_e4").alias("rad_e4")))
     cov = (
         res.filter(~F.col("is_cal"))
         .join(radius, "event_type")
@@ -1646,10 +1646,9 @@ def q303_ips_offline_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # checkpoint the <=20-row cell table: it feeds the arm totals, the
     # grand total, and the weighted sums (3 corpus scans otherwise).
-    cells = (
+    cells = materialize(
         lg.groupBy("arm", "r", "m")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()
     )
     arms = cells.groupBy("arm").agg(F.sum("c").alias("na"))
     tot = cells.agg(F.sum("c").alias("n"))
@@ -1900,10 +1899,10 @@ def q343_bcubed_cluster_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     asg = emb.crossJoin(F.broadcast(cagg)).select(
         "label", argmin["cid"].alias("cluster")
     )
-    cell = (
+    cell = materialize(
         asg.groupBy("cluster", "label")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .localCheckpoint()  # contingency feeds 3 rollups + the metric
+        # contingency feeds 3 rollups + the metric
     )
     cs = cell.groupBy("cluster").agg(F.sum("n").cast("bigint").alias("nc"))
     ls = cell.groupBy("label").agg(F.sum("n").cast("bigint").alias("nl"))
@@ -1994,10 +1993,10 @@ def q355_woe_information_value(spark: SparkSession, sf_dir: str) -> DataFrame:
             "y"
         ),
     )
-    cell = d.groupBy("bin").agg(
+    cell = materialize(d.groupBy("bin").agg(
         F.sum("y").cast("bigint").alias("pos"),
         F.sum(1 - F.col("y")).cast("bigint").alias("neg"),
-    ).localCheckpoint()  # 8 rows; feeds totals AND the WOE projection
+    ))  # 8 rows; feeds totals AND the WOE projection
     tot = cell.agg(
         F.sum("pos").cast("bigint").alias("tp"),
         F.sum("neg").cast("bigint").alias("tn"),
@@ -2081,9 +2080,9 @@ def q360_best_of_n_reward(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = ev.filter(F.col("event_type") == "purchase").select(
         F.round(F.col("value") * 100).cast("bigint").alias("v_c")
     )
-    hist = r.groupBy("v_c").agg(
+    hist = materialize(r.groupBy("v_c").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
-    ).localCheckpoint()  # feeds the total AND the cumulative window
+    ))  # feeds the total AND the cumulative window
     tot = hist.agg(F.sum("c").cast("bigint").alias("n"))
     wc = Window.orderBy("v_c").rowsBetween(Window.unboundedPreceding, 0)
     wp = Window.orderBy("v_c").rowsBetween(Window.unboundedPreceding, -1)
@@ -2193,10 +2192,9 @@ def q364_doubly_robust_ope(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0)
         .alias("m"),
     )
-    cells = (
+    cells = materialize(
         lg.groupBy("x", "arm", "r", "m")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()
     )
     q = cells.groupBy("x", "arm").agg(
         (F.sum(F.col("c") * F.col("r")) * 1.0 / F.sum("c")).alias("qhat"),
@@ -2332,10 +2330,10 @@ def q385_mdlp_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     cascade is this query re-run per accepted interval — depth
     bounded, each level one pass."""
     orders = load_table(spark, sf_dir, "orders")
-    x = orders.select(
+    x = materialize(orders.select(
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("v"),
         F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0).alias("y"),
-    ).localCheckpoint()
+    ))
     # Spark requires a foldable percentage: compute all nine deciles in
     # ONE aggregate, then stack the literal columns into (d, t) rows.
     dec_aggs = [
@@ -2501,7 +2499,7 @@ def q395_pca_power_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode(F.col("embedding")).alias("j", "xj"),
         F.col("xi"),
     )
-    g = cells.groupBy("i", "j").agg(
+    g = materialize(cells.groupBy("i", "j").agg(
         F.sum(
             F.floor(
                 F.col("xi").cast("double") * F.col("xj").cast("double") * 1000000000
@@ -2509,13 +2507,13 @@ def q395_pca_power_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("bigint")
         .alias("gn")
-    ).localCheckpoint()
+    ))
     v1 = g.groupBy("i").agg(F.sum("gn").cast("bigint").alias("v"))
     m1 = v1.agg(F.max(F.abs(F.col("v"))).alias("mx"))
-    v1n = v1.crossJoin(F.broadcast(m1)).select(
+    v1n = materialize(v1.crossJoin(F.broadcast(m1)).select(
         "i", F.round(1000000.0 * F.col("v") / F.col("mx")).cast("bigint").alias("vn")
-    ).localCheckpoint()
-    v2 = (
+    ))
+    v2 = materialize(
         g.join(
             F.broadcast(v1n.select(F.col("i").alias("jj"), "vn")),
             F.col("j") == F.col("jj"),
@@ -2528,7 +2526,6 @@ def q395_pca_power_step(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("v")
         )
-        .localCheckpoint()
     )
     ray = (
         v1n.join(v2, "i")

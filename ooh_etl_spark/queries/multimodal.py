@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from ooh_etl_spark.operators.multimodal import attach_payload, extract_features
 from ooh_etl_spark.queries.registry import register
+from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_table
 
 
@@ -840,9 +841,9 @@ def q332_image_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows.append((did, lo, hi))
             yield pd.DataFrame(rows, columns=["doc_id", "hash_lo", "hash_hi"])
 
-    h = docs.mapInPandas(
+    h = materialize(docs.mapInPandas(
         op, schema="doc_id long, hash_lo long, hash_hi long"
-    ).localCheckpoint()  # hash table feeds both banded-join sides
+    ))  # hash table feeds both banded-join sides
     bands = h.select(
         "doc_id",
         "hash_lo",

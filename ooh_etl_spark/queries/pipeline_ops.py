@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ooh_etl_spark.functions.text import tokenize
 from ooh_etl_spark.queries.registry import register
+from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_table, parallelize_rows
 
 # One SQL text, two engines: ANSI-only subset (no engine-specific
@@ -530,8 +531,9 @@ def q433_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-bucket) table — the estimator's whole point is that
     corpus selection runs at hashed-feature, not vocabulary, width.
 
-    Bigram sequence is guarded for 1-token docs (the q428 ANSI-mode
-    lesson: sequence(1, 0) descends)."""
+    Bigrams come from one posexplode of the token array, kept only
+    where ``i < size(toks) - 1`` so a position pairs with a successor:
+    0- and 1-token docs yield no bigram rather than a bogus one."""
     from ooh_etl_spark.functions.text import tokenize
 
     docs = load_table(spark, sf_dir, "documents")
@@ -547,7 +549,7 @@ def q433_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of the Generate. posexplode_outer's 0-based i pairs (i, i+1) —
     # the same multiset as the old 1-based (i-1, i); 0/1-token docs
     # drop on the same null/size guards as before.
-    dbc = (
+    dbc = materialize(
         d.select(
             "doc_id",
             "source",
@@ -575,7 +577,7 @@ def q433_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("doc_id", "source", "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint()  # feeds the bucket models AND the scorer
+        # feeds the bucket models AND the scorer
     )
     stats = dbc.groupBy("bucket").agg(
         F.sum("cnt").alias("c_all"),
@@ -667,11 +669,11 @@ def q435_token_budget_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ooh_etl_spark.functions.text import tokenize
 
     docs = load_table(spark, sf_dir, "documents")
-    s = (
+    s = materialize(
         docs.select("source", F.size(tokenize(F.col("text"))).alias("n"))
         .groupBy("source")
         .agg(F.sum("n").cast("bigint").alias("tokens"))
-        .localCheckpoint()  # |sources| rows; feeds the total AND the alloc
+        # |sources| rows; feeds the total AND the alloc
     )
     tot = s.agg(
         F.sum("tokens").cast("bigint").alias("corpus"),
@@ -989,7 +991,7 @@ def q453_doremi_mixture_step(spark: SparkSession, sf_dir: str) -> DataFrame:
             "u_micro"
         ),
     )
-    src = (
+    src = materialize(
         st.join(u, "term")
         .groupBy("source")
         .agg(
@@ -999,7 +1001,7 @@ def q453_doremi_mixture_step(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("xent_micro"),
             F.sum(F.expr("m * u_micro")).alias("wsum"),
         )
-        .localCheckpoint()  # |sources| rows feed three scalar reuses
+        # |sources| rows feed three scalar reuses
     )
     tot = src.agg(
         F.sum("wsum").alias("wsum_all"), F.sum("toks").alias("toks_all")

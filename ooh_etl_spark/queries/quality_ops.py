@@ -16,14 +16,12 @@ Design notes for 100 TB:
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
-
-from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ooh_etl_spark.functions.text import tokenize
 from ooh_etl_spark.queries.registry import register
+from ooh_etl_spark.stages import materialize, materialize_all
 from ooh_etl_spark.tables import load_table, parallelize_rows
 
 _DUCK_TOKS = "regexp_split_to_array(lower(trim(text)), '\\s+')"
@@ -693,7 +691,7 @@ def q155_ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame
     # the tercile cut AND the bucket rollup) — without them the
     # tokenizing passes re-ran per consumer (audited: 6 parquet scans
     # of documents in one plan; now 2).
-    cnt = tok.groupBy("w").agg(F.count(F.lit(1)).alias("c")).localCheckpoint()
+    cnt = materialize(tok.groupBy("w").agg(F.count(F.lit(1)).alias("c")))
     tot = cnt.agg(F.sum("c").cast("bigint").alias("n_corpus"))
     surprisal_u = F.round(
         1000000 * F.log(F.col("n_corpus") * F.lit(1.0) / F.col("c"))
@@ -707,11 +705,11 @@ def q155_ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame
             F.sum(surprisal_u).cast("bigint").alias("s_u"),
         )
     )
-    h = per.select(
+    h = materialize(per.select(
         "doc_id",
         "lang",
         F.round(F.col("s_u") * 1.0 / F.col("n")).cast("bigint").alias("h_u"),
-    ).localCheckpoint()
+    ))
     q = h.agg(
         F.expr("percentile_disc(0.33333) WITHIN GROUP (ORDER BY h_u)").alias("t1"),
         F.expr("percentile_disc(0.66667) WITHIN GROUP (ORDER BY h_u)").alias("t2"),
@@ -812,13 +810,13 @@ def q162_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoints each consumer re-ran the tokenizing gate (audited: 8
     # parquet scans of documents in one plan). At 100 TB these are the
     # intermediate writes a production funnel makes between stages.
-    q = d.filter(
+    q = materialize(d.filter(
         (F.size("toks") >= _CB_MIN_TOKS)
         & (10 * F.size(F.array_distinct("toks")) >= 3 * F.size("toks"))
-    ).localCheckpoint()
-    exd = q.join(
+    ))
+    exd = materialize(q.join(
         exact_dedup(q, key="text", id_col="doc_id").select("doc_id"), "doc_id"
-    ).localCheckpoint()
+    ))
     dropped = (
         jaccard_pairs(exd, "text", "doc_id", n=3, threshold=0.5)
         .select(F.col("id_b").alias("doc_id"))
@@ -906,10 +904,9 @@ def q163_dup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the final accounting — audited: 8 parquet scans of documents
     # before; re-exploding from the materialized frame is cheap CPU,
     # re-tokenizing from parquet is not)
-    d = (
+    d = materialize(
         _docs(spark, sf_dir)
         .select("doc_id", tokenize(F.col("text")).alias("toks"))
-        .localCheckpoint()
     )
     pos = d.select(
         "doc_id", F.posexplode("toks").alias("i0", "tok")
@@ -937,7 +934,7 @@ def q163_dup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint the removed-position set: it feeds both the anti-join
     # reconstruction and the removal counts, and re-deriving it means
     # re-running the whole gram-duplicate pipeline.
-    rem = (
+    rem = materialize(
         pos.join(
             dstarts,
             (pos.doc_id == dstarts.doc_id)
@@ -945,7 +942,6 @@ def q163_dup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(pos.doc_id, pos.i)
         .distinct()
-        .localCheckpoint()
     )
     kept = (
         pos.join(rem, ["doc_id", "i"], "left_anti")
@@ -1777,11 +1773,11 @@ def q444_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" AS BIGINT) % {_BLOOM_M}"
         )
 
-    bench = (
+    bench = materialize(
         g.filter(F.col("doc_id") % _BENCH_MOD == 0)
         .select("gram")
         .distinct()
-        .localCheckpoint()  # tiny; feeds 3 bit-probe joins + the exact
+        # tiny; feeds 3 bit-probe joins + the exact
         # probe — without the cut each would re-scan the corpus
     )
     # localCheckpoint (r13 opt): the k probe joins each broadcast a
@@ -1790,14 +1786,13 @@ def q444_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 3 identical Generate+HashAggregate+Exchange trees, no
     # ReuseExchange) — the cut computes the distinct ONCE and the
     # builds read a <= k x |bench grams|-row RDD.
-    bits = (
+    bits = materialize(
         bench.withColumn("h", F.md5("gram"))
         .select(
             F.explode(F.array(*[pos(j) for j in range(_BLOOM_K)])).alias("pos")
         )
         .distinct()
         .withColumn("bit_set", F.lit(1))
-        .localCheckpoint()
     )
     corpus = g.filter(F.col("doc_id") % _BENCH_MOD != 0)
     probed = corpus.withColumn("h", F.md5("gram"))
@@ -2251,11 +2246,11 @@ def q475_bloom_sizing_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = docs.select(
         "doc_id", F.explode_outer(_trigrams(toks)).alias("gram")
     ).filter(F.col("gram").isNotNull())
-    bench = (
+    bench = materialize(
         g.filter(F.col("doc_id") % _BENCH_MOD == 0)
         .select("gram")
         .distinct()
-        .localCheckpoint()  # tiny; feeds the bit build, the exact-set
+        # tiny; feeds the bit build, the exact-set
         # probe AND the n_inserted scalar without re-scanning the corpus
     )
     nins = bench.agg(F.count(F.lit(1)).alias("n_ins"))
@@ -2507,19 +2502,6 @@ _DUCK_CORPUS_FUNNEL = f"""
 """
 
 
-def _ckpt_submit(pool: ThreadPoolExecutor, spark: SparkSession, plan_fn):
-    """Submit an eager materialization as a concurrent driver job.
-
-    Wrapping the target in ``pyspark.inheritable_thread_target`` makes
-    the worker thread inherit the caller's JVM thread-local properties
-    under pinned-thread mode (the default since Spark 3.2): the job
-    group, job description, and scheduler pool — so a caller cancelling
-    the query via ``cancelJobGroup`` also cancels these checkpoint
-    jobs, and the pinned JVM thread is cleaned up when the Python
-    thread exits (ADVICE r13 item 1)."""
-    return pool.submit(inheritable_thread_target(spark)(plan_fn))
-
-
 @register("q479_corpus_build_funnel", _DUCK_CORPUS_FUNNEL)
 def q479_corpus_build_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end CORPUS-BUILD funnel over the modern operator set —
@@ -2650,13 +2632,9 @@ def q479_corpus_build_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("bit_set", F.lit(1))
     )
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_bits = _ckpt_submit(pool, spark, lambda: bits_plan.localCheckpoint())
-        f_q = _ckpt_submit(pool, spark, lambda: q_plan.localCheckpoint())
-        f_rawc = _ckpt_submit(pool, spark, lambda: census(raw).localCheckpoint())
-        bits = f_bits.result()  # decontam filter, broadcast twice
-        q = f_q.result()  # stage boundary: feeds dedup AND the census
-        rawc = f_rawc.result()  # |sources| rows, reused 6x
+    # bits: decontam filter, broadcast twice; q: stage boundary, feeds
+    # dedup AND the census; rawc: |sources| rows, reused 6x
+    bits, q, rawc = materialize_all(bits_plan, q_plan, census(raw))
 
     # r14 opt (guide §2.6, the r13 pattern extended): each stage census
     # is a tiny |sources|-row aggregate of an already-checkpointed
@@ -2666,15 +2644,9 @@ def q479_corpus_build_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # chain stage (exact dedup / near-dup / decontam respectively)
     # hides each census in the idle tail of the much more expensive
     # stage running beside it; contents and per-stage plans unchanged.
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_exd = _ckpt_submit(
-            pool,
-            spark,
-            lambda: exact_dedup(q, key="text", id_col="doc_id").localCheckpoint()
-        )
-        f_cq = _ckpt_submit(pool, spark, lambda: census(q).localCheckpoint())
-        exd = f_exd.result()
-        cq = f_cq.result()  # stage-1 census
+    exd, cq = materialize_all(  # cq: stage-1 census
+        exact_dedup(q, key="text", id_col="doc_id"), census(q)
+    )
 
     def nd_plan() -> DataFrame:
         dropped = (
@@ -2684,11 +2656,7 @@ def q479_corpus_build_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return exd.join(dropped, "doc_id", "left_anti")
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_nd = _ckpt_submit(pool, spark, lambda: nd_plan().localCheckpoint())
-        f_cexd = _ckpt_submit(pool, spark, lambda: census(exd).localCheckpoint())
-        nd = f_nd.result()
-        cexd = f_cexd.result()  # stage-2 census
+    nd, cexd = materialize_all(nd_plan(), census(exd))  # cexd: stage-2 census
     cg = nd.select(
         "doc_id", F.explode_outer(_trigrams(F.col("toks"))).alias("gram")
     ).filter(F.col("gram").isNotNull())
@@ -2712,15 +2680,9 @@ def q479_corpus_build_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n_hit") >= _MIN_SHARED)
         .select("doc_id")
     )
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_fin = _ckpt_submit(
-            pool,
-            spark,
-            lambda: nd.join(flagged, "doc_id", "left_anti").localCheckpoint()
-        )
-        f_cnd = _ckpt_submit(pool, spark, lambda: census(nd).localCheckpoint())
-        fin = f_fin.result()
-        cnd = f_cnd.result()  # stage-3 census
+    fin, cnd = materialize_all(  # cnd: stage-3 census
+        nd.join(flagged, "doc_id", "left_anti"), census(nd)
+    )
 
     srcs = rawc.select("source", F.col("n").alias("n_raw"))
 
@@ -2783,11 +2745,9 @@ def q479_corpus_build_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.size("toks")).cast("bigint").alias("tk"),
         F.sum(pad_of_doc).cast("bigint").alias("pad_sum"),
     )
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_finc = _ckpt_submit(pool, spark, lambda: finc_plan.localCheckpoint())
-        f_srcx = _ckpt_submit(pool, spark, lambda: srcx_plan.localCheckpoint())
-        finc = f_finc.result()  # feeds stages 4, 5 and 6
-        srcx = f_srcx.result()  # |sources| rows feed the scalar + weights
+    # finc feeds stages 4, 5 and 6; srcx's |sources| rows feed the
+    # scalar + weights
+    finc, srcx = materialize_all(finc_plan, srcx_plan)
     tot = srcx.agg(
         F.sum("wsum").alias("wsum_all"), F.sum("toks_m").alias("toks_all")
     )
@@ -3178,12 +3138,11 @@ def q481_funnel_stage_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     d0 = _docs(spark, sf_dir).select(
         "doc_id", "source", "text", tokenize(F.col("text")).alias("toks")
     )
-    bench = (
+    bench = materialize(
         d0.filter(F.col("doc_id") % _BENCH_MOD == 0)
         .select(F.explode_outer(_trigrams(F.col("toks"))).alias("gram"))
         .filter(F.col("gram").isNotNull())
         .distinct()
-        .localCheckpoint()
     )
 
     # ONE md5 per gram row, k slice-probes off it (r13 opt — the q444
@@ -3203,7 +3162,7 @@ def q481_funnel_stage_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("bit_set", F.lit(1))
     )
     sw = ", ".join(f"'{w}'" for w in _AGREE_STOPWORDS)
-    raw = d0.filter(F.col("doc_id") % _BENCH_MOD != 0).localCheckpoint()
+    raw = materialize(d0.filter(F.col("doc_id") % _BENCH_MOD != 0))
     kq = raw.select(
         "doc_id",
         F.size("toks").alias("n_toks"),
@@ -3236,7 +3195,7 @@ def q481_funnel_stage_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("int")
         .alias("k_quality"),
     )
-    exd = exact_dedup(raw, key="text", id_col="doc_id").localCheckpoint()
+    exd = materialize(exact_dedup(raw, key="text", id_col="doc_id"))
     ke = exd.select("doc_id", F.lit(1).alias("kept"))
     kn = (
         jaccard_pairs(exd, "text", "doc_id", n=3, threshold=0.5)

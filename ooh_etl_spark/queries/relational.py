@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from ooh_etl_spark.functions.money import cents_avg, cents_sum
 from ooh_etl_spark.operators.relational import asof_join, top_k_per_group
 from ooh_etl_spark.queries.registry import register
+from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_table
 
 
@@ -474,17 +475,15 @@ def q12_setops_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two exceptAll) — without it every branch re-runs the scan +
     # distinct shuffle (the q296 Union-recompute class; audited at 6
     # parquet scans for 2 logical key sets).
-    early = (
+    early = materialize(
         orders.filter(F.col("o_orderdate") < cutoff)
         .select("o_custkey")
         .distinct()
-        .localCheckpoint()
     )
-    late = (
+    late = materialize(
         orders.filter(F.col("o_orderdate") >= cutoff)
         .select("o_custkey")
         .distinct()
-        .localCheckpoint()
     )
     return (
         early.intersect(late).select(F.lit("both").alias("cohort"), "o_custkey")

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ooh_etl_spark.functions.text import tokenize
 from ooh_etl_spark.queries.registry import register
+from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_table, parallelize_rows
 
 _DUCK_TOKS = "regexp_split_to_array(lower(trim(text)), '\\s+')"
@@ -119,15 +120,14 @@ def q158_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint dl and tf (the q135 fix): each feeds two consumers,
     # and without the checkpoints the tokenizing pass re-ran per
     # consumer (audited: 4 parquet scans of documents; now 2).
-    dl = d.select("doc_id", F.size("toks").alias("dl")).localCheckpoint()
+    dl = materialize(d.select("doc_id", F.size("toks").alias("dl")))
     stats = dl.agg(F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl"))
     tok = d.select("doc_id", F.explode_outer("toks").alias("term")).filter(
         F.col("term").isin(*_QUERY_TERMS)
     )
-    tf = (
+    tf = materialize(
         tok.groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint()
     )
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     avgdl = F.col("sum_dl") * 1.0 / F.col("n_docs")
@@ -457,7 +457,7 @@ def q334_mutual_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = lambda x, y: F.aggregate(
         F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda s, z: s + z
     )
-    s = (
+    s = materialize(
         a.crossJoin(b)
         .select(
             "ida",
@@ -473,7 +473,7 @@ def q334_mutual_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("cos_e6"),
         )
-        .localCheckpoint()  # the score table feeds BOTH argmax windows
+        # the score table feeds BOTH argmax windows
     )
     wa = Window.partitionBy("ida").orderBy(F.desc("cos_e6"), F.asc("idb"))
     wb = Window.partitionBy("idb").orderBy(F.desc("cos_e6"), F.asc("ida"))
@@ -691,7 +691,7 @@ def _mutual_nn_funnel_impl(
     d = lambda x, y: F.aggregate(  # noqa: E731
         F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda s, z: s + z
     )
-    cand = (
+    cand = materialize(
         a.join(b, ["band", "bkt"])
         .select(
             "ida",
@@ -708,7 +708,7 @@ def _mutual_nn_funnel_impl(
             .alias("cos_e6"),
         )
         .distinct()  # a pair colliding in several bands scores once
-        .localCheckpoint()  # verified candidates feed BOTH argmaxes
+        # verified candidates feed BOTH argmaxes
     )
     wa = Window.partitionBy("ida").orderBy(F.desc("cos_e6"), F.asc("idb"))
     wb = Window.partitionBy("idb").orderBy(F.desc("cos_e6"), F.asc("ida"))
@@ -836,7 +836,7 @@ def q341_srp_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("p_e6")
         )
     )
-    sig = proj.groupBy("vec_id").agg(
+    sig = materialize(proj.groupBy("vec_id").agg(
         F.sum(
             F.when(
                 F.col("p_e6") > 0,
@@ -845,7 +845,7 @@ def q341_srp_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("bigint")
         .alias("sig")
-    ).localCheckpoint()  # signatures feed both banded-join sides
+    ))  # signatures feed both banded-join sides
     bands = sig.select(
         "vec_id",
         "sig",
@@ -1105,11 +1105,11 @@ def q375_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     w = Window.orderBy(F.col("rel").desc(), "vec_id")
-    cand = (
+    cand = materialize(
         scored.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= _MMR_POOL)
         .select("vec_id", "embedding", "rel")
-        .localCheckpoint()  # pool-bounded: _MMR_POOL rows
+        # pool-bounded: _MMR_POOL rows
     )
     # greedy selection: bounded parameter-server loop (q322 contract —
     # driver holds K (vec_id, embedding, rel) rows, K = 3)
@@ -1358,16 +1358,16 @@ def q434_bm25_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = tuple({t for _, t in _HN_TERMS})
 
     d = docs.select("doc_id", tokenize(F.col("text")).alias("toks"))
-    dl = d.select("doc_id", F.size("toks").alias("dl")).localCheckpoint()
+    dl = materialize(d.select("doc_id", F.size("toks").alias("dl")))
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
     )
-    tf = (
+    tf = materialize(
         d.select("doc_id", F.explode_outer("toks").alias("term"))
         .filter(F.col("term").isin(*terms))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint()  # feeds df AND the scorer (the q158 fix)
+        # feeds df AND the scorer (the q158 fix)
     )
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     avgdl = F.col("sum_dl") * 1.0 / F.col("n_docs")
@@ -1495,12 +1495,12 @@ def q446_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-query top-k is a keyed window over |Q| partitions."""
     emb = parallelize_rows(load_table(spark, sf_dir, "embeddings"))
     v = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    subs = v.select(
+    subs = materialize(v.select(
         "vec_id",
         F.posexplode(
             F.array(*[F.slice("e", s * _PQ_D + 1, _PQ_D) for s in range(_PQ_M)])
         ).alias("s", "sub"),
-    ).localCheckpoint()  # feeds codes AND the query LUT
+    ))  # feeds codes AND the query LUT
     cb = subs.filter(F.col("vec_id") < _PQ_K).select(
         F.col("vec_id").alias("code_id"),
         F.col("s").alias("cs"),
@@ -1671,13 +1671,13 @@ def q478_sq_int8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     over |Q| partitions (the q446 precedent — at production scale
     the IVF cells of q53/q437 bound the rerank set instead)."""
     emb = parallelize_rows(load_table(spark, sf_dir, "embeddings"))
-    v = emb.select(
+    v = materialize(emb.select(
         "vec_id",
         F.expr(
             "transform(CAST(embedding AS ARRAY<DOUBLE>),"
             " x -> CAST(round(1000000 * x) AS BIGINT))"
         ).alias("x6"),
-    ).localCheckpoint()  # feeds the census, the panel AND the scan pass
+    ))  # feeds the census, the panel AND the scan pass
     # 128 in-row accumulators (min+max per dim) in ONE global agg —
     # the q440/q474 columnar-census shape; no per-dim row explosion.
     cen1 = v.agg(

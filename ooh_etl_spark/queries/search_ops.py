@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ooh_etl_spark.functions.text import tokenize
 from ooh_etl_spark.queries.registry import register
+from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_table, parallelize_rows
 
 _QUERY_TERMS = ("spark", "table", "merge")
@@ -81,17 +82,16 @@ def q135_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # postings-bounded) tf table: each feeds two consumers, and
     # without the checkpoints the tokenizing pass re-ran per consumer
     # (audited: 4 parquet scans of documents in one plan; now 2).
-    dl = d.select("doc_id", F.size("toks").alias("dl")).localCheckpoint()
+    dl = materialize(d.select("doc_id", F.size("toks").alias("dl")))
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
     )
     tok = d.select("doc_id", F.explode_outer("toks").alias("term")).filter(
         F.col("term").isin(*_QUERY_TERMS)
     )
-    tf = (
+    tf = materialize(
         tok.groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint()
     )
     df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     avgdl = F.col("sum_dl") * 1.0 / F.col("n_docs")
@@ -160,7 +160,7 @@ def q136_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     # order count, item supports, and BOTH pair-join sides — without
     # it the distinct shuffle re-ran per consumer (audited: 5 parquet
     # scans of lineitem in one plan; now 1).
-    items = li.select("l_orderkey", "l_partkey").distinct().localCheckpoint()
+    items = materialize(li.select("l_orderkey", "l_partkey").distinct())
     n = items.agg(F.countDistinct("l_orderkey").alias("n_orders"))
     item_supp = items.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("supp"))
     a = items.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("ante"))
@@ -441,7 +441,7 @@ def q400_rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each leg cuts to K via TakeOrderedAndProject FIRST, so the rank
     # window runs over K rows, never a single-partition pass over all
     # parts
-    agg = agg.localCheckpoint()
+    agg = materialize(agg)
     wa = Window.orderBy(F.col("rev_c").desc(), "pk")
     wb = Window.orderBy(F.col("qty").desc(), "pk")
     ra = (
@@ -551,11 +551,11 @@ def q404_dirichlet_query_likelihood(spark: SparkSession, sf_dir: str) -> DataFra
     d = parallelize_rows(load_table(spark, sf_dir, "documents")).select(
         "doc_id", tokenize(F.col("text")).alias("toks")
     )
-    dl = d.select("doc_id", F.size("toks").alias("dl")).localCheckpoint()
+    dl = materialize(d.select("doc_id", F.size("toks").alias("dl")))
     c = dl.agg(F.sum("dl").cast("bigint").alias("c_total"))
-    tok = d.select("doc_id", F.explode_outer("toks").alias("term")).filter(
+    tok = materialize(d.select("doc_id", F.explode_outer("toks").alias("term")).filter(
         F.col("term").isin(*_QUERY_TERMS)
-    ).localCheckpoint()
+    ))
     cf = tok.groupBy("term").agg(F.count(F.lit(1)).cast("bigint").alias("cf"))
     tf = tok.groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).cast("bigint").alias("tf")
@@ -697,19 +697,18 @@ def q415_rocchio_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = parallelize_rows(load_table(spark, sf_dir, "documents")).select(
         "doc_id", tokenize(F.col("text")).alias("toks")
     )
-    dl = d.select("doc_id", F.size("toks").alias("dl")).localCheckpoint()
+    dl = materialize(d.select("doc_id", F.size("toks").alias("dl")))
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
     )
-    tf_all = (
+    tf_all = materialize(
         d.select("doc_id", F.explode_outer("toks").alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-        .localCheckpoint()
     )
-    df_all = tf_all.groupBy("term").agg(
+    df_all = materialize(tf_all.groupBy("term").agg(
         F.count(F.lit(1)).cast("bigint").alias("df")
-    ).localCheckpoint()
+    ))
     avgdl = F.col("sum_dl") * 1.0 / F.col("n_docs")
     idf = F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1)
     bm_term = (
@@ -732,12 +731,12 @@ def q415_rocchio_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     r1 = _scored(tf_all.filter(F.col("term").isin(*_QUERY_TERMS)))
-    seed = r1.select(
+    seed = materialize(r1.select(
         "doc_id",
         F.row_number()
         .over(Window.orderBy(F.col("score_e6").desc(), "doc_id"))
         .alias("r"),
-    ).filter(F.col("r") <= _PRF_SEED).select("doc_id").localCheckpoint()
+    ).filter(F.col("r") <= _PRF_SEED).select("doc_id"))
     exp_cand = (
         tf_all.join(seed, "doc_id")
         .filter(~F.col("term").isin(*_QUERY_TERMS))
@@ -882,7 +881,7 @@ def q416_team_draft_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(
         "doc_id", F.explode_outer(tokenize(F.col("text"))).alias("term")
     )
-    tfq = tok.groupBy("doc_id").agg(
+    tfq = materialize(tok.groupBy("doc_id").agg(
         F.sum(F.when(F.col("term") == "spark", 1).otherwise(0))
         .cast("bigint")
         .alias("tf_a"),
@@ -892,7 +891,7 @@ def q416_team_draft_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("term").isin(*_QUERY_TERMS), 1).otherwise(0))
         .cast("bigint")
         .alias("tf_all"),
-    ).localCheckpoint()
+    ))
     la = [
         r.doc_id
         for r in tfq.filter(F.col("tf_a") > 0)

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from ooh_etl_spark.operators.similarity import knn_brute_force, lsh_ann_pairs
 from ooh_etl_spark.queries.registry import register
+from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_table
 
 _DUCK_KNN = """
@@ -423,10 +424,10 @@ def q437_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         f" 'neg', -{e6('nv', 'nn', 'c.cv', 'c.cn')},"
         " 'cid', c.cent_id))).cid"
     )
-    ca = (
+    ca = materialize(
         corpus.crossJoin(F.broadcast(panel))
         .select("nid", "nv", "nn", F.expr(argmin).alias("cell"))
-        .localCheckpoint()  # feeds truth join AND every probe level
+        # feeds truth join AND every probe level
     )
     qc = (
         qs.join(F.broadcast(cents), F.lit(True))
@@ -456,7 +457,7 @@ def q437_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = spark.range(1).select(
         F.explode(F.array(*[F.lit(p) for p in _RC_PROBES])).alias("nprobe")
     )
-    cand = (
+    cand = materialize(
         F.broadcast(probes)
         .join(qc, F.col("probe_rank") <= F.col("nprobe"))
         .join(ca, "cell")
@@ -467,7 +468,7 @@ def q437_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "nid",
             F.expr(e6("qv", "qn", "nv", "nn")).alias("cos_e6"),
         )
-        .localCheckpoint()  # feeds the ANN ranking AND the volume count
+        # feeds the ANN ranking AND the volume count
     )
     ann = (
         cand.withColumn(

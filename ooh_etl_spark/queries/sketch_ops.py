@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from ooh_etl_spark.functions.text import tokenize
 from ooh_etl_spark.operators.sketches import bloom_semi_join, exact_heavy_hitters
 from ooh_etl_spark.queries.registry import register
+from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_table, parallelize_rows
 
 _HH_K = 50  # heavy hitter = frequency > n/50 (2%)
@@ -373,10 +374,9 @@ def q221_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # feeds both union branches below, and without it each branch
     # re-runs the corpus-wide register aggregate (the q296
     # Union-recompute class; audited at 2 parquet scans).
-    regs = (
+    regs = materialize(
         rho.groupBy("event_type", "bucket")
         .agg(F.max("rho").alias("m_j"))
-        .localCheckpoint()
     )
     merged = regs.groupBy("bucket").agg(
         F.max("m_j").alias("m_j")
@@ -673,7 +673,7 @@ def q301_kmv_set_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sides (each consuming it twice: exact count + bottom-k), and
     # without it the corpus rollup re-executed per consumer (audited:
     # 8 parquet scans of events in one plan).
-    flags = (
+    flags = materialize(
         ev.groupBy("user_id")
         .agg(
             F.max(F.when(F.col("event_type") == "click", 1).otherwise(0)).alias(
@@ -693,7 +693,6 @@ def q301_kmv_set_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("h"),
         )
-        .localCheckpoint()
     )
     au = flags.filter(F.col("a") == 1)
     bu = flags.filter(F.col("b") == 1)
@@ -1012,10 +1011,10 @@ def q429_mergeable_quantile_summary(
     # integer range replaces the theta-join, emitting each decile
     # EXACTLY once, so the result is provably identical.
     _B = 4096  # cents per coarse bucket
-    xb = (
+    xb = materialize(
         x.groupBy(F.expr(f"cents div {_B}").alias("bkt"))
         .agg(F.count(F.lit(1)).alias("bcnt"))
-        .localCheckpoint()  # ~|domain|/B rows; feeds n, the decile
+        # ~|domain|/B rows; feeds n, the decile
         # bucket locator, AND (via the broadcast sel) the fine pass
     )
     n = xb.agg(F.sum("bcnt").cast("bigint").alias("n"))

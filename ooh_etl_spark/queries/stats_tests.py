@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ooh_etl_spark.queries.registry import register
+from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_table
 
 
@@ -656,9 +657,9 @@ def q258_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # table: without them every downstream consumer re-ran the corpus
     # scan (audited: 8 parquet scans of events in one plan; now 3 —
     # bounds, edges, binning).
-    cut = bounds.select(
+    cut = materialize(bounds.select(
         F.floor((F.col("lo") + F.col("hi")) / 2).cast("bigint").alias("t0")
-    ).localCheckpoint()
+    ))
     v = ev.crossJoin(F.broadcast(cut)).select(
         "event_type",
         (ms >= F.col("t0")).cast("int").alias("half"),
@@ -679,10 +680,10 @@ def q258_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(_PSI_BINS - 1).cast("bigint"),
         ).alias("bin"),
     )
-    cnt = binned.groupBy("event_type", "bin").agg(
+    cnt = materialize(binned.groupBy("event_type", "bin").agg(
         F.sum(F.when(F.col("half") == 0, 1).otherwise(0)).alias("a"),
         F.sum(F.when(F.col("half") == 1, 1).otherwise(0)).alias("b"),
-    ).localCheckpoint()
+    ))
     tot = cnt.groupBy("event_type").agg(
         F.sum("a").alias("ta"), F.sum("b").alias("tb")
     )
@@ -826,7 +827,7 @@ def q279_median_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     # histogram (histogram-sized): three at_rank() consumers each
     # re-ran the corpus passes otherwise (audited: 7 parquet scans of
     # events in one plan; now 2).
-    ranks = n.select(
+    ranks = materialize(n.select(
         "event_type",
         "n",
         F.floor(F.col("n") / 2.0 - 0.98 * F.sqrt(F.col("n")))
@@ -836,16 +837,16 @@ def q279_median_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("r_hi"),
         F.ceil(F.col("n") / 2.0).cast("bigint").alias("r_med"),
-    ).localCheckpoint()
+    ))
     hist = v.groupBy("event_type", "v_u").agg(F.count(F.lit(1)).alias("c"))
     w = (
         Window.partitionBy("event_type")
         .orderBy("v_u")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    cum = hist.select(
+    cum = materialize(hist.select(
         "event_type", "v_u", F.sum("c").over(w).alias("cc")
-    ).localCheckpoint()
+    ))
 
     def at_rank(rank_col: str, alias: str):
         return (
@@ -1721,7 +1722,7 @@ def q326_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.round(F.col("value") * 1000000).cast("bigint").alias("v_u"),
     )
-    hist = v.groupBy("v_u").agg(F.count(F.lit(1)).alias("c")).localCheckpoint()
+    hist = materialize(v.groupBy("v_u").agg(F.count(F.lit(1)).alias("c")))
     wcum = Window.orderBy("v_u").rowsBetween(Window.unboundedPreceding, -1)
     mid = hist.select(
         "v_u",
@@ -1821,7 +1822,7 @@ def q331_cramer_von_mises(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("event_type") == "click", "a").otherwise("b").alias("grp"),
         F.round(F.col("value") * 100).cast("bigint").alias("v_c"),
     )
-    hist = (
+    hist = materialize(
         s.groupBy("v_c")
         .agg(
             F.sum(F.when(F.col("grp") == "a", 1).otherwise(0))
@@ -1831,7 +1832,7 @@ def q331_cramer_von_mises(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("cb"),
         )
-        .localCheckpoint()  # histogram feeds totals AND the cumulative
+        # histogram feeds totals AND the cumulative
     )
     tot = hist.agg(
         F.sum("ca").cast("bigint").alias("n"),
@@ -2074,7 +2075,7 @@ def q369_cmh_odds_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("y"),
         )
     )
-    cell = (
+    cell = materialize(
         base.groupBy("stratum")
         .agg(
             F.sum(F.col("x") * F.col("y")).cast("bigint").alias("a"),
@@ -2083,7 +2084,6 @@ def q369_cmh_odds_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((1 - F.col("x")) * (1 - F.col("y"))).cast("bigint").alias("d"),
             F.count(F.lit(1)).cast("bigint").alias("n"),
         )
-        .localCheckpoint()
     )
     terms = cell.select(
         "a",
@@ -2209,7 +2209,7 @@ def q370_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     run on |days| x |types| rows. Ranking partitions by day — k-sized
     frames, never a global sort."""
     ev = load_table(spark, sf_dir, "events")
-    dt = (
+    dt = materialize(
         ev.groupBy(
             F.floor(F.unix_timestamp(F.col("ts").cast("date")) / 86400)
             .cast("bigint")
@@ -2217,15 +2217,13 @@ def q370_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
         )
         .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-        .localCheckpoint()
     )
     days = dt.select("d").distinct()
     types = dt.select("event_type").distinct()
-    grid = (
+    grid = materialize(
         days.crossJoin(F.broadcast(types))
         .join(dt, ["d", "event_type"], "left")
         .select("d", "event_type", F.coalesce(F.col("x"), F.lit(0)).alias("x"))
-        .localCheckpoint()
     )
     wd = Window.partitionBy("d").orderBy("x")
     wt = Window.partitionBy("d", "x")
@@ -2534,9 +2532,9 @@ def q378_kish_design_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: ONE map-side-combinable source-count aggregate;
     everything else is arithmetic on the |sources|-row table."""
     docs = load_table(spark, sf_dir, "documents")
-    src = docs.groupBy("source").agg(
+    src = materialize(docs.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_src")
-    ).localCheckpoint()
+    ))
     tot = src.agg(
         F.sum("n_src").cast("bigint").alias("n"),
         F.count(F.lit(1)).cast("bigint").alias("k"),
@@ -2622,7 +2620,7 @@ def q384_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     place of days."""
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
-    met = (
+    met = materialize(
         orders.join(
             F.broadcast(cust.select("c_custkey", "c_nationkey", "c_acctbal")),
             F.col("o_custkey") == F.col("c_custkey"),
@@ -2636,7 +2634,6 @@ def q384_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("rev_c"),
         )
-        .localCheckpoint()
     )
     a = met.select(
         F.col("nk").alias("nka"), F.col("bal_c").alias("ba"), F.col("rev_c").alias("ra")
@@ -2777,9 +2774,9 @@ def q386_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
             - F.max(F.when(F.col("yr") == 1995, F.col("rev_c")).otherwise(0))
         ).alias("diff")
     )
-    nz = d.filter(F.col("diff") != 0).select(
+    nz = materialize(d.filter(F.col("diff") != 0).select(
         "nk", "diff", F.abs(F.col("diff")).alias("ad")
-    ).localCheckpoint()
+    ))
     wr = Window.orderBy("ad")
     wt = Window.partitionBy("ad")
     rk = nz.select(
@@ -2925,7 +2922,7 @@ def q408_storey_qvalues(spark: SparkSession, sf_dir: str) -> DataFrame:
             < 0.5
         ).alias("in_a"),
     )
-    g = (
+    g = materialize(
         o.groupBy("nk")
         .agg(
             F.sum(F.when(F.col("in_a"), 1).otherwise(0)).cast("bigint").alias("na"),
@@ -2949,7 +2946,6 @@ def q408_storey_qvalues(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.least(F.col("na"), F.col("nb")) >= 2)
         # 25-row test family feeds fam + ranked: checkpoint (q296-class)
-        .localCheckpoint()
     )
     var_a = (
         F.col("qa").cast("double")
@@ -3067,7 +3063,7 @@ def q409_page_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows over k-row partitions of that grid."""
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
-    cell = (
+    cell = materialize(
         orders.join(
             F.broadcast(cust.select("c_custkey", "c_nationkey")),
             orders.o_custkey == F.col("c_custkey"),
@@ -3083,7 +3079,6 @@ def q409_page_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # b*k grid feeds k, the block filter, and the rank pass:
         # checkpoint (q296-class)
-        .localCheckpoint()
     )
     k = cell.agg(F.countDistinct("yr").cast("bigint").alias("k"))
     full_blocks = (
@@ -3219,7 +3214,7 @@ def q412_chow_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     moments are ONE more grid aggregate (two groups); everything else
     is scalar arithmetic. The median-day pre-pass is grid-bounded."""
     ev = load_table(spark, sf_dir, "events")
-    day = (
+    day = materialize(
         ev.filter(F.col("event_type") == "purchase")
         .groupBy(
             (F.floor(F.unix_timestamp(F.col("ts").cast("date")) / 86400))
@@ -3229,7 +3224,6 @@ def q412_chow_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("y_c"))
         # the bounded day grid feeds every downstream pass: checkpoint
         # so the corpus aggregate runs ONCE (q296-class rule)
-        .localCheckpoint()
     )
     d0 = day.agg(F.min("d").alias("d0"))
     t = day.crossJoin(F.broadcast(d0)).select(

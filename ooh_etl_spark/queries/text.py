@@ -18,6 +18,7 @@ from ooh_etl_spark.functions.text import (
     tokenize,
 )
 from ooh_etl_spark.queries.registry import register
+from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_table, parallelize_rows
 
 
@@ -119,10 +120,9 @@ def q22_tfidf_top_term(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint tf: it feeds both the idf rollup and the scoring join
     # (ReuseExchange does NOT apply across the two consumers, so the
     # tokenize pass ran twice — audited at 3 parquet scans, now 2).
-    tf = (
+    tf = materialize(
         tok.groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint()
     )
     # df(term) = distinct docs containing term = row count per term in
     # tf, which is already distinct on (doc_id, term).

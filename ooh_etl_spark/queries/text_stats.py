@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ooh_etl_spark.functions.text import tokenize
 from ooh_etl_spark.queries.registry import register
+from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_table, parallelize_rows
 
 _DUCK_TOKS = "regexp_split_to_array(lower(trim(text)), '\\s+')"
@@ -572,17 +573,15 @@ def q241_source_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each feeds 3 consumers, and without the checkpoints the
     # tokenizing pass re-ran per consumer (audited: 5 parquet scans of
     # documents in one plan; now 1).
-    tc = (
+    tc = materialize(
         tok.groupBy("source", "w")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()
     )
-    corpus = (
+    corpus = materialize(
         tc.groupBy("w")
         .agg(F.sum("c").alias("cc"))
         .orderBy(F.desc("cc"), "w")
         .limit(_JSD_V)
-        .localCheckpoint()
     )
     sc = corpus.join(tc, "w", "left")
     tots = sc.filter(F.col("source").isNotNull()).groupBy("source").agg(
@@ -883,7 +882,7 @@ def q306_bleu_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # checkpoint: the candidate-reference join feeds BOTH gram tables
     # (cc and rc) — without it each would re-execute the join.
-    pairs = cand.join(ref, "doc_id").localCheckpoint()
+    pairs = materialize(cand.join(ref, "doc_id"))
 
     def grams(col: str, out: str):
         # uni- and bigrams from ONE explode over a concat of struct
@@ -1145,10 +1144,10 @@ def q338_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("g.w1", "g.w2")
     )
-    bc = (
+    bc = materialize(
         bg.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .localCheckpoint()  # every KN statistic derives from this table
+        # every KN statistic derives from this table
     )
     uc = bc.groupBy("w1").agg(
         F.sum("c").cast("bigint").alias("cw1"),
@@ -1236,10 +1235,10 @@ def q346_dispersion_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(
         "source", F.explode(tokenize(F.col("text"))).alias("w")
     )
-    tf = (
+    tf = materialize(
         tok.groupBy("w", "source")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .localCheckpoint()  # feeds part sizes, term totals, and cells
+        # feeds part sizes, term totals, and cells
     )
     part_sz = tf.groupBy("source").agg(F.sum("c").cast("bigint").alias("s"))
     tot = part_sz.agg(F.sum("s").cast("bigint").alias("n"))
@@ -1329,10 +1328,10 @@ def q353_nucleus_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(
         "source", F.explode(tokenize(F.col("text"))).alias("w")
     )
-    tf = (
+    tf = materialize(
         tok.groupBy("source", "w")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .localCheckpoint()  # feeds totals AND the ranked window
+        # feeds totals AND the ranked window
     )
     tot = tf.groupBy("source").agg(
         F.sum("c").cast("bigint").alias("n"),
@@ -1418,7 +1417,7 @@ def q366_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("w") != "")
     freq = tok.groupBy("w").agg(F.count(F.lit(1)).alias("r"))
     nr = freq.groupBy("r").agg(F.count(F.lit(1)).cast("bigint").alias("n_r"))
-    nr = nr.localCheckpoint()
+    nr = materialize(nr)
     tot = nr.agg(
         F.sum(F.col("r") * F.col("n_r")).cast("bigint").alias("n_tokens"),
         F.sum("n_r").cast("bigint").alias("v"),
@@ -1531,15 +1530,14 @@ def q367_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.least("w1", "w2").alias("a"), F.greatest("w1", "w2").alias("b")
         )
     )
-    e = (
+    e = materialize(
         big.groupBy("a", "b")
         .agg(F.count(F.lit(1)).cast("bigint").alias("wt"))
-        .localCheckpoint()
     )
     dir_e = e.select(
         F.col("a").alias("src"), F.col("b").alias("dst"), "wt"
     ).unionAll(e.select(F.col("b").alias("src"), F.col("a").alias("dst"), "wt"))
-    dir_e = dir_e.localCheckpoint()
+    dir_e = materialize(dir_e)
     deg = dir_e.groupBy(F.col("src").alias("w")).agg(
         F.sum("wt").cast("bigint").alias("deg")
     )
@@ -2295,7 +2293,7 @@ def q441_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("toks") >= _OVL_N,
         F.sequence(F.lit(1), F.size("toks") - (_OVL_N - 1)),
     ).otherwise(F.array().cast("array<int>"))
-    g = (
+    g = materialize(
         t.select(
             "source",
             F.explode(
@@ -2311,7 +2309,7 @@ def q441_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("gram"),
         )
         .distinct()
-        .localCheckpoint()  # incidence list feeds sizes AND pair counts
+        # incidence list feeds sizes AND pair counts
     )
     sz = g.groupBy("source").agg(F.count(F.lit(1)).alias("n_grams"))
     pair = (
@@ -2438,10 +2436,10 @@ def q448_domain_affinity_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("b"),
     ).select("source", "b.head", "b.nxt")
-    census = (
+    census = materialize(
         bg.groupBy("source", "head", "nxt")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()  # one corpus pass serves train AND eval sides
+        # one corpus pass serves train AND eval sides
     )
     tr_bg = census.select(
         F.col("source").alias("s"), "head", "nxt", F.col("c").alias("c_hn")

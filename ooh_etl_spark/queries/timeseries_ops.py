@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ooh_etl_spark.queries.registry import register
+from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_table
 
 
@@ -630,14 +631,14 @@ def q213_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (|types| rows) feeds the deviation join, dev (narrow corpus
     # rows) feeds both the MAD percentile and the final census —
     # without them the plan re-scanned the facts 4x.
-    med = v.groupBy("event_type").agg(
+    med = materialize(v.groupBy("event_type").agg(
         disc_med("v_u").cast("bigint").alias("med_u")
-    ).localCheckpoint()
-    dev = v.join(F.broadcast(med), "event_type").select(
+    ))
+    dev = materialize(v.join(F.broadcast(med), "event_type").select(
         "event_type",
         "med_u",
         F.abs(F.col("v_u") - F.col("med_u")).alias("d_u"),
-    ).localCheckpoint()
+    ))
     mad = dev.groupBy("event_type").agg(
         disc_med("d_u").cast("bigint").alias("mad_u")
     )
@@ -1437,19 +1438,17 @@ def q315_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bounds/mean/denominator/lag-join consumers, and without the
     # checkpoints the corpus pass re-executed per consumer (audited:
     # 10 parquet scans of events in one plan).
-    hr = (
+    hr = materialize(
         ev.groupBy(
             F.floor(F.unix_timestamp("ts") / 3600).cast("bigint").alias("h")
         )
         .agg(F.count(F.lit(1)).alias("x"))
-        .localCheckpoint()
     )
     bounds = hr.agg(F.min("h").alias("lo"), F.max("h").alias("hi"))
-    grid = (
+    grid = materialize(
         bounds.select(F.explode(F.sequence("lo", "hi")).alias("h"))
         .join(hr, "h", "left")
         .select("h", F.coalesce("x", F.lit(0)).alias("x"))
-        .localCheckpoint()
     )
     m = grid.agg(
         (F.sum("x") * 1.0 / F.count(F.lit(1))).alias("mu"),
@@ -1542,12 +1541,11 @@ def q316_spectral_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint the bounded hour table: it feeds the origin bound,
     # the mean, and the probe terms — without it the corpus rollup
     # re-ran per consumer (audited: 4 parquet scans of events; now 1).
-    hr = (
+    hr = materialize(
         ev.groupBy(
             F.floor(F.unix_timestamp("ts") / 3600).cast("bigint").alias("h")
         )
         .agg(F.count(F.lit(1)).alias("x"))
-        .localCheckpoint()
     )
     bounds = hr.agg(F.min("h").alias("lo"))
     t = hr.crossJoin(F.broadcast(bounds)).select(
@@ -1622,7 +1620,7 @@ def q330_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     join's two sides, and the level median); everything after runs on
     the bounded grid."""
     ev = load_table(spark, sf_dir, "events")
-    day = (
+    day = materialize(
         ev.filter(F.col("event_type") == "purchase")
         .groupBy(
             (F.floor(F.unix_timestamp(F.col("ts").cast("date")) / 86400))
@@ -1634,12 +1632,11 @@ def q330_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("rev_c")
         )
-        .localCheckpoint()
     )
     d0 = day.agg(F.min("d").alias("d0"))
-    t = day.crossJoin(F.broadcast(d0)).select(
+    t = materialize(day.crossJoin(F.broadcast(d0)).select(
         (F.col("d") - F.col("d0")).alias("t"), "rev_c"
-    ).localCheckpoint()
+    ))
     a = t.select(F.col("t").alias("ta"), F.col("rev_c").alias("ra"))
     b = t.select(F.col("t").alias("tb"), F.col("rev_c").alias("rb"))
     slopes = a.join(b, F.col("ta") < F.col("tb")).select(
@@ -1720,12 +1717,11 @@ def q352_classical_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. The hour grid stays calendar-bounded at any corpus
     size — the q315/q316 contract."""
     ev = load_table(spark, sf_dir, "events")
-    hr = (
+    hr = materialize(
         ev.groupBy(
             F.floor(F.unix_timestamp("ts") / 3600).cast("bigint").alias("h")
         )
         .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-        .localCheckpoint()
     )
     b = hr.agg(F.min("h").alias("h0"))
     t = hr.crossJoin(F.broadcast(b)).select(
@@ -1825,7 +1821,7 @@ def q362_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     decade), and tie groups are an aggregate of the same grid. The
     grid is checkpointed once and feeds all three consumers."""
     ev = load_table(spark, sf_dir, "events")
-    day = (
+    day = materialize(
         ev.groupBy(
             "event_type",
             F.floor(F.unix_timestamp(F.col("ts").cast("date")) / 86400)
@@ -1833,7 +1829,6 @@ def q362_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("d"),
         )
         .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-        .localCheckpoint()
     )
     a = day.select("event_type", F.col("d").alias("da"), F.col("x").alias("xa"))
     b = day.select("event_type", F.col("d").alias("db"), F.col("x").alias("xb"))
@@ -1954,13 +1949,12 @@ def q372_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.unix_timestamp("ts") / 3600).cast("bigint").alias("h")
     ).agg(F.count(F.lit(1)).alias("x"))
     bounds = hr.agg(F.min("h").alias("lo"), F.max("h").alias("hi"))
-    grid = (
+    grid = materialize(
         bounds.select(
             F.explode(F.sequence(F.col("lo"), F.col("hi"))).alias("h")
         )
         .join(hr, "h", "left")
         .select("h", F.coalesce(F.col("x"), F.lit(0)).alias("x"))
-        .localCheckpoint()
     )
     m = grid.agg(
         (F.sum("x") * 1.0 / F.count(F.lit(1))).alias("mu"),
@@ -2105,7 +2099,7 @@ def q376_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.unix_timestamp("ts") / 3600).cast("bigint").alias("h")
     ).agg(F.count(F.lit(1)).cast("bigint").alias("x"))
     bounds = hr.agg(F.min("h").alias("lo"), F.max("h").alias("hi"))
-    grid = (
+    grid = materialize(
         bounds.select(
             "lo", F.explode(F.sequence(F.col("lo"), F.col("hi"))).alias("h")
         )
@@ -2114,7 +2108,6 @@ def q376_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("h") - F.col("lo")).alias("t"),
             F.coalesce(F.col("x"), F.lit(0)).alias("x"),
         )
-        .localCheckpoint()
     )
     win = grid.sparkSession.createDataFrame(
         [(int(n),) for n in _HURST_WINDOWS], "n long"
@@ -2150,13 +2143,13 @@ def q376_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("rs_mean_u"),
     )
-    pts = pern.select(
+    pts = materialize(pern.select(
         "n",
         "n_blocks",
         "rs_mean_u",
         F.log2("n").alias("lx"),
         F.log2(F.col("rs_mean_u") / 1000000.0).alias("ly"),
-    ).localCheckpoint()
+    ))
     fit = pts.agg(
         (
             (
@@ -2244,7 +2237,7 @@ def q381_haar_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.unix_timestamp("ts") / 3600).cast("bigint").alias("h")
     ).agg(F.count(F.lit(1)).cast("bigint").alias("x"))
     bounds = hr.agg(F.min("h").alias("lo"), F.max("h").alias("hi"))
-    grid = (
+    grid = materialize(
         bounds.select(
             "lo", F.explode(F.sequence(F.col("lo"), F.col("hi"))).alias("h")
         )
@@ -2253,7 +2246,6 @@ def q381_haar_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("h") - F.col("lo")).alias("t"),
             F.coalesce(F.col("x"), F.lit(0)).alias("x"),
         )
-        .localCheckpoint()
     )
     lev = grid.sparkSession.range(1, _HAAR_LEVELS + 1).select(
         F.col("id").cast("int").alias("j")
@@ -2378,7 +2370,7 @@ def q397_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded grid (the q199/q330 parameter-server precedent — the
     window is NOT over the corpus)."""
     ev = load_table(spark, sf_dir, "events")
-    day = (
+    day = materialize(
         ev.filter(F.col("event_type") == "purchase")
         .groupBy(
             (F.floor(F.unix_timestamp(F.col("ts").cast("date")) / 86400))
@@ -2388,7 +2380,6 @@ def q397_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("y_c"))
         # the bounded day grid feeds every downstream pass: checkpoint
         # so the corpus aggregate runs ONCE (q296-class rule)
-        .localCheckpoint()
     )
     d0 = day.agg(F.min("d").alias("d0"))
     t = day.crossJoin(F.broadcast(d0)).select(
@@ -2511,7 +2502,7 @@ def q401_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumsum + argmax are single-partition windows over that grid (the
     q199/q397 parameter-server bound), never over the corpus."""
     ev = load_table(spark, sf_dir, "events")
-    day = (
+    day = materialize(
         ev.filter(F.col("event_type") == "purchase")
         .groupBy(
             (F.floor(F.unix_timestamp(F.col("ts").cast("date")) / 86400))
@@ -2520,7 +2511,6 @@ def q401_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("y_c"))
         # bounded day grid, multiple consumers: checkpoint (q296-class)
-        .localCheckpoint()
     )
     wt = Window.partitionBy().orderBy("d")
     t = day.select(F.row_number().over(wt).alias("t"), "y_c")
@@ -2752,7 +2742,7 @@ def q406_cooks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid, two broadcast-scalar passes over it; the top-K is
     TakeOrderedAndProject on the grid. Nothing corpus-length."""
     ev = load_table(spark, sf_dir, "events")
-    day = (
+    day = materialize(
         ev.filter(F.col("event_type") == "purchase")
         .groupBy(
             (F.floor(F.unix_timestamp(F.col("ts").cast("date")) / 86400))
@@ -2762,7 +2752,6 @@ def q406_cooks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("y_c"))
         # the bounded day grid feeds every downstream pass: checkpoint
         # so the corpus aggregate runs ONCE (q296-class rule)
-        .localCheckpoint()
     )
     d0 = day.agg(F.min("d").alias("d0"))
     t = day.crossJoin(F.broadcast(d0)).select(

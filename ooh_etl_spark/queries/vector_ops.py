@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ooh_etl_spark.queries.registry import register
+from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_table, parallelize_rows
 
 _K = 8  # centroids: the first K vectors (deterministic seed choice)
@@ -989,7 +990,7 @@ def q474_embedding_separability(spark: SparkSession, sf_dir: str) -> DataFrame:
     # map-side-combinable aggregate; every downstream term (per-label
     # scatter, global gnum) derives from that |labels| x 66 census.
     dims = range(64)
-    lab = withq.groupBy("label").agg(
+    lab = materialize(withq.groupBy("label").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(
             F.expr(
@@ -998,7 +999,7 @@ def q474_embedding_separability(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("sumsq"),
         *[F.sum(F.col("qv")[d]).alias(f"s{d}") for d in dims],
-    ).localCheckpoint()  # |labels|-row census; feeds labm AND gnum
+    ))  # |labels|-row census; feeds labm AND gnum
     sq_fold = (
         "aggregate(array("
         + ", ".join(f"s{d}" for d in dims)

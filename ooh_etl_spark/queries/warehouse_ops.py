@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ooh_etl_spark.queries.registry import register
+from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_table, parallelize_rows
 
 # --- q176: SCD2 apply-changes -------------------------------------------
@@ -502,10 +503,9 @@ def q312_compaction_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint the (metadata-sized: one row per file/day) inventory:
     # it feeds both the target-size aggregate and the planning window,
     # and without it each consumer re-runs the corpus pass.
-    files = (
+    files = materialize(
         ev.groupBy(F.col("ts").cast("date").alias("d"))
         .agg(F.count(F.lit(1)).alias("rows_in"))
-        .localCheckpoint()
     )
     tot = files.agg(
         F.ceil(F.sum("rows_in") / 10.0).cast("bigint").alias("target")
@@ -816,7 +816,7 @@ def q329_sort_key_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("c_totalprice"),
         F.col("o_orderkey").alias("c_orderkey"),
     )
-    stacked = d.select(
+    stacked = materialize(d.select(
         "qcol",
         F.explode(
             F.array(
@@ -834,7 +834,7 @@ def q329_sort_key_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
         ).alias("s"),
-    ).select("qcol", "s.candidate", "s.v").localCheckpoint()
+    ).select("qcol", "s.candidate", "s.v"))
     rv = stacked.groupBy("candidate", "v").agg(F.count(F.lit(1)).alias("c"))
     wv = (
         Window.partitionBy("candidate")
@@ -941,7 +941,7 @@ def q340_rendezvous_sharding(spark: SparkSession, sf_dir: str) -> DataFrame:
     reason HRW beats ring hashing for engine-internal routing."""
     cust = load_table(spark, sf_dir, "customer")
     shards = spark.range(_HRW_N + 1).select(F.col("id").cast("int").alias("s"))
-    w = cust.select(F.col("c_custkey").alias("k")).crossJoin(
+    w = materialize(cust.select(F.col("c_custkey").alias("k")).crossJoin(
         F.broadcast(shards)
     ).select(
         "k",
@@ -955,7 +955,7 @@ def q340_rendezvous_sharding(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("bigint")
         .alias("wt"),
-    ).localCheckpoint()  # the weight table feeds both assignments
+    ))  # the weight table feeds both assignments
     a8 = (
         w.filter(F.col("s") < _HRW_N)
         .groupBy("k")

@@ -571,32 +571,23 @@ def test_wave20_25_plan_shapes(spark):
 
 
 def plan_of_nockpt(spark, name: str) -> str:
-    """Full-lineage plan: localCheckpoint no-op'd so the plan shows
-    every consumer's subtree back to the parquet scans (a checkpointed
-    DataFrame otherwise plans from an ExistingRDD, hiding the fact
-    shuffle the pin wants to assert on).
-
-    PySpark 4 gotcha (ADVICE r7): sessions return
-    pyspark.sql.classic.dataframe.DataFrame instances which OVERRIDE
-    localCheckpoint, so patching the pyspark.sql.DataFrame base class
-    is a silent no-op and the pin asserts on an ExistingRDD plan.
-    Patch the classic subclass (as tools/checkpoint_ab.py does) and
-    guard against vacuity: a full-lineage plan must reach parquet.
+    """Full-lineage plan: stage materialisation off (``full_lineage``)
+    so the plan shows every consumer's subtree back to the parquet
+    scans (a checkpointed DataFrame otherwise plans from an
+    ExistingRDD, hiding the fact shuffle the pin wants to assert on).
+    Guarded against vacuity: a full-lineage plan must reach parquet.
     """
-    from pyspark.sql.classic.dataframe import DataFrame
+    from ooh_etl_spark.stages import full_lineage
 
-    real = DataFrame.localCheckpoint
-    DataFrame.localCheckpoint = lambda self, eager=True: self
-    try:
+    with full_lineage():
         plan = physical_plan(QUERIES[name].fn(spark, SF_DIR))
-    finally:
-        DataFrame.localCheckpoint = real
     # Anti-vacuity: with checkpoints disabled the lineage MUST root at
-    # the parquet scans; an ExistingRDD-rooted plan means the patch
-    # regressed to a no-op and every downstream assertion is vacuous.
+    # the parquet scans; an ExistingRDD-rooted plan means a checkpoint
+    # bypassed ooh_etl_spark.stages and every downstream assertion is
+    # vacuous.
     assert plan.count("Scan parquet") >= 1, (
         f"{name}: no parquet scan in full-lineage plan - "
-        "localCheckpoint patch is a no-op again?\n" + plan
+        "a checkpoint bypassed full_lineage?\n" + plan
     )
     return plan
 

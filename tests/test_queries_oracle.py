@@ -17,8 +17,26 @@ from tests.conftest import SF_DIR, assert_matches_oracle
 # over the full registry at sf0.001 AND sf0.01 — this parametrization
 # triples that coverage at ~35 min of suite wall clock, which is what
 # pushed the r13 gate run past the driver's limit (VERDICT r13 item 2).
-@pytest.mark.slow
-@pytest.mark.parametrize("name", sorted(QUERIES))
+# The default gate still smoke-checks a few: the checkpoint funnel trio
+# (the stage cuts and concurrent materialisation the benchmark times)
+# and the three queries round 14 rewrote for speed (ADVICE r14).
+_GATE_ORACLE = {
+    "q479_corpus_build_funnel",
+    "q333_hits_authority",
+    "q453_doremi_mixture_step",
+    "q373_price_indices",
+    "q433_dsir_importance",
+    "q296_symspell_edit_join",
+}
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        pytest.param(n, marks=() if n in _GATE_ORACLE else pytest.mark.slow)
+        for n in sorted(QUERIES)
+    ],
+)
 def test_query_matches_oracle(spark, duck, name):
     assert_matches_oracle(spark, duck, name)
 

@@ -23,6 +23,7 @@ def main() -> None:
     from ooh_etl_spark.plans.audit import physical_plan
     from ooh_etl_spark.queries import QUERIES
     from ooh_etl_spark.session import get_spark
+    from ooh_etl_spark.stages import full_lineage
 
     spark = get_spark("plans")
     out = [
@@ -94,17 +95,11 @@ def main() -> None:
         if "Scan parquet" not in plan:
             # Checkpoint-rooted plan (every input is an ExistingRDD) —
             # unreadable for audit. Append the full-lineage variant
-            # (localCheckpoint no-op'd, the tests/test_plans.py
+            # (stage materialisation off, the tests/test_plans.py
             # plan_of_nockpt mechanism) so pushdown/broadcast/shuffle
             # structure of the pre-checkpoint stages stays reviewable.
-            from pyspark.sql.classic.dataframe import DataFrame
-
-            real = DataFrame.localCheckpoint
-            DataFrame.localCheckpoint = lambda self, eager=True: self
-            try:
+            with full_lineage():
                 full = physical_plan(QUERIES[name].fn(spark, SF_DIR))
-            finally:
-                DataFrame.localCheckpoint = real
             full = re.sub(r"file:[^\s,\]]+", "<path>", full)
             from ooh_etl_spark.plans.audit import shuffle_count
 

@@ -12,7 +12,7 @@ echo "== 1b. bench noise guard (VERDICT r12 item 4: auto re-run if >15% above pr
 python tools/bench_noise_guard.py
 
 echo "== 2. full pytest =="
-python -m pytest tests/ -q || exit 1
+python -m pytest tests/ -q -m "slow or not slow" || exit 1
 
 echo "== 3. full-registry oracle differential, sf0.001 then sf0.01 =="
 python tools/check_oracle.py /root/testdata/sf0.001 || exit 1
