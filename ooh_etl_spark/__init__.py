@@ -2,7 +2,7 @@
 
 A brand-new, Spark-first re-expression of the query and data-processing
 capabilities of the reference ETL (joshparkerj/ooh-etl, surveyed in
-/root/repo/SURVEY.md), extended with the LLM-data-pipeline operator set
+SURVEY.md), extended with the LLM-data-pipeline operator set
 (dedup, similarity search, multimodal columns, text analysis) mandated by
 the driver contract (BASELINE.json).
 

@@ -26,9 +26,16 @@ LANG_PROFILES: dict[str, tuple[str, ...]] = {
 }
 
 
+#: The DuckDB twin of :func:`tokenize`, for oracle SQL over a ``text``
+#: column.
+DUCK_TOKENIZE = "regexp_split_to_array(lower(trim(text)), '\\s+')"
+
+
 def tokenize(text: Column) -> Column:
-    """Whitespace tokenization (lowercased)."""
-    return F.split(F.lower(F.trim(text)), r"\s+")
+    """Whitespace tokenization (lowercased). Splits on exactly the set
+    RE2's ``\\s`` matches in :data:`DUCK_TOKENIZE`, ``[\\t\\n\\f\\r ]``;
+    Java's ``\\s`` would also split on vertical tab (U+000B)."""
+    return F.split(F.lower(F.trim(text)), r"[\t\n\f\r ]+")
 
 
 def bpe_ish_tokens(text: Column) -> Column:

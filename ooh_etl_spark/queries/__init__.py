@@ -14,14 +14,10 @@ from ooh_etl_spark.queries import text  # noqa: F401
 from ooh_etl_spark.queries import dedup  # noqa: F401
 from ooh_etl_spark.queries import similarity  # noqa: F401
 from ooh_etl_spark.queries import multimodal  # noqa: F401
-from ooh_etl_spark.queries import advanced  # noqa: F401
 from ooh_etl_spark.queries import udfs  # noqa: F401
-from ooh_etl_spark.queries import advanced2  # noqa: F401
-from ooh_etl_spark.queries import advanced3  # noqa: F401
 from ooh_etl_spark.queries import tpch_shapes  # noqa: F401
-from ooh_etl_spark.queries import tpch_shapes2  # noqa: F401
 from ooh_etl_spark.queries import pipeline_ops  # noqa: F401
-from ooh_etl_spark.queries import llm_ops2  # noqa: F401
+from ooh_etl_spark.queries import llm_ops  # noqa: F401
 from ooh_etl_spark.queries import quality_ops  # noqa: F401
 from ooh_etl_spark.queries import text_stats  # noqa: F401
 from ooh_etl_spark.queries import event_analytics  # noqa: F401
@@ -48,51 +44,18 @@ from ooh_etl_spark.queries import warehouse_ops  # noqa: F401
 from ooh_etl_spark.queries import windows  # noqa: E402,F401
 
 #: The driver's correctness gate checks the FIRST 50 registry entries,
-#: so the head of the registry is chosen deliberately rather than by
-#: module import order. Round-13 rotation (per VERDICT r12 item 2,
-#: executing the in-file schedule verbatim): keep the §2.A reference
-#: contract and the streaming trio (6 pinned slots); the 44 fresh
-#: slots are ALL first-time-in-window entries — first the complete
-#: round-12 wave (q459–q478 — 20 entries, newest-code-first;
-#: judge-verified at sf0.01 in VERDICT r12 but never driver-
-#: confirmed), then the 24-query old-debt remainder (q254–q263,
-#: q266, q268, q349, q368–q375, and the b-variants
-#: q72b/q139b/q149b). Never-driver-seen drains 44 → 0 (plus any new
-#: r13 queries, which become r14's newest-code-first block);
-#: everything rotated out stays green in the full-registry replica
-#: (tools/check_oracle.py --strict).
-#:
-#: DEBT SCHEDULE (never-driver-seen: 160 after r8 → 127 after r9 →
-#: 92 after r10 → 68 after r11 → 44 after r12 → 0 old after this
-#: window; new-query volume capped ≤20/round per VERDICT r6 item 4,
-#: and the r13 wave is kept deliberately small per VERDICT r12
-#: item 3 so the r14 window can both confirm it and begin the
-#: re-confirmation cycle):
-#:   r14: PINS (6) + the r13 wave (newest-code-first: q479–q482,
-#:        4 entries) + 40 round-robin cursor slots beginning at q01
-#:        (registry head).
-#:
-#: POST-DEBT ROTATION POLICY (standing — VERDICT r11 item 3;
-#: activates in r14 now that never-seen hits 0 with this window).
-#: Each round's 50-slot window is:
+#: so the head of the registry is chosen here rather than by module
+#: import order. Each round's 50-slot window is:
 #:   1. PINS (6): the §2.A contract trio (flagship_doc_scan,
 #:      q_ooh_records, q_ooh_report) and the streaming trio
-#:      (q33/q36/q46) — every round, no exceptions.
+#:      (q33/q36/q46), every round.
 #:   2. NEWEST-CODE-FIRST: every query added or materially modified
-#:      since the last driver window (the round's wave), so new code
-#:      gets driver confirmation the round after it lands.
-#:   3. ROUND-ROBIN over the remaining registry in a fixed cursor
-#:      order (registry-number order, wrapping): the leftover slots
-#:      re-confirm previously-green rows so none goes stale. With
-#:      ~420 non-pinned, non-wave rows and ~24–44 revisit slots per
-#:      round, every row is re-confirmed at least once every ~10–17
-#:      rounds. CURSOR LOG (updated each round so staleness is
-#:      auditable — VERDICT r12 item 3):
-#:        r13 window = debt remainder + full r12 wave (this file);
-#:        r13 wave (lands in r14's newest-code-first block) =
-#:        q479_corpus_build_funnel, q480_gopher_repetition_census,
-#:        q481_funnel_stage_overlap, q482_gate_threshold_curve;
-#:        r14 cursor START = q01 (registry-number order, wrapping).
+#:      since the last driver window, so new code gets driver
+#:      confirmation the round after it lands.
+#:   3. ROUND-ROBIN over the rest of the registry in registry-number
+#:      order, wrapping, so no previously green row goes stale.
+#: Everything outside the window stays checked by the full-registry
+#: replica (tools/check_oracle.py).
 _DRIVER_WINDOW = [
     # reference surface + flagship analog (§2.A contract, every round)
     "flagship_doc_scan",

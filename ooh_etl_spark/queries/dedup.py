@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ooh_etl_spark.functions.text import DUCK_TOKENIZE, tokenize
 from ooh_etl_spark.operators.dedup import (
     _shingle_sets,
     exact_dedup,
@@ -17,9 +18,7 @@ from ooh_etl_spark.operators.dedup import (
 )
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize
-from ooh_etl_spark.tables import load_table
-
-_DUCK_TOKS = "regexp_split_to_array(lower(trim(text)), '\\s+')"
+from ooh_etl_spark.tables import load_documents, load_table
 
 
 @register(
@@ -45,7 +44,7 @@ def q26_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DUCK_JACCARD = f"""
     WITH d AS (
-      SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, {DUCK_TOKENIZE} AS toks FROM documents),
          s AS (
       SELECT doc_id,
              CASE WHEN len(toks) >= 3
@@ -123,7 +122,7 @@ def q73_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DUCK_CLUSTERS = f"""
     WITH RECURSIVE d AS (
-      SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, {DUCK_TOKENIZE} AS toks FROM documents),
          s AS (
       SELECT doc_id,
              CASE WHEN len(toks) >= 3
@@ -427,7 +426,7 @@ _XL_T = 0.3  # cross-lingual threshold: translated/copied content is
 
 _DUCK_XL = f"""
     WITH d AS (
-      SELECT doc_id, lang, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, lang, {DUCK_TOKENIZE} AS toks FROM documents),
          s AS (
       SELECT doc_id, lang,
              CASE WHEN len(toks) >= 3
@@ -559,7 +558,7 @@ _CONT_T = 0.8  # containment threshold: B mostly inside A
     "q268_containment_pairs",
     f"""
     WITH d AS (
-      SELECT doc_id, {{_DUCK_TOKS}} AS toks FROM documents),
+      SELECT doc_id, {DUCK_TOKENIZE} AS toks FROM documents),
          s AS (
       SELECT doc_id,
              CASE WHEN len(toks) >= 3
@@ -586,7 +585,7 @@ _CONT_T = 0.8  # containment threshold: B mostly inside A
     JOIN sz sb ON id_b = sb.doc_id
     WHERE round(10000.0 * shared / least(sa.sz, sb.sz)) >= {_CONT_T * 10000:.0f}
     ORDER BY id_a, id_b
-    """.replace("{_DUCK_TOKS}", _DUCK_TOKS),
+    """,
 )
 def q268_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CONTAINMENT near-dup pairs (Broder 1997's second resemblance
@@ -663,7 +662,7 @@ _SUF_MIN_LCP = 10  # report cross-doc adjacencies sharing >= 10 chars
 
 _DUCK_SUFFIX_LCP = f"""
     WITH toks AS (
-      SELECT doc_id, {_DUCK_TOKS} AS t FROM documents),
+      SELECT doc_id, {DUCK_TOKENIZE} AS t FROM documents),
          suf AS (
       SELECT doc_id, i AS pos,
              substr(array_to_string(t[i:i+{_SUF_TOKENS - 1}], ' '),
@@ -843,7 +842,7 @@ _SWEEP_TS = (5000, 6000, 7000, 8000, 9000)  # Jaccard thresholds, bp
 
 _DUCK_SWEEP = f"""
     WITH d AS (
-      SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, {DUCK_TOKENIZE} AS toks FROM documents),
          s AS (
       SELECT doc_id,
              CASE WHEN len(toks) >= 3
@@ -954,7 +953,7 @@ _DUCK_INC_DEDUP = f"""
     WITH mx AS (SELECT (max(doc_id) + 1) * ({_INC_SPLIT_FRAC} - 1)
                        // {_INC_SPLIT_FRAC} AS cut FROM documents),
          d AS (
-      SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, {DUCK_TOKENIZE} AS toks FROM documents),
          s AS (
       SELECT doc_id,
              CASE WHEN len(toks) >= 3
@@ -1341,7 +1340,7 @@ def q417_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ooh_etl_spark.tables import parallelize_rows  # noqa: PLC0415
 
-    docs = parallelize_rows(load_table(spark, sf_dir, "documents"))
+    docs = load_documents(spark, sf_dir)
     k, w = _WIN_K, _WIN_W
     grams = docs.filter(F.length("text") >= k + w - 1).select(
         "doc_id",
@@ -1499,7 +1498,7 @@ def q418_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ooh_etl_spark.tables import parallelize_rows  # noqa: PLC0415
 
-    docs = parallelize_rows(load_table(spark, sf_dir, "documents"))
+    docs = load_documents(spark, sf_dir)
     k = _CDC_K
     # one explode pass emits every candidate position 0..L plus keeps
     # only the sentinels (0, L) and the mask-satisfying interior
@@ -1593,7 +1592,7 @@ _KNUTH_T = 3435973837  # floor(0.8 * 2^32) — the q69 80/20 threshold
 
 _DUCK_LEAKAGE = f"""
     WITH RECURSIVE d AS (
-      SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, {DUCK_TOKENIZE} AS toks FROM documents),
          s AS (
       SELECT doc_id,
              CASE WHEN len(toks) >= 3
@@ -1821,8 +1820,8 @@ _LINE_W = 8  # tokens per synthesized "line" (the corpus has no newlines)
 
 _DUCK_LINE_DEDUP = f"""
     WITH d AS (
-      SELECT doc_id, source, {_DUCK_TOKS} AS toks,
-             CAST(ceil(len({_DUCK_TOKS}) / {_LINE_W}.0) AS BIGINT) AS nch
+      SELECT doc_id, source, {DUCK_TOKENIZE} AS toks,
+             CAST(ceil(len({DUCK_TOKENIZE}) / {_LINE_W}.0) AS BIGINT) AS nch
       FROM documents),
          ln AS (
       SELECT doc_id, source,
@@ -1879,7 +1878,7 @@ def q424_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("toks"),
+        tokenize(F.col("text")).alias("toks"),
     )
     t1 = d.select(
         "doc_id",
@@ -1930,7 +1929,7 @@ def q424_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DUCK_BOW_DEDUP = f"""
     WITH d AS (
-      SELECT doc_id, source, text, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, source, text, {DUCK_TOKENIZE} AS toks FROM documents),
          f AS (
       SELECT doc_id, source,
              row_number() OVER (PARTITION BY text ORDER BY doc_id)
@@ -2025,7 +2024,7 @@ def q425_bow_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DUCK_CLUSTER_REPS = f"""
     WITH RECURSIVE d AS (
-      SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, {DUCK_TOKENIZE} AS toks FROM documents),
          s AS (
       SELECT doc_id,
              CASE WHEN len(toks) >= 3
@@ -2136,7 +2135,7 @@ _DUCK_MH_MATCHES = " + ".join(
 
 _DUCK_MINHASH_CALIB = f"""
     WITH d AS (
-      SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, {DUCK_TOKENIZE} AS toks FROM documents),
          s AS (
       SELECT doc_id,
              CASE WHEN len(toks) >= 3
@@ -2284,7 +2283,7 @@ def q427_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DUCK_ROUGE2 = f"""
     WITH d AS (
-      SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, {DUCK_TOKENIZE} AS toks FROM documents),
          s AS (
       SELECT doc_id,
              CASE WHEN len(toks) >= 3
@@ -2439,7 +2438,7 @@ def q428_rouge2_pair_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DUCK_CONTAINMENT = f"""
     WITH d AS (
-      SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, {DUCK_TOKENIZE} AS toks FROM documents),
          s AS (
       SELECT doc_id,
              CASE WHEN len(toks) >= 3
@@ -2526,7 +2525,7 @@ _SD_N = 2  # bigram commonness: the shortest gram with cross-doc signal
 
 _DUCK_SOFTDEDUP = f"""
     WITH t AS (
-      SELECT doc_id, source, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, source, {DUCK_TOKENIZE} AS toks FROM documents),
          g AS (
       SELECT doc_id, source,
              unnest(list_transform(
@@ -2582,7 +2581,7 @@ def q442_softdedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured per GRAM, never per document pair."""
     from ooh_etl_spark.tables import parallelize_rows
 
-    docs = parallelize_rows(load_table(spark, sf_dir, "documents"))
+    docs = load_documents(spark, sf_dir)
     from ooh_etl_spark.functions.text import tokenize
 
     t = docs.select("doc_id", "source", tokenize(F.col("text")).alias("toks"))
@@ -2746,7 +2745,7 @@ _SCURVE_VALUES = ", ".join(f"({b}, {r}, {i}, {p})" for b, r, i, p in _scurve_row
 
 _DUCK_SCURVE = f"""
     WITH d AS (
-      SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, {DUCK_TOKENIZE} AS toks FROM documents),
          s AS (
       SELECT doc_id,
              CASE WHEN len(toks) >= 3
@@ -3039,7 +3038,7 @@ _DFCAP_GRID = (1000000000, 64, 16)
 
 _DUCK_DFCAP = f"""
     WITH d AS (
-      SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, {DUCK_TOKENIZE} AS toks FROM documents),
          s AS (
       SELECT doc_id,
              CASE WHEN len(toks) >= 3
@@ -3317,7 +3316,7 @@ _SPLICE_TOP = 20
 
 _DUCK_SPLICE = f"""
     WITH d AS (
-      SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, {DUCK_TOKENIZE} AS toks FROM documents),
          keys AS (
       SELECT doc_id,
              array_to_string(toks[1:{_SPLICE_K}], ' ') AS pre,
@@ -3419,7 +3418,7 @@ def q463_splice_boundary_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DUCK_BOW = (
     "md5(array_to_string(list_sort(list_distinct("
-    + _DUCK_TOKS
+    + DUCK_TOKENIZE
     + ")), ' '))"
 )
 

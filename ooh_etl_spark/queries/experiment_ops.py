@@ -3353,7 +3353,9 @@ def q402_obrien_fleming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- q410: delete-one-group jackknife SE of a ratio metric (round 6) --------
-_DUCK_JACK = """
+_JACK_Q = 100  # replicate ratios are quantised to 1/_JACK_Q cent
+
+_DUCK_JACK = f"""
     WITH o AS (
       SELECT c.c_nationkey AS nk,
              CAST(round(o.o_totalprice * 100) AS BIGINT) AS vc
@@ -3368,27 +3370,30 @@ _DUCK_JACK = """
       FROM g),
          loo AS (
       SELECT g.nk,
-             (tot.ss - g.s) * 1.0 / (tot.nn - g.n) AS r_i
+             CAST(round((tot.ss - g.s) * 1.0 / (tot.nn - g.n) * {_JACK_Q})
+                  AS BIGINT) AS rq
       FROM g CROSS JOIN tot),
+         rs AS (
+      SELECT CAST(count(*) AS BIGINT) AS gq, CAST(sum(rq) AS BIGINT) AS rsum
+      FROM loo),
          jk AS (
       SELECT CAST(count(*) AS BIGINT) AS gg,
-             avg(r_i) AS rbar,
-             sum((r_i - (SELECT avg(r_i) FROM loo))
-                 * (r_i - (SELECT avg(r_i) FROM loo))) AS ssq
-      FROM loo)
+             CAST(sum((rs.gq * rq - rs.rsum) * (rs.gq * rq - rs.rsum))
+                  AS BIGINT) AS ssq
+      FROM loo CROSS JOIN rs),
+         v AS (
+      SELECT gg, (gg - 1.0) / gg * ssq / (gg * gg * {_JACK_Q * _JACK_Q}.0)
+               AS var_j
+      FROM jk)
     SELECT tot.gg AS n_groups,
            CAST(round(tot.ss * 1.0 / tot.nn) AS BIGINT) AS ratio_c,
-           CAST(round((jk.gg - 1.0) / jk.gg * jk.ssq * 1000000.0)
-                AS BIGINT) AS jack_var_e6,
-           CAST(round(sqrt((jk.gg - 1.0) / jk.gg * jk.ssq) * 1000.0)
-                AS BIGINT) AS jack_se_milli,
-           CAST(round((tot.ss * 1.0 / tot.nn
-                       - 1.959964 * sqrt((jk.gg - 1.0) / jk.gg * jk.ssq)))
+           CAST(round(v.var_j * 1000000.0) AS BIGINT) AS jack_var_e6,
+           CAST(round(sqrt(v.var_j) * 1000.0) AS BIGINT) AS jack_se_milli,
+           CAST(round((tot.ss * 1.0 / tot.nn - 1.959964 * sqrt(v.var_j)))
                 AS BIGINT) AS ci_lo_c,
-           CAST(round((tot.ss * 1.0 / tot.nn
-                       + 1.959964 * sqrt((jk.gg - 1.0) / jk.gg * jk.ssq)))
+           CAST(round((tot.ss * 1.0 / tot.nn + 1.959964 * sqrt(v.var_j)))
                 AS BIGINT) AS ci_hi_c
-    FROM tot CROSS JOIN jk
+    FROM tot CROSS JOIN v
 """
 
 
@@ -3405,9 +3410,14 @@ def q410_jackknife_ratio_se(spark: SparkSession, sf_dir: str) -> DataFrame:
     has no closed form (denominator is random); the jackknife is the
     standard answer.
 
-    Exactness: group sums exact; each replicate ratio is a double of
-    two exact integers; the variance is over g=25 such doubles —
-    identical in both engines — quantized once.
+    Exactness: group sums exact; each replicate ratio r_i is a double
+    of two exact integers, quantised to rq_i = round(r_i * 100), an
+    integer count of 1/100 cents. Each deviation is then the exact
+    integer g * rq_i - sum(rq), and jack_var = (g-1)/g * sum of their
+    squares / (g^2 * 100^2). That sum is a BIGINT, so summation order
+    cannot change it; a double sum of squares above 2^53 would depend
+    on the order. At sf0.001, the largest deviations of the fixtures,
+    it is about 8e17, inside BIGINT under ANSI mode.
 
     100 TB shape: one (nation)-keyed corpus aggregate behind a
     broadcast dim join; replicates and moments are g-row arithmetic.
@@ -3436,19 +3446,26 @@ def q410_jackknife_ratio_se(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = materialize(tot)
     loo = materialize(g.crossJoin(F.broadcast(tot)).select(
         "nk",
-        ((F.col("ss") - F.col("s")) * 1.0 / (F.col("nn") - F.col("n"))).alias("r_i"),
+        F.round(
+            (F.col("ss") - F.col("s")) * 1.0 / (F.col("nn") - F.col("n")) * _JACK_Q
+        ).cast("bigint").alias("rq"),
     ))
-    rbar = loo.agg(F.avg("r_i").alias("rbar"))
+    rs = loo.agg(
+        F.count(F.lit(1)).cast("bigint").alias("gq"),
+        F.sum("rq").cast("bigint").alias("rsum"),
+    )
+    dev = F.col("gq") * F.col("rq") - F.col("rsum")
     jk = (
-        loo.crossJoin(F.broadcast(rbar))
+        loo.crossJoin(F.broadcast(rs))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("gg2"),
-            F.sum(
-                (F.col("r_i") - F.col("rbar")) * (F.col("r_i") - F.col("rbar"))
-            ).alias("ssq"),
+            F.sum(dev * dev).cast("bigint").alias("ssq"),
         )
     )
-    var_j = (F.col("gg2") - 1.0) / F.col("gg2") * F.col("ssq")
+    var_j = (
+        (F.col("gg2") - 1.0) / F.col("gg2") * F.col("ssq")
+        / (F.col("gg2") * F.col("gg2") * float(_JACK_Q * _JACK_Q))
+    )
     ratio = F.col("ss") * 1.0 / F.col("nn")
     return tot.crossJoin(F.broadcast(jk)).select(
         F.col("gg").alias("n_groups"),

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ooh_etl_spark.queries.registry import register
-from ooh_etl_spark.tables import load_table
+from ooh_etl_spark.tables import load_documents
 
 LONG_KEY = 6  # F1 analog: the reference uses key-length > 26 (index.js:177)
 
@@ -87,7 +87,7 @@ def flagship_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     query — the driver smoke check."""
     from ooh_etl_spark.tables import parallelize_rows
 
-    docs = parallelize_rows(load_table(spark, sf_dir, "documents"))
+    docs = load_documents(spark, sf_dir)
     wc = word_count_map(F.col("text"))
     df = docs.withColumn("wc", wc)
     # F1: EXISTS over map keys (index.js:177), null-safe per SURVEY §7.3.1.

@@ -1,4 +1,4 @@
-"""Sixth coverage wave: the text-corpus shaping operators between raw
+"""LLM data preparation: the text-corpus shaping operators between raw
 documents and a training run — chunking long documents into overlapping
 token windows, packing short ones into fixed-token batches, balancing a
 corpus across languages, quantizing embeddings, and gap-based
@@ -14,10 +14,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ooh_etl_spark.functions.text import tokenize
+from ooh_etl_spark.functions.text import DUCK_TOKENIZE, tokenize
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize
-from ooh_etl_spark.tables import load_table, parallelize_rows
+from ooh_etl_spark.tables import load_documents, load_table, parallelize_rows
 
 _CHUNK = 8  # tokens per chunk
 _STRIDE = 6  # tokens between chunk starts (overlap = _CHUNK - _STRIDE)
@@ -27,7 +27,7 @@ _STRIDE = 6  # tokens between chunk starts (overlap = _CHUNK - _STRIDE)
     "q74_doc_chunking",
     f"""
     WITH t AS (
-      SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
+      SELECT doc_id, {DUCK_TOKENIZE} AS toks
       FROM documents),
          starts AS (
       SELECT doc_id, toks,
@@ -49,7 +49,7 @@ def q74_doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, chunk_id) lineage for provenance. Tail chunks shorter than
     the window are kept (standard practice is keep-or-pad; padding is a
     training-side concern)."""
-    docs = parallelize_rows(load_table(spark, sf_dir, "documents"))
+    docs = load_documents(spark, sf_dir)
     toks = docs.select("doc_id", tokenize(F.col("text")).alias("toks"))
     n = F.size("toks")
     starts = toks.select(
@@ -76,7 +76,7 @@ _CAP = 64  # tokens per packed batch
     f"""
     WITH t AS (
       SELECT source, doc_id,
-             len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS n_tokens
+             len({DUCK_TOKENIZE}) AS n_tokens
       FROM documents),
          c AS (
       SELECT source, doc_id, n_tokens,
@@ -99,7 +99,7 @@ def q75_token_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel — the window partitions on `source`, so no global sort;
     at 100 TB each shard packs locally, which is how packing is
     actually run (cross-shard packing would serialize the corpus)."""
-    docs = parallelize_rows(load_table(spark, sf_dir, "documents"))
+    docs = load_documents(spark, sf_dir)
     t = docs.select("source", "doc_id", F.size(tokenize(F.col("text"))).alias("n_tokens"))
     w = (
         Window.partitionBy("source")
@@ -264,7 +264,7 @@ def q78_sessionize_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DUCK_CHUNK_DEDUP = f"""
     WITH t AS (
-      SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
+      SELECT doc_id, {DUCK_TOKENIZE} AS toks
       FROM documents),
          starts AS (
       SELECT doc_id, toks,
@@ -303,7 +303,7 @@ def q154_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial counts; the hash key is uniform by construction so the
     shuffle cannot skew. Cost is linear in total chunks — same plan as
     exact doc-level dedup (q26), one granularity down."""
-    docs = parallelize_rows(load_table(spark, sf_dir, "documents"))
+    docs = load_documents(spark, sf_dir)
     toks = docs.select("doc_id", tokenize(F.col("text")).alias("toks"))
     n = F.size("toks")
     starts = toks.select(
@@ -904,7 +904,7 @@ _LB_BATCH = 32  # examples per batch
 
 _DUCK_LENGTH_BUCKET = f"""
     WITH d AS (
-      SELECT doc_id, len(regexp_split_to_array(lower(trim(text)), '\\s+'))
+      SELECT doc_id, len({DUCK_TOKENIZE})
                AS n_toks
       FROM documents),
          arrival AS (

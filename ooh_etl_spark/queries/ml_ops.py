@@ -32,9 +32,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ooh_etl_spark.functions.text import DUCK_TOKENIZE
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize
-from ooh_etl_spark.tables import load_table, parallelize_rows
+from ooh_etl_spark.tables import load_documents, load_table, parallelize_rows
 
 _DIM = 64
 
@@ -275,11 +276,9 @@ def q170_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- q187/q188: naive Bayes — train by aggregation, classify by join ----
 _NB_TOP = 5
 
-_DUCK_TOKS_NB = "regexp_split_to_array(lower(trim(text)), '\\s+')"
-
 _DUCK_NB_TRAIN = f"""
     WITH tok AS (
-      SELECT lang, unnest({_DUCK_TOKS_NB}) AS token FROM documents),
+      SELECT lang, unnest({DUCK_TOKENIZE}) AS token FROM documents),
          ct AS (SELECT lang, token, count(*) AS cnt FROM tok GROUP BY 1, 2),
          nl AS (SELECT lang, count(*) AS n_l FROM tok GROUP BY 1),
          v AS (SELECT count(DISTINCT token) AS v FROM tok),
@@ -310,7 +309,7 @@ def q187_naive_bayes_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     Engine-exactness: counts are integers; the single ln() evaluates
     on an exact integer ratio and quantizes to micro-nats per
     PARAMETER (no cross-row float sums anywhere)."""
-    docs = parallelize_rows(load_table(spark, sf_dir, "documents"))
+    docs = load_documents(spark, sf_dir)
     from ooh_etl_spark.functions.text import tokenize
 
     tok = docs.select("lang", F.explode_outer(tokenize(F.col("text"))).alias("token"))
@@ -348,7 +347,7 @@ def q187_naive_bayes_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DUCK_NB_CLASSIFY = f"""
     WITH tok AS (
-      SELECT doc_id, lang AS actual, unnest({_DUCK_TOKS_NB}) AS token
+      SELECT doc_id, lang AS actual, unnest({DUCK_TOKENIZE}) AS token
       FROM documents),
          ct AS (SELECT actual AS lang, token, count(*) AS cnt
                 FROM tok GROUP BY 1, 2),
@@ -416,7 +415,7 @@ def q188_naive_bayes_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     number this fixture cannot support. The operator's value is the
     SHAPE: train-by-aggregation + broadcast-scored apply, oracle-exact
     end to end."""
-    docs = parallelize_rows(load_table(spark, sf_dir, "documents"))
+    docs = load_documents(spark, sf_dir)
     from ooh_etl_spark.functions.text import tokenize
 
     tok = docs.select(

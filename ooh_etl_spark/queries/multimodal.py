@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from ooh_etl_spark.operators.multimodal import attach_payload, extract_features
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize
-from ooh_etl_spark.tables import load_table
+from ooh_etl_spark.tables import load_documents, load_table
 
 
 @register(
@@ -68,7 +68,7 @@ def q32b_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     float array really is produced 8-long per row."""
     from ooh_etl_spark.tables import parallelize_rows
 
-    docs = parallelize_rows(load_table(spark, sf_dir, "documents"))
+    docs = load_documents(spark, sf_dir)
     feats = extract_features(attach_payload(docs))
     return feats.select(
         "doc_id",

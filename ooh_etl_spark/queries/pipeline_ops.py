@@ -13,10 +13,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ooh_etl_spark.functions.text import tokenize
+from ooh_etl_spark.functions.text import DUCK_TOKENIZE, tokenize
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize
-from ooh_etl_spark.tables import load_table, parallelize_rows
+from ooh_etl_spark.tables import load_documents, load_table
 
 # One SQL text, two engines: ANSI-only subset (no engine-specific
 # functions), so the SAME string is the Spark query and the oracle.
@@ -192,7 +192,7 @@ def q71_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the corpus itself is clean words) so the redaction provably
     fires. Patterns are RE2-safe (no lookarounds) so one regex serves
     both engines. Narrow per-row expressions — shuffle-free."""
-    docs = parallelize_rows(load_table(spark, sf_dir, "documents"))
+    docs = load_documents(spark, sf_dir)
     raw = F.concat(
         F.col("text"),
         F.lit(" contact user"),
@@ -462,11 +462,9 @@ _DSIR_B = 1024  # hashed feature buckets
 _DSIR_TARGET = ("src1", "src2", "src3")  # curated-proxy target slice
 _DSIR_TOP = 20
 
-_DUCK_TOKS_R10 = "regexp_split_to_array(lower(trim(text)), '\\s+')"
-
 _DUCK_DSIR = f"""
     WITH d AS (
-      SELECT doc_id, source, {_DUCK_TOKS_R10} AS toks FROM documents),
+      SELECT doc_id, source, {DUCK_TOKENIZE} AS toks FROM documents),
          g AS (
       SELECT doc_id, source,
              unnest(CASE WHEN len(toks) >= 2
@@ -623,7 +621,7 @@ _BUDGET_X_MILLI = 2500  # token budget = 2.5x the corpus
 
 _DUCK_EPOCHS = f"""
     WITH t AS (
-      SELECT source, len({_DUCK_TOKS_R10}) AS n FROM documents),
+      SELECT source, len({DUCK_TOKENIZE}) AS n FROM documents),
          s AS (
       SELECT source, CAST(sum(n) AS BIGINT) AS tokens FROM t GROUP BY 1),
          tot AS (
@@ -712,7 +710,7 @@ _PACK_L = 128  # context length in tokens (fixture docs are short)
 _DUCK_PACKING = f"""
     WITH t AS (
       SELECT doc_id, source,
-             len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS n
+             len({DUCK_TOKENIZE}) AS n
       FROM documents),
          o AS (
       SELECT doc_id, source, n,
@@ -767,7 +765,7 @@ def q445_packing_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = docs.select(
         "doc_id",
         "source",
-        F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("n"),
+        F.size(tokenize(F.col("text"))).alias("n"),
     )
     w = (
         Window.partitionBy("source")
@@ -819,7 +817,7 @@ _TAU_MILLI = (1000, 1430, 2000, 3330)  # tau=1 (natural) .. 3.33 (near-uniform)
 _DUCK_TAU = f"""
     WITH t AS (
       SELECT source,
-             sum(len(regexp_split_to_array(lower(trim(text)), '\\s+'))) AS toks
+             sum(len({DUCK_TOKENIZE})) AS toks
       FROM documents GROUP BY source),
          tot AS (SELECT sum(toks) AS total FROM t),
          grid AS (SELECT unnest([{", ".join(str(x) for x in _TAU_MILLI)}]) AS tau_milli),
@@ -864,7 +862,7 @@ def q447_temperature_mixture_curve(spark: SparkSession, sf_dir: str) -> DataFram
     docs = load_table(spark, sf_dir, "documents")
     t = docs.groupBy("source").agg(
         F.sum(
-            F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
+            F.size(tokenize(F.col("text")))
         ).alias("toks")
     )
     tot = t.agg(F.sum("toks").alias("total"))
@@ -909,11 +907,11 @@ def q447_temperature_mixture_curve(spark: SparkSession, sf_dir: str) -> DataFram
 
 # --- round-11 wave 3: q453 DoReMi-style mixture reweighting step ---------------
 
-_DUCK_DOREMI = """
+_DUCK_DOREMI = f"""
     WITH st AS (
       SELECT source, t.term, count(*) AS m
       FROM documents,
-           unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS t(term)
+           unnest({DUCK_TOKENIZE}) AS t(term)
       GROUP BY source, t.term),
          tk AS (
       SELECT term, sum(m) AS c, sum(sum(m)) OVER () AS n
@@ -1050,7 +1048,7 @@ _DUCK_TRUNC = f"""
     WITH g AS (SELECT unnest([{", ".join(str(x) for x in _TRUNC_GRID)}])
                  AS max_len),
          d AS (
-      SELECT source, len({_DUCK_TOKS_R10}) AS n FROM documents)
+      SELECT source, len({DUCK_TOKENIZE}) AS n FROM documents)
     SELECT source, CAST(max_len AS BIGINT) AS max_len,
            CAST(count(*) AS BIGINT) AS n_docs,
            CAST(sum(CASE WHEN n > max_len THEN 1 ELSE 0 END) AS BIGINT)
@@ -1111,7 +1109,7 @@ def q460_truncation_loss_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DUCK_CURRICULUM = f"""
     WITH d AS (
       SELECT doc_id, source, n_chars,
-             len({_DUCK_TOKS_R10}) AS n_toks
+             len({DUCK_TOKENIZE}) AS n_toks
       FROM documents),
          q AS (
       SELECT *, ntile(4) OVER (PARTITION BY source
@@ -1195,7 +1193,7 @@ _STRIDE_GRID = (64, 48, 32, 16)
 _DUCK_STRIDE = f"""
     WITH g AS (SELECT unnest([{", ".join(str(x) for x in _STRIDE_GRID)}])
                  AS stride),
-         d AS (SELECT len({_DUCK_TOKS_R10}) AS n FROM documents),
+         d AS (SELECT len({DUCK_TOKENIZE}) AS n FROM documents),
          c AS (
       SELECT stride, n,
              CASE WHEN n <= {_CHUNK_W} THEN 1

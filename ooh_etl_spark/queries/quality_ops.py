@@ -19,23 +19,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ooh_etl_spark.functions.text import tokenize
+from ooh_etl_spark.functions.text import DUCK_TOKENIZE, tokenize
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize, materialize_all
-from ooh_etl_spark.tables import load_table, parallelize_rows
-
-_DUCK_TOKS = "regexp_split_to_array(lower(trim(text)), '\\s+')"
-
-
-def _docs(spark, sf_dir):
-    return parallelize_rows(load_table(spark, sf_dir, "documents"))
+from ooh_etl_spark.tables import load_documents, load_table
 
 
 @register(
     "q79_quality_rules",
     f"""
     WITH t AS (
-      SELECT source, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT source, {DUCK_TOKENIZE} AS toks FROM documents),
          f AS (
       SELECT source,
              len(toks) AS n,
@@ -72,7 +66,7 @@ def q79_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     # equivalence is pinned by test_q79_alpha_rule_on_mixed_tokens.
     # Measured 0.36s -> 0.23s for the extraction stage at sf0.1.
     t = F.lower(F.trim(F.col("text")))
-    f = _docs(spark, sf_dir).select(
+    f = load_documents(spark, sf_dir).select(
         "source",
         F.size(F.split(t, r"\s+")).alias("n"),
         F.length(F.regexp_replace(t, r"\s+", "")).alias("sum_len"),
@@ -128,7 +122,7 @@ def _bigrams(toks: Column) -> Column:
     "q80_repetition_stats",
     f"""
     WITH t AS (
-      SELECT doc_id, lang, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, lang, {DUCK_TOKENIZE} AS toks FROM documents),
          g AS (
       SELECT doc_id, lang,
              len(toks) AS n,
@@ -157,7 +151,7 @@ def q80_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens. The bigram histogram is the only wide stage and is keyed by
     doc_id — perfectly partition-local after one shuffle, no global
     state; the dup-token signal never leaves the scan stage."""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     toks = tokenize(F.col("text"))
     g = docs.select(
         "doc_id",
@@ -228,7 +222,7 @@ def _trigrams(toks: Column) -> Column:
     "q81_decontamination",
     f"""
     WITH t AS (
-      SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, {DUCK_TOKENIZE} AS toks FROM documents),
          g AS (
       SELECT doc_id, unnest({_DUCK_TRIGRAMS}) AS gram FROM t),
          corpus AS (SELECT * FROM g WHERE doc_id % {_BENCH_MOD} <> 0),
@@ -251,7 +245,7 @@ def q81_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     no corpus shuffle at all, which is what makes this shape viable at
     100 TB (the alternative, shuffling the corpus on gram, would move
     the whole dataset)."""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     toks = tokenize(F.col("text"))
     g = docs.select("doc_id", F.explode_outer(_trigrams(toks)).alias("gram")).filter(
         F.col("gram").isNotNull()
@@ -321,7 +315,7 @@ _N_SOURCES = 20
     "q83_domain_reweight",
     f"""
     WITH t AS (
-      SELECT source, len({_DUCK_TOKS}) AS n_tokens FROM documents),
+      SELECT source, len({DUCK_TOKENIZE}) AS n_tokens FROM documents),
          s AS (
       SELECT source, CAST(sum(n_tokens) AS BIGINT) AS tokens FROM t
       GROUP BY source),
@@ -342,7 +336,7 @@ def q83_domain_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-source token sums (partial+final, map-side combined), then the
     grand total broadcast back — at 100 TB the second stage moves 20
     rows."""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     s = (
         docs.select("source", F.size(tokenize(F.col("text"))).alias("n_tokens"))
         .groupBy("source")
@@ -432,7 +426,7 @@ def q125_compression_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     The differential is real: distributed Arrow-UDF batching +
     aggregation vs a one-process reference over the same bytes.
     test_compression_quality_buckets pins the bucket semantics."""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     r = docs.select("source", _compression_ratio(F.col("text")).alias("ratio"))
     bucket = (
         F.when(F.col("ratio") < 0.35, "repetitive")
@@ -451,7 +445,7 @@ _SPAN_BP = 5000  # flag docs with >= 50% duplicated positions
 
 _DUCK_DUP_SPANS = f"""
     WITH t AS (
-      SELECT doc_id, source, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, source, {DUCK_TOKENIZE} AS toks FROM documents),
          g AS (
       SELECT doc_id, source,
              list_transform(generate_series(1, len(toks) - {_SPAN_N - 1}),
@@ -497,7 +491,7 @@ def q152_dup_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     otherwise. Full suffix-array dedup generalizes the gram length;
     this fixed-L census is its per-L building block."""
     toks = tokenize(F.col("text"))
-    base = _docs(spark, sf_dir).select("doc_id", "source", toks.alias("toks"))
+    base = load_documents(spark, sf_dir).select("doc_id", "source", toks.alias("toks"))
     # `toks` is an attribute here (materialized projection), so lambda
     # references are O(1) slot lookups, not re-evaluated expressions.
     grams = base.filter(F.size("toks") >= _SPAN_N).select(
@@ -543,7 +537,7 @@ def q152_dup_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DUCK_DSIR = f"""
     WITH t AS (
-      SELECT doc_id, source, lang, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, source, lang, {DUCK_TOKENIZE} AS toks FROM documents),
          b AS (
       SELECT doc_id, source, lang,
              unnest(list_transform(generate_series(1, len(toks) - 1),
@@ -590,7 +584,7 @@ def q153_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant (bucket bigrams into 2^20 ids) bounds the vocabulary when
     grams explode — same plan, integer keys."""
     toks = tokenize(F.col("text"))
-    base = _docs(spark, sf_dir).select(
+    base = load_documents(spark, sf_dir).select(
         "doc_id", "source", "lang", toks.alias("toks")
     )
     bg = base.filter(F.size("toks") >= 2).select(
@@ -637,7 +631,7 @@ def q153_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DUCK_CCNET = f"""
     WITH t AS (
-      SELECT doc_id, lang, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, lang, {DUCK_TOKENIZE} AS toks FROM documents),
          tok AS (
       SELECT doc_id, lang, unnest(toks) AS w FROM t),
          cnt AS (SELECT w, count(*) AS c FROM tok GROUP BY w),
@@ -682,7 +676,7 @@ def q155_ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame
     (the q39/q39b twin pattern)."""
     toks = tokenize(F.col("text"))
     tok = (
-        _docs(spark, sf_dir)
+        load_documents(spark, sf_dir)
         .select("doc_id", "lang", toks.alias("toks"))
         .select("doc_id", "lang", F.explode("toks").alias("w"))
     )
@@ -734,7 +728,7 @@ _CB_MIN_TOKS = 10
 
 _DUCK_CORPUS_BUILD = f"""
     WITH d AS (
-      SELECT doc_id, source, text, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, source, text, {DUCK_TOKENIZE} AS toks FROM documents),
          q AS (
       SELECT * FROM d
       WHERE len(toks) >= {_CB_MIN_TOKS}
@@ -801,7 +795,7 @@ def q162_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     intermediate."""
     from ooh_etl_spark.operators.dedup import exact_dedup, jaccard_pairs
 
-    d = _docs(spark, sf_dir).select(
+    d = load_documents(spark, sf_dir).select(
         "doc_id", "source", "text", tokenize(F.col("text")).alias("toks")
     )
     # Stage-boundary materialization (localCheckpoint): the quality
@@ -847,7 +841,7 @@ def q162_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- q163: duplicated-span REMOVAL (round-4; completes q152's census) ------
 _DUCK_SPAN_REMOVAL = f"""
     WITH t AS (
-      SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, {DUCK_TOKENIZE} AS toks FROM documents),
          pos AS (
       SELECT doc_id, i, toks[i] AS tok
       FROM t CROSS JOIN unnest(generate_series(1, len(toks))) AS u(i)),
@@ -905,7 +899,7 @@ def q163_dup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # before; re-exploding from the materialized frame is cheap CPU,
     # re-tokenizing from parquet is not)
     d = materialize(
-        _docs(spark, sf_dir)
+        load_documents(spark, sf_dir)
         .select("doc_id", tokenize(F.col("text")).alias("toks"))
     )
     pos = d.select(
@@ -976,7 +970,7 @@ _MIX_TEMP_INV = 0.5  # 1/T with T=2: the mT5/UniMax multilingual default
 
 _DUCK_TEMP_MIX = f"""
     WITH t AS (
-      SELECT source, len({_DUCK_TOKS}) AS n_tokens FROM documents),
+      SELECT source, len({DUCK_TOKENIZE}) AS n_tokens FROM documents),
          s AS (
       SELECT source, CAST(sum(n_tokens) AS BIGINT) AS tokens FROM t
       GROUP BY source),
@@ -1004,7 +998,7 @@ def q164_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB shape: identical to q83 — one map-side-combined per-source
     aggregate, then a 20-row broadcast of the total."""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     s = (
         docs.select("source", F.size(tokenize(F.col("text"))).alias("n_tokens"))
         .groupBy("source")
@@ -1034,7 +1028,7 @@ _DUCK_STOP_EN = "['the','a','of','to','and','in','is']"
     "q206_quality_yield_curve",
     f"""
     WITH t AS (
-      SELECT text, {_DUCK_TOKS} AS toks,
+      SELECT text, {DUCK_TOKENIZE} AS toks,
              length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g'))
                AS punct
       FROM documents),
@@ -1081,7 +1075,7 @@ def q206_quality_yield_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketing (the established cross-engine double-round guard)."""
     from ooh_etl_spark.functions.text import quality_features, quality_score
 
-    docs = parallelize_rows(load_table(spark, sf_dir, "documents"))
+    docs = load_documents(spark, sf_dir)
     feats = quality_features(F.col("text"))
     bp = docs.select(
         feats["n_tokens"].alias("n_tokens"),
@@ -1217,7 +1211,7 @@ _LEX_RATE_BP = 1500  # doc flagged when >= 15% of tokens hit the lexicon
 
 _DUCK_LEXICON = f"""
     WITH tok AS (
-      SELECT doc_id, source, unnest({_DUCK_TOKS}) AS w FROM documents),
+      SELECT doc_id, source, unnest({DUCK_TOKENIZE}) AS w FROM documents),
          per AS (
       SELECT doc_id, source,
              CAST(count(*) AS BIGINT) AS n_toks,
@@ -1261,7 +1255,7 @@ def q351_lexicon_flagging(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast); one (doc) aggregate, one (source) rollup. The
     model-based second pass (q153/q155) consumes this query's
     survivors."""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     tok = docs.select(
         "doc_id", "source", F.explode(tokenize(F.col("text"))).alias("w")
     )
@@ -1383,7 +1377,7 @@ _GOPHER_STOPS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
 _DUCK_STOPWORD_GATE = f"""
     WITH t AS (
-      SELECT source, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT source, {DUCK_TOKENIZE} AS toks FROM documents),
          f AS (
       SELECT source,
              len(toks) AS n,
@@ -1439,7 +1433,7 @@ def q430_stopword_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         rf"size(regexp_extract_all(lower(trim(text)),"
         rf" '(^|\\s)({stop_alt})(?=\\s|$)', 2))"
     )
-    f = _docs(spark, sf_dir).select(
+    f = load_documents(spark, sf_dir).select(
         "source",
         F.size(F.split(t, r"\s+")).alias("n"),
         F.size(F.array_intersect(toks, stops)).alias("n_hit"),
@@ -1469,7 +1463,7 @@ def q430_stopword_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DUCK_ENSEMBLE = f"""
     WITH t AS (
-      SELECT {_DUCK_TOKS} AS toks FROM documents),
+      SELECT {DUCK_TOKENIZE} AS toks FROM documents),
          f AS (
       SELECT len(toks) AS n,
              list_aggregate(list_transform(toks, x -> length(x)), 'sum')
@@ -1523,7 +1517,7 @@ def q439_filter_ensemble_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     5-row frame."""
     t = F.lower(F.trim(F.col("text")))
     stops = ", ".join(f"'{w}'" for w in _GOPHER_STOPS)
-    f = _docs(spark, sf_dir).select(
+    f = load_documents(spark, sf_dir).select(
         F.size(F.split(t, r"\s+")).alias("n"),
         F.length(F.regexp_replace(t, r"\s+", "")).alias("sum_len"),
         F.expr(
@@ -1631,7 +1625,7 @@ def q443_char_entropy_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     <= |charset| rows per doc survive the map-side combine); the rest
     is two keyed aggregates. The gate threshold is an integer compare
     on the e9 sum."""
-    t = _docs(spark, sf_dir).select(
+    t = load_documents(spark, sf_dir).select(
         "doc_id", "source", F.lower(F.trim(F.col("text"))).alias("s")
     )
     # sequence(1, 0) DESCENDS in Spark (the q428 ANSI lesson): guard
@@ -1695,7 +1689,7 @@ def _duck_bloom_pos(j: int, gram: str) -> str:
 
 _DUCK_BLOOM = f"""
     WITH t AS (
-      SELECT doc_id, source, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, source, {DUCK_TOKENIZE} AS toks FROM documents),
          g AS (
       SELECT doc_id, source, unnest({_DUCK_TRIGRAMS}) AS gram FROM t),
          bench AS (
@@ -1755,7 +1749,7 @@ def q444_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage and reduces to a per-doc counter — the filter never
     shuffles, which is exactly why production decontamination uses
     blooms instead of q81's join."""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     toks = tokenize(F.col("text"))
     g = docs.select(
         "doc_id",
@@ -1847,8 +1841,6 @@ def q444_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- round-12 wave: q465 filter-agreement matrix ------------------------------
 
 _AGREE_STOPWORDS = ("the", "a", "of", "to", "and", "in")
-_AGREE_TOKS_DUCK = "regexp_split_to_array(lower(trim(text)), '\\s+')"
-
 
 def _duck_agree() -> str:
     sw = ", ".join(f"'{w}'" for w in _AGREE_STOPWORDS)
@@ -1873,7 +1865,7 @@ def _duck_agree() -> str:
     )
     return f"""
     WITH d AS (
-      SELECT doc_id, {_AGREE_TOKS_DUCK} AS toks, text FROM documents),
+      SELECT doc_id, {DUCK_TOKENIZE} AS toks, text FROM documents),
          feat AS (
       SELECT doc_id, len(toks) AS n_toks,
              len(list_distinct(list_transform(
@@ -2012,7 +2004,7 @@ def q465_filter_agreement_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DECON_NGRID = [2, 3, 4, 5, 8]
 
 _DUCK_DECON_ORDER = f"""
-    WITH t AS (SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, {DUCK_TOKENIZE} AS toks FROM documents),
          grid AS (SELECT unnest([{", ".join(str(n) for n in _DECON_NGRID)}]) AS n),
          g AS (
       SELECT t.doc_id, grid.n,
@@ -2099,7 +2091,7 @@ def q473_decon_order_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     by hit volume) and the |grid|-row final joins. Reference shape:
     q444's broadcast-probe discipline extended across an order grid
     in one pass."""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     g = _order_grams(docs)
     bench = (
         _order_grams(docs.filter(F.col("doc_id") % _BENCH_MOD == 0))
@@ -2153,7 +2145,7 @@ _BFS_GRID = ((4096, 2), (4096, 4), (16384, 2), (16384, 4), (65536, 2), (65536, 4
 
 _DUCK_BFS = f"""
     WITH t AS (
-      SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, {DUCK_TOKENIZE} AS toks FROM documents),
          g AS (
       SELECT doc_id, unnest({_DUCK_TRIGRAMS}) AS gram FROM t),
          bench AS (
@@ -2241,7 +2233,7 @@ def q475_bloom_sizing_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     four broadcast-build jobs cost more than the census-sized
     exchange saves at fixture scale; reverted, same verdict class as
     the packed-bitmask attempt.)"""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     toks = tokenize(F.col("text"))
     g = docs.select(
         "doc_id", F.explode_outer(_trigrams(toks)).alias("gram")
@@ -2362,7 +2354,7 @@ def _duck_fun_pos(j: int, gram: str) -> str:
 
 _DUCK_CORPUS_FUNNEL = f"""
     WITH d0 AS (
-      SELECT doc_id, source, text, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, source, text, {DUCK_TOKENIZE} AS toks FROM documents),
          bench AS (
       SELECT DISTINCT unnest({_DUCK_TRIGRAMS}) AS gram
       FROM d0 WHERE doc_id % {_BENCH_MOD} = 0),
@@ -2553,7 +2545,7 @@ def q479_corpus_build_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     of earlier ones; per-stage plans and contents are unchanged."""
     from ooh_etl_spark.operators.dedup import exact_dedup, jaccard_pairs
 
-    d0 = _docs(spark, sf_dir).select(
+    d0 = load_documents(spark, sf_dir).select(
         "doc_id", "source", "text", tokenize(F.col("text")).alias("toks")
     )
     bench_plan = (
@@ -2854,7 +2846,7 @@ def _duck_top_bp(n: int) -> str:
 
 _DUCK_GOPHER_REP = f"""
     WITH d AS (
-      SELECT doc_id, source, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, source, {DUCK_TOKENIZE} AS toks FROM documents),
          g AS (
       SELECT doc_id, source, toks, len(toks) AS n_toks,
              {", ".join(f"{_duck_grams(n)} AS g{n}" for n, _ in _REP_TOP)},
@@ -2915,7 +2907,7 @@ def q480_gopher_repetition_census(spark: SparkSession, sf_dir: str) -> DataFrame
     census is expressible as a (doc_id, gram) explode + doc-keyed
     count — linear with one shuffle — but at web-doc lengths the
     in-row form wins by keeping the corpus in its scan stage."""
-    d = _docs(spark, sf_dir).select(
+    d = load_documents(spark, sf_dir).select(
         "doc_id", "source", tokenize(F.col("text")).alias("toks")
     ).filter(F.size("toks") > 0)
 
@@ -3032,7 +3024,7 @@ def _duck_stage_overlap() -> str:
     )
     return f"""
     WITH d0 AS (
-      SELECT doc_id, source, text, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, source, text, {DUCK_TOKENIZE} AS toks FROM documents),
          bench AS (
       SELECT DISTINCT unnest({_DUCK_TRIGRAMS}) AS gram
       FROM d0 WHERE doc_id % {_BENCH_MOD} = 0),
@@ -3135,7 +3127,7 @@ def q481_funnel_stage_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     intermediate, and the output is 6 rows."""
     from ooh_etl_spark.operators.dedup import exact_dedup, jaccard_pairs
 
-    d0 = _docs(spark, sf_dir).select(
+    d0 = load_documents(spark, sf_dir).select(
         "doc_id", "source", "text", tokenize(F.col("text")).alias("toks")
     )
     bench = materialize(
@@ -3295,7 +3287,7 @@ def _duck_gate_curve() -> str:
     )
     return f"""
     WITH d AS (
-      SELECT doc_id, {_DUCK_TOKS} AS toks, text FROM documents),
+      SELECT doc_id, {DUCK_TOKENIZE} AS toks, text FROM documents),
          feat AS (
       SELECT doc_id, len(toks) AS n_toks,
              len(list_distinct(list_transform(
@@ -3355,7 +3347,7 @@ def q482_gate_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out rides each row into a 20-group map-side-combined
     aggregate (the q460 grid discipline — grid cardinality, never
     corpus cardinality, reaches the shuffle); output is 20 rows."""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     sw = ", ".join(f"'{w}'" for w in _AGREE_STOPWORDS)
     feat = (
         docs.select(

@@ -25,12 +25,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ooh_etl_spark.functions.text import tokenize
+from ooh_etl_spark.functions.text import DUCK_TOKENIZE, tokenize
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize
-from ooh_etl_spark.tables import load_table, parallelize_rows
-
-_DUCK_TOKS = "regexp_split_to_array(lower(trim(text)), '\\s+')"
+from ooh_etl_spark.tables import load_documents, load_table, parallelize_rows
 
 # --- q158: hybrid search, reciprocal-rank fusion -------------------------
 _RRF_K = 60  # the SIGIR'09 constant
@@ -43,7 +41,7 @@ _QUERY_VEC = 0  # query-by-example: vec 0's embedding is the semantic query
 
 _DUCK_RRF = f"""
     WITH d AS (
-      SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, {DUCK_TOKENIZE} AS toks FROM documents),
          dl AS (SELECT doc_id, len(toks) AS dl FROM d),
          stats AS (SELECT count(*) AS n_docs, sum(dl) AS sum_dl FROM dl),
          tok AS (SELECT doc_id, unnest(toks) AS term FROM d),
@@ -112,7 +110,7 @@ def q158_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     calibration step, which is the whole point of RRF."""
     from ooh_etl_spark.operators.similarity import cosine
 
-    docs = parallelize_rows(load_table(spark, sf_dir, "documents"))
+    docs = load_documents(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
 
     # BM25 scoring — q135's expression, unlimited (rank list cut below)
@@ -1297,7 +1295,7 @@ _DUCK_HARD_NEG = f"""
     WITH qt (qid, term) AS (
       VALUES {", ".join(f"({q}, '{t}')" for q, t in _HN_TERMS)}),
          d AS (
-      SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, {DUCK_TOKENIZE} AS toks FROM documents),
          dl AS (SELECT doc_id, len(toks) AS dl FROM d),
          stats AS (SELECT count(*) AS n_docs, sum(dl) AS sum_dl FROM dl),
          tok AS (SELECT doc_id, unnest(toks) AS term FROM d),
@@ -1351,7 +1349,7 @@ def q434_bm25_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking is a keyed window over docs that matched at least one
     term. Work scales with matching postings — the inverted-index
     cost model — never corpus x queries."""
-    docs = parallelize_rows(load_table(spark, sf_dir, "documents"))
+    docs = load_documents(spark, sf_dir)
     qt = F.broadcast(
         spark.createDataFrame(list(_HN_TERMS), "qid int, term string")
     )

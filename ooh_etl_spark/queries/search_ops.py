@@ -18,24 +18,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ooh_etl_spark.functions.text import tokenize
+from ooh_etl_spark.functions.text import DUCK_TOKENIZE, tokenize
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize
-from ooh_etl_spark.tables import load_table, parallelize_rows
+from ooh_etl_spark.tables import load_documents, load_table
 
 _QUERY_TERMS = ("spark", "table", "merge")
 _K1 = 1.2
 _B = 0.75
 _TOP = 10
 
-_DUCK_TOKS = "regexp_split_to_array(lower(trim(text)), '\\s+')"
-
 
 @register(
     "q135_bm25_search",
     f"""
     WITH d AS (
-      SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, {DUCK_TOKENIZE} AS toks FROM documents),
          dl AS (
       SELECT doc_id, len(toks) AS dl FROM d),
          stats AS (
@@ -76,7 +74,7 @@ def q135_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts; the per-doc score sums <= 3 per-(doc,term) terms
     computed from exact integers, so both engines produce identical
     doubles before the basis-point quantization."""
-    docs = parallelize_rows(load_table(spark, sf_dir, "documents"))
+    docs = load_documents(spark, sf_dir)
     d = docs.select("doc_id", tokenize(F.col("text")).alias("toks"))
     # checkpoint the narrow doc-length table and the (query-pruned,
     # postings-bounded) tf table: each feeds two consumers, and
@@ -501,7 +499,7 @@ _QL_MU = 10.0
 _QL_TOP = 10
 _DUCK_QL = f"""
     WITH d AS (
-      SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, {DUCK_TOKENIZE} AS toks FROM documents),
          dl AS (SELECT doc_id, len(toks) AS dl FROM d),
          c AS (SELECT CAST(sum(dl) AS BIGINT) AS c_total FROM dl),
          tok AS (SELECT doc_id, unnest(toks) AS term FROM d),
@@ -548,7 +546,7 @@ def q404_dirichlet_query_likelihood(spark: SparkSession, sf_dir: str) -> DataFra
     shuffle; top-K is TakeOrderedAndProject. The all-docs scoring is
     the point (LM scoring); posting-only pruning (WAND) is the
     documented swap when |Q| grows."""
-    d = parallelize_rows(load_table(spark, sf_dir, "documents")).select(
+    d = load_documents(spark, sf_dir).select(
         "doc_id", tokenize(F.col("text")).alias("toks")
     )
     dl = materialize(d.select("doc_id", F.size("toks").alias("dl")))
@@ -602,7 +600,7 @@ _PRF_EXP = 3  # expansion terms adopted
 _PRF_W = 0.5  # expansion-term weight (original terms weigh 1.0)
 _DUCK_PRF = f"""
     WITH d AS (
-      SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, {DUCK_TOKENIZE} AS toks FROM documents),
          dl AS (SELECT doc_id, len(toks) AS dl FROM d),
          stats AS (SELECT count(*) AS n_docs, sum(dl) AS sum_dl FROM dl),
          tok AS (SELECT doc_id, unnest(toks) AS term FROM d),
@@ -694,7 +692,7 @@ def q415_rocchio_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     round 1 prunes to 3-term postings; the expansion-term agg scans
     only the 10 seed docs' postings (semi-join); round 2 scans 6-term
     postings. Nothing rescans the corpus."""
-    d = parallelize_rows(load_table(spark, sf_dir, "documents")).select(
+    d = load_documents(spark, sf_dir).select(
         "doc_id", tokenize(F.col("text")).alias("toks")
     )
     dl = materialize(d.select("doc_id", F.size("toks").alias("dl")))
@@ -786,7 +784,7 @@ _TD_TRUTH = 5
 _TD_TWO60 = float(1 << 60)
 _DUCK_TEAMDRAFT = f"""
     WITH RECURSIVE tok AS MATERIALIZED (
-      SELECT doc_id, unnest({_DUCK_TOKS}) AS term FROM documents),
+      SELECT doc_id, unnest({DUCK_TOKENIZE}) AS term FROM documents),
          tfq AS MATERIALIZED (
       SELECT doc_id,
              CAST(sum(CASE WHEN term = 'spark' THEN 1 ELSE 0 END) AS BIGINT)
@@ -877,7 +875,7 @@ def q416_team_draft_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
     production interleaving where it runs per-query at serve time."""
     import hashlib
 
-    docs = parallelize_rows(load_table(spark, sf_dir, "documents"))
+    docs = load_documents(spark, sf_dir)
     tok = docs.select(
         "doc_id", F.explode_outer(tokenize(F.col("text"))).alias("term")
     )

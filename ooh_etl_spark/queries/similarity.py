@@ -2,13 +2,13 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ooh_etl_spark.operators.similarity import knn_brute_force, lsh_ann_pairs
+from ooh_etl_spark.operators.similarity import cosine, knn_brute_force, lsh_ann_pairs
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize
-from ooh_etl_spark.tables import load_table
+from ooh_etl_spark.tables import load_table, parallelize_rows
 
 _DUCK_KNN = """
     WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
@@ -630,4 +630,88 @@ def q31b_ann_lsh_det(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rank") <= _SRP_K)
         .select("query_id", "rank", "neighbor_id", "cos_e6")
         .orderBy("query_id", "rank")
+    )
+
+
+# --- q50 embedding near-dup, q53 IVF-style ANN -------------------------------
+
+
+@register(
+    "q50_embedding_near_dup",
+    """
+    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
+    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+           round(list_dot_product(a.v, b.v)
+                 / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))),
+                 4) AS cos_sim
+    FROM e a JOIN e b ON a.vec_id < b.vec_id
+    WHERE round(list_dot_product(a.v, b.v)
+                / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))),
+                4) >= 0.4
+    """,
+)
+def q50_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-cosine near-duplicate pairs — the semantic-dedup
+    operator (BASELINE.json:6). Brute-force pair scan with one side
+    broadcast; beyond ~10^4 vectors per side the LSH/IVF paths
+    (q31/q53) provide candidate generation instead."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    a = parallelize_rows(emb).select(
+        F.col("vec_id").alias("id_a"), F.col("embedding").alias("va")
+    )
+    b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
+    cos = F.round(cosine(F.col("va"), F.col("vb")), 4)
+    return (
+        a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
+        .withColumn("cos_sim", cos)
+        .filter(F.col("cos_sim") >= 0.4)
+        .select("id_a", "id_b", "cos_sim")
+    )
+
+
+@register("q53_ann_ivf", None)  # approximate (cell-restricted) → rows-only
+def q53_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-style ANN: coarse-quantize every vector to its nearest
+    centroid (deterministic centroid set = the first 16 vectors), then
+    search only within the query's cell. The 100 TB pattern: the
+    centroid table broadcasts, assignment is a narrow per-row argmax,
+    and the fine search shuffles only (cell, vector) co-partitions.
+    Recall vs exact top-k is asserted in tests."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    cents = F.broadcast(
+        emb.filter(F.col("vec_id") < 16).select(
+            F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cv")
+        )
+    )
+
+    def assign(df: DataFrame, id_out: str, v_out: str) -> DataFrame:
+        scored = df.select(
+            F.col("vec_id").alias(id_out), F.col("embedding").alias(v_out)
+        ).join(cents, F.lit(True))
+        w = Window.partitionBy(id_out).orderBy(
+            F.desc(cosine(F.col(v_out), F.col("cv"))), F.col("cent_id")
+        )
+        return (
+            scored.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1)
+            .select(id_out, v_out, F.col("cent_id").alias("cell"))
+        )
+
+    corpus = assign(parallelize_rows(emb), "neighbor_id", "cvec")
+    queries = assign(emb.filter(F.col("vec_id") < 5), "query_id", "qvec")
+    scored = queries.join(corpus, "cell").filter(
+        F.col("query_id") != F.col("neighbor_id")
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc(cosine(F.col("qvec"), F.col("cvec"))), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= 5)
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(cosine(F.col("qvec"), F.col("cvec")), 4).alias("cos_sim"),
+            "rank",
+        )
     )

@@ -15,11 +15,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ooh_etl_spark.functions.text import tokenize
+from ooh_etl_spark.functions.text import DUCK_TOKENIZE, tokenize
 from ooh_etl_spark.operators.sketches import bloom_semi_join, exact_heavy_hitters
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize
-from ooh_etl_spark.tables import load_table, parallelize_rows
+from ooh_etl_spark.tables import load_documents, load_table
 
 _HH_K = 50  # heavy hitter = frequency > n/50 (2%)
 
@@ -28,7 +28,7 @@ _HH_K = 50  # heavy hitter = frequency > n/50 (2%)
     "q120_heavy_hitters",
     f"""
     WITH tok AS (
-      SELECT unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS value
+      SELECT unnest({DUCK_TOKENIZE}) AS value
       FROM documents),
          n AS (SELECT count(*) AS n FROM tok)
     SELECT value, count(*) AS cnt
@@ -47,7 +47,7 @@ def q120_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     not the full vocabulary; the oracle runs the naive full group-by
     and must agree exactly, which is the two-pass guarantee under
     test."""
-    docs = parallelize_rows(load_table(spark, sf_dir, "documents"))
+    docs = load_documents(spark, sf_dir)
     tok = docs.select(
         F.explode_outer(tokenize(F.col("text"))).alias("value")
     ).filter(F.col("value").isNotNull())
@@ -771,7 +771,7 @@ _DUCK_CR = f"""
          tok AS (
       SELECT DISTINCT d.doc_id, t.term, c.in_a, c.in_b
       FROM (SELECT doc_id,
-                   unnest(regexp_split_to_array(lower(trim(text)), '\\s+'))
+                   unnest({DUCK_TOKENIZE})
                      AS term
             FROM documents) t
       JOIN documents d ON t.doc_id = d.doc_id
@@ -823,7 +823,7 @@ def q399_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
     count is computed too (one term shuffle) to score the estimate.
     The term-flag agg is map-side combinable; heavy-hitter terms that
     appear in both samples cost one combiner row each."""
-    docs = parallelize_rows(load_table(spark, sf_dir, "documents"))
+    docs = load_documents(spark, sf_dir)
 
     def _u(salt: str):
         return (

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ooh_etl_spark.functions.text import (
+    DUCK_TOKENIZE,
     fingerprint_md5,
     lang_id,
     quality_features,
@@ -19,21 +20,13 @@ from ooh_etl_spark.functions.text import (
 )
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize
-from ooh_etl_spark.tables import load_table, parallelize_rows
-
-
-def _docs(spark, sf_dir):
-    # text-heavy per-row work: spread the single-row-group scan (tables.parallelize_rows)
-    return parallelize_rows(load_table(spark, sf_dir, "documents"))
-
-# DuckDB-side tokenizer identical to functions.text.tokenize.
-_DUCK_TOKS = "regexp_split_to_array(lower(trim(text)), '\\s+')"
+from ooh_etl_spark.tables import load_documents
 
 
 @register(
     "q20_token_stats",
     f"""
-    WITH t AS (SELECT doc_id, text, {_DUCK_TOKS} AS toks FROM documents)
+    WITH t AS (SELECT doc_id, text, {DUCK_TOKENIZE} AS toks FROM documents)
     SELECT doc_id,
            len(toks)                 AS n_tokens,
            length(text)              AS n_chars,
@@ -47,7 +40,7 @@ def q20_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document token statistics (counts, distinct, mean token
     length) — all array expressions inside the scan stage; the
     mean-length fold is exact integer arithmetic over lengths."""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     toks = tokenize(F.col("text"))
     return docs.select(
         "doc_id",
@@ -64,7 +57,7 @@ def q20_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q21_word_counts",
     f"""
     SELECT word, count(*) AS n
-    FROM (SELECT unnest({_DUCK_TOKS}) AS word FROM documents)
+    FROM (SELECT unnest({DUCK_TOKENIZE}) AS word FROM documents)
     GROUP BY word
     ORDER BY n DESC, word
     LIMIT 20
@@ -74,7 +67,7 @@ def q21_word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus word counts: explode tokens → count per word → top-20.
     The explode's null-guard stays ABOVE the Generate (see comment) so
     the expensive split isn't double-evaluated below the repartition."""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     return (
         # explode_outer: plain explode's inferred size>0/notnull filter
         # is pushed below the repartition exchange and re-evaluates the
@@ -94,7 +87,7 @@ def q21_word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q22_tfidf_top_term",
     f"""
-    WITH d AS (SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents WHERE doc_id < 200),
+    WITH d AS (SELECT doc_id, {DUCK_TOKENIZE} AS toks FROM documents WHERE doc_id < 200),
          tok AS (SELECT doc_id, unnest(toks) AS term FROM d),
          tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
          idf AS (SELECT term, count(DISTINCT doc_id) AS df FROM tok GROUP BY term),
@@ -113,7 +106,7 @@ def q22_tfidf_top_term(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TF-IDF top term per document: tf from one (doc, term) aggregate,
     idf derived FROM tf (reuses its exchange rather than re-scanning),
     both small sides broadcast back; window top-1 per doc."""
-    docs = _docs(spark, sf_dir).filter(F.col("doc_id") < 200)
+    docs = load_documents(spark, sf_dir).filter(F.col("doc_id") < 200)
     tok = docs.select(
         "doc_id", F.explode_outer(tokenize(F.col("text"))).alias("term")
     ).filter(F.col("term").isNotNull())
@@ -148,7 +141,7 @@ _DUCK_STOP = "['the','a','of','to','and','in','is']"
 # round-half boundary differently per engine; integer sums cannot.
 _DUCK_QUALITY = f"""
     WITH t AS (
-      SELECT lang, text, {_DUCK_TOKS} AS toks,
+      SELECT lang, text, {DUCK_TOKENIZE} AS toks,
              length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS punct
       FROM documents),
          f AS (
@@ -180,7 +173,7 @@ def q23_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic quality score (length, stopword, punctuation signals)
     rolled up per language. Per-doc ratios quantize to integer basis
     points BEFORE averaging (float round-half differs per engine)."""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     feats = quality_features(F.col("text"))
     per_doc = docs.select(
         "lang",
@@ -206,7 +199,7 @@ _DUCK_LANG_SCORES = {
 }
 
 _DUCK_LANG_ID = f"""
-    WITH t AS (SELECT lang, {_DUCK_TOKS} AS toks FROM documents),
+    WITH t AS (SELECT lang, {DUCK_TOKENIZE} AS toks FROM documents),
          s AS (SELECT lang,
                       {', '.join(f"len(list_filter(toks, x -> list_contains({words}, x))) AS s_{code}"
                                   for code, words in _DUCK_LANG_SCORES.items())}
@@ -228,7 +221,7 @@ def q24_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-profile language ID (argmax of per-language hit counts,
     deterministic tie-break) vs the labeled lang column — a confusion
     matrix from one scan + one tiny aggregate."""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     return (
         docs.select("lang", lang_id(F.col("text")).alias("predicted"))
         .groupBy("lang", "predicted")
@@ -251,7 +244,7 @@ def q25_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprinting: md5 of whitespace-normalized text per
     source — exact-dup detection's content-addressed key, plus distinct
     counts per source."""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     fp = fingerprint_md5(F.col("text"))
     return docs.select("source", fp.alias("fp")).groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),

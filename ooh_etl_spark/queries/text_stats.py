@@ -15,23 +15,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ooh_etl_spark.functions.text import tokenize
+from ooh_etl_spark.functions.text import DUCK_TOKENIZE, tokenize
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize
-from ooh_etl_spark.tables import load_table, parallelize_rows
-
-_DUCK_TOKS = "regexp_split_to_array(lower(trim(text)), '\\s+')"
-
-
-def _docs(spark, sf_dir):
-    return parallelize_rows(load_table(spark, sf_dir, "documents"))
+from ooh_etl_spark.tables import load_documents, load_table
 
 
 @register(
     "q92_token_entropy",
     f"""
     WITH tok AS (
-      SELECT doc_id, lang, unnest({_DUCK_TOKS}) AS term FROM documents),
+      SELECT doc_id, lang, unnest({DUCK_TOKENIZE}) AS term FROM documents),
          tf AS (
       SELECT doc_id, lang, term, count(*) AS c
       FROM tok GROUP BY doc_id, lang, term),
@@ -56,7 +50,7 @@ def q92_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc entropies are quantized to basis points before the lang
     rollup. Shuffles on (doc_id, term) then (doc_id) then (lang) —
     each strictly smaller than the last."""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     tok = docs.select(
         "doc_id", "lang", F.explode_outer(tokenize(F.col("text"))).alias("term")
     ).filter(F.col("term").isNotNull())
@@ -88,7 +82,7 @@ _ZIPF_TOP = 100
     f"""
     WITH wc AS (
       SELECT term, count(*) AS c
-      FROM (SELECT unnest({_DUCK_TOKS}) AS term FROM documents)
+      FROM (SELECT unnest({DUCK_TOKENIZE}) AS term FROM documents)
       GROUP BY term),
          ranked AS (
       SELECT c, row_number() OVER (ORDER BY c DESC, term) AS rk
@@ -105,7 +99,7 @@ def q93_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     health metric). The word count shuffles on term; ranking the top
     100 funnels only the agg output through one window partition, and
     the regression is a single-row reduce of 100 points."""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     wc = (
         docs.select(F.explode_outer(tokenize(F.col("text"))).alias("term"))
         .filter(F.col("term").isNotNull())
@@ -130,7 +124,7 @@ _GROWTH_BUCKETS = 10
     "q94_vocab_growth",
     f"""
     WITH mx AS (SELECT max(doc_id) + 1 AS n FROM documents),
-         d AS (SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents),
+         d AS (SELECT doc_id, {DUCK_TOKENIZE} AS toks FROM documents),
          tok AS (
       SELECT CAST(floor({_GROWTH_BUCKETS}.0 * doc_id / n) AS BIGINT) AS bucket,
              unnest(list_transform(generate_series(1, len(toks) - 1),
@@ -160,7 +154,7 @@ def q94_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     All-integer output, engine-exact."""
     from ooh_etl_spark.queries.quality_ops import _bigrams
 
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     mx = docs.agg((F.max("doc_id") + 1).alias("n"))
     tok = (
         docs.crossJoin(F.broadcast(mx))
@@ -257,7 +251,7 @@ def q96_char_trigram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out per row (exactly what you do at 100 TB: n-gram budgets per
     document, not per corpus). DuckDB's s[i:i+2] slice is 1-based
     INCLUSIVE — it is the same 3 chars as Spark's substring(s, i, 3)."""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     s = F.substring(F.lower(F.trim(F.col("text"))), 1, _TRI_PREFIX)
     t = docs.select("lang", s.alias("s"))
     n = F.length("s")
@@ -285,7 +279,7 @@ _LM_HEADS = 10
 _LM_TOP = 3
 
 _DUCK_BIGRAM_LM = f"""
-    WITH d AS (SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents),
+    WITH d AS (SELECT doc_id, {DUCK_TOKENIZE} AS toks FROM documents),
          bg AS (
       SELECT toks[i] AS head, toks[i + 1] AS nxt
       FROM d CROSS JOIN unnest(generate_series(1, len(toks) - 1)) AS t(i)),
@@ -327,7 +321,7 @@ def q160_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     second keyed aggregation (no second corpus pass), vocabulary size
     is a 1-row broadcast, and the head/continuation cuts are bounded
     top-k windows over the count table, not the corpus."""
-    d = _docs(spark, sf_dir).select("doc_id", tokenize(F.col("text")).alias("toks"))
+    d = load_documents(spark, sf_dir).select("doc_id", tokenize(F.col("text")).alias("toks"))
     bg = d.select(
         F.explode(
             F.zip_with(
@@ -379,7 +373,7 @@ _DUCK_FERTILITY = rf"""
     WITH t AS (
       SELECT lang,
              len(regexp_extract_all(text, '\w+|[^\w\s]')) AS n_bpe,
-             len({_DUCK_TOKS}) AS n_words
+             len({DUCK_TOKENIZE}) AS n_words
       FROM documents)
     SELECT lang,
            CAST(sum(n_bpe) AS BIGINT) AS bpe_tokens,
@@ -400,7 +394,7 @@ def q165_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     q164's temperature mix. Integer token counts sum exactly; the one
     ratio is quantized to ppm. One map-side-combined aggregate keyed
     on lang — nothing else moves."""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     bpe = F.size(F.regexp_extract_all("text", F.lit(r"\w+|[^\w\s]"), 0))
     words = F.size(tokenize(F.col("text")))
     return (
@@ -423,7 +417,7 @@ _PMI_TOP = 10
 
 _DUCK_PMI = f"""
     WITH tok AS (
-      SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
+      SELECT doc_id, {DUCK_TOKENIZE} AS t
       FROM documents),
          big AS (
       SELECT t[i] AS w1, t[i+1] AS w2
@@ -465,7 +459,7 @@ def q195_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     prediction."""
     from ooh_etl_spark.functions.text import tokenize
 
-    docs = parallelize_rows(load_table(spark, sf_dir, "documents"))
+    docs = load_documents(spark, sf_dir)
     tok = docs.select(tokenize(F.col("text")).alias("t"))
     big = tok.select(
         F.posexplode(F.slice("t", 1, F.size("t") - 1)).alias("i", "w1"),
@@ -505,7 +499,7 @@ _JSD_V = 500  # top-V corpus vocabulary
     "q241_source_jsd",
     f"""
     WITH tok AS (
-      SELECT source, unnest(regexp_split_to_array(lower(trim(text)), '\\s+'))
+      SELECT source, unnest({DUCK_TOKENIZE})
                AS w
       FROM documents),
          tc AS (
@@ -669,7 +663,7 @@ def q251_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract). One narrow pass + a |langs|-key aggregate.
     """
     docs = load_table(spark, sf_dir, "documents").filter(F.col("text") != "")
-    n_words = F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
+    n_words = F.size(tokenize(F.col("text")))
     n_sents = F.size(F.split(F.col("text"), r"\.")) - 1 + 1
     n_vg = F.size(
         F.expr("regexp_extract_all(lower(text), '[aeiouy]+', 0)")
@@ -968,7 +962,7 @@ _DUCK_RAKE = f"""
       SELECT doc_id, u.i AS pos, t[u.i] AS tok,
              t[u.i] IN {_RAKE_STOPWORDS} AS stop
       FROM (SELECT doc_id,
-                   regexp_split_to_array(lower(trim(text)), '\\s+') AS t
+                   {DUCK_TOKENIZE} AS t
             FROM documents) d,
            unnest(generate_series(1, len(t))) AS u(i)),
          marked AS (
@@ -1086,7 +1080,7 @@ _KN_TOP = 20
 
 _DUCK_KN = f"""
     WITH d AS (
-      SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, {DUCK_TOKENIZE} AS toks FROM documents),
          bg AS (
       SELECT toks[i] AS w1, toks[i + 1] AS w2
       FROM d CROSS JOIN unnest(generate_series(1, len(toks) - 1)) AS u(i)),
@@ -1188,7 +1182,7 @@ _DP_TOP = 15
 
 _DUCK_DISPERSION = f"""
     WITH tok AS (
-      SELECT source, unnest({_DUCK_TOKS}) AS w FROM documents),
+      SELECT source, unnest({DUCK_TOKENIZE}) AS w FROM documents),
          part_sz AS (
       SELECT source, CAST(count(*) AS BIGINT) AS s FROM tok GROUP BY source),
          tot AS (SELECT CAST(sum(s) AS BIGINT) AS n FROM part_sz),
@@ -1277,7 +1271,7 @@ _NUC_P_BP = 9000  # 90% token-mass target
 
 _DUCK_NUCLEUS = f"""
     WITH tok AS (
-      SELECT source, unnest({_DUCK_TOKS}) AS w FROM documents),
+      SELECT source, unnest({DUCK_TOKENIZE}) AS w FROM documents),
          tf AS (
       SELECT source, w, CAST(count(*) AS BIGINT) AS c
       FROM tok GROUP BY 1, 2),
@@ -1569,7 +1563,7 @@ def q367_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- q398: Flesch readability scoring per source (round 6) ------------------
 _DUCK_FLESCH = f"""
     WITH tok AS (
-      SELECT doc_id, source, unnest({_DUCK_TOKS}) AS term FROM documents),
+      SELECT doc_id, source, unnest({DUCK_TOKENIZE}) AS term FROM documents),
          syl AS (
       SELECT doc_id, source,
              greatest(1, len(regexp_extract_all(term, '[aeiouy]+'))) AS syll
@@ -1618,7 +1612,7 @@ def q398_flesch_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: one explode + one (doc) agg + one (source) agg, all
     map-side combinable; no joins, no windows — the same single-pass
     shape as q23's quality score."""
-    tok = _docs(spark, sf_dir).select(
+    tok = load_documents(spark, sf_dir).select(
         "doc_id",
         "source",
         F.explode_outer(tokenize(F.col("text"))).alias("term"),
@@ -1670,7 +1664,7 @@ def q398_flesch_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- q407: Chao1 vocabulary richness estimate (round 6) ---------------------
 _DUCK_CHAO1 = f"""
     WITH tok AS (
-      SELECT unnest({_DUCK_TOKS}) AS term FROM documents),
+      SELECT unnest({DUCK_TOKENIZE}) AS term FROM documents),
          tf AS (
       SELECT term, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY term),
          coc AS (
@@ -1710,7 +1704,7 @@ def q407_chao1_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: one explode + one term-keyed map-side-combinable
     agg + one scalar reduce — no joins, no windows; counts-of-counts
     needs only c∈{{1,2}} flags, never a second shuffle."""
-    tok = _docs(spark, sf_dir).select(
+    tok = load_documents(spark, sf_dir).select(
         F.explode_outer(tokenize(F.col("text"))).alias("term")
     )
     tf = tok.groupBy("term").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
@@ -1753,7 +1747,7 @@ def q407_chao1_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q420_heaps_law_fit",
     f"""
     WITH d AS (
-      SELECT lang, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT lang, {DUCK_TOKENIZE} AS toks FROM documents),
          p AS (
       SELECT lang,
              len(toks) AS n,
@@ -1790,7 +1784,7 @@ def q420_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     its row); the only shuffle is the |langs|-group regression
     reduce, which is map-side combinable to 6 floats per partition.
     """
-    d = _docs(spark, sf_dir).select(
+    d = load_documents(spark, sf_dir).select(
         "lang", tokenize(F.col("text")).alias("toks")
     )
     p = d.select(
@@ -1860,7 +1854,7 @@ def q421_charset_cost_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable aggregate. This is the cheapest full-corpus pass in
     the catalog, which is the point: it is the health check you run
     on EVERY ingest batch before spending the expensive passes."""
-    c = _docs(spark, sf_dir).select(
+    c = load_documents(spark, sf_dir).select(
         "lang",
         F.length("text").alias("n_chars"),
         F.octet_length("text").alias("n_bytes"),
@@ -1901,7 +1895,7 @@ _DUCK_DISTINCT_BIGRAMS = (
     "q422_bigram_novelty_profile",
     f"""
     WITH d AS (
-      SELECT doc_id, source, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, source, {DUCK_TOKENIZE} AS toks FROM documents),
          b AS (
       SELECT doc_id, source, unnest({_DUCK_DISTINCT_BIGRAMS}) AS bg FROM d),
          w AS (
@@ -1944,7 +1938,7 @@ def q422_bigram_novelty_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Expand) rolls up map-side-combinably to |sources| rows. Never
     doc x doc — cost is linear in total distinct bigram occurrences,
     the same inverted-index discipline as q27/q379."""
-    d = _docs(spark, sf_dir).select(
+    d = load_documents(spark, sf_dir).select(
         "doc_id", "source", tokenize(F.col("text")).alias("toks")
     )
     n = F.size("toks")
@@ -1991,7 +1985,7 @@ def q422_bigram_novelty_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DUCK_SOURCE_JS = f"""
     WITH t AS (
-      SELECT source, unnest({_DUCK_TOKS}) AS tok FROM documents),
+      SELECT source, unnest({DUCK_TOKENIZE}) AS tok FROM documents),
          st AS (SELECT source, tok, count(*) AS c FROM t GROUP BY 1, 2),
          sn AS (SELECT source, sum(c) AS ns FROM st GROUP BY 1),
          ct AS (SELECT tok, sum(c) AS cc FROM st GROUP BY 1),
@@ -2045,7 +2039,7 @@ def q432_source_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar total is a no-explode map-side aggregate, so the corpus is
     never re-exploded per marginal; per-source reduction ends at 20
     rows. No stage touches doc x vocab."""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     t = docs.select(
         "source", F.explode_outer(tokenize(F.col("text"))).alias("tok")
     ).filter(F.col("tok").isNotNull())
@@ -2118,7 +2112,7 @@ _WIMBD_TOP = 20
 
 _DUCK_WIMBD = f"""
     WITH d AS (
-      SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT doc_id, {DUCK_TOKENIZE} AS toks FROM documents),
          g AS (
       SELECT doc_id,
              unnest(CASE WHEN len(toks) >= {_WIMBD_N}
@@ -2240,7 +2234,7 @@ _OVL_N = 3  # gram length: 3-grams separate boilerplate from topic overlap
 
 _DUCK_OVERLAP = f"""
     WITH t AS (
-      SELECT source, {_DUCK_TOKS} AS toks FROM documents),
+      SELECT source, {DUCK_TOKENIZE} AS toks FROM documents),
          g AS (
       SELECT DISTINCT source,
              unnest(list_transform(
@@ -2288,7 +2282,7 @@ def q441_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitting each gram's source-pair combinations (<= |sources|^2 per
     gram, tiny) — never a corpus x corpus join; the matrix itself is
     |sources|^2 rows."""
-    t = _docs(spark, sf_dir).select("source", tokenize(F.col("text")).alias("toks"))
+    t = load_documents(spark, sf_dir).select("source", tokenize(F.col("text")).alias("toks"))
     idx = F.when(
         F.size("toks") >= _OVL_N,
         F.sequence(F.lit(1), F.size("toks") - (_OVL_N - 1)),
@@ -2364,7 +2358,7 @@ def q441_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- round-11 wave 2: q448 domain affinity matrix ----------------------------
 
 _DUCK_AFFINITY = f"""
-    WITH d AS (SELECT source, {_DUCK_TOKS} AS toks FROM documents),
+    WITH d AS (SELECT source, {DUCK_TOKENIZE} AS toks FROM documents),
          bg AS (
       SELECT source, toks[i] AS head, toks[i + 1] AS nxt
       FROM d CROSS JOIN unnest(generate_series(1, len(toks) - 1)) AS t(i)),
@@ -2423,7 +2417,7 @@ def q448_domain_affinity_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring join is eval-census x |sources| (a bounded fan-out of the
     CENSUS, never of the corpus) joined back on (source, head, nxt) /
     (source, head) keys. The matrix is |sources|^2 rows."""
-    d = _docs(spark, sf_dir).select(
+    d = load_documents(spark, sf_dir).select(
         "source", tokenize(F.col("text")).alias("toks")
     )
     bg = d.select(
@@ -2489,10 +2483,10 @@ def q448_domain_affinity_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- round-11 wave 3: q455 deleted-interpolation EM step -----------------------
 
-_DUCK_JM = """
+_DUCK_JM = f"""
     WITH d AS (
       SELECT doc_id, source,
-             regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
+             {DUCK_TOKENIZE} AS toks
       FROM documents),
          trb AS (
       SELECT toks[i] AS h, toks[i+1] AS nxt, count(*) AS c2

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ooh_etl_spark.functions.text import DUCK_TOKENIZE
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.tables import load_table
 
@@ -58,9 +59,9 @@ class SplitWords:
 
 @register(
     "q48_udtf_tokens",
-    """
+    f"""
     WITH tok AS (
-      SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS word
+      SELECT doc_id, unnest({DUCK_TOKENIZE}) AS word
       FROM documents WHERE doc_id < 50)
     SELECT doc_id, word, count(*) AS n
     FROM tok GROUP BY doc_id, word

@@ -1,4 +1,4 @@
-"""Round-4 coverage wave: warehouse maintenance operators.
+"""Warehouse maintenance operators.
 
 The three operations that keep a 100 TB warehouse CORRECT over time,
 as opposed to querying a frozen snapshot:
@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize
-from ooh_etl_spark.tables import load_table, parallelize_rows
+from ooh_etl_spark.tables import load_documents, load_table
 
 # --- q176: SCD2 apply-changes -------------------------------------------
 _EFF = "2024-06-01"  # effective date of the change batch
@@ -247,7 +247,7 @@ def q178_table_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     |partitions|-row exchange on each side, no sort, no co-location,
     and it parallelizes embarrassingly. Pytest pins the order-freedom:
     a repartition(7) of the input yields the identical fingerprint."""
-    docs = parallelize_rows(load_table(spark, sf_dir, "documents"))
+    docs = load_documents(spark, sf_dir)
     # NULL text must hash identically in both engines: concat_ws SKIPS
     # a NULL argument AND its separator ('42' not '42|'), while
     # DuckDB's concat renders NULL as '' ('42|') — an explicit coalesce
@@ -1375,3 +1375,36 @@ def q470_bucket_sizing_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("n_buckets")
     )
+
+
+# --- q59: MERGE INTO emulation -----------------------------------------------
+
+
+@register(
+    "q59_merge_upsert",
+    """
+    WITH updates AS (
+      SELECT c_custkey, c_name, c_nationkey,
+             round(c_acctbal + 100.0, 2) AS c_acctbal,
+             'UPGRADED' AS c_mktsegment
+      FROM customer WHERE c_custkey % 10 = 0)
+    SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
+    FROM customer WHERE c_custkey % 10 <> 0
+    UNION ALL
+    SELECT * FROM updates
+    """,
+)
+def q59_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MERGE INTO emulation (anti-join + union): every 10th customer
+    gets an updated balance and segment; the rest pass through."""
+    from ooh_etl_spark.operators.relational import merge_upsert
+
+    cust = load_table(spark, sf_dir, "customer")
+    updates = cust.filter(F.col("c_custkey") % 10 == 0).select(
+        "c_custkey",
+        "c_name",
+        "c_nationkey",
+        F.round(F.col("c_acctbal") + 100.0, 2).alias("c_acctbal"),
+        F.lit("UPGRADED").alias("c_mktsegment"),
+    )
+    return merge_upsert(cust, updates, "c_custkey")

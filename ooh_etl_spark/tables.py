@@ -80,7 +80,7 @@ def non_pushable(pred: Column) -> Column:
     return pred | (F.spark_partition_id() < F.lit(-1))
 
 
-def parallelize_rows(df: DataFrame, partitions: int | None = None) -> DataFrame:
+def parallelize_rows(df: DataFrame) -> DataFrame:
     """Spread rows across cores before CPU-heavy per-row expressions —
     but ONLY when the input is actually under-split.
 
@@ -97,7 +97,7 @@ def parallelize_rows(df: DataFrame, partitions: int | None = None) -> DataFrame:
     """
     from ooh_etl_spark.session import default_parallelism
 
-    target = partitions or default_parallelism()
+    target = default_parallelism()
     try:
         current = df.rdd.getNumPartitions()
     except Exception:  # pragma: no cover - defensive: plan not convertible
@@ -105,6 +105,12 @@ def parallelize_rows(df: DataFrame, partitions: int | None = None) -> DataFrame:
     if current >= target:
         return df
     return df.repartition(target)
+
+
+def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``documents`` scan spread by :func:`parallelize_rows`: the
+    input of queries that run text-heavy per-row work over the corpus."""
+    return parallelize_rows(load_table(spark, sf_dir, "documents"))
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -20,15 +20,12 @@ either re-planned or added here with a justification.
 """
 from __future__ import annotations
 
-import sys
 from concurrent.futures import ThreadPoolExecutor
 
-sys.path.insert(0, "/root/repo")
+from tests.conftest import SF_DIR
 
-from tests.conftest import SF_DIR  # noqa: E402
-
-from ooh_etl_spark.plans.audit import unreduced_global_windows  # noqa: E402
-from ooh_etl_spark.queries import QUERIES  # noqa: E402
+from ooh_etl_spark.plans.audit import unreduced_global_windows
+from ooh_etl_spark.queries import QUERIES
 
 #: Global window DIRECTLY over an unreduced parquet scan — each entry
 #: names the bound that makes the single partition safe, or the

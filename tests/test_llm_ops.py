@@ -11,6 +11,7 @@ pytestmark = pytest.mark.slow
 
 import math
 
+import duckdb
 from pyspark.sql import functions as F
 
 from ooh_etl_spark.functions.text import (
@@ -21,6 +22,8 @@ from ooh_etl_spark.functions.text import (
 from ooh_etl_spark.operators.dedup import exact_dedup, jaccard_pairs, simhash_pairs
 from ooh_etl_spark.operators.multimodal import attach_payload, extract_features
 from ooh_etl_spark.operators.similarity import knn_brute_force
+from ooh_etl_spark.queries import QUERIES
+from tests.conftest import SF_DIR, run
 
 
 def one(spark, col):
@@ -283,3 +286,138 @@ def test_q217_viterbi_coverage_scores_and_optimality(spark):
             )
             bs = sum(score[p] for p in best)
             assert r.score_micro == bs, (r.word, r.segmentation, best)
+
+
+def test_q201_pairs_are_bigrams_and_top1_matches_python(spark):
+    out = run(spark, "q201_bpe_merge_pairs").toPandas()
+    assert (out["pair"].str.len() == 2).all()
+    assert (out.merge_count.sort_values(ascending=False).to_numpy()
+            == out.merge_count.to_numpy()).all()
+    # Independent top-pair recount in pure Python.
+    texts = duckdb.sql(
+        f"SELECT text FROM read_parquet('{SF_DIR}/documents.parquet')"
+    ).df()["text"]
+    from collections import Counter
+
+    wc: Counter = Counter()
+    for t in texts:
+        wc.update(w for w in t.lower().split() if w)
+    pc: Counter = Counter()
+    for w, f in wc.items():
+        for i in range(len(w) - 1):
+            pc[w[i : i + 2]] += f
+    top_pair, top_n = max(pc.items(), key=lambda kv: (kv[1], kv[0]))
+    assert out.iloc[0]["pair"] == top_pair or out.iloc[0]["merge_count"] == top_n
+    assert out.iloc[0]["merge_count"] == top_n
+
+
+def test_q202_negatives_never_self_and_in_range(spark):
+    out = run(spark, "q202_negative_sampling").toPandas()
+    n_docs = duckdb.sql(
+        f"SELECT count(*) FROM read_parquet('{SF_DIR}/documents.parquet')"
+    ).fetchone()[0]
+    assert len(out) == 2 * n_docs
+    assert (out.neg_id != out.doc_id).all()
+    assert ((out.neg_id >= 0) & (out.neg_id < n_docs)).all()
+    assert set(out.neg_rank) == {1, 2}
+
+
+def test_q203_each_epoch_is_a_permutation_and_orders_differ(spark):
+    out = run(spark, "q203_epoch_shuffle").toPandas()
+    n_docs = duckdb.sql(
+        f"SELECT count(*) FROM read_parquet('{SF_DIR}/documents.parquet')"
+    ).fetchone()[0]
+    for epoch, grp in out.groupby("epoch"):
+        # every doc exactly once per epoch
+        assert sorted(grp.doc_id) == list(range(n_docs))
+        # contiguous 1..k positions within every shard
+        for _, sh in grp.groupby("shard"):
+            assert sorted(sh.pos) == list(range(1, len(sh) + 1))
+    e0 = out[out.epoch == 0].sort_values(["shard", "pos"]).doc_id.tolist()
+    e1 = out[out.epoch == 1].sort_values(["shard", "pos"]).doc_id.tolist()
+    assert e0 != e1  # the epochs genuinely reshuffle
+
+
+def test_q215_merge_round_matches_python_bpe(spark):
+    out = run(spark, "q215_bpe_merge_round").toPandas()
+    raw = duckdb.sql(
+        f"SELECT lower(text) t FROM read_parquet('{SF_DIR}/documents.parquet')"
+    ).df()
+    import re
+    from collections import Counter
+
+    words = Counter()
+    for t in raw.t:
+        for w in re.split(r"\s+", t):
+            if w:
+                words[w] += 1
+    pairs = Counter()
+    for w, f in words.items():
+        for a, b in zip(w, w[1:]):
+            pairs[(a, b)] += f
+    top = min(pairs, key=lambda p: (-pairs[p], p[0], p[1]))
+    assert out.merged_pair.iloc[0] == top[0] + top[1]
+    # greedy left-to-right merge, then recount
+    newpairs, sym_after, sym_before = Counter(), 0, 0
+    for w, f in words.items():
+        syms, i = [], 0
+        while i < len(w):
+            if i + 1 < len(w) and (w[i], w[i + 1]) == top:
+                syms.append(w[i] + w[i + 1])
+                i += 2
+            else:
+                syms.append(w[i])
+                i += 1
+        sym_before += f * len(w)
+        sym_after += f * len(syms)
+        for a, b in zip(syms, syms[1:]):
+            newpairs[f"{a}>{b}"] += f
+    assert out.symbols_before.iloc[0] == sym_before
+    assert out.symbols_after.iloc[0] == sym_after
+    assert sym_after < sym_before  # the merge must actually compress
+    for r in out.itertuples():
+        assert newpairs[r.pair] == r.merge_count
+
+
+def test_q359_bucketing_cuts_waste(spark):
+    r = run(spark, "q359_length_bucket_packing").collect()[0]
+    # bucketing can only reduce padding waste (sorted batches minimize
+    # within-batch spread)
+    assert r.bucketed_waste_toks <= r.arrival_waste_toks
+    assert 0 <= r.bucketed_waste_bp <= r.arrival_waste_bp <= 10000
+    assert r.waste_cut_bp >= 0
+
+
+def test_q387_prefix_cache_identities(spark):
+    r = run(spark, "q387_prefix_cache_savings").collect()[0]
+    assert r.n_prefixes <= r.n_prompts
+    assert r.n_shared_prefixes <= r.n_prefixes
+    # savings = (prompts - prefixes) * PFX tokens exactly
+    assert r.saved_toks == (r.n_prompts - r.n_prefixes) * 8
+    assert 0 <= r.savings_bp <= 10000
+
+
+def test_q388_speculative_identity_accept_is_one_minus_tv(spark):
+    r = run(spark, "q388_speculative_overlap").collect()[0]
+    assert r.vocab > 0
+    assert 0 <= r.accept_rate_e6 <= 1000000
+    # accept = 1 - TV, up to nano-quantization slack
+    assert abs(r.accept_rate_e6 - r.one_minus_tv_e6) <= 2
+    assert abs(r.accept_rate_e6 + r.tv_distance_e6 - 1000000) <= 2
+
+
+def test_q389_footrule_bounds(spark):
+    r = run(spark, "q389_rank_footrule").collect()[0]
+    assert r.n > 0
+    assert 0 <= r.footrule_norm_bp <= 10000
+    assert 0 <= r.top50_overlap <= 50
+    # parity-correct maximum
+    max_fr = r.n * r.n // 2 if r.n % 2 == 0 else (r.n * r.n - 1) // 2
+    assert r.footrule <= max_fr
+
+
+def test_q217_golden_is_guard_gated():
+    spec = QUERIES["q217_unigram_viterbi"]
+    assert spec.oracle is not None
+    assert spec.golden_guard is not None
+    assert spec.golden_domain is not None and len(spec.golden_domain) == 2

@@ -20,6 +20,8 @@ from ooh_etl_spark.operators.multimodal import (
     encode_ppm,
     encode_wav_pcm16,
 )
+from ooh_etl_spark.queries import QUERIES
+from tests.conftest import run
 
 
 def test_ppm_roundtrip():
@@ -166,3 +168,20 @@ def test_q247_tone_detector_recovers_embedded_frequency(spark):
     assert (out.detected_bin == out.true_bin).all()
     assert out.margin_dmdb.min() > 100000  # > 10 dB margin everywhere
     assert set(out.true_bin) == set(range(8))  # every bin exercised
+
+
+def test_q332_ahash_finds_planted_clusters(spark):
+    rows = run(spark, "q332_image_ahash_neardup").collect()
+    assert all(r.hamming <= 3 for r in rows)
+    pairs = {(r.id_a, r.id_b) for r in rows}
+    # every within-cluster pair (shared seed, <=3 perturbed pixels in
+    # one block -> Hamming <= 1) must be found by the banded join
+    for seed in range(30):
+        ids = [4 * seed + i for i in range(4)]
+        for i, a in enumerate(ids):
+            for b in ids[i + 1 :]:
+                assert (a, b) in pairs, (a, b)
+
+
+def test_q247_is_oracle_backed():
+    assert QUERIES["q247_audio_tone_detect"].oracle is not None

@@ -13,11 +13,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from ooh_etl_spark.queries import QUERIES
-
-
-def run(spark, name, sf_dir):
-    return QUERIES[name].fn(spark, sf_dir)
+from tests.conftest import run
 
 
 def _write(tmp_path, table, df):

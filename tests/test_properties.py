@@ -15,7 +15,12 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from ooh_etl_spark.functions import html as H
-from ooh_etl_spark.functions.text import quality_score, tokenize, word_shingles
+from ooh_etl_spark.functions.text import (
+    DUCK_TOKENIZE,
+    quality_score,
+    tokenize,
+    word_shingles,
+)
 
 
 def run_batch(spark, texts: list[str], col_fn):
@@ -86,6 +91,31 @@ def test_tokenize_roundtrip_count(spark, texts):
     got = run_batch(spark, texts, lambda c: F.size(tokenize(c)))
     expected = [len(t.strip().lower().split()) if t.strip() else 1 for t in texts]
     assert got == expected
+
+
+@settings(max_examples=30, deadline=None)
+@given(
+    st.lists(
+        st.text(alphabet=st.characters(max_codepoint=0x7F), max_size=60),
+        min_size=1,
+        max_size=40,
+    )
+)
+def test_tokenize_agrees_with_its_duckdb_twin(spark, texts):
+    # The oracles tokenize with DUCK_TOKENIZE, so both engines must cut
+    # the same tokens. ASCII with every C0 control covers the one place
+    # Java's and RE2's \s differ: vertical tab.
+    import duckdb
+
+    got = run_batch(spark, texts, tokenize)
+    con = duckdb.connect()
+    con.execute("CREATE TABLE docs (i INTEGER, text VARCHAR)")
+    con.executemany("INSERT INTO docs VALUES (?, ?)", list(enumerate(texts)))
+    want = [
+        r[0]
+        for r in con.execute(f"SELECT {DUCK_TOKENIZE} FROM docs ORDER BY i").fetchall()
+    ]
+    assert got == want
 
 
 @settings(max_examples=200, deadline=None)

@@ -18,10 +18,14 @@ from tests.conftest import SF_DIR, assert_matches_oracle
 # triples that coverage at ~35 min of suite wall clock, which is what
 # pushed the r13 gate run past the driver's limit (VERDICT r13 item 2).
 # The default gate still smoke-checks a few: the checkpoint funnel trio
-# (the stage cuts and concurrent materialisation the benchmark times)
-# and the three queries round 14 rewrote for speed (ADVICE r14).
+# (the stage cuts and concurrent materialisation the benchmark times),
+# the three queries round 14 rewrote for speed (ADVICE r14), and the
+# censuses of the funnel's stages (q480-q482).
 _GATE_ORACLE = {
     "q479_corpus_build_funnel",
+    "q480_gopher_repetition_census",
+    "q481_funnel_stage_overlap",
+    "q482_gate_threshold_curve",
     "q333_hits_authority",
     "q453_doremi_mixture_step",
     "q373_price_indices",
@@ -89,10 +93,7 @@ def test_no_unsafe_dtypes_in_oracle_outputs(duck):
     # BIGINT and DECIMAL literals to DOUBLE at authoring time.  This
     # closes the CLASS the way the complex-types test above closed the
     # q77 class.
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
-    from check_oracle import SAFE_ORACLE_TYPES, dtype_gate
+    from tools.check_oracle import SAFE_ORACLE_TYPES, dtype_gate
 
     from ooh_etl_spark.queries import QUERIES
 
@@ -129,3 +130,47 @@ def test_registry_hygiene():
                 or re.search(r"\bVALUES\b", spec.oracle, re.I)
                 or re.search(r"\bgenerate_series\b", spec.oracle, re.I)
             ), f"{name} oracle reads no fixture table and is not a golden literal"
+
+
+# Sizing and audit queries whose oracle must never be dropped to rows-only.
+_ORACLE_BACKED = [
+    "q459_trigger_interval_curve",
+    "q460_truncation_loss_curve",
+    "q461_ivf_posting_balance",
+    "q462_curriculum_quartile_schedule",
+    "q463_splice_boundary_overlap",
+    "q464_cross_source_dup_matrix",
+    "q465_filter_agreement_matrix",
+    "q466_dedup_survivor_policy",
+    "q467_state_ttl_curve",
+    "q468_chunk_stride_cost",
+    "q469_embedding_norm_gate",
+    "q470_bucket_sizing_advisor",
+    "q471_join_state_peak_curve",
+    "q472_inbatch_collision_curve",
+    "q473_decon_order_curve",
+    "q474_embedding_separability",
+    "q475_bloom_sizing_advisor",
+    "q476_watermark_lateness_curve",
+    "q477_prototypicality_prune",
+    "q478_sq_int8_recall",
+]
+
+
+@pytest.mark.slow
+def test_golden_oracles_are_guard_gated():
+    # A golden VALUES oracle is only valid at its pinned corpora; the
+    # guard + two-signature domain is what lets the 5x sweep fall back
+    # to rows-only instead of failing on unpinned replicas.
+    for name in ("q125_compression_quality", "q185_k_core"):
+        spec = QUERIES[name]
+        assert spec.oracle is not None
+        assert spec.golden_guard is not None
+        assert spec.golden_domain is not None and len(spec.golden_domain) == 2
+
+
+@pytest.mark.slow
+def test_all_wave_queries_registered_with_oracles(spark):
+    for name in _ORACLE_BACKED:
+        assert name in QUERIES, name
+        assert QUERIES[name].oracle is not None, f"{name} must be oracle-backed"

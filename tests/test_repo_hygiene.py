@@ -11,6 +11,7 @@ from __future__ import annotations
 import ast
 import glob
 import os
+import re
 import subprocess
 
 
@@ -73,7 +74,6 @@ def test_bench_final_line_fits_driver_tail_buffer():
     )
 
 
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -131,3 +131,38 @@ def test_no_localcheckpoint_monkeypatch():
         if patches(node)
     ]
     assert not offenders, f"use ooh_etl_spark.stages.full_lineage: {offenders}"
+
+
+def test_no_hard_coded_checkout_path():
+    """Code finds the repo from ``__file__`` (tools) or pytest's rootdir
+    import (tests). A literal checkout path makes a run from any other
+    checkout, such as the parent arm of an A/B, silently import this
+    one's package."""
+    offenders = []
+    for d in ("ooh_etl_spark", "tests", "tools"):
+        for path in sorted(glob.glob(f"{REPO}/{d}/**/*.py", recursive=True)):
+            with open(path) as f:
+                if REPO in f.read():
+                    offenders.append(os.path.relpath(path, REPO))
+    assert not offenders, f"derive the repo root from __file__: {offenders}"
+
+
+def test_catalog_is_organised_by_concern():
+    """Query modules and test files are named for what they cover, not
+    for the round they arrived in: no ``queries/advanced2.py``-style
+    numbered stem, no ``round``/``wave`` word in a test file name."""
+    numbered = [
+        os.path.basename(p)
+        for p in glob.glob(f"{REPO}/ooh_etl_spark/queries/*.py")
+        if os.path.splitext(os.path.basename(p))[0][-1].isdigit()
+    ]
+    round_named = [
+        os.path.basename(p)
+        for p in glob.glob(f"{REPO}/tests/test_*.py")
+        if any(
+            re.fullmatch(r"(round|wave)\d*", word)
+            for word in os.path.splitext(os.path.basename(p))[0].split("_")
+        )
+    ]
+    assert not numbered, f"fold these into their family module: {numbered}"
+    assert not round_named, f"fold these into their family test file: {round_named}"

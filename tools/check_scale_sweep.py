@@ -13,7 +13,8 @@ substitution their docstrings document for production.
 """
 import os, re, shutil, subprocess, sys, time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 import __spark_entry__ as m  # noqa: E402
 
 ALL = list(m.queries())
@@ -91,7 +92,7 @@ def run_pass(sf_dir: str, wanted: list) -> None:
         lf = open(LOG, "w")
         p = subprocess.Popen(
             ["python", "tools/check_oracle.py", sf_dir] + todo,
-            stdout=lf, stderr=subprocess.STDOUT, cwd="/root/repo",
+            stdout=lf, stderr=subprocess.STDOUT, cwd=ROOT,
         )
         last_size, last_t, stuck = 0, time.time(), False
         while p.poll() is None:

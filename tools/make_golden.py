@@ -25,6 +25,7 @@ Usage: python tools/make_golden.py   (writes the module, prints counts)
 from __future__ import annotations
 
 import math
+import os
 import zlib
 from collections import Counter, defaultdict
 
@@ -187,7 +188,11 @@ def main() -> int:
     lines.append("")
     lines.append(f"GOLDEN_Q217 = {g217!r}")
     lines.append("")
-    with open("/root/repo/ooh_etl_spark/queries/_golden.py", "w") as f:
+    out = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "ooh_etl_spark", "queries", "_golden.py",
+    )
+    with open(out, "w") as f:
         f.write("\n".join(lines))
     return 0
 

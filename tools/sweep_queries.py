@@ -18,10 +18,11 @@ from __future__ import annotations
 
 import json
 import statistics
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 CORPORA = {
     "1x": "/root/testdata/sf0.1",
