@@ -1912,22 +1912,19 @@ def q465_filter_agreement_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums) — no joins, no second pass; output is 6 rows."""
     docs = load_table(spark, sf_dir, "documents")
     sw = ", ".join(f"'{w}'" for w in _AGREE_STOPWORDS)
-    feat = docs.select(
+    feat = docs.select("doc_id", "text", tokenize(F.col("text")).alias("toks")).select(
         "doc_id",
-        F.size(tokenize(F.col("text"))).alias("n_toks"),
+        F.size("toks").alias("n_toks"),
         # split('') appends a trailing "" in Spark; remove it so the
         # distinct-char count matches DuckDB's per-char slicer exactly.
         F.size(
             F.array_remove(F.array_distinct(F.split(F.col("text"), "")), "")
         ).alias("n_alpha"),
-        F.expr(
-            f"size(filter(split(lower(trim(text)), '\\\\s+'),"
-            f" t -> t IN ({sw})))"
-        ).alias("n_stop"),
+        F.expr(f"size(filter(toks, t -> t IN ({sw})))").alias("n_stop"),
         # Top-token count via a sorted-run fold: O(n log n) in-row,
         # constant-size accumulator (no per-row map rebuild).
         F.expr(
-            "aggregate(array_sort(split(lower(trim(text)), '\\\\s+')),"
+            "aggregate(array_sort(toks),"
             " named_struct('prev', CAST(NULL AS STRING), 'run', 0, 'best', 0),"
             " (acc, t) -> named_struct("
             "   'prev', t,"
@@ -3362,12 +3359,10 @@ def q482_gate_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.array_remove(F.array_distinct(F.split(F.col("text"), "")), "")
             ).alias("n_alpha"),
             F.expr(
-                f"(10000 * size(filter(split(lower(trim(text)), '\\\\s+'),"
-                f" t -> t IN ({sw})))) div size(toks)"
+                f"(10000 * size(filter(toks, t -> t IN ({sw})))) div size(toks)"
             ).alias("stop_bp"),
             F.expr(
-                "(10000 * aggregate(array_sort(split(lower(trim(text)),"
-                " '\\\\s+')),"
+                "(10000 * aggregate(array_sort(toks),"
                 " named_struct('prev', CAST(NULL AS STRING), 'run', 0,"
                 "              'best', 0),"
                 " (acc, t) -> named_struct("

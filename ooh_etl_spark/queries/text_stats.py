@@ -620,10 +620,10 @@ def q241_source_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q251_readability",
-    """
+    f"""
     WITH d AS (
       SELECT lang,
-             len(string_split_regex(lower(trim(text)), '\\s+'))
+             len({DUCK_TOKENIZE})
                AS n_words,
              len(string_split(text, '.')) - 1 + 1 AS n_sents,
              len(regexp_extract_all(lower(text), '[aeiouy]+'))

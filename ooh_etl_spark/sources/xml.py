@@ -1,29 +1,56 @@
 """OOH XML compilation source (S1/S2, index.js:186,136).
 
-The reference loads the whole file into one in-memory DOM; here Spark's
-native XML source splits on ``rowTag=occupation`` so the scan is
-distributed (one row per occupation, readable in parallel from any
-number of files at 100 TB). The schema is DECLARED, not inferred —
-inference would mis-type free text (and the reference's schema is
-implicit anyway; SURVEY.md §1.3 makes it explicit).
+The reference loads the whole file into one in-memory DOM. Spark's
+native XML source (``format("xml")`` with ``rowTag``) does not split a
+file either: with its default ``multiLine=true`` it streams each file
+whole through ONE task, and ``multiLine=false`` reads one record per
+physical line, which is wrong for a pretty-printed compilation (79
+rows from the 4-occupation test fixture). Parallelism comes from the
+number of files, and for one file from
+:func:`ooh_etl_spark.tables.parallelize_rows` after the scan.
+
+Measured and dropped: a splittable scan, ``spark.read.text(path,
+lineSep="</occupation>")`` with one ``from_xml`` per record. On the
+9 MB, 5,000-occupation benchmark compilation on 4 vCPUs it plans 3
+partitions (4 MB, 4 MB and 1 MB: ``spark.sql.files.openCostInBytes``
+sets the split size of a small file), so two tasks parse about 2,300
+records each, and ``from_xml``, which opens a new StAX reader per
+record, spends about 1.5 times the native source's CPU per record. The
+scan alone took 0.28 s against 0.24 s for the native source, and with
+the round-robin exchange that follows both it ran 0.31-0.34 s against
+0.31 s. In ``perfbench/run.py --workload ooh_etl`` the pipeline with it
+lost all six interleaved pairs to the pipeline without it, by 2-15% in
+``throughput_qps``.
+
+The schema is DECLARED, not inferred — inference would mis-type free
+text (and the reference's schema is implicit anyway; SURVEY.md §1.3
+makes it explicit).
 """
 
 from __future__ import annotations
+
+from functools import lru_cache
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ooh_etl_spark.functions.html import (
+    P,
+    P_OWN_TEXT,
+    P_TEXT,
+    TD_H4_TEXT,
+    TD_TEXT,
     WORK_SCHEDULES_PATTERN,
-    cells_to_map,
+    cells_dict,
+    concat_texts,
     extract_after_heading,
-    extract_trimmed_list,
-    pay_map,
-    pay_text,
+    group_marks,
     qualities_map,
-    xpath_concat,
-    xpath_match_count,
+    trimmed,
+    ungroup,
+    wage_map,
+    xpath_grouped,
 )
 
 
@@ -72,22 +99,44 @@ def _masked(col: Column, title: Column) -> Column:
     return F.when(title != "Military Careers", col)
 
 
-def occupation_records(occ: DataFrame) -> DataFrame:
-    """P1 (index.js:138-174): the 18-column record projection.
+#: The eight write-side XPath extractions, in output order: (output,
+#: fragment, path, post-processor). They share one ``xpath`` call per
+#: row; ``P`` selects elements, so its group must come last.
+_GROUPED = (
+    ("whatTheyDo", "summary_what_they_do", P_TEXT, concat_texts),
+    ("howToBecomeOne", "summary_how_to_become_one", P_TEXT, concat_texts),
+    ("workEnvironment", "summary_work_environment", P_TEXT, concat_texts),
+    ("payText", "summary_pay", P_TEXT, concat_texts),
+    ("pay", "summary_pay", P_OWN_TEXT, wage_map),
+    ("similarOccupations", "similar_occupations.section_body", TD_H4_TEXT, trimmed),
+    ("topIndustries", "work_environment.section_body", TD_TEXT, cells_dict),
+    # E4 warn path (index.js:33-35) as a derived column: the match
+    # count for a cdataXpath field (≠ 1 → the reference logs).
+    ("whatTheyDo_matches", "summary_what_they_do", P, F.size),
+)
 
-    The work_environment/how_to_become_one CDATA blocks are referenced
-    by several fields; being one ``select``, Catalyst's common-
-    subexpression elimination computes each parse once (the reference
-    re-parses the same block twice per row — SURVEY.md §4.1).
-    """
+_NODES, _MARKS = "__cdata_nodes", "__cdata_marks"
+
+
+@lru_cache(maxsize=1)
+def _record_projection(app_id: str) -> tuple[Column, Column, list[Column]]:  # noqa: ARG001
+    """The columns of :func:`occupation_records`, built once per
+    SparkContext: building them takes about 2,200 py4j round trips
+    (0.2 s), against about 50 for a call that reuses them. Keyed on the
+    application id, so a restarted context rebuilds them."""
     title = F.col("title")
     we = F.col("work_environment.section_body")
     htb = F.col("how_to_become_one.section_body")
+    nodes = _masked(
+        xpath_grouped([(F.col(frag), xp) for _, frag, xp, _ in _GROUPED]), title
+    ).alias(_NODES)
+    marks = group_marks(F.col(_NODES)).alias(_MARKS)
+    groups = ungroup(F.col(_NODES), F.col(_MARKS), len(_GROUPED))
 
     def qf(field: str) -> Column:
         return F.col(field)
 
-    return occ.select(
+    columns = [
         title.alias("title"),
         extract_after_heading(we, WORK_SCHEDULES_PATTERN, 3).alias("workSchedules"),
         qualities_map(htb).alias("importantQualities"),
@@ -114,27 +163,27 @@ def occupation_records(occ: DataFrame) -> DataFrame:
         _masked(qf("qf_employment_openings.value"), title).alias(
             "projectedChangeInNumberOfJobs"
         ),
-        _masked(xpath_concat(F.col("summary_what_they_do")), title).alias(
-            "whatTheyDo"
-        ),
-        _masked(xpath_concat(F.col("summary_how_to_become_one")), title).alias(
-            "howToBecomeOne"
-        ),
-        _masked(xpath_concat(F.col("summary_work_environment")), title).alias(
-            "workEnvironment"
-        ),
-        _masked(pay_text(F.col("summary_pay")), title).alias("payText"),
-        _masked(pay_map(F.col("summary_pay")), title).alias("pay"),
-        _masked(
-            extract_trimmed_list(F.col("similar_occupations.section_body")), title
-        ).alias("similarOccupations"),
-        _masked(cells_to_map(we), title).alias("topIndustries"),
-        # E4 warn path (index.js:33-35) as derived columns: match counts
-        # for the three cdataXpath fields (≠ 1 → the reference logs).
-        _masked(xpath_match_count(F.col("summary_what_they_do")), title).alias(
-            "whatTheyDo_matches"
-        ),
-    )
+    ] + [
+        _masked(post(group), title).alias(name)
+        for (name, _, _, post), group in zip(_GROUPED, groups)
+    ]
+    return nodes, marks, columns
+
+
+def occupation_records(occ: DataFrame) -> DataFrame:
+    """P1 (index.js:138-174): the 18-column record projection.
+
+    The eight write-side extractions read one masked ``xpath`` node
+    array (:func:`ooh_etl_spark.functions.html.xpath_grouped`), computed
+    in a lower projection so masked and NULL-title rows are never
+    parsed; a middle projection finds its group marks once.
+    ``importantQualities`` keeps its own small ``xpath``, so the report,
+    which needs only that column, parses one section per row (the
+    reference re-parses each CDATA block up to twice per row — SURVEY.md
+    §4.1).
+    """
+    nodes, marks, columns = _record_projection(occ.sparkSession.sparkContext.applicationId)
+    return occ.select("*", nodes).select("*", marks).select(*columns)
 
 
 def long_quality_filter(records: DataFrame, min_len: int = 26) -> DataFrame:

@@ -166,6 +166,25 @@ def test_malformed_numeric_value_yields_null(spark):
     assert rec.title == "Dirty"
 
 
+# --- record projection: built once per SparkContext -------------------------
+def test_record_projection_columns_are_built_once_per_context(spark):
+    # Building the 21-column tree costs about 2,200 py4j round trips;
+    # later calls on the same context must reuse it.
+    from ooh_etl_spark.queries.ooh_surface import FIXTURE
+    from ooh_etl_spark.sources.xml import (
+        _record_projection,
+        occupation_records,
+        read_occupations,
+    )
+
+    occ = read_occupations(spark, FIXTURE)
+    occupation_records(occ)
+    before = _record_projection.cache_info()
+    assert occupation_records(occ).count() == 4
+    after = _record_projection.cache_info()
+    assert (after.hits, after.misses) == (before.hits + 1, before.misses)
+
+
 # --- fallback: lenient HTML --------------------------------------------------
 def test_fallback_handles_unclosed_p(spark):
     html = "<p>first<p>second</p>"

@@ -10,6 +10,7 @@ Spark job (per-example Spark jobs would be pathologically slow).
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -51,6 +52,133 @@ def test_pay_map_total_on_markupish_input(spark, texts):
         for v in m.values():
             assert v > 0
             assert round(v, 2) == v
+
+
+def test_xpath_element_nodes_are_null_text_nodes_are_strings(spark):
+    # xpath_grouped's markers rely on this: an element node comes back
+    # as NULL, a text node as its (non-NULL) string.
+    path = F.lit("/r/m | //p/text()")
+    [v] = run_batch(spark, ["<r><m/><p>x</p></r>"], lambda c: F.xpath(c, path))
+    assert v == [None, "x"]
+
+
+# Fragment pieces for the grouped-XPath equivalence property. Free text
+# has no '&' or ';' (an undeclared entity like '&x;' fails both paths
+# alike); bare '&' and '&amp;' come in as pieces of their own.
+_words = st.text(
+    alphabet=st.characters(codec="utf-8", exclude_characters="\x00<>&;"), max_size=10
+)
+_piece = st.one_of(
+    _words,  # text outside any <p>, XML-invalid characters included
+    _words.map(lambda t: f"<p>{t}</p>"),
+    st.tuples(_words, _words, _words).map(lambda t: "<p>%s <a>%s</a> %s</p>" % t),
+    st.sampled_from(
+        [
+            "<![CDATA[]]>",
+            "<p>a<![CDATA[]]>b</p>",
+            "<p><![CDATA[]]></p>",
+            "&",
+            "&amp;",
+            "\x01\x0b\ufffe",
+            "<p>The median annual wage for devs was $41,600.</p>",
+            "<p>The median hourly wage for devs was $20.00.</p>",
+            "<h3>Work Schedules</h3><p>Most work full time.</p>",
+            "<h3>Important Qualities</h3><p>Calm. Stays calm.</p>",
+        ]
+    ),
+    _words.map(lambda t: f"<table><tr><td>{t}</td><td>{t}%</td></tr></table>"),
+    _words.map(lambda t: f"<td><h4> {t} </h4></td>"),
+)
+_fragment = st.one_of(st.none(), st.lists(_piece, max_size=4).map("".join))
+_occupation = st.tuples(
+    st.sampled_from([None, "Military Careers", "Actors"]), *[_fragment] * 7
+)
+
+
+def _per_fragment_records(occ):
+    """occupation_records with one per-fragment function call per
+    extraction: the reference the grouped evaluation must equal."""
+    title = F.col("title")
+    we = F.col("work_environment.section_body")
+    htb = F.col("how_to_become_one.section_body")
+
+    def masked(c):
+        return F.when(title != "Military Careers", c)
+
+    qf = {
+        "description": "description",
+        "medianPayAnnual": "qf_median_pay_annual.value",
+        "medianPayHourly": "qf_median_pay_hourly.value",
+        "education": "qf_entry_level_education.value",
+        "workExperience": "qf_work_experience.value",
+        "training": "qf_on_the_job_training.value",
+        "numberOfJobs": "qf_number_of_jobs.value",
+        "employmentOutlook": "qf_employment_outlook.description",
+        "employmentOutlookCode": "qf_employment_outlook.value",
+        "projectedChangeInNumberOfJobs": "qf_employment_openings.value",
+    }
+    casts = {"medianPayAnnual", "medianPayHourly"}
+    return occ.select(
+        title.alias("title"),
+        H.extract_after_heading(we).alias("workSchedules"),
+        H.qualities_map(htb).alias("importantQualities"),
+        *[
+            masked(F.col(c).try_cast("double") if n in casts else F.col(c)).alias(n)
+            for n, c in qf.items()
+        ],
+        masked(H.xpath_concat(F.col("summary_what_they_do"))).alias("whatTheyDo"),
+        masked(H.xpath_concat(F.col("summary_how_to_become_one"))).alias("howToBecomeOne"),
+        masked(H.xpath_concat(F.col("summary_work_environment"))).alias("workEnvironment"),
+        masked(H.pay_text(F.col("summary_pay"))).alias("payText"),
+        masked(H.pay_map(F.col("summary_pay"))).alias("pay"),
+        masked(H.extract_trimmed_list(F.col("similar_occupations.section_body"))).alias(
+            "similarOccupations"
+        ),
+        masked(H.cells_to_map(we)).alias("topIndustries"),
+        masked(H.xpath_match_count(F.col("summary_what_they_do"))).alias("whatTheyDo_matches"),
+    )
+
+
+def _canonical(records):
+    """Maps and arrays as q_ooh_records renders them."""
+    from ooh_etl_spark.queries.ooh_surface import map_to_sorted_string
+
+    maps = {"importantQualities", "pay", "topIndustries"}
+    return [
+        r.asDict()
+        for r in records.select(
+            *[
+                map_to_sorted_string(F.col(c)).alias(c)
+                if c in maps
+                else F.array_join(c, "|").alias(c)
+                if c == "similarOccupations"
+                else F.col(c)
+                for c in records.columns
+            ]
+        ).collect()
+    ]
+
+
+@settings(max_examples=20, deadline=None)
+@given(st.lists(_occupation, min_size=1, max_size=12))
+def test_grouped_xpath_records_equal_per_fragment_functions(spark, rows):
+    # One xpath evaluation per row (xpath_grouped) must give exactly the
+    # per-fragment results for all 21 columns, including for NULL and
+    # <p>-less fragments, empty CDATA, dirty characters, and masked or
+    # NULL-title rows.
+    from ooh_etl_spark.sources.xml import OCCUPATION_SCHEMA, occupation_records
+
+    occ = spark.createDataFrame(
+        [
+            (t, "d", ("1",), ("2",), ("e",), ("w",), ("o",), ("3",), ("x", "A"), ("4",),
+             swtd, shtb, swe, spay, (sim,), (we,), (htb,))
+            for t, swtd, shtb, swe, spay, sim, we, htb in rows
+        ],
+        OCCUPATION_SCHEMA,
+    )
+    got, want = occupation_records(occ), _per_fragment_records(occ)
+    assert got.columns == want.columns
+    assert _canonical(got) == _canonical(want)
 
 
 @settings(max_examples=30, deadline=None)
@@ -116,6 +244,33 @@ def test_tokenize_agrees_with_its_duckdb_twin(spark, texts):
         for r in con.execute(f"SELECT {DUCK_TOKENIZE} FROM docs ORDER BY i").fetchall()
     ]
     assert got == want
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["q251_readability", "q465_filter_agreement_matrix", "q482_gate_threshold_curve"],
+)
+def test_tokenizer_sites_agree_with_oracle_on_vertical_tab(spark, tmp_path, name):
+    # These queries count words, stopwords and repeated tokens. A split
+    # on Java's \s, which includes vertical tab, instead of tokenize's
+    # set disagrees with the DuckDB twin the oracles use; the texts put
+    # vertical tabs where such a split moves a count across a gate.
+    import duckdb
+
+    from tests.conftest import assert_matches_oracle, docs_dir
+
+    texts = [
+        "the\x0bthe\x0bthe cat sat",
+        "x\x0bx\x0bx\x0bx y z",
+        " ".join(f"w{i}" for i in range(19)) + "\x0bthe. End.",
+        "a\x0bof\x0bto and in the quick brown fox jumps over the lazy dog " * 2,
+        "plain words without a vertical tab in the text at all",
+        " ".join(f"word{i}" for i in range(24)) + " the\x0bthe",
+    ]
+    d = docs_dir(tmp_path, [(i, t, "en", f"s{i % 2}", 0) for i, t in enumerate(texts)])
+    duck = duckdb.connect()
+    duck.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{d}/documents.parquet')")
+    assert_matches_oracle(spark, duck, name, d)
 
 
 @settings(max_examples=200, deadline=None)

@@ -19,9 +19,12 @@ from tests.conftest import SF_DIR, assert_matches_oracle
 # pushed the r13 gate run past the driver's limit (VERDICT r13 item 2).
 # The default gate still smoke-checks a few: the checkpoint funnel trio
 # (the stage cuts and concurrent materialisation the benchmark times),
-# the three queries round 14 rewrote for speed (ADVICE r14), and the
-# censuses of the funnel's stages (q480-q482).
+# the three queries round 14 rewrote for speed (ADVICE r14), the
+# censuses of the funnel's stages (q480-q482), and the reference
+# pipeline's record projection and report (q_ooh_*, on the fixture).
 _GATE_ORACLE = {
+    "q_ooh_records",
+    "q_ooh_report",
     "q479_corpus_build_funnel",
     "q480_gopher_repetition_census",
     "q481_funnel_stage_overlap",
