@@ -181,13 +181,15 @@ def extract_trimmed_list(html: Column, xp: str = TD_H4_TEXT) -> Column:
 
 def cells_dict(cells: Column) -> Column:
     """E8 (index.js:95-106): alternating cells → dict; even index = key,
-    odd = value with '%' stripped (index.js:102)."""
+    odd = value with '%' stripped (index.js:102). An empty ``<td>`` has
+    no text node, so the cell list can be odd; the last key is then
+    unpaired and is dropped instead of failing the job."""
     keys = F.filter(cells, lambda _, i: i % 2 == 0)
     vals = F.transform(
         F.filter(cells, lambda _, i: i % 2 == 1),
         lambda v: F.regexp_replace(v, "%", ""),
     )
-    return F.map_from_arrays(keys, vals)
+    return F.map_from_arrays(F.slice(keys, 1, F.size(vals)), vals)
 
 
 def cells_to_map(html: Column, xp: str = TD_TEXT) -> Column:

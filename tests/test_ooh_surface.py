@@ -85,6 +85,12 @@ def test_cells_to_map_percent_stripped(spark):
     assert one(spark, H.cells_to_map(lit(html))) == {"Publishing": "10", "Finance": "9"}
 
 
+def test_cells_to_map_odd_cell_count_drops_unpaired_key(spark):
+    # The empty key cell has no text node: three texts, one pair.
+    html = "<table><tr><td>Publishing</td><td>10%</td></tr><tr><td></td><td>9%</td></tr></table>"
+    assert one(spark, H.cells_to_map(lit(html))) == {"Publishing": "10"}
+
+
 # --- E9: heading extraction --------------------------------------------------
 def test_work_schedules_basic(spark):
     text = "<h3>Work Schedules</h3><p>Most work full time.</p>"

@@ -77,9 +77,16 @@ def test_bench_final_line_fits_driver_tail_buffer():
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _ast_nodes(*dirs: str):
-    for d in dirs:
-        for path in sorted(glob.glob(f"{REPO}/{d}/**/*.py", recursive=True)):
+def _ast_nodes(*paths: str):
+    """AST nodes of every ``.py`` file under each directory in ``paths``,
+    or of the file itself where an entry names one."""
+    for p in paths:
+        files = (
+            [f"{REPO}/{p}"]
+            if p.endswith(".py")
+            else sorted(glob.glob(f"{REPO}/{p}/**/*.py", recursive=True))
+        )
+        for path in files:
             with open(path) as f:
                 tree = ast.parse(f.read(), path)
             for node in ast.walk(tree):
@@ -131,6 +138,21 @@ def test_no_localcheckpoint_monkeypatch():
         if patches(node)
     ]
     assert not offenders, f"use ooh_etl_spark.stages.full_lineage: {offenders}"
+
+
+def test_sessions_are_built_in_one_module():
+    """Static SQL settings such as the generated-class cache size take
+    effect only in the builder that starts the JVM, so bench.py, the
+    tools and the tests all start Spark through ``session.get_spark``."""
+    offenders = [
+        f"{rel}:{node.lineno}"
+        for rel, node in _ast_nodes("ooh_etl_spark", "tools", "tests", "bench.py")
+        if rel != os.path.join("ooh_etl_spark", "session.py")
+        and isinstance(node, ast.Attribute)
+        and node.attr == "builder"
+        and "SparkSession" in (getattr(node.value, "id", None), getattr(node.value, "attr", None))
+    ]
+    assert not offenders, f"start Spark with ooh_etl_spark.session.get_spark: {offenders}"
 
 
 def test_no_hard_coded_checkout_path():

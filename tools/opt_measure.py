@@ -6,7 +6,10 @@ $SPARK_GRAFT_SF_DIR (default sf0.1):
 - ``toPandas`` reps — the bench methodology, so numbers here are
   directly comparable to bench.py medians; and
 - ``noop``-sink reps (guide §1.4) — full materialization of every
-  column with no driver transfer, isolating the computation.
+  column with no driver transfer, isolating the computation; and
+- ``compiles``: Janino compilations during those timed reps. At steady
+  state it is 0; anything else means the query's generated classes do
+  not stay in Spark's codegen cache between executions.
 
 and (with ``--plans TAG``) writes ``plans/r13/<query>_<TAG>.txt`` with
 the ``explain("formatted")`` output plus a one-line plan-shape summary
@@ -77,7 +80,7 @@ def main() -> None:
 
     from ooh_etl_spark.plans.audit import physical_plan
     from ooh_etl_spark.queries import get_queries
-    from ooh_etl_spark.session import get_spark
+    from ooh_etl_spark.session import codegen_compilations, get_spark
 
     if not names:
         names = list(HEADLINE)
@@ -110,10 +113,13 @@ def main() -> None:
         if reps == 0:
             print(f"{name}: plan dumped", flush=True)
             continue
-        # warm: compile at smallest sf, then one untimed run at sf_dir
+        # warm: compile at smallest sf, then one untimed run of each
+        # timed action at sf_dir, whose final stages differ from count's
         fn(spark, "/root/testdata/sf0.001").count()
-        fn(spark, sf_dir).count()
+        fn(spark, sf_dir).toPandas()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         tp, nj = [], []
+        compiled0 = codegen_compilations(spark)
         for _ in range(reps):
             spark.sparkContext.setJobDescription(f"{name}: toPandas rep")
             t0 = time.perf_counter()
@@ -126,6 +132,7 @@ def main() -> None:
             nj.append(time.perf_counter() - t0)
         spark.sparkContext.setJobDescription(None)
         out[name] = {
+            "compiles": codegen_compilations(spark) - compiled0,
             "toPandas_med": round(median(tp), 3),
             "noop_med": round(median(nj), 3),
             "toPandas_spread_pct": round(100 * (max(tp) - min(tp)) / median(tp), 1),
@@ -134,7 +141,8 @@ def main() -> None:
         print(
             f"{name}: toPandas {out[name]['toPandas_med']}s "
             f"(spread {out[name]['toPandas_spread_pct']}%), "
-            f"noop {out[name]['noop_med']}s, {n_rows} rows",
+            f"noop {out[name]['noop_med']}s, {n_rows} rows, "
+            f"{out[name]['compiles']} compiles",
             flush=True,
         )
     print(json.dumps(out, indent=1))
