@@ -1,25 +1,41 @@
 """Benchmark harness (driver contract: one JSON line to stdout).
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints:
+local[$SPARK_GRAFT_CPUS], then ``ooh_xml_10k``: the reference pipeline
+on a 10,000-occupation compilation that ``perfbench.oohgen`` writes
+under ``.bench_build/`` at the start of every run. Prints:
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {...}, "sf": ...}
 
-Each query is timed to full materialization on the driver (Arrow
-collect via toPandas), which includes scan, shuffle, and result
-transfer — the end-to-end number a user sees. Arrow is the engine's
-interchange format; row-at-a-time collect() would time Python row
-deserialization, not the engine, on wide results.
+Each entry is one callable of ``sf_dir`` that returns the Arrow
+``toPandas()`` result; the warm-ups, the timed reps and the retries all
+run it. So each entry is timed to full materialization on the driver,
+which includes scan, shuffle, and result transfer — the end-to-end
+number a user sees. Arrow is the engine's interchange format;
+row-at-a-time collect() would time Python row deserialization, not the
+engine, on wide results.
+
+Every ``ooh_xml_10k`` execution checks its report against the digest
+``oohgen`` derives from the generated file, and a mismatch exits
+nonzero. Each entry's timed reps are bracketed by
+``perfbench.sysmon`` CPU snapshots: the share of the host's CPU that
+other processes, or the hypervisor as steal, took meanwhile goes to
+BENCH_DETAIL.json and BENCH_SPREADS.json under ``contamination``, and
+contaminated entries are named on stderr.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+
+from perfbench import oohgen, sysmon  # noqa: E402
 
 # HEADLINE inclusion criteria (pinned round 5; VERDICT r4 item 7):
 # 1. PINNED SET — the 27 entries below (plus ooh_xml_10k) are the
@@ -176,76 +192,84 @@ HEADLINE = [
 ]
 
 
-OOH_BENCH_XML = "/tmp/ooh_bench_10k.xml"
-OOH_BENCH_OCCUPATIONS = 10_000
+#: Seed of the generated ``ooh_xml_10k`` compilation. One fixed seed
+#: keeps the entry's input the same from run to run.
+OOH_SEED = 1
 
 
-def _synthesize_ooh_xml() -> str:
-    """Replicate the 4-occupation fixture to ~10k occupations — the
-    reference's workload shape (one XML compilation, one row per
-    <occupation>) at a size where throughput is meaningful. The
-    reference's own input is git-ignored in its repo, so a synthetic
-    compilation is the only reproducible basis."""
-    if os.path.exists(OOH_BENCH_XML):
-        return OOH_BENCH_XML
-    import re
-
-    fixture = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "tests", "fixtures", "ooh_mini.xml"
-    )
-    text = open(fixture).read()
-    occs = re.findall(r"<occupation>.*?</occupation>", text, re.DOTALL)
-    reps = OOH_BENCH_OCCUPATIONS // len(occs)
-    with open(OOH_BENCH_XML, "w") as f:
-        f.write('<?xml version="1.0" encoding="UTF-8"?>\n<ooh_xml_compilation>\n')
-        for i in range(reps):
-            for o in occs:
-                f.write(o.replace("<title>", f"<title>V{i} ", 1))
-                f.write("\n")
-        f.write("</ooh_xml_compilation>\n")
-    return OOH_BENCH_XML
+def short(name: str) -> str:
+    """Key of entry ``name`` on the final stdout line: its qNNN prefix,
+    or its first 12 characters."""
+    m = re.match(r"q\d+[a-z]?$", name.split("_", 1)[0])
+    return m.group(0) if m else name[:12]
 
 
-def run_ooh_pipeline(spark) -> int:
-    """The reference's full pipeline (S1→P1→F1→K1) on the synthetic
-    compilation: XML scan → 18-column record projection → EXISTS-over-
-    map-keys filter → formatted report lines."""
+def ooh_entry(spark, xml_path: str, expected: str):
+    """The ``ooh_xml_10k`` entry: a callable of ``sf_dir`` (unused; the
+    compilation at ``xml_path`` is the input) that runs the reference's
+    full pipeline (S1→P1→F1→K1) — XML scan → 18-column record
+    projection → EXISTS-over-map-keys filter → formatted report lines —
+    and returns the report's ``toPandas()``. It raises RuntimeError when
+    the report's ``oohgen.report_digest`` is not ``expected``, so a wrong
+    result is never recorded as a time; the check costs milliseconds
+    against a pipeline of about a second."""
     from ooh_etl_spark.sources.xml import (
         long_quality_filter,
         occupation_records,
         read_occupations,
         report_lines,
     )
-
     from ooh_etl_spark.tables import parallelize_rows
 
-    # The single-file XML parse is one task (unsplittable); the 18-column
-    # xpath/regex projection is the expensive part and spreads across
-    # cores after a round-robin repartition.
-    occ = parallelize_rows(read_occupations(spark, _synthesize_ooh_xml()))
-    return len(report_lines(long_quality_filter(occupation_records(occ))).collect())
+    def run(sf_dir: str):
+        # The single-file XML parse is one task (unsplittable); the
+        # 18-column xpath/regex projection is the expensive part and
+        # spreads across cores after a round-robin repartition.
+        occ = parallelize_rows(read_occupations(spark, xml_path))
+        pdf = report_lines(long_quality_filter(occupation_records(occ))).toPandas()
+        got = oohgen.report_digest(zip(pdf.title, pdf.line))
+        if got != expected:
+            raise RuntimeError(
+                f"ooh_xml_10k: wrong report: {len(pdf)} rows with digest "
+                f"{got[:16]}, expected {expected[:16]}"
+            )
+        return pdf
+
+    return run
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from ooh_etl_spark.queries import get_queries
+    from ooh_etl_spark.queries.ooh_surface import FIXTURE
     from ooh_etl_spark.session import get_spark
+
+    # The compilation is written afresh on every run, so a file that a
+    # killed run left half-written is never timed.
+    build = os.path.join(ROOT, ".bench_build", "bench")
+    os.makedirs(build, exist_ok=True)
+    xml = os.path.join(build, "ooh_xml_10k.xml")
+    ooh = oohgen.generate(FIXTURE, xml, seed=OOH_SEED, n_occupations=10_000)
 
     spark = get_spark("bench")
     qs = get_queries()
+    # One callable of sf_dir per entry, returning the toPandas() result:
+    # the warm-ups, the timed reps and the retries all run it.
+    entries = {name: (lambda d, fn=qs[name]: fn(spark, d).toPandas()) for name in HEADLINE}
+    entries["ooh_xml_10k"] = ooh_entry(spark, xml, ooh["digest"])
 
-    # Warm the JVM, codegen cache, and parquet readers: run each
-    # headline query once at the smallest SF so the timed runs measure
-    # steady-state query execution, not first-use JIT/codegen compile.
-    # The generated classes stay cached only because session.py sizes
-    # Spark's codegen cache to this working set (1,247 classes); under
-    # Spark's default of 100, a second headline pass at sf0.001
-    # recompiled 1,046 of them. count() compiles fewer classes than the
-    # timed toPandas() does, so the first timed rep of each entry still
-    # compiles its collect-side classes (406 across the headline set).
+    # Warm the JVM, codegen cache, and parquet readers: run each entry
+    # once at the smallest SF so the timed runs measure steady-state
+    # query execution, not first-use JIT/codegen compile. The generated
+    # classes stay cached only because session.py sizes Spark's codegen
+    # cache to this working set (1,247 classes); under Spark's default
+    # of 100, a second headline pass at sf0.001 recompiled 1,046 of
+    # them. The warm-up runs the timed action itself: when it ran
+    # count(), the first timed rep of each entry still compiled its
+    # collect-side classes (406 across the headline set at sf0.1).
     spark.range(1).count()
-    for name in HEADLINE:
-        qs[name](spark, "/root/testdata/sf0.001").count()
+    for run in entries.values():
+        run("/root/testdata/sf0.001")
 
     # n=5 (VERDICT r5 item 4): with n=3 the sub-second queries carried
     # 45-128% spreads, making round-over-round deltas unreadable.
@@ -262,48 +286,45 @@ def main() -> None:
     # a 266.8% five-run spread in r9 (VERDICT r9 item 4), and the r10
     # fix — warming only HEADLINE[0] — just RELOCATED the cost onto the
     # next query (q01 moved 0.810s -> 1.426s, VERDICT r10 item 3). One
-    # untimed execution of EVERY headline entry at sf_dir puts all
-    # timed reps in the same steady state.
-    for name in HEADLINE:
-        qs[name](spark, sf_dir).count()
+    # untimed execution of EVERY entry at sf_dir puts all timed reps in
+    # the same steady state.
+    for run in entries.values():
+        run(sf_dir)
 
     timings: dict[str, float] = {}
     spread_pct: dict[str, float] = {}
+    contamination: dict[str, dict] = {}
+    ncpu = len(os.sched_getaffinity(0))
 
-    def record(name: str, runs: list[float], n_rows: int) -> None:
+    def record(name: str, runs: list[float], n_rows: int, cont: dict) -> None:
         # Median of n>=3 runs + per-query spread: single runs carry
         # ±10-80% machine noise (observed round 2), which would make
-        # round-over-round comparisons of BENCH_r{N} meaningless.
+        # round-over-round comparisons of BENCH_r{N} meaningless. ``cont``
+        # covers the same session as ``runs``, so the contamination flag
+        # always belongs to the reported median.
         med = median(runs)
         timings[name] = round(med, 3)
         spread_pct[name] = round(100 * (max(runs) - min(runs)) / med, 1)
+        contamination[name] = cont
         print(
             f"# {name}: median {timings[name]}s over {len(runs)} runs "
             f"(spread {spread_pct[name]}%, {n_rows} rows)",
             file=sys.stderr,
         )
 
-    def time_entry(name: str) -> tuple[list[float], int]:
+    def time_entry(name: str) -> tuple[list[float], int, dict]:
+        """``n_reps`` timed executions, and how much of the host's CPU
+        other processes took while they ran (``sysmon.contamination``)."""
         runs, n = [], 0
+        start = sysmon.cpu_snapshot()
         for _ in range(n_reps):
             t0 = time.perf_counter()
-            if name == "ooh_xml_10k":
-                n = run_ooh_pipeline(spark)
-            else:
-                n = len(qs[name](spark, sf_dir).toPandas())
+            n = len(entries[name](sf_dir))
             runs.append(time.perf_counter() - t0)
-        return runs, n
+        return runs, n, sysmon.contamination(start, sysmon.cpu_snapshot(), ncpu)
 
-    for name in HEADLINE:
-        runs, n = time_entry(name)
-        record(name, runs, n)
-
-    # Reference-surface throughput: the full OOH ETL on a 10k-occupation
-    # compilation (the reference itself is single-threaded jsdom).
-    _synthesize_ooh_xml()
-    run_ooh_pipeline(spark)  # warm the XML reader path
-    runs, n = time_entry("ooh_xml_10k")
-    record("ooh_xml_10k", runs, n)
+    for name in entries:
+        record(name, *time_entry(name))
 
     # Spread gate (r14, VERDICT r13 item 1): this box suffers HOST-level
     # neighbor contention — 5-rep spreads of an UNCHANGED query have hit
@@ -324,7 +345,7 @@ def main() -> None:
         if not noisy:
             break
         for name in noisy:
-            runs, n = time_entry(name)
+            runs, n, cont = time_entry(name)
             med = median(runs)
             new_spread = round(100 * (max(runs) - min(runs)) / med, 1)
             kept = new_spread < spread_pct[name]
@@ -339,7 +360,7 @@ def main() -> None:
                 }
             )
             if kept:
-                record(name, runs, n)
+                record(name, runs, n, cont)
             else:
                 print(
                     f"# {name}: retry spread {new_spread}% >= "
@@ -349,6 +370,14 @@ def main() -> None:
     for name, records in retries.items():
         if spread_pct[name] > spread_gate:
             records[-1]["above_gate"] = True
+    for name, c in contamination.items():
+        if c["contaminated"]:
+            print(
+                f"# {name}: contaminated (foreign {c['foreign_share']:.1%}, "
+                f"steal {c['steal_share']:.1%} of the host's CPU time; "
+                f"own {c['own_cpu_s']}s)",
+                file=sys.stderr,
+            )
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
@@ -360,12 +389,6 @@ def main() -> None:
     # prefix (~13 bytes/entry instead of ~30); everything else — full
     # names, per-query spreads, rep count — goes to BENCH_DETAIL.json
     # next to this script and to stderr.
-    def short(name: str) -> str:
-        import re
-
-        m = re.match(r"q\d+[a-z]?$", name.split("_", 1)[0])
-        return m.group(0) if m else name[:12]
-
     compact = {short(k): v for k, v in timings.items()}
     assert len(compact) == len(timings), "short-key collision in HEADLINE"
     result = {
@@ -384,10 +407,9 @@ def main() -> None:
         "spread_gate_pct": spread_gate,
         "retries": retries,
         "key_map": {short(k): k for k in timings},
+        "contamination": contamination,
     }
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-    )
+    detail_path = os.path.join(ROOT, "BENCH_DETAIL.json")
     with open(detail_path, "w") as f:
         json.dump(detail, f, indent=1)
 
@@ -397,9 +419,7 @@ def main() -> None:
     # is MERGE-mode — every run (builder's or driver's) appends an
     # entry keyed by timestamp+git-sha instead of clobbering — so the
     # spread history survives the deposit. Bounded to the last 40 runs.
-    spreads_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_SPREADS.json"
-    )
+    spreads_path = os.path.join(ROOT, "BENCH_SPREADS.json")
     hist: dict = {}
     if os.path.exists(spreads_path):
         try:
@@ -415,7 +435,7 @@ def main() -> None:
             ["git", "rev-parse", "--short", "HEAD"],
             capture_output=True,
             text=True,
-            cwd=os.path.dirname(os.path.abspath(__file__)),
+            cwd=ROOT,
             timeout=10,
         ).stdout.strip() or "nogit"
     except OSError:
@@ -430,6 +450,7 @@ def main() -> None:
         "queries": timings,
         "spread_pct": spread_pct,
         "retries": retries,
+        "contamination": contamination,
     }
     hist = dict(sorted(hist.items())[-40:])
     with open(spreads_path, "w") as f:

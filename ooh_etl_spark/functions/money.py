@@ -61,20 +61,3 @@ def cents_avg(
     if wide:
         acc = acc.cast("decimal(38,0)")
     return F.round(F.sum(acc) / float(unit) / F.count(c), out_scale or scale)
-
-
-def oracle_cents_sum(expr: str, scale: int = 2) -> str:
-    """DuckDB twin of :func:`cents_sum` (same policy, same wording;
-    DuckDB's sum(BIGINT) accumulates in HUGEINT natively)."""
-    unit = 10**scale
-    return f"sum(CAST(round(({expr}) * {unit}) AS BIGINT)) / {unit}.0"
-
-
-def oracle_cents_avg(expr: str, scale: int = 2, out_scale: int | None = None) -> str:
-    """DuckDB twin of :func:`cents_avg` (count(expr), not count(*):
-    NULL rows are excluded from the denominator like SQL avg())."""
-    unit = 10**scale
-    return (
-        f"round(sum(CAST(round(({expr}) * {unit}) AS BIGINT))"
-        f" / {unit}.0 / count({expr}), {out_scale or scale})"
-    )

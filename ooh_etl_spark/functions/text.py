@@ -45,10 +45,6 @@ def bpe_ish_tokens(text: Column) -> Column:
     return F.split(F.trim(text), r"(?=[^\w\s])|(?<=[^\w\s])|\s+")
 
 
-def token_count(text: Column) -> Column:
-    return F.size(tokenize(text))
-
-
 def lang_scores(text: Column) -> dict[str, Column]:
     """Stopword-profile hit count per language."""
     toks = tokenize(text)

@@ -289,9 +289,6 @@ def q143_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Z_BITS = 8
-
-
 @register(
     "q144_zorder_clustering",
     """

@@ -966,8 +966,6 @@ def q163_dup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- q164: temperature-scaled source mixture (round-4) --------------------
-_MIX_TEMP_INV = 0.5  # 1/T with T=2: the mT5/UniMax multilingual default
-
 _DUCK_TEMP_MIX = f"""
     WITH t AS (
       SELECT source, len({DUCK_TOKENIZE}) AS n_tokens FROM documents),

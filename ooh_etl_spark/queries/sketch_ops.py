@@ -406,7 +406,6 @@ def q221_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-_BF_WORDS = 16  # 16 x 64 = 1024 bits
 _BF_K = 3  # hash functions
 
 

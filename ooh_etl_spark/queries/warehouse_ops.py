@@ -732,8 +732,6 @@ def q314_zonemap_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- q329: sort-key advisor via rank correlation (round 6) -----------------
-_SORTKEY_CANDIDATES = ("o_custkey", "o_totalprice_c", "o_orderkey")
-
 _DUCK_SORTKEY = """
     WITH d AS (
       SELECT CAST(epoch(o_orderdate) AS BIGINT) AS qcol,

@@ -27,14 +27,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-#: Dimension tables small enough to broadcast at any scale factor the
-#: driver uses. At true 100 TB deployments customer/part grow, but
-#: region/nation/supplier stay broadcastable by construction (TPC-H
-#: semantics); join helpers only force-broadcast tables in this set.
-BROADCAST_DIMS = frozenset({"region", "nation", "supplier"})
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")

@@ -29,34 +29,13 @@ def duck():
 
 
 def assert_matches_oracle(spark, duck, name: str, sf_dir: str = SF_DIR) -> None:
-    """Replicate the driver's compare for one registered query.
+    """The driver's compare for one registered query:
+    ``tools.check_oracle.compare``, the same code the full-registry
+    replica runs."""
+    from tools.check_oracle import compare
 
-    Canonicalization goes through tools.check_oracle.canon_frame — the
-    pandas sort_values path the driver uses — so an oracle-bearing
-    query emitting an unhashable cell (list/map/struct) fails HERE
-    before the driver ever sees it (round-3 q77 lesson)."""
-    from tools.check_oracle import canon_frame
-
-    from ooh_etl_spark.queries import QUERIES
-
-    spec = QUERIES[name]
-    sdf = spec.fn(spark, sf_dir)
-    srows = sdf.collect()
-    if spec.oracle is None:
-        assert len(srows) >= 0
-        return
-    ores = duck.execute(spec.oracle)
-    ocols = [d[0] for d in ores.description]
-    orows = ores.fetchall()
-    assert sorted(sdf.columns) == sorted(ocols), (
-        f"{name}: columns {sorted(sdf.columns)} != {sorted(ocols)}"
-    )
-    scols = sorted(sdf.columns)
-    sset = canon_frame(srows, sdf.columns, scols)
-    oset = canon_frame(orows, ocols, scols)
-    assert len(sset) == len(oset), f"{name}: rowcount {len(sset)} != {len(oset)}"
-    mismatches = [(a, b) for a, b in zip(sset, oset) if a != b][:3]
-    assert sset == oset, f"{name}: value mismatch, first diffs: {mismatches}"
+    msg = compare(spark, duck, name, sf_dir)
+    assert msg is None, f"{name}: {msg}"
 
 
 def run(spark, name: str, sf_dir: str = SF_DIR):

@@ -4,6 +4,7 @@ documented behavior (citations in ooh_etl_spark/functions/html.py)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ooh_etl_spark.functions import html as H
@@ -189,6 +190,21 @@ def test_record_projection_columns_are_built_once_per_context(spark):
     assert occupation_records(occ).count() == 4
     after = _record_projection.cache_info()
     assert (after.hits, after.misses) == (before.hits + 1, before.misses)
+
+
+# --- bench.py's ooh_xml_10k entry --------------------------------------------
+def test_bench_ooh_entry_checks_the_generated_report(spark, tmp_path):
+    # The entry returns the report only when it matches the digest oohgen
+    # derives from the file, so a wrong result is never timed.
+    import bench
+    from ooh_etl_spark.queries.ooh_surface import FIXTURE
+    from perfbench import oohgen
+
+    xml = str(tmp_path / "ooh.xml")
+    exp = oohgen.generate(FIXTURE, xml, seed=bench.OOH_SEED, n_occupations=200)
+    assert len(bench.ooh_entry(spark, xml, exp["digest"])("unused")) == exp["report_rows"]
+    with pytest.raises(RuntimeError, match="wrong report"):
+        bench.ooh_entry(spark, xml, "0" * 64)("unused")
 
 
 # --- fallback: lenient HTML --------------------------------------------------

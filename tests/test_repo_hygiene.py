@@ -48,14 +48,8 @@ def test_bench_final_line_fits_driver_tail_buffer():
     sys.path.insert(0, repo)
     import bench
 
-    def short(name: str) -> str:
-        import re
-
-        m = re.match(r"q\d+[a-z]?$", name.split("_", 1)[0])
-        return m.group(0) if m else name[:12]
-
     names = [*bench.HEADLINE, "ooh_xml_10k"]
-    shorts = [short(n) for n in names]
+    shorts = [bench.short(n) for n in names]
     assert len(set(shorts)) == len(shorts), "short-key collision in HEADLINE"
     worst = {s: 99999.999 for s in shorts}
     line = json.dumps(

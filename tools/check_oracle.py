@@ -3,7 +3,8 @@
 Runs every ``queries()[name]`` on Spark and, where an oracle exists,
 the matching ``oracle_sql()[name]`` on DuckDB over the same parquet
 tables, then compares: row count, column names (sorted), and an
-order-insensitive value multiset.
+order-insensitive value multiset. ``compare`` is that check for one
+query; ``tests/conftest.assert_matches_oracle`` calls it too.
 
 DRIVER FIDELITY: the driver canonicalizes results through pandas
 ``DataFrame.sort_values`` over the name-sorted columns.  pandas raises
@@ -46,9 +47,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+from ooh_etl_spark.tables import TABLE_NAMES as TABLES  # noqa: E402
 
 
 def canon(v) -> str:
@@ -129,10 +128,56 @@ def dtype_gate(con, oracles) -> list:
     return bad
 
 
-def _specs():
+def compare(spark, con, name: str, sf_dir: str) -> str | None:
+    """Run registered query ``name`` on Spark at ``sf_dir`` and its
+    oracle on ``con`` (DuckDB views over the same tables); return why
+    they differ, or None when they agree. Rows-only queries, and golden
+    oracles on a corpus they are not pinned to, pass once Spark runs."""
     from ooh_etl_spark.queries import QUERIES
 
-    return QUERIES
+    spec = QUERIES[name]
+    try:
+        sdf = spec.fn(spark, sf_dir)
+        srows = sdf.collect()
+        scols = sorted(sdf.columns)
+    except Exception as e:  # noqa: BLE001
+        return f"spark error: {e}"
+    if spec.oracle is None:
+        return None
+    # GOLDEN oracles are VALUES tables pinned to fixture corpora
+    # (tools/make_golden.py); on any other corpus (5x-sweep replicas,
+    # /tmp/sf0.5) the guard probe misses the pinned domain and the
+    # check falls back to rows-only.
+    if spec.golden_guard is not None:
+        probe = str(con.execute(spec.golden_guard).fetchone()[0])
+        if probe not in (spec.golden_domain or frozenset()):
+            return None
+    try:
+        ores = con.execute(spec.oracle)
+        odesc = ores.description
+        ocols = sorted(d[0] for d in odesc)
+        # .df(), NOT fetchall(): the driver's conversion path.
+        # HUGEINT/DECIMAL become float64 here exactly as the driver
+        # sees them (round-4 q168/q170/q171 class).
+        odf = ores.df()
+        for col, typ, *_ in odesc:
+            if str(typ).upper() == "DATE" and hasattr(odf[col], "dt"):
+                odf[col] = odf[col].dt.date
+    except Exception as e:  # noqa: BLE001
+        return f"duckdb error: {e}"
+    if scols != ocols:
+        return f"columns spark={scols} oracle={ocols}"
+    if len(srows) != len(odf):
+        return f"rowcount spark={len(srows)} oracle={len(odf)}"
+    try:
+        sset = canon_frame(srows, sdf.columns, scols)
+        oset = canon_pdf(odf, ocols)
+    except TypeError as e:
+        return f"driver-canon error (unhashable cell?): {e}"
+    if sset != oset:
+        diffs = [(a, b) for a, b in zip(sset, oset) if a != b][:3]
+        return f"value mismatch; first diffs: {diffs}"
+    return None
 
 
 def main() -> int:
@@ -168,77 +213,18 @@ def main() -> int:
         return 2
     failures = []
     ran = 0
-    for name, fn in qs.items():
+    for name in qs:
         if only and name not in only:
             continue
         ran += 1
         t0 = time.time()
-        try:
-            sdf = fn(spark, sf_dir)
-            srows = sdf.collect()
-            scols = sorted(sdf.columns)
-        except Exception as e:  # noqa: BLE001
-            failures.append(name)
-            print(f"FAIL {name}: spark error: {e}")
-            continue
-        if name not in oracles:
-            status = "ROWS-ONLY"
-            print(f"{status:>9} {name}: {len(srows)} rows  ({time.time()-t0:.1f}s)")
-            continue
-        # GOLDEN oracles are VALUES tables pinned to fixture corpora
-        # (tools/make_golden.py); on any other corpus (5x-sweep
-        # replicas, /tmp/sf0.5) the guard probe misses the pinned
-        # domain and the check falls back to rows-only.
-        spec = _specs().get(name)
-        if spec is not None and spec.golden_guard is not None:
-            probe = str(con.execute(spec.golden_guard).fetchone()[0])
-            if probe not in (spec.golden_domain or frozenset()):
-                print(
-                    f"ROWS-ONLY {name}: {len(srows)} rows "
-                    f"(golden oracle not pinned for this corpus)  "
-                    f"({time.time()-t0:.1f}s)"
-                )
-                continue
-        try:
-            ores = con.execute(oracles[name])
-            odesc = ores.description
-            ocols = sorted(d[0] for d in odesc)
-            # .df(), NOT fetchall(): the driver's conversion path.
-            # HUGEINT/DECIMAL become float64 here exactly as the driver
-            # sees them (round-4 q168/q170/q171 class).
-            odf = ores.df()
-            for col, typ, *_ in odesc:
-                if str(typ).upper() == "DATE" and hasattr(odf[col], "dt"):
-                    odf[col] = odf[col].dt.date
-        except Exception as e:  # noqa: BLE001
-            failures.append(name)
-            print(f"FAIL {name}: duckdb error: {e}")
-            continue
-        ok = True
-        if scols != ocols:
-            ok = False
-            print(f"FAIL {name}: columns spark={scols} oracle={ocols}")
-        if len(srows) != len(odf):
-            ok = False
-            print(f"FAIL {name}: rowcount spark={len(srows)} oracle={len(odf)}")
-        if ok:
-            try:
-                sset = canon_frame(srows, sdf.columns, scols)
-                oset = canon_pdf(odf, ocols)
-            except TypeError as e:
-                failures.append(name)
-                print(f"FAIL {name}: driver-canon error (unhashable cell?): {e}")
-                continue
-            if sset != oset:
-                ok = False
-                diffs = [
-                    (a, b) for a, b in zip(sset, oset) if a != b
-                ][:3]
-                print(f"FAIL {name}: value mismatch; first diffs: {diffs}")
-        if ok:
-            print(f"       OK {name}: {len(srows)} rows  ({time.time()-t0:.1f}s)")
+        msg = compare(spark, con, name, sf_dir)
+        if msg is None:
+            status = "OK" if name in oracles else "ROWS-ONLY"
+            print(f"{status:>9} {name}: ({time.time()-t0:.1f}s)")
         else:
             failures.append(name)
+            print(f"FAIL {name}: {msg}")
 
     print(f"\n{ran - len(failures)}/{ran} green")
     return 1 if failures else 0

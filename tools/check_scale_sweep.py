@@ -16,6 +16,7 @@ import os, re, shutil, subprocess, sys, time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 import __spark_entry__ as m  # noqa: E402
+from ooh_etl_spark.tables import TABLE_NAMES  # noqa: E402
 
 ALL = list(m.queries())
 SKIP = {
@@ -46,21 +47,17 @@ DEDUP_DIR = "/tmp/sf0.5_dedup"
 LOG = "/tmp/check5x_full.log"
 RES = "/tmp/check5x_full_results.txt"
 STALL = 420
-TABLES = (
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-)
 
 
 def ensure_dedup_dir() -> None:
     """Build the deduped replica view: documents deduped on text
     (min-doc_id survivor, q26's rule); every other table verbatim."""
-    if all(os.path.exists(f"{DEDUP_DIR}/{t}.parquet") for t in TABLES):
+    if all(os.path.exists(f"{DEDUP_DIR}/{t}.parquet") for t in TABLE_NAMES):
         return
     import duckdb
 
     os.makedirs(DEDUP_DIR, exist_ok=True)
-    for t in TABLES:
+    for t in TABLE_NAMES:
         if t != "documents":
             shutil.copyfile(f"{BASE_DIR}/{t}.parquet", f"{DEDUP_DIR}/{t}.parquet")
     duckdb.connect().execute(

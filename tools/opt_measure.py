@@ -11,10 +11,10 @@ $SPARK_GRAFT_SF_DIR (default sf0.1):
   state it is 0; anything else means the query's generated classes do
   not stay in Spark's codegen cache between executions.
 
-and (with ``--plans TAG``) writes ``plans/r13/<query>_<TAG>.txt`` with
+and (with ``--plans TAG``) writes ``plans/r14/<query>_<TAG>.txt`` with
 the ``explain("formatted")`` output plus a one-line plan-shape summary
 (Exchange count, join strategies, Python-eval nodes) so plan claims in
-OPTIMIZATION_r13.md are checkable.
+OPTIMIZATION_r14.md are checkable.
 
 Usage:
   python tools/opt_measure.py [--reps N] [--plans before|after] [query ...]
@@ -30,15 +30,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from ooh_etl_spark.plans.audit import shuffle_count  # noqa: E402
+
 
 def plan_summary(plan: str) -> str:
-    ex = len(
-        re.findall(
-            r"Arguments: (?:hashpartitioning|rangepartitioning|"
-            r"RoundRobinPartitioning)\(",
-            plan,
-        )
-    )
+    ex = shuffle_count(plan)
     joins = sorted(
         set(
             re.findall(
@@ -89,9 +85,7 @@ def main() -> None:
     spark.range(1).count()
 
     plans_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r14"),
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r14"
     )
     if plans_tag:
         os.makedirs(plans_dir, exist_ok=True)

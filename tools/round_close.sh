@@ -6,10 +6,10 @@ set -uo pipefail
 cd "$(dirname "$0")/.."
 
 echo "== 1. bench (timed — run first, quiet box) =="
+# Entries timed while other processes held the host's CPUs are named on
+# stderr and flagged under "contamination" in BENCH_DETAIL.json and
+# BENCH_SPREADS.json; re-run bench.py when a flagged entry matters.
 python bench.py || exit 1
-
-echo "== 1b. bench noise guard (VERDICT r12 item 4: auto re-run if >15% above prev round) =="
-python tools/bench_noise_guard.py
 
 echo "== 2. full pytest =="
 python -m pytest tests/ -q -m "slow or not slow" || exit 1
