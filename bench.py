@@ -29,6 +29,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import statistics
 import sys
 import time
 
@@ -204,6 +205,28 @@ def short(name: str) -> str:
     return m.group(0) if m else name[:12]
 
 
+def time_reps(run, sf_dir: str, n: int) -> tuple[list[float], int, dict]:
+    """``n`` timed executions of entry ``run`` (a callable of ``sf_dir``
+    returning its result), the row count of the last, and how much of
+    the host's CPU other processes took while they ran
+    (``sysmon.contamination``). Every harness that times a registered
+    query times it here."""
+    runs, n_rows = [], 0
+    start = sysmon.cpu_snapshot()
+    for _ in range(n):
+        t0 = time.perf_counter()
+        n_rows = len(run(sf_dir))
+        runs.append(time.perf_counter() - t0)
+    return runs, n_rows, sysmon.contamination(
+        start, sysmon.cpu_snapshot(), len(os.sched_getaffinity(0))
+    )
+
+
+def spread(runs: list[float]) -> float:
+    """(max − min) / median of ``runs``, in percent."""
+    return round(100 * (max(runs) - min(runs)) / statistics.median(runs), 1)
+
+
 def ooh_entry(spark, xml_path: str, expected: str):
     """The ``ooh_xml_10k`` entry: a callable of ``sf_dir`` (unused; the
     compilation at ``xml_path`` is the input) that runs the reference's
@@ -275,11 +298,6 @@ def main() -> None:
     # 45-128% spreads, making round-over-round deltas unreadable.
     n_reps = 5
 
-    def median(xs: list[float]) -> float:
-        s = sorted(xs)
-        m = len(s) // 2
-        return s[m] if len(s) % 2 else (s[m - 1] + s[m]) / 2
-
     # The sf0.001 loop above compiles every plan, but the first timed
     # run of EACH query at sf_dir still paid JIT C2 promotion + cold
     # parquet listing for the large inputs: flagship_doc_scan recorded
@@ -294,7 +312,6 @@ def main() -> None:
     timings: dict[str, float] = {}
     spread_pct: dict[str, float] = {}
     contamination: dict[str, dict] = {}
-    ncpu = len(os.sched_getaffinity(0))
 
     def record(name: str, runs: list[float], n_rows: int, cont: dict) -> None:
         # Median of n>=3 runs + per-query spread: single runs carry
@@ -302,9 +319,8 @@ def main() -> None:
         # round-over-round comparisons of BENCH_r{N} meaningless. ``cont``
         # covers the same session as ``runs``, so the contamination flag
         # always belongs to the reported median.
-        med = median(runs)
-        timings[name] = round(med, 3)
-        spread_pct[name] = round(100 * (max(runs) - min(runs)) / med, 1)
+        timings[name] = round(statistics.median(runs), 3)
+        spread_pct[name] = spread(runs)
         contamination[name] = cont
         print(
             f"# {name}: median {timings[name]}s over {len(runs)} runs "
@@ -312,19 +328,8 @@ def main() -> None:
             file=sys.stderr,
         )
 
-    def time_entry(name: str) -> tuple[list[float], int, dict]:
-        """``n_reps`` timed executions, and how much of the host's CPU
-        other processes took while they ran (``sysmon.contamination``)."""
-        runs, n = [], 0
-        start = sysmon.cpu_snapshot()
-        for _ in range(n_reps):
-            t0 = time.perf_counter()
-            n = len(entries[name](sf_dir))
-            runs.append(time.perf_counter() - t0)
-        return runs, n, sysmon.contamination(start, sysmon.cpu_snapshot(), ncpu)
-
-    for name in entries:
-        record(name, *time_entry(name))
+    for name, run in entries.items():
+        record(name, *time_reps(run, sf_dir, n_reps))
 
     # Spread gate (r14, VERDICT r13 item 1): this box suffers HOST-level
     # neighbor contention — 5-rep spreads of an UNCHANGED query have hit
@@ -345,16 +350,15 @@ def main() -> None:
         if not noisy:
             break
         for name in noisy:
-            runs, n, cont = time_entry(name)
-            med = median(runs)
-            new_spread = round(100 * (max(runs) - min(runs)) / med, 1)
+            runs, n, cont = time_reps(entries[name], sf_dir, n_reps)
+            new_spread = spread(runs)
             kept = new_spread < spread_pct[name]
             retries.setdefault(name, []).append(
                 {
                     "round": _round + 1,
                     "baseline_median_s": timings[name],
                     "baseline_spread_pct": spread_pct[name],
-                    "retry_median_s": round(med, 3),
+                    "retry_median_s": round(statistics.median(runs), 3),
                     "retry_spread_pct": new_spread,
                     "kept_retry": kept,
                 }

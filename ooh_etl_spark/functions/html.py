@@ -163,10 +163,10 @@ def xpath_concat(html: Column, xp: str = P_TEXT) -> Column:
     return concat_texts(xpath_texts(html, xp))
 
 
-def xpath_match_count(html: Column, xp: str = P) -> Column:
+def xpath_match_count(html: Column) -> Column:
     """E4's warn path (index.js:33-35): the reference logs when the
     match count ≠ 1; surfaced as a derived column instead."""
-    return F.size(xpath_texts(html, xp))
+    return F.size(xpath_texts(html, P))
 
 
 def trimmed(texts: Column) -> Column:
@@ -174,9 +174,9 @@ def trimmed(texts: Column) -> Column:
     return F.transform(texts, lambda e: F.trim(e))
 
 
-def extract_trimmed_list(html: Column, xp: str = TD_H4_TEXT) -> Column:
+def extract_trimmed_list(html: Column) -> Column:
     """E7 over one fragment."""
-    return trimmed(xpath_texts(html, xp))
+    return trimmed(xpath_texts(html, TD_H4_TEXT))
 
 
 def cells_dict(cells: Column) -> Column:
@@ -192,9 +192,9 @@ def cells_dict(cells: Column) -> Column:
     return F.map_from_arrays(F.slice(keys, 1, F.size(vals)), vals)
 
 
-def cells_to_map(html: Column, xp: str = TD_TEXT) -> Column:
+def cells_to_map(html: Column) -> Column:
     """E8 over one fragment."""
-    return cells_dict(xpath_texts(html, xp))
+    return cells_dict(xpath_texts(html, TD_TEXT))
 
 
 def extract_after_heading(

@@ -12,13 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    w = df.write.mode(mode)
+def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
+    w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
@@ -28,8 +23,8 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).option("header", True).csv(path)
+def write_csv(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").option("header", True).csv(path)
 
 
 def read_csv(spark: SparkSession, path: str, schema: str) -> DataFrame:
@@ -38,8 +33,8 @@ def read_csv(spark: SparkSession, path: str, schema: str) -> DataFrame:
     return spark.read.schema(schema).option("header", True).csv(path)
 
 
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).json(path)
+def write_json(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").json(path)
 
 
 def read_json(spark: SparkSession, path: str, schema: str) -> DataFrame:

@@ -186,9 +186,10 @@ def occupation_records(occ: DataFrame) -> DataFrame:
     return occ.select("*", nodes).select("*", marks).select(*columns)
 
 
-def long_quality_filter(records: DataFrame, min_len: int = 26) -> DataFrame:
-    """F1 (index.js:177): EXISTS over map keys. NULL-safe: rows with a
-    NULL map are dropped (the reference would throw; SURVEY §7.3.1).
+def long_quality_filter(records: DataFrame) -> DataFrame:
+    """F1 (index.js:177): EXISTS over map keys longer than 26
+    characters. NULL-safe: rows with a NULL map are dropped (the
+    reference would throw; SURVEY §7.3.1).
 
     The predicate is pinned above the record projection
     (tables.non_pushable): pushed down, it would re-run the full
@@ -198,7 +199,7 @@ def long_quality_filter(records: DataFrame, min_len: int = 26) -> DataFrame:
     return records.filter(
         non_pushable(
             F.exists(
-                F.map_keys("importantQualities"), lambda k: F.length(k) > min_len
+                F.map_keys("importantQualities"), lambda k: F.length(k) > 26
             )
         )
     )

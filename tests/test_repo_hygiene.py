@@ -182,3 +182,25 @@ def test_catalog_is_organised_by_concern():
     ]
     assert not numbered, f"fold these into their family module: {numbered}"
     assert not round_named, f"fold these into their family test file: {round_named}"
+
+
+def test_one_timing_loop():
+    """``bench.time_reps`` is the only timed loop in bench.py and the
+    tools, so every harness that times a registered query times the
+    same action with the same clock and the same median. Wall-clock
+    reads that time nothing (``time.time`` stall timers) are not
+    clocks here."""
+    clocks = {"perf_counter", "perf_counter_ns", "monotonic", "monotonic_ns"}
+    exempt: set[int] = set()
+    offenders = []
+    for rel, node in _ast_nodes("bench.py", "tools"):
+        if rel == "bench.py" and isinstance(node, ast.FunctionDef) and node.name == "time_reps":
+            # ast.walk yields a node before its descendants
+            exempt.update(id(n) for n in ast.walk(node))
+        elif id(node) not in exempt and (
+            isinstance(node, ast.Attribute) and node.attr in clocks
+            or isinstance(node, ast.alias) and node.name in clocks
+            or isinstance(node, ast.FunctionDef) and node.name == "median"
+        ):
+            offenders.append(f"{rel}:{node.lineno}")
+    assert not offenders, f"time through bench.time_reps: {offenders}"

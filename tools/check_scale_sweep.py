@@ -3,20 +3,19 @@
 stalls >7 min (recorded as TIMEOUT).
 
 The two true-pair-audit queries (q451/q457) run against the DEDUPED
-replica view (/tmp/sf0.5_dedup, built here if absent) instead of the
-raw replica (VERDICT r11 item 4): on the byte-identical-replica corpus
-their TRUE-pair side is quadratic in clique size BY SEMANTICS (every
-doc gains N exact copies), so the raw-replica cell measures the clique
-artifact, not the operator. The deduped view keeps the corpus at 5x
+replica view (/tmp/sf0.5_dedup, written by make_full_replica.py)
+instead of the raw replica (VERDICT r11 item 4): on the
+byte-identical-replica corpus their TRUE-pair side is quadratic in
+clique size BY SEMANTICS (every doc gains N exact copies), so the
+raw-replica cell measures the clique artifact, not the operator. The deduped view keeps the corpus at 5x
 relational scale while collapsing the artificial cliques — the same
 substitution their docstrings document for production.
 """
-import os, re, shutil, subprocess, sys, time
+import os, re, subprocess, sys, time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 import __spark_entry__ as m  # noqa: E402
-from ooh_etl_spark.tables import TABLE_NAMES  # noqa: E402
 
 ALL = list(m.queries())
 SKIP = {
@@ -47,29 +46,6 @@ DEDUP_DIR = "/tmp/sf0.5_dedup"
 LOG = "/tmp/check5x_full.log"
 RES = "/tmp/check5x_full_results.txt"
 STALL = 420
-
-
-def ensure_dedup_dir() -> None:
-    """Build the deduped replica view: documents deduped on text
-    (min-doc_id survivor, q26's rule); every other table verbatim."""
-    if all(os.path.exists(f"{DEDUP_DIR}/{t}.parquet") for t in TABLE_NAMES):
-        return
-    import duckdb
-
-    os.makedirs(DEDUP_DIR, exist_ok=True)
-    for t in TABLE_NAMES:
-        if t != "documents":
-            shutil.copyfile(f"{BASE_DIR}/{t}.parquet", f"{DEDUP_DIR}/{t}.parquet")
-    duckdb.connect().execute(
-        f"""COPY (SELECT * FROM read_parquet('{BASE_DIR}/documents.parquet')
-                 QUALIFY row_number() OVER (PARTITION BY text ORDER BY doc_id) = 1)
-            TO '{DEDUP_DIR}/documents.parquet' (FORMAT PARQUET)"""
-    )
-    n = duckdb.connect().execute(
-        f"SELECT count(*) FROM '{DEDUP_DIR}/documents.parquet'"
-    ).fetchone()[0]
-    print(f"{DEDUP_DIR}/documents.parquet: {n} rows (deduped)")
-
 
 done = set()
 if os.path.exists(RES):
@@ -127,7 +103,6 @@ def run_pass(sf_dir: str, wanted: list) -> None:
 
 
 run_pass(BASE_DIR, [q for q in ALL if q not in SKIP and q not in DEDUP_QUERIES])
-ensure_dedup_dir()
 run_pass(DEDUP_DIR, [q for q in ALL if q in DEDUP_QUERIES])
 
 n = {"OK": 0, "FAIL": 0, "ROWS-ONLY": 0, "TIMEOUT": 0, "ERROR": 0}

@@ -1,7 +1,7 @@
-"""Build the FULL-TABLE N-x replicated corpus (/tmp/sf0.5) the 5x
-sweep ritual runs against (SCALE.md round-6 recipe, now committed —
-earlier rounds built it with an ad-hoc /tmp script that did not
-survive the box).
+"""Build the FULL-TABLE N-x replicated corpus that every scale run
+reads, and its deduplicated view OUT_DIR_dedup: /tmp/sf0.5 for
+tools/check_scale_sweep.py, /tmp/sf0.5 and /tmp/sf1.0 for
+tools/sweep_queries.py.
 
 Replication semantics (FKs preserved, dims kept):
 - region / nation: copied verbatim (dimension tables; nationkeys stay
@@ -15,8 +15,14 @@ Replication semantics (FKs preserved, dims kept):
   the same copy index against their parents' offsets.
 - events: N copies with event_id and user_id offset (disjoint user
   populations, identical temporal shape).
-- documents / embeddings: as tools/make_replica.py (byte-identical
-  text per copy, distinct ids — the dedup-funnel pathology).
+- documents / embeddings: N copies with doc_id / vec_id offset
+  (byte-identical text and vectors per copy, distinct ids — the
+  dedup-funnel pathology).
+
+OUT_DIR_dedup holds every table of OUT_DIR verbatim except documents,
+which keeps one row per distinct text, the min-doc_id one (q26's
+rule): the funnel-input corpus the pair-graph queries are specified to
+run on at scale.
 
 Usage: python tools/make_full_replica.py N OUT_DIR [BASE_DIR]
   e.g. python tools/make_full_replica.py 5 /tmp/sf0.5 /root/testdata/sf0.1
@@ -24,6 +30,7 @@ Usage: python tools/make_full_replica.py N OUT_DIR [BASE_DIR]
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 
 import duckdb
@@ -94,6 +101,19 @@ def main() -> int:
         con.execute(f"COPY ({q}) TO '{out}/{t}.parquet' (FORMAT PARQUET)")
         rows = con.execute(f"SELECT count(*) FROM '{out}/{t}.parquet'").fetchone()[0]
         print(f"{out} {t}: {rows}")
+
+    dedup = f"{out}_dedup"
+    os.makedirs(dedup, exist_ok=True)
+    for t in ("region", "nation", *plans):
+        if t != "documents":
+            shutil.copyfile(f"{out}/{t}.parquet", f"{dedup}/{t}.parquet")
+    con.execute(
+        f"""COPY (SELECT * FROM read_parquet('{out}/documents.parquet')
+                 QUALIFY row_number() OVER (PARTITION BY text ORDER BY doc_id) = 1)
+            TO '{dedup}/documents.parquet' (FORMAT PARQUET)"""
+    )
+    rows = con.execute(f"SELECT count(*) FROM '{dedup}/documents.parquet'").fetchone()[0]
+    print(f"{dedup} documents: {rows} (deduped)")
     return 0
 
 

@@ -25,8 +25,8 @@ from __future__ import annotations
 import json
 import os
 import re
+import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -72,7 +72,7 @@ def main() -> None:
             names.append(args[i])
             i += 1
 
-    from bench import HEADLINE
+    from bench import HEADLINE, spread, time_reps
 
     from ooh_etl_spark.plans.audit import physical_plan
     from ooh_etl_spark.queries import get_queries
@@ -90,11 +90,6 @@ def main() -> None:
     if plans_tag:
         os.makedirs(plans_dir, exist_ok=True)
 
-    def median(xs: list[float]) -> float:
-        s = sorted(xs)
-        m = len(s) // 2
-        return s[m] if len(s) % 2 else (s[m - 1] + s[m]) / 2
-
     out: dict[str, dict] = {}
     for name in names:
         fn = qs[name]
@@ -107,29 +102,29 @@ def main() -> None:
         if reps == 0:
             print(f"{name}: plan dumped", flush=True)
             continue
-        # warm: compile at smallest sf, then one untimed run of each
-        # timed action at sf_dir, whose final stages differ from count's
-        fn(spark, "/root/testdata/sf0.001").count()
-        fn(spark, sf_dir).toPandas()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        tp, nj = [], []
+        def to_pandas(d: str):
+            return fn(spark, d).toPandas()
+
+        def noop(d: str):
+            fn(spark, d).write.format("noop").mode("overwrite").save()
+            return ()  # the noop sink returns no rows
+
+        # warm each timed action itself: compile at the smallest sf,
+        # then one untimed run at sf_dir
+        for run in (to_pandas, noop):
+            run("/root/testdata/sf0.001")
+            run(sf_dir)
         compiled0 = codegen_compilations(spark)
-        for _ in range(reps):
-            spark.sparkContext.setJobDescription(f"{name}: toPandas rep")
-            t0 = time.perf_counter()
-            n_rows = len(fn(spark, sf_dir).toPandas())
-            tp.append(time.perf_counter() - t0)
-        for _ in range(reps):
-            spark.sparkContext.setJobDescription(f"{name}: noop rep")
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            nj.append(time.perf_counter() - t0)
+        spark.sparkContext.setJobDescription(f"{name}: toPandas rep")
+        tp, n_rows, _ = time_reps(to_pandas, sf_dir, reps)
+        spark.sparkContext.setJobDescription(f"{name}: noop rep")
+        nj, _, _ = time_reps(noop, sf_dir, reps)
         spark.sparkContext.setJobDescription(None)
         out[name] = {
             "compiles": codegen_compilations(spark) - compiled0,
-            "toPandas_med": round(median(tp), 3),
-            "noop_med": round(median(nj), 3),
-            "toPandas_spread_pct": round(100 * (max(tp) - min(tp)) / median(tp), 1),
+            "toPandas_med": round(statistics.median(tp), 3),
+            "noop_med": round(statistics.median(nj), 3),
+            "toPandas_spread_pct": spread(tp),
             "rows": n_rows,
         }
         print(

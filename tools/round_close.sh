@@ -24,15 +24,16 @@ python tools/check_oracle.py /root/testdata/sf0.001 --strict flagship_doc_scan |
 echo "== 5. full-registry 5x sweep (longest; stall-capped) =="
 # The sweep target corpus does not survive /tmp wipes between rounds —
 # build it if absent (r11 lesson: 49 spurious ERRORs from a missing
-# /tmp/sf0.5 before this guard existed).
-[ -f /tmp/sf0.5/region.parquet ] || python tools/make_full_replica.py 5 /tmp/sf0.5 || exit 1
+# /tmp/sf0.5 before this guard existed). The guard tests the _dedup
+# view, so a replica written without one is rebuilt.
+[ -f /tmp/sf0.5_dedup/documents.parquet ] || python tools/make_full_replica.py 5 /tmp/sf0.5 || exit 1
 rm -f /tmp/check5x_full_results.txt /tmp/check5x_full.log
 # check_scale_sweep.py exits 1 on any FAIL/ERROR (TIMEOUT stall-caps
 # carry SCALE.md dispositions and do not gate) — ADVICE r10.
 python tools/check_scale_sweep.py || exit 1
 
-echo "== 6. dedup/ANN family curves (needs tools/make_replica.py corpora) =="
-echo "   python tools/make_replica.py 5 /tmp/sf1x5 && python tools/make_replica.py 10 /tmp/sf1x10"
-echo "   python tools/sweep_dedup_family.py 3"
-echo "   python tools/sweep_ann_family.py"
+echo "== 6. dedup/ANN family curves (timed; quiet box) =="
+echo "   python tools/make_full_replica.py 10 /tmp/sf1.0"
+echo "   python tools/sweep_queries.py"
+echo "   python tools/sweep_queries.py q191b_link_prediction_capped ...   # named queries"
 echo "Record results + dispositions in SCALE.md; commit artifacts."
