@@ -8,9 +8,7 @@ crossings. The reference parses each fragment into a row-level DOM
 
 Each XPath E-operator is a path (``P_TEXT``, ``TD_TEXT``, ...) and one
 post-processor of the node strings it selects (``concat_texts``,
-``cells_dict``, ``wage_map``, ...). The per-fragment functions
-(``xpath_concat(html)``, ``pay_map(html)``, ...) compose the two over
-``xpath_texts``.
+``cells_dict``, ``wage_map``, ...).
 
 One document per row: Spark's ``xpath`` builds a fresh JAXP DOM and
 XPath context on every call. On 4 vCPUs with four tasks, a call on a
@@ -20,16 +18,16 @@ so most of a call is its fixed cost. A record projection that ran one
 ``xpath`` per extraction paid that cost nine times per row.
 :func:`xpath_grouped` instead wraps several fragments in one document
 and evaluates one union path over it; :func:`ungroup` splits the node
-strings back into per-fragment arrays. Both ways give the same arrays
-(``tests/test_properties.py`` checks the record projection against the
-per-fragment functions).
+strings back into per-fragment arrays. Both ways give the same arrays:
+``tests/test_properties.py`` checks the record projection against
+``tests/html_model.py``, which runs one ``xpath_texts`` per fragment.
 
 Reference citations are to /root/reference/index.js.
 
 Well-formedness: Spark's ``xpath`` requires well-formed XML. Real OOH
-CDATA is treated as XHTML; for fragments that are not well-formed, the
-same signatures are available over a stdlib-HTMLParser pandas UDF in
-:mod:`ooh_etl_spark.functions.html_fallback`.
+CDATA is treated as XHTML. For fragments that are not well-formed,
+:mod:`ooh_etl_spark.functions.html_fallback` has a stdlib-HTMLParser
+pandas UDF; no package path calls it yet.
 """
 
 from __future__ import annotations
@@ -158,25 +156,9 @@ def concat_texts(texts: Column) -> Column:
     return F.array_join(texts, "")
 
 
-def xpath_concat(html: Column, xp: str = P_TEXT) -> Column:
-    """E4 over one fragment."""
-    return concat_texts(xpath_texts(html, xp))
-
-
-def xpath_match_count(html: Column) -> Column:
-    """E4's warn path (index.js:33-35): the reference logs when the
-    match count ≠ 1; surfaced as a derived column instead."""
-    return F.size(xpath_texts(html, P))
-
-
 def trimmed(texts: Column) -> Column:
     """E7 (index.js:87-93): node list → per-element trimmed strings."""
     return F.transform(texts, lambda e: F.trim(e))
-
-
-def extract_trimmed_list(html: Column) -> Column:
-    """E7 over one fragment."""
-    return trimmed(xpath_texts(html, TD_H4_TEXT))
 
 
 def cells_dict(cells: Column) -> Column:
@@ -190,11 +172,6 @@ def cells_dict(cells: Column) -> Column:
         lambda v: F.regexp_replace(v, "%", ""),
     )
     return F.map_from_arrays(F.slice(keys, 1, F.size(vals)), vals)
-
-
-def cells_to_map(html: Column) -> Column:
-    """E8 over one fragment."""
-    return cells_dict(xpath_texts(html, TD_TEXT))
 
 
 def extract_after_heading(
@@ -276,14 +253,3 @@ def wage_map(ps: Column) -> Column:
     """
     entries = F.filter(F.transform(ps, _wage_entry), lambda e: e.isNotNull())
     return F.map_from_entries(entries)
-
-
-def pay_map(html: Column) -> Column:
-    """E6 over one fragment."""
-    return wage_map(xpath_texts(html, P_OWN_TEXT))
-
-
-def pay_text(html: Column) -> Column:
-    """E6's concatenated raw text side-channel (cdataParser innerText,
-    index.js:49,53)."""
-    return xpath_concat(html, P_TEXT)

@@ -38,13 +38,6 @@ def tokenize(text: Column) -> Column:
     return F.split(F.lower(F.trim(text)), r"[\t\n\f\r ]+")
 
 
-def bpe_ish_tokens(text: Column) -> Column:
-    """Sub-word-ish token count via a BPE-style regex: words, numbers,
-    and punctuation become separate tokens (a cheap, deterministic
-    stand-in for a real tokenizer's token count)."""
-    return F.split(F.trim(text), r"(?=[^\w\s])|(?<=[^\w\s])|\s+")
-
-
 def lang_scores(text: Column) -> dict[str, Column]:
     """Stopword-profile hit count per language."""
     toks = tokenize(text)

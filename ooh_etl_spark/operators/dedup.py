@@ -253,23 +253,22 @@ def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    n: int = 3,
-    num_hashes: int = 32,
     jaccard_distance: float = 0.5,
 ) -> DataFrame:
-    """Approximate near-dup pairs via spark.ml MinHashLSH over hashed
-    shingle sets (HashingTF → binary vectors). Candidate generation is
-    a band-bucket join — the 100 TB-scale replacement for the exact
-    inverted-index join when shingle frequency explodes."""
+    """Approximate near-dup pairs via spark.ml MinHashLSH (32 hash
+    tables) over hashed word-3-shingle sets (HashingTF → binary
+    vectors). Candidate generation is a band-bucket join — the 100
+    TB-scale replacement for the exact inverted-index join when
+    shingle frequency explodes."""
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
-    sh = _shingle_sets(df, text_col, id_col, n)
+    sh = _shingle_sets(df, text_col, id_col, 3)
     tf = HashingTF(
         inputCol="sh", outputCol="features", numFeatures=1 << 18, binary=True
     )
     feats = tf.transform(sh)
     mh = MinHashLSH(
-        inputCol="features", outputCol="sig", numHashTables=num_hashes, seed=42
+        inputCol="features", outputCol="sig", numHashTables=32, seed=42
     )
     model = mh.fit(feats)
     pairs = model.approxSimilarityJoin(feats, feats, jaccard_distance, "dist")

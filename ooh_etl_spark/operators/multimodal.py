@@ -35,15 +35,16 @@ FEATURES_SCHEMA = (
 )
 
 
-def attach_payload(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Wrap a column as an opaque binary payload with typed metadata —
-    the schema shape a real image/audio table would have."""
+def attach_payload(df: DataFrame) -> DataFrame:
+    """Wrap the ``text`` column as an opaque binary payload keyed by
+    ``doc_id``, with typed metadata — the schema shape a real
+    image/audio table would have."""
     return df.select(
-        F.col(id_col),
-        F.encode(F.col(text_col), "utf-8").alias("payload"),
+        F.col("doc_id"),
+        F.encode(F.col("text"), "utf-8").alias("payload"),
         F.struct(
             F.lit("application/octet-stream").alias("mime"),
-            F.octet_length(F.encode(F.col(text_col), "utf-8")).alias("n_bytes"),
+            F.octet_length(F.encode(F.col("text"), "utf-8")).alias("n_bytes"),
         ).alias("meta"),
     )
 

@@ -131,9 +131,8 @@ def salted_join(
     right: DataFrame,
     key: str,
     salt: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Skew-resistant equi-join: the left (skewed) side gets a random
+    """Skew-resistant inner equi-join: the left (skewed) side gets a random
     salt in [0, salt); the right side is replicated ``salt`` times with
     every salt value. The hot key's rows then spread across ``salt``
     reducers instead of one straggler task.
@@ -148,7 +147,7 @@ def salted_join(
     rk = right.withColumn(
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
     )
-    out = lk.join(rk, [key, "__salt"], how)
+    out = lk.join(rk, [key, "__salt"], "inner")
     return out.drop("__salt")
 
 
@@ -157,11 +156,9 @@ def top_k_per_group(
     group_cols: Sequence[str],
     order_cols: Sequence[Column],
     k: int,
-    rank_col: str = "rn",
 ) -> DataFrame:
-    """Per-group top-k via ranking window; the canonical scalable
-    pattern (no per-group collect, single shuffle on the group key)."""
+    """Per-group top-k via ranking window, the rank in ``rn``; the
+    canonical scalable pattern (no per-group collect, single shuffle on
+    the group key)."""
     w = Window.partitionBy(*group_cols).orderBy(*order_cols)
-    return df.withColumn(rank_col, F.row_number().over(w)).filter(
-        F.col(rank_col) <= k
-    )
+    return df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)

@@ -43,11 +43,10 @@ def cosine(a: Column, b: Column) -> Column:
 def knn_brute_force(
     corpus: DataFrame,
     queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     k: int = 5,
 ) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector.
+    """Exact top-k cosine neighbors for each query vector of an
+    ``embeddings``-shaped (``vec_id``, ``embedding``) table.
 
     queries (small) is broadcast; scoring is a per-row expression over
     the corpus scan; ranking shuffles only (query_id, score) pairs.
@@ -62,8 +61,8 @@ def knn_brute_force(
     """
     q = F.broadcast(
         queries.select(
-            F.col(id_col).alias("query_id"),
-            _to_double(F.col(vec_col)).alias("q_vec"),
+            F.col("vec_id").alias("query_id"),
+            _to_double(F.col("embedding")).alias("q_vec"),
         ).withColumn(
             "qn",
             F.expr("sqrt(aggregate(q_vec, CAST(0 AS DOUBLE),"
@@ -73,8 +72,8 @@ def knn_brute_force(
     from ooh_etl_spark.tables import parallelize_rows
 
     c = parallelize_rows(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        _to_double(F.col(vec_col)).alias("c_vec"),
+        F.col("vec_id").alias("neighbor_id"),
+        _to_double(F.col("embedding")).alias("c_vec"),
     ).withColumn(
         "cn",
         F.expr("sqrt(aggregate(c_vec, CAST(0 AS DOUBLE),"
@@ -101,13 +100,11 @@ def knn_brute_force(
 def lsh_ann_pairs(
     corpus: DataFrame,
     queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     threshold: float = 1.0,
-    bucket_length: float = 2.0,
-    num_tables: int = 4,
 ) -> DataFrame:
-    """Approximate neighbor pairs via random-projection LSH (euclidean).
+    """Approximate neighbor pairs of ``embeddings``-shaped (``vec_id``,
+    ``embedding``) tables via random-projection LSH (euclidean; bucket
+    length 2.0, 4 hash tables).
 
     Bucket join: only vectors sharing a hash bucket are compared — the
     corpus×corpus path where brute force is quadratic."""
@@ -115,11 +112,10 @@ def lsh_ann_pairs(
     from pyspark.ml.functions import array_to_vector
 
     prep = lambda df, label: df.select(  # noqa: E731
-        F.col(id_col).alias(label), array_to_vector(_to_double(F.col(vec_col))).alias("v")
+        F.col("vec_id").alias(label), array_to_vector(_to_double(F.col("embedding"))).alias("v")
     )
     brp = BucketedRandomProjectionLSH(
-        inputCol="v", outputCol="h", bucketLength=bucket_length,
-        numHashTables=num_tables, seed=42,
+        inputCol="v", outputCol="h", bucketLength=2.0, numHashTables=4, seed=42,
     )
     cf = prep(corpus, "corpus_id")
     model = brp.fit(cf)

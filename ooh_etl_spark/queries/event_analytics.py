@@ -394,10 +394,13 @@ def q212_event_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _markov_attribution_sql(k_iters: int = 20) -> str:
+_MARKOV_ITERS = 20
+
+
+def _markov_attribution_sql() -> str:
     """Generate the IDENTICAL SQL text both engines run for q222:
     journey construction, removal-variant transition tables, and
-    ``k_iters`` unrolled absorption-probability iterations (p in
+    ``_MARKOV_ITERS`` unrolled absorption-probability iterations (p in
     integer ppb; each step's division is the same IEEE double op on
     exact integers, floored — engine-identical)."""
     # Each step references the PREVIOUS p exactly once: the absorbing
@@ -406,7 +409,7 @@ def _markov_attribution_sql(k_iters: int = 20) -> str:
     # needed — a second reference per step would inline the whole
     # subtree twice and blow the plan up exponentially (2^k).
     steps = []
-    for k in range(1, k_iters + 1):
+    for k in range(1, _MARKOV_ITERS + 1):
         steps.append(f"""
 p{k} AS MATERIALIZED (
   SELECT tv.variant, tv.s,
@@ -475,7 +478,7 @@ conv AS MATERIALIZED (
   FROM variants v
   CROSS JOIN (SELECT sum(cnt) AS n FROM starts) tot
   JOIN starts st ON 1 = 1
-  JOIN p{k_iters} pf
+  JOIN p{_MARKOV_ITERS} pf
     ON pf.variant = v.variant
    AND pf.s = CASE WHEN v.variant = 'rm_' || st.s THEN 'NULL'
                    ELSE st.s END

@@ -359,37 +359,27 @@ def q185_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpora. pytest additionally pins the defining properties — every
     surviving node's induced degree >= k, and the output is a fixpoint
     (re-peeling changes nothing)."""
-    import math
-
     from ooh_etl_spark.operators.graph import k_core
 
+    edges = _copurchase_edges(spark, sf_dir)
+    return k_core(edges, kcore_k_for(spark, sf_dir)).orderBy("node")
+
+
+def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(id_a, id_b), id_a < id_b: parts bought in the same order."""
     li = load_table(spark, sf_dir, "lineitem")
     items = li.select("l_orderkey", "l_partkey").distinct()
     a = items.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("id_a"))
     b = items.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("id_b"))
-    edges = (
-        a.join(b, "k").filter(F.col("id_a") < F.col("id_b")).select("id_a", "id_b")
-    )
-    und = edges.select(F.explode(F.array("id_a", "id_b")).alias("n"))
-    med = (
-        und.groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .agg(F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY d)").alias("m"))
-        .collect()[0][0]
-    )
-    k = math.ceil(0.55 * med)
-    return k_core(edges, k).orderBy("node")
+    return a.join(b, "k").filter(F.col("id_a") < F.col("id_b")).select("id_a", "id_b")
 
 
 def kcore_k_for(spark: SparkSession, sf_dir: str) -> int:
-    """The k q185 uses (shared with its property tests)."""
+    """q185's k: 55% of the median co-purchase degree, rounded up
+    (shared with its property tests)."""
     import math
 
-    li = load_table(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    a = items.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("id_a"))
-    b = items.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("id_b"))
-    edges = a.join(b, "k").filter(F.col("id_a") < F.col("id_b")).select("id_a", "id_b")
+    edges = _copurchase_edges(spark, sf_dir)
     und = edges.select(F.explode(F.array("id_a", "id_b")).alias("n"))
     med = (
         und.groupBy("n")

@@ -735,9 +735,10 @@ def q209_embedding_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk × d² regardless of batch size) and emits ONE d(d+1)/2-row
     partial, so the shuffle carries partials × triangle rows no matter
     how many vectors scan — the identical contract the whole-stage-
-    codegen expression form provides. The expression form
-    (``_gram_expression`` below) is kept and machine-checked equal in
-    pytest; the numpy path is the registered one because dense
+    codegen expression form provides. The expression form (a nested
+    ``transform`` over the upper triangle, kept in
+    ``tests/test_linkage_ml.py``) is machine-checked equal in pytest;
+    the numpy path is the registered one because dense
     per-row outer products are exactly where vectorized C beats
     row-expression codegen — measured 2.44 s → 0.08 s (~25×) at
     sf0.1 on local[32]. Determinism is unchanged: float64 products,
@@ -781,45 +782,6 @@ def q209_embedding_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.sum("gram_nano").alias("gram_nano"),
             F.sum("n_vec").alias("n_vec"),
-        )
-        .orderBy("i", "j")
-    )
-
-
-def _gram_expression(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pure whole-stage-codegen Gram (no Python anywhere): per-row
-    upper-triangle products via a slice-based nested transform, one
-    explode, one (i, j) aggregate. Same quantization contract as q209;
-    kept as the no-Python fallback and as the equality witness for the
-    numpy path (tests/test_stats_wave.py)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    x = F.transform(F.col("embedding"), lambda v: v.cast("double"))
-    tri = F.flatten(
-        F.transform(
-            x,
-            lambda xi, i: F.transform(
-                F.slice(x, i + 1, F.size(F.col("embedding")) - i),
-                lambda xj, rel: F.struct(
-                    i.alias("i"),
-                    (i + rel).alias("j"),
-                    F.floor(xi * xj * F.lit(1000000000.0))
-                    .cast("bigint")
-                    .alias("p"),
-                ),
-            ),
-        )
-    )
-    return (
-        emb.select(F.explode(tri).alias("s"))
-        .select(
-            F.col("s.i").cast("bigint").alias("i"),
-            F.col("s.j").cast("bigint").alias("j"),
-            F.col("s.p").alias("p"),
-        )
-        .groupBy("i", "j")
-        .agg(
-            F.sum("p").alias("gram_nano"),
-            F.count(F.lit(1)).alias("n_vec"),
         )
         .orderBy("i", "j")
     )

@@ -577,41 +577,6 @@ _DUCK_MNN_FUNNEL = f"""
 """
 
 
-def mnn_planes_for(bands: int, bits: int, dim: int = _MNN_DIM) -> list:
-    """Deterministic band planes for ``mutual_nn_funnel`` at any
-    (bands, bits) — the SCALE knob: per-band candidate volume is
-    ~|A|·|B|/2^bits, so holding per-bucket occupancy constant as the
-    corpus grows means bits ∝ log2(n) (standard LSH sizing; measured
-    in SCALE.md r11). The registered q334b pins (4, 4) so its oracle
-    literals stay fixed."""
-    import hashlib
-
-    return [
-        [
-            [
-                int(
-                    hashlib.md5(f"mnn{b}:{p}:{d}".encode()).hexdigest()[:8],
-                    16,
-                )
-                % 2001
-                - 1000
-                for d in range(dim)
-            ]
-            for p in range(bits)
-        ]
-        for b in range(bands)
-    ]
-
-
-def mutual_nn_funnel(
-    spark: SparkSession, sf_dir: str, planes: list
-) -> DataFrame:
-    """The q334b plan with caller-sized SRP band planes (see
-    ``mnn_planes_for``); q334b itself calls this with the pinned
-    4-band x 4-bit planes its VALUES-free DuckDB oracle mirrors."""
-    return _mutual_nn_funnel_impl(spark, sf_dir, planes)
-
-
 @register("q334b_mutual_nn_funnel", _DUCK_MNN_FUNNEL)
 def q334b_mutual_nn_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mutual-nearest-neighbor mining through an LSH candidate funnel
@@ -628,7 +593,7 @@ def q334b_mutual_nn_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall<=1 approximation whose argmaxes equal q334's whenever each
     side's true best collides in >=1 band — machine-checked equal on
     a corpus where collision is guaranteed by construction
-    (tests/test_round11_wave.py::test_q334b_equals_q334_when_recall_is_total).
+    (tests/test_retrieval_ops.py::test_q334b_equals_q334_when_recall_is_total).
 
     Determinism: plane components are md5-derived integer literals
     inlined into both engines; sign bits come from order-free integer
@@ -642,21 +607,18 @@ def q334b_mutual_nn_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition by ida / idb (no global window). This replaces q334's
     crossJoin score table (the documented q334 stall-cap cure,
     SCALE.md); q334 itself stays registered as the exact oracle
-    baseline. Band WIDTH is the at-scale knob — see
-    ``mnn_planes_for`` (bits ∝ log2 n keeps candidates linear)."""
-    return _mutual_nn_funnel_impl(spark, sf_dir, _MNN_PLANES)
-
-
-def _mutual_nn_funnel_impl(
-    spark: SparkSession, sf_dir: str, planes: list
-) -> DataFrame:
+    baseline. Band WIDTH is the at-scale knob: per-band candidate
+    volume is ~|A|·|B|/2^bits, so holding per-bucket occupancy
+    constant as the corpus grows means bits ∝ log2 n (standard LSH
+    sizing; measured in SCALE.md r11). The registered query pins
+    (4, 4) so its oracle literals stay fixed."""
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
 
     def band_bucket(band: int):
         terms = []
-        for p, plane in enumerate(planes[band]):
+        for p, plane in enumerate(_MNN_PLANES[band]):
             arr = ", ".join(str(h) for h in plane)
             terms.append(
                 f"(CASE WHEN aggregate(zip_with(v, array({arr}),"
@@ -675,7 +637,7 @@ def _mutual_nn_funnel_impl(
                         F.lit(b).alias("band"),
                         band_bucket(b).alias("bkt"),
                     )
-                    for b in range(len(planes))
+                    for b in range(_MNN_BANDS)
                 ]
             )
         ).alias("bb"),

@@ -406,11 +406,11 @@ _PYSTREAM_N = 500
 )
 def q231_pysource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom STREAMING Python data source (Spark 4's
-    SimpleDataSourceStreamReader — the streaming twin of the
-    ``occupation_feed`` batch source): an offset-tracked micro-batched
-    feed whose recovery contract (``readBetweenOffsets`` replays any
-    [start, end) id range) is exactly the Kafka-offset model, here
-    backed by a pure function of the record id. The stream drains
+    SimpleDataSourceStreamReader, ``sources/pysource.py``): an
+    offset-tracked micro-batched feed whose recovery contract
+    (``readBetweenOffsets`` replays any [start, end) id range) is
+    exactly the Kafka-offset model, here backed by a pure function of
+    the record id. The stream drains
     through append-mode micro-batches into a sink, then aggregates per
     education level.
 

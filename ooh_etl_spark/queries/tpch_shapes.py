@@ -319,9 +319,8 @@ def q66_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE-ish token counting with a cross-engine oracle: words,
     numbers, and individual punctuation marks count as separate tokens
     via `\\w+|[^\\w\\s]` — the match-based formulation (regexp_extract_all)
-    instead of the lookaround split in functions.text.bpe_ish_tokens,
-    because DuckDB's RE2 has no lookarounds. Narrow per-row expression,
-    shuffle-free."""
+    instead of a lookaround split, because DuckDB's RE2 has no
+    lookarounds. Narrow per-row expression, shuffle-free."""
     docs = load_documents(spark, sf_dir)
     toks = F.regexp_extract_all("text", F.lit(r"\w+|[^\w\s]"), 0)
     return docs.select(

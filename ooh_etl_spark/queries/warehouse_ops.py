@@ -1006,8 +1006,8 @@ _DUCK_SINK_RT = """
 @register("q358_sink_roundtrip", _DUCK_SINK_RT)
 def q358_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-format SINK round-trip proof: the orders projection is
-    WRITTEN to CSV, JSON, and parquet (sources/sinks.py — previously
-    pytest-only) and read back with DECLARED schemas, and each
+    WRITTEN to CSV, JSON, and parquet and read back with DECLARED
+    schemas (parquet carries its own), and each
     read-back computes the order-free content fingerprint (bit-XOR of
     per-row md5 prefixes — q178's commutative checksum). The ORACLE
     computes the same fingerprint from the source table directly, so

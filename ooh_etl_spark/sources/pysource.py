@@ -1,37 +1,27 @@
-"""Custom Python data source (Spark 4 DataSource API).
+"""Custom Python streaming source (Spark 4 DataSource API).
 
 The reference's source is a whole-file XML load (index.js:186); its
-natural cluster-era analog is an API-style record source. This module
-registers ``occupation_feed`` — a deterministic synthetic occupation
-generator — through ``spark.dataSource.register``, giving the engine a
-third source family (files, streams, custom Python) with REAL
-partition planning: the reader splits the id range into
-``numPartitions`` independent ``InputPartition``s, so a 10^9-record
-feed scans in parallel like any file source, and Spark pushes the
-generation to executors (nothing materializes on the driver).
+natural cluster-era analog is an API-style record feed. This module
+registers ``occupation_stream`` — a deterministic synthetic occupation
+generator read as a micro-batched stream — through
+``spark.dataSource.register``, giving the engine a third source family
+(files, streams, custom Python). q231 reads it.
 
 Determinism: record fields derive from the record id via fixed integer
-arithmetic — same rows for any partitioning, any executor count.
+arithmetic — the same rows for any batch size and on any replay.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
 _TITLES = ("Data Engineer", "Nurse", "Welder", "Teacher", "Analyst")
 _EDU = ("High school diploma", "Bachelor's degree", "Master's degree")
 
 
-class _RangePartition(InputPartition):
-    def __init__(self, start: int, end: int):
-        self.start, self.end = start, end
-
-
 def _feed_row(i: int) -> tuple:
-    """One deterministic feed record — shared by the batch reader, the
-    streaming reader, and (re-derived in SQL) the q231 oracle."""
+    """One deterministic feed record — shared by the streaming reader
+    and (re-derived in SQL) the q231 oracle."""
     return (
         i,
         f"{_TITLES[i % len(_TITLES)]} {i}",
@@ -39,49 +29,6 @@ def _feed_row(i: int) -> tuple:
         _EDU[(i // 7) % len(_EDU)],
         (i * 2654435761) % 97 < 30,  # ~30% flagged
     )
-
-
-class OccupationFeedReader(DataSourceReader):
-    def __init__(self, options):
-        self.n = int(options.get("numrecords", 1000))
-        self.parts = int(options.get("numpartitions", 8))
-
-    def partitions(self):
-        bounds = [self.n * i // self.parts for i in range(self.parts + 1)]
-        return [
-            _RangePartition(a, b) for a, b in zip(bounds, bounds[1:]) if a < b
-        ]
-
-    def read(self, partition: _RangePartition) -> Iterator[tuple]:
-        for i in range(partition.start, partition.end):
-            yield _feed_row(i)
-
-
-class OccupationFeedSource(DataSource):
-    """spark.read.format("occupation_feed")
-    .option("numRecords", n).option("numPartitions", p).load()"""
-
-    @classmethod
-    def name(cls) -> str:
-        return "occupation_feed"
-
-    def schema(self) -> str:
-        return (
-            "occ_id bigint, title string, median_pay_annual double,"
-            " education string, outlook_bright boolean"
-        )
-
-    def reader(self, schema) -> DataSourceReader:
-        return OccupationFeedReader(self.options)
-
-
-def register_occupation_feed(spark) -> None:
-    spark.dataSource.register(OccupationFeedSource)
-
-
-# --- streaming flavor: the same feed as a micro-batched stream ----------
-
-from pyspark.sql.datasource import SimpleDataSourceStreamReader
 
 
 class OccupationStreamReader(SimpleDataSourceStreamReader):

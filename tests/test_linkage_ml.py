@@ -543,22 +543,6 @@ def test_round4_shuffle_budgets(spark):
         assert shuffle_count(plan) <= budget, (name, shuffle_count(plan), plan)
 
 
-def test_pagerank_converges_to_distribution(spark):
-    """Full PageRank fit: ranks stay a probability distribution
-    (dangling mass redistributed), the fixpoint satisfies the
-    recurrence, and a hub with more in-links outranks a leaf."""
-    from ooh_etl_spark.operators.graph import pagerank
-
-    edges = spark.createDataFrame(
-        [(1, 2), (3, 2), (4, 2), (2, 5), (5, 1), (4, 5)],
-        "src long, dst long",
-    )
-    ranks = {r.node: r.rank for r in pagerank(edges).collect()}
-    assert abs(sum(ranks.values()) - 1.0) < 1e-6
-    assert ranks[2] > ranks[3]  # 3 in-links beats a source node
-    assert all(v > 0 for v in ranks.values())
-
-
 def test_q190_skyline_equals_naive_dominance(spark, duck):
     """The one-window skyline must equal the O(n^2) dominance
     anti-join — the rewrite's correctness proof."""
@@ -634,38 +618,6 @@ def test_q193_bootstrap_brackets_point_estimate(spark, duck):
         """
     ).fetchone()
     assert 0.95 < wavg < 1.05, wavg
-
-
-def test_sssp_unit_weights_equal_bfs_levels(spark):
-    """Bellman-Ford with unit weights must equal BFS hop distance —
-    checked against an independent Python BFS on the collected edge
-    list (sf0.001 co-purchase graph, 200 nodes)."""
-    from collections import deque
-
-    from ooh_etl_spark.operators.graph import sssp
-    from ooh_etl_spark.tables import load_table
-
-    li = load_table(spark, SF_DIR, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    a = items.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("u"))
-    b = items.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("v"))
-    e = a.join(b, "k").filter(F.col("u") != F.col("v")).select(
-        F.col("u").alias("src"), F.col("v").alias("dst")
-    ).distinct()
-    seed = items.agg(F.min("l_partkey")).collect()[0][0]
-    got = {r.node: r.dist for r in sssp(e, seed).collect()}
-
-    adj = {}
-    for r in e.collect():
-        adj.setdefault(r.src, set()).add(r.dst)
-    ref, q = {seed: 0}, deque([seed])
-    while q:
-        u = q.popleft()
-        for v in adj.get(u, ()):
-            if v not in ref:
-                ref[v] = ref[u] + 1
-                q.append(v)
-    assert got == ref
 
 
 def test_connected_components_long_chain(spark):
@@ -817,13 +769,51 @@ def test_q209_gram_matches_numpy_reference(spark):
     assert (diag["gram_nano"] >= 0).all()
 
 
+def _gram_expression(spark, sf_dir):
+    """The pure whole-stage-codegen Gram (no Python anywhere): per-row
+    upper-triangle products via a slice-based nested transform, one
+    explode, one (i, j) aggregate. Same quantization contract as q209;
+    the equality witness for its numpy path."""
+    from ooh_etl_spark.tables import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    x = F.transform(F.col("embedding"), lambda v: v.cast("double"))
+    tri = F.flatten(
+        F.transform(
+            x,
+            lambda xi, i: F.transform(
+                F.slice(x, i + 1, F.size(F.col("embedding")) - i),
+                lambda xj, rel: F.struct(
+                    i.alias("i"),
+                    (i + rel).alias("j"),
+                    F.floor(xi * xj * F.lit(1000000000.0))
+                    .cast("bigint")
+                    .alias("p"),
+                ),
+            ),
+        )
+    )
+    return (
+        emb.select(F.explode(tri).alias("s"))
+        .select(
+            F.col("s.i").cast("bigint").alias("i"),
+            F.col("s.j").cast("bigint").alias("j"),
+            F.col("s.p").alias("p"),
+        )
+        .groupBy("i", "j")
+        .agg(
+            F.sum("p").alias("gram_nano"),
+            F.count(F.lit(1)).alias("n_vec"),
+        )
+        .orderBy("i", "j")
+    )
+
+
 def test_q209_numpy_and_expression_forms_identical(spark):
     """The registered numpy partial-Gram and the pure-codegen
     expression form must produce BIT-IDENTICAL triangles — the
     insurance that lets the fast path swap in without changing
     semantics (both also pass the same DuckDB oracle)."""
-    from ooh_etl_spark.queries.ml_ops import _gram_expression
-
     a = run(spark, "q209_embedding_gram").toPandas()
     b = _gram_expression(spark, SF_DIR).toPandas()
     assert a.equals(b)

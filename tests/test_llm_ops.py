@@ -127,24 +127,6 @@ def test_multimodal_feature_shape(spark):
     assert out[0].features == out2[0].features
 
 
-def test_kmeans_fit_inertia_non_increasing(spark):
-    from ooh_etl_spark.operators.clustering import kmeans_fit
-    from ooh_etl_spark.tables import load_table
-    from tests.conftest import SF_DIR
-
-    emb = load_table(spark, SF_DIR, "embeddings").limit(200)
-    vectors = emb.select(
-        "vec_id",
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("e"),
-    )
-    assigned, history = kmeans_fit(vectors, k=4, iters=3)
-    # Lloyd guarantee: inertia never increases.
-    assert all(a >= b - 1e-9 for a, b in zip(history, history[1:])), history
-    # every vector assigned exactly once
-    assert assigned.count() == vectors.count()
-    assert assigned.select("cid").distinct().count() <= 4
-
-
 def test_compression_quality_buckets(spark):
     # Pin the pandas-UDF semantics the rows-only check can't: a highly
     # repetitive text compresses far below a high-entropy one.

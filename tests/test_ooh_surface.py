@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from ooh_etl_spark.functions import html as H
 from ooh_etl_spark.functions.html_fallback import tag_text_concat, tag_texts
+from tests import html_model as M
 
 
 def one(spark, col):
@@ -23,31 +24,31 @@ def lit(s):
 def test_xpath_concat_multi_p(spark):
     html = "<p>Actors express ideas.</p><p>They portray characters.</p>"
     assert (
-        one(spark, H.xpath_concat(lit(html)))
+        one(spark, M.xpath_concat(lit(html)))
         == "Actors express ideas.They portray characters."
     )
 
 
 def test_xpath_concat_nested_markup(spark):
     html = "<p>Hello <strong>world</strong>!</p>"
-    assert one(spark, H.xpath_concat(lit(html))) == "Hello world!"
+    assert one(spark, M.xpath_concat(lit(html))) == "Hello world!"
 
 
 def test_xpath_match_count_warn_path(spark):
     html = "<p>a</p><p>b</p>"
-    assert one(spark, H.xpath_match_count(lit(html))) == 2
-    assert one(spark, H.xpath_match_count(lit("<p>a</p>"))) == 1
+    assert one(spark, M.xpath_match_count(lit(html))) == 2
+    assert one(spark, M.xpath_match_count(lit("<p>a</p>"))) == 1
 
 
 # --- E6: wage extraction -----------------------------------------------------
 def test_pay_annual_normalized_to_hourly(spark):
     html = "<p>The median annual wage for software developers was $110,140 in May 2020.</p>"
-    assert one(spark, H.pay_map(lit(html))) == {"software developers": 52.95}
+    assert one(spark, M.pay_map(lit(html))) == {"software developers": 52.95}
 
 
 def test_pay_hourly_kept(spark):
     html = "<p>The median hourly wage for actors was $21.88 in May 2020.</p>"
-    assert one(spark, H.pay_map(lit(html))) == {"actors": 21.88}
+    assert one(spark, M.pay_map(lit(html))) == {"actors": 21.88}
 
 
 def test_pay_annual_takes_precedence(spark):
@@ -57,7 +58,7 @@ def test_pay_annual_takes_precedence(spark):
         "<p>The median annual wage for devs was $41,600 and "
         "The median hourly wage for devs was $99.99.</p>"
     )
-    assert one(spark, H.pay_map(lit(html))) == {"devs": 20.0}
+    assert one(spark, M.pay_map(lit(html))) == {"devs": 20.0}
 
 
 def test_pay_duplicate_key_last_wins(spark):
@@ -65,31 +66,31 @@ def test_pay_duplicate_key_last_wins(spark):
         "<p>The median hourly wage for devs was $10.00.</p>"
         "<p>The median hourly wage for devs was $20.00.</p>"
     )
-    assert one(spark, H.pay_map(lit(html))) == {"devs": 20.0}
+    assert one(spark, M.pay_map(lit(html))) == {"devs": 20.0}
 
 
 def test_pay_nonmatching_paragraph_skipped_but_in_text(spark):
     html = "<p>Pay varies by rank.</p>"
-    assert one(spark, H.pay_map(lit(html))) == {}
-    assert one(spark, H.pay_text(lit(html))) == "Pay varies by rank."
+    assert one(spark, M.pay_map(lit(html))) == {}
+    assert one(spark, M.pay_text(lit(html))) == "Pay varies by rank."
 
 
 # --- E7: trimmed list --------------------------------------------------------
 def test_extract_trimmed_list(spark):
     html = "<table><tr><td><h4> Web Developers </h4></td><td><h4>Dancers</h4></td></tr></table>"
-    assert one(spark, H.extract_trimmed_list(lit(html))) == ["Web Developers", "Dancers"]
+    assert one(spark, M.extract_trimmed_list(lit(html))) == ["Web Developers", "Dancers"]
 
 
 # --- E8: alternating cells → map, % stripped --------------------------------
 def test_cells_to_map_percent_stripped(spark):
     html = "<table><tr><td>Publishing</td><td>10%</td></tr><tr><td>Finance</td><td>9%</td></tr></table>"
-    assert one(spark, H.cells_to_map(lit(html))) == {"Publishing": "10", "Finance": "9"}
+    assert one(spark, M.cells_to_map(lit(html))) == {"Publishing": "10", "Finance": "9"}
 
 
 def test_cells_to_map_odd_cell_count_drops_unpaired_key(spark):
     # The empty key cell has no text node: three texts, one pair.
     html = "<table><tr><td>Publishing</td><td>10%</td></tr><tr><td></td><td>9%</td></tr></table>"
-    assert one(spark, H.cells_to_map(lit(html))) == {"Publishing": "10"}
+    assert one(spark, M.cells_to_map(lit(html))) == {"Publishing": "10"}
 
 
 # --- E9: heading extraction --------------------------------------------------
@@ -221,5 +222,5 @@ def test_fallback_nested_ancestor_filter(spark):
 def test_fallback_concat_matches_xpath_on_wellformed(spark):
     html = "<p>a <b>bold</b></p><p>c</p>"
     assert one(spark, tag_text_concat(lit(html), "p")) == one(
-        spark, H.xpath_concat(lit(html))
+        spark, M.xpath_concat(lit(html))
     )

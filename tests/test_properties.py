@@ -22,6 +22,7 @@ from ooh_etl_spark.functions.text import (
     tokenize,
     word_shingles,
 )
+from tests import html_model as M
 
 
 def run_batch(spark, texts: list[str], col_fn):
@@ -47,7 +48,7 @@ markupish = st.text(
 def test_pay_map_total_on_markupish_input(spark, texts):
     # Dirty-but-markup-ish CDATA must not crash; wages, when extracted,
     # are positive and 2-dp.
-    for m in run_batch(spark, texts, H.pay_map):
+    for m in run_batch(spark, texts, M.pay_map):
         assert m is not None
         for v in m.values():
             assert v > 0
@@ -126,16 +127,16 @@ def _per_fragment_records(occ):
             masked(F.col(c).try_cast("double") if n in casts else F.col(c)).alias(n)
             for n, c in qf.items()
         ],
-        masked(H.xpath_concat(F.col("summary_what_they_do"))).alias("whatTheyDo"),
-        masked(H.xpath_concat(F.col("summary_how_to_become_one"))).alias("howToBecomeOne"),
-        masked(H.xpath_concat(F.col("summary_work_environment"))).alias("workEnvironment"),
-        masked(H.pay_text(F.col("summary_pay"))).alias("payText"),
-        masked(H.pay_map(F.col("summary_pay"))).alias("pay"),
-        masked(H.extract_trimmed_list(F.col("similar_occupations.section_body"))).alias(
+        masked(M.xpath_concat(F.col("summary_what_they_do"))).alias("whatTheyDo"),
+        masked(M.xpath_concat(F.col("summary_how_to_become_one"))).alias("howToBecomeOne"),
+        masked(M.xpath_concat(F.col("summary_work_environment"))).alias("workEnvironment"),
+        masked(M.pay_text(F.col("summary_pay"))).alias("payText"),
+        masked(M.pay_map(F.col("summary_pay"))).alias("pay"),
+        masked(M.extract_trimmed_list(F.col("similar_occupations.section_body"))).alias(
             "similarOccupations"
         ),
-        masked(H.cells_to_map(we)).alias("topIndustries"),
-        masked(H.xpath_match_count(F.col("summary_what_they_do"))).alias("whatTheyDo_matches"),
+        masked(M.cells_to_map(we)).alias("topIndustries"),
+        masked(M.xpath_match_count(F.col("summary_what_they_do"))).alias("whatTheyDo_matches"),
     )
 
 

@@ -204,3 +204,98 @@ def test_one_timing_loop():
         ):
             offenders.append(f"{rel}:{node.lineno}")
     assert not offenders, f"time through bench.time_reps: {offenders}"
+
+
+def _names(node) -> set[str]:
+    """Every name ``node`` mentions: variables, attributes, imports."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.rpartition(".")[2])
+    return out
+
+
+def test_package_code_is_reached():
+    """Every top-level function and class of the package is reached by
+    name from a root: a registered query, a statement that runs at
+    import, ``__spark_entry__.py``, ``bench.py``, ``perfbench/`` or
+    ``tools/``. Every defaulted parameter of a top-level function is
+    passed by some call outside ``tests/``: a default that no caller
+    overrides is a constant. Tests are not callers, so code that only a
+    test reaches, such as a reference model, lives in ``tests/``."""
+    roots = ("__spark_entry__.py", "bench.py", "perfbench", "tools")
+    exempt_files = {
+        # The plan-assertion library: tests/test_plans.py and the
+        # window-posture audit are its callers.
+        "ooh_etl_spark/plans/audit.py",
+        # The lenient-HTML fallback: ROADMAP direction 5 decides whether
+        # the reference pipeline calls it or it goes.
+        "ooh_etl_spark/functions/html_fallback.py",
+    }
+    # The decimal(38,0) accumulator guards a global money sum against a
+    # silent int64 wrap; tests/test_money_stress.py pins it.
+    exempt_params = {("cents_sum", "wide"), ("cents_avg", "wide")}
+
+    modules = [(rel, n) for rel, n in _ast_nodes("ooh_etl_spark") if isinstance(n, ast.Module)]
+    registrars = {"register"} | {
+        t.id
+        for _, mod in modules
+        for n in ast.walk(mod)
+        if isinstance(n, ast.Assign) and getattr(getattr(n.value, "func", None), "id", None) == "register"
+        for t in n.targets
+    }
+    defs, frontier = {}, set()
+    for rel, mod in modules:
+        for st in mod.body:
+            decorators = getattr(st, "decorator_list", [])
+            registered = any(
+                getattr(getattr(d, "func", d), "id", None) in registrars for d in decorators
+            )
+            if isinstance(st, (ast.FunctionDef, ast.ClassDef)) and not registered:
+                defs[(rel, st.name)] = st
+                frontier |= set().union(*map(_names, decorators))
+            else:
+                frontier |= _names(st)
+    frontier |= set().union(*(_names(n) for _, n in _ast_nodes(*roots) if isinstance(n, ast.Module)))
+    reached: set[tuple[str, str]] = set()
+    while frontier:
+        hit = {k for k in defs if k[1] in frontier} - reached
+        reached |= hit
+        frontier = set().union(*(_names(defs[k]) for k in hit))
+    unreached = [
+        f"{rel}:{defs[(rel, name)].lineno} {name}"
+        for rel, name in sorted(defs.keys() - reached)
+        if rel not in exempt_files
+    ]
+
+    calls = [n for _, n in _ast_nodes("ooh_etl_spark", *roots) if isinstance(n, ast.Call)]
+    never_passed = []
+    for (rel, name), fn in sorted(defs.items()):
+        if rel in exempt_files or not isinstance(fn, ast.FunctionDef):
+            continue
+        positional = fn.args.posonlyargs + fn.args.args
+        defaulted = [
+            (p.arg, i) for i, p in enumerate(positional) if i >= len(positional) - len(fn.args.defaults)
+        ] + [(p.arg, None) for p, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults) if d is not None]
+        for param, i in defaulted:
+            if (name, param) in exempt_params:
+                continue
+            if not any(
+                getattr(c.func, "id", getattr(c.func, "attr", None)) == name
+                and (
+                    any(k.arg in (param, None) for k in c.keywords)
+                    or any(isinstance(a, ast.Starred) for a in c.args)
+                    or i is not None and len(c.args) > i
+                )
+                for c in calls
+            ):
+                never_passed.append(f"{rel}:{fn.lineno} {name}({param})")
+
+    assert not unreached and not never_passed, (
+        f"reached only from tests, if at all; delete or move into tests/: {unreached}; "
+        f"no caller outside tests/ passes these; make them constants: {never_passed}"
+    )

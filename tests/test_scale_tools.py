@@ -46,3 +46,34 @@ def test_sweep_cell_times_the_collected_result(spark):
     assert {"contaminated", "foreign_share", "steal_share"} <= cell["contamination"].keys()
     assert out["ratios_vs_1x"] == {"q01_pricing_summary": {}}
     assert "stage_counts" not in out
+
+
+def test_check_oracle_result_lines_reach_a_redirected_log(spark, tmp_path, monkeypatch):
+    """``check_scale_sweep.py`` reads ``check_oracle.py``'s log while it
+    runs and, after a kill, books the first query with no result line
+    as TIMEOUT. So each result line must be on disk as soon as it is
+    printed, also when stdout is a block-buffered file."""
+    from tools import check_oracle
+
+    log = tmp_path / "check_oracle.log"
+    calls = []
+
+    def compare(*args):
+        calls.append(args)
+        if len(calls) > 1:
+            raise RuntimeError("killed")
+        return None
+
+    with open(log, "w", buffering=1 << 16) as out:
+        monkeypatch.setattr(sys, "stdout", out)
+        monkeypatch.setattr(check_oracle, "compare", compare)
+        monkeypatch.setattr(
+            sys, "argv", ["check_oracle.py", SF_DIR, "flagship_doc_scan", "q_ooh_records"]
+        )
+        try:
+            check_oracle.main()
+        except RuntimeError:
+            pass
+        on_disk = log.read_text()
+    assert len(calls) == 2
+    assert "OK flagship_doc_scan:" in on_disk, on_disk

@@ -6,15 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ooh_etl_spark.operators.relational import salted_join
-from ooh_etl_spark.plans.audit import physical_plan
-from ooh_etl_spark.sources.sinks import (
-    read_csv,
-    read_json,
-    read_parquet,
-    write_csv,
-    write_json,
-    write_parquet,
-)
+from ooh_etl_spark.sources.sinks import write_parquet
 from tests.conftest import SF_DIR
 
 
@@ -26,43 +18,9 @@ def test_parquet_roundtrip(spark, tmp_path):
     df = _orders(spark)
     out = str(tmp_path / "orders_pq")
     write_parquet(df, out)
-    back = read_parquet(spark, out)
+    back = spark.read.parquet(out)
     assert back.count() == df.count()
     assert set(back.columns) == set(df.columns)
-
-
-def test_partitioned_parquet_prunes(spark, tmp_path):
-    df = _orders(spark).withColumn("status", F.col("o_orderstatus"))
-    out = str(tmp_path / "orders_part")
-    write_parquet(df, out, partition_by=["status"])
-    back = read_parquet(spark, out).filter(F.col("status") == "F")
-    # Partition pruning: only the status=F directory is scanned.
-    plan = physical_plan(back)
-    assert back.count() == df.filter(F.col("o_orderstatus") == "F").count()
-    assert "PartitionFilters: [isnotnull(status" in plan, plan
-
-
-def test_csv_roundtrip(spark, tmp_path):
-    df = _orders(spark).select("o_orderkey", "o_orderstatus", "o_totalprice")
-    out = str(tmp_path / "orders_csv")
-    write_csv(df, out)
-    back = read_csv(
-        spark, out, "o_orderkey long, o_orderstatus string, o_totalprice double"
-    )
-    assert back.count() == df.count()
-    assert back.agg(F.round(F.sum("o_totalprice"), 2)).collect() == df.agg(
-        F.round(F.sum("o_totalprice"), 2)
-    ).collect()
-
-
-def test_json_roundtrip(spark, tmp_path):
-    df = _orders(spark).select("o_orderkey", "o_orderpriority")
-    out = str(tmp_path / "orders_json")
-    write_json(df, out)
-    back = read_json(spark, out, "o_orderkey long, o_orderpriority string")
-    assert sorted(r.o_orderkey for r in back.collect()) == sorted(
-        r.o_orderkey for r in df.collect()
-    )
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -151,32 +109,6 @@ def test_stream_stream_join_matches_batch(spark):
         & (F.col("purchase_ts") <= F.col("signup_ts") + F.expr("INTERVAL 24 HOURS")),
     )
     assert streamed.count() == batch.count()
-
-
-def test_python_datasource_partitioned_feed(spark):
-    # Spark 4 custom Python data source: the reader plans real input
-    # partitions, so generation runs on executors in parallel.
-    from ooh_etl_spark.sources.pysource import register_occupation_feed
-
-    register_occupation_feed(spark)
-    df = (
-        spark.read.format("occupation_feed")
-        .option("numRecords", 500)
-        .option("numPartitions", 8)
-        .load()
-    )
-    assert df.count() == 500
-    assert df.rdd.getNumPartitions() == 8
-    # deterministic irrespective of partitioning
-    one = (
-        spark.read.format("occupation_feed")
-        .option("numRecords", 500)
-        .option("numPartitions", 1)
-        .load()
-    )
-    assert sorted(df.collect()) == sorted(one.collect())
-    # behaves as a normal relation: filters/aggs compose
-    assert 100 < df.filter(F.col("outlook_bright")).count() < 250
 
 
 def test_write_compaction_bounds_file_sizes(spark, tmp_path):

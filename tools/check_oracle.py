@@ -221,10 +221,10 @@ def main() -> int:
         msg = compare(spark, con, name, sf_dir)
         if msg is None:
             status = "OK" if name in oracles else "ROWS-ONLY"
-            print(f"{status:>9} {name}: ({time.time()-t0:.1f}s)")
+            print(f"{status:>9} {name}: ({time.time()-t0:.1f}s)", flush=True)
         else:
             failures.append(name)
-            print(f"FAIL {name}: {msg}")
+            print(f"FAIL {name}: {msg}", flush=True)
 
     print(f"\n{ran - len(failures)}/{ran} green")
     return 1 if failures else 0
