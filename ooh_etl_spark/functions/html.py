@@ -174,14 +174,13 @@ def cells_dict(cells: Column) -> Column:
     return F.map_from_arrays(F.slice(keys, 1, F.size(vals)), vals)
 
 
-def extract_after_heading(
-    text: Column, pattern: str = WORK_SCHEDULES_PATTERN, group: int = 3
-) -> Column:
-    """E9 (index.js:108-113): whitespace-collapse then regex capture;
-    NULL (not '') when the heading is absent — ``match && match[3]``."""
+def extract_after_heading(text: Column) -> Column:
+    """E9 (index.js:108-113): whitespace-collapse then capture group 3 of
+    :data:`WORK_SCHEDULES_PATTERN`; NULL (not '') when the heading is
+    absent — ``match && match[3]``."""
     collapsed = collapse_ws(text)
-    extracted = F.regexp_extract(collapsed, pattern, group)
-    return F.when(collapsed.rlike(pattern), extracted)
+    extracted = F.regexp_extract(collapsed, WORK_SCHEDULES_PATTERN, 3)
+    return F.when(collapsed.rlike(WORK_SCHEDULES_PATTERN), extracted)
 
 
 def _sentence_split_entry(p: Column) -> Column:

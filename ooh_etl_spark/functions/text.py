@@ -69,7 +69,8 @@ def quality_features(text: Column) -> dict[str, Column]:
         "n_tokens": n,
         "n_chars": F.length(text),
         "stopword_ratio": F.round(stop / n, 4),
-        "punct_ratio": F.round(punct / F.length(text), 4),
+        # NULL for an empty text, as DuckDB's division by zero gives
+        "punct_ratio": F.round(F.try_divide(punct, F.length(text)), 4),
         "mean_token_len": F.round(total_tok_len / n, 4),
     }
 
@@ -105,26 +106,58 @@ def fingerprint_md5(text: Column) -> Column:
     return F.md5(normalize_text(text))
 
 
-def word_shingles_from_tokens(toks: Column, n: int = 3) -> Column:
-    """Shingles from an already-materialized token array. Callers doing
-    heavy shingling should project the token array in a separate select
+def ngram_starts(arr: Column, n: int | Column) -> Column:
+    """The 1-based start positions ``[1 .. size(arr) - n + 1]`` of the
+    length-``n`` windows of ``arr``, empty when ``arr`` is shorter than
+    ``n``. The guard is the point: Spark's ``sequence(1, 0)`` counts
+    down to ``[1, 0]`` where DuckDB's ``generate_series(1, 0)`` is
+    empty, so an unguarded start list indexes past a short array."""
+    last = F.size(arr) - (n - 1)
+    return F.when(last >= 1, F.sequence(F.lit(1), last)).otherwise(
+        F.array().cast("array<int>")
+    )
+
+
+def word_ngrams(toks: Column, n: int | Column) -> Column:
+    """Every word n-gram of a token array in order, repeats kept, each
+    the space-joined window; empty when there are fewer than ``n``
+    tokens. The DuckDB twin is ``list_transform(generate_series(1,
+    len(toks) - n + 1), i -> array_to_string(toks[i:i+n-1], ' '))``."""
+    return F.transform(
+        ngram_starts(toks, n), lambda i: F.array_join(F.slice(toks, i, n), " ")
+    )
+
+
+def word_pairs(toks: Column) -> Column:
+    """Adjacent token pairs as ``array<struct<head, nxt>>``: the token
+    array zipped with itself shifted by one. Empty for fewer than two
+    tokens."""
+    k = F.greatest(F.size(toks) - 1, F.lit(0))
+    return F.zip_with(
+        F.slice(toks, 1, k),
+        F.slice(toks, 2, k),
+        lambda h, n: F.struct(h.alias("head"), n.alias("nxt")),
+    )
+
+
+#: Shingle width of the Jaccard/MinHash dedup unit.
+_SHINGLE_N = 3
+
+
+def word_shingles_from_tokens(toks: Column) -> Column:
+    """Distinct word 3-gram shingles; a document of fewer than three
+    tokens is one shingle, its whole token string. Callers doing heavy
+    shingling should project the token array in a separate select
     first: referencing ``split(...)`` from inside the shingle lambda
     re-evaluates the split per element (measured ~25% slower)."""
-    k = F.size(toks) - (n - 1)
     return F.when(
-        k > 0,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), k - 1),
-                lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
-            )
-        ),
+        F.size(toks) >= _SHINGLE_N, F.array_distinct(word_ngrams(toks, _SHINGLE_N))
     ).otherwise(F.array(F.array_join(toks, " ")))
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingles: the unit set for Jaccard/MinHash dedup."""
-    return word_shingles_from_tokens(tokenize(text), n)
+def word_shingles(text: Column) -> Column:
+    """Word 3-gram shingles: the unit set for Jaccard/MinHash dedup."""
+    return word_shingles_from_tokens(tokenize(text))
 
 
 @F.pandas_udf(T.LongType())

@@ -26,14 +26,14 @@ from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import parallelize_rows
 
 
-def _shingle_sets(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
+def _shingle_sets(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id, sh) with the token array materialized in its own projection
     so the shingle lambda does not re-evaluate the tokenizing split per
     element (see word_shingles_from_tokens)."""
     return (
         parallelize_rows(df)
         .select(F.col(id_col).alias("id"), tokenize(F.col(text_col)).alias("toks"))
-        .select("id", word_shingles_from_tokens(F.col("toks"), n).alias("sh"))
+        .select("id", word_shingles_from_tokens(F.col("toks")).alias("sh"))
     )
 
 
@@ -51,11 +51,10 @@ def jaccard_pairs(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    n: int = 3,
     threshold: float | None = 0.5,
     raw_counts: bool = False,
 ) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs via an inverted index.
+    """Exact word-3-gram Jaccard near-dup pairs via an inverted index.
 
     ``threshold=None`` is only meaningful with ``raw_counts=True``
     (unthresholded counts); with ``raw_counts=False`` it would reach
@@ -97,7 +96,7 @@ def jaccard_pairs(
     # (an earlier revision re-derived per-doc sizes from the posting
     # lists and joined them back, leaving exchange reuse to the
     # planner; PLANS.md showed the subtree tripled instead).
-    sh = _shingle_sets(df, text_col, id_col, n).withColumn("sz", F.size("sh"))
+    sh = _shingle_sets(df, text_col, id_col).withColumn("sz", F.size("sh"))
     # explode_OUTER, not explode: InferFiltersFromGenerate turns plain
     # explode into a `size(sh)>0 AND sh IS NOT NULL` filter that
     # Catalyst pushes below the repartition exchange — re-evaluating
@@ -169,15 +168,13 @@ def jaccard_pairs(
     )
 
 
-def jaccard_pairs_prefix(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Exact n-gram Jaccard pairs via prefix filtering (Bayardo et al.,
-    WWW'07 "Scaling Up All Pairs Similarity Search" / PPJoin).
+_PREFIX_T = 0.5  # jaccard_pairs_prefix's Jaccard threshold
+
+
+def jaccard_pairs_prefix(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """Exact word-3-gram Jaccard pairs at threshold 0.5 via prefix
+    filtering (Bayardo et al., WWW'07 "Scaling Up All Pairs Similarity
+    Search" / PPJoin).
 
     Same result set as :func:`jaccard_pairs`, asymptotically fewer
     candidates: order every shingle by global document frequency
@@ -199,14 +196,14 @@ def jaccard_pairs_prefix(
     # itself feeds the frequency table AND the prefix ranking) and both
     # verification sides — the shingling pass ran 4x otherwise.
     sh = materialize(
-        _shingle_sets(df, text_col, id_col, n)
+        _shingle_sets(df, text_col, id_col)
         .withColumn("sz", F.size("sh"))
     )
     inv = sh.select("id", "sz", F.explode_outer("sh").alias("shingle"))
     dfreq = inv.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_"))
     # Rank each doc's shingles rarest-first in a TOTAL order (df, shingle).
     w = Window.partitionBy("id").orderBy("df_", "shingle")
-    prefix_len = F.col("sz") - F.ceil(F.col("sz") * threshold) + 1
+    prefix_len = F.col("sz") - F.ceil(F.col("sz") * _PREFIX_T) + 1
     prefix = (
         inv.join(dfreq, "shingle")
         .withColumn("__rk", F.row_number().over(w))
@@ -244,25 +241,20 @@ def jaccard_pairs_prefix(
         cand.join(a, "id_a")
         .join(b, "id_b")
         .withColumn("jaccard", F.round(inter / union, 4))
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= _PREFIX_T)
         .select("id_a", "id_b", "jaccard")
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    jaccard_distance: float = 0.5,
-) -> DataFrame:
-    """Approximate near-dup pairs via spark.ml MinHashLSH (32 hash
-    tables) over hashed word-3-shingle sets (HashingTF → binary
-    vectors). Candidate generation is a band-bucket join — the 100
-    TB-scale replacement for the exact inverted-index join when
-    shingle frequency explodes."""
+def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """Approximate near-dup pairs (Jaccard distance at most 0.5) via
+    spark.ml MinHashLSH (32 hash tables) over hashed word-3-shingle sets
+    (HashingTF → binary vectors). Candidate generation is a band-bucket
+    join — the 100 TB-scale replacement for the exact inverted-index join
+    when shingle frequency explodes."""
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
-    sh = _shingle_sets(df, text_col, id_col, 3)
+    sh = _shingle_sets(df, text_col, id_col)
     tf = HashingTF(
         inputCol="sh", outputCol="features", numFeatures=1 << 18, binary=True
     )
@@ -271,7 +263,7 @@ def minhash_lsh_pairs(
         inputCol="features", outputCol="sig", numHashTables=32, seed=42
     )
     model = mh.fit(feats)
-    pairs = model.approxSimilarityJoin(feats, feats, jaccard_distance, "dist")
+    pairs = model.approxSimilarityJoin(feats, feats, 0.5, "dist")
     return (
         pairs.filter(F.col("datasetA.id") < F.col("datasetB.id"))
         .select(
@@ -282,13 +274,11 @@ def minhash_lsh_pairs(
     )
 
 
-def simhash_pairs(
-    df: DataFrame, text_col: str, id_col: str, max_hamming: int = 8
-) -> DataFrame:
+def simhash_pairs(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """SimHash near-dup pairs: 4×16-bit banding generates candidates
     (two docs within hamming distance 3 of each other share at least
     one band by pigeonhole; wider distances trade recall for cost),
-    then exact hamming distance filters."""
+    then the exact hamming distance is kept at most 8."""
     sig = parallelize_rows(df).select(
         F.col(id_col).alias("id"), simhash64(F.col(text_col)).alias("sig")
     )
@@ -328,6 +318,6 @@ def simhash_pairs(
     )
     hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
     return cand.withColumn("hamming", hamming).filter(
-        F.col("hamming") <= max_hamming
+        F.col("hamming") <= 8
     ).select("id_a", "id_b", "hamming")
 

@@ -20,10 +20,9 @@ def asof_join(
     on: str | tuple[str, str],
     left_ts: str,
     right_ts: str,
-    how: str = "inner",
     direction: str = "backward",
 ) -> DataFrame:
-    """As-of join: for each left row, the single right row with the
+    """Inner as-of join: for each left row, the single right row with the
     greatest ``right_ts`` <= ``left_ts`` within the same key
     (``direction="backward"``, the default) or the SMALLEST
     ``right_ts`` >= ``left_ts`` (``direction="forward"`` — the
@@ -96,11 +95,8 @@ def asof_join(
         l.unionByName(r)
         .withColumn("__asof_r", F.last("__r", ignorenulls=True).over(w))
         .filter(F.col("__kind") == 1)
+        .filter(F.col("__asof_r").isNotNull())
     )
-    if how == "inner":
-        merged = merged.filter(F.col("__asof_r").isNotNull())
-    elif how != "left":
-        raise ValueError(f"asof_join supports how='inner'|'left', got {how!r}")
     out_cols = [F.col(f"__l.{c}").alias(c) for c in left.columns] + [
         F.col(f"__asof_r.{c}").alias(c) for c in right.columns
     ]
@@ -126,16 +122,14 @@ def merge_upsert(
     return untouched.unionByName(updates.select(*target.columns))
 
 
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    salt: int = 8,
-) -> DataFrame:
+_SALT = 8  # salted_join's fan-out
+
+
+def salted_join(left: DataFrame, right: DataFrame, key: str) -> DataFrame:
     """Skew-resistant inner equi-join: the left (skewed) side gets a random
-    salt in [0, salt); the right side is replicated ``salt`` times with
-    every salt value. The hot key's rows then spread across ``salt``
-    reducers instead of one straggler task.
+    salt in [0, 8); the right side is replicated 8 times with every salt
+    value. The hot key's rows then spread across 8 reducers instead of
+    one straggler task.
 
     AQE's skew-join split handles most cases automatically; explicit
     salting remains the tool when a single key exceeds what one task
@@ -143,9 +137,9 @@ def salted_join(
     Replication multiplies the right side — use with a dimension-sized
     right input.
     """
-    lk = left.withColumn("__salt", (F.rand(seed=42) * salt).cast("int"))
+    lk = left.withColumn("__salt", (F.rand(seed=42) * _SALT).cast("int"))
     rk = right.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
+        "__salt", F.explode(F.array(*[F.lit(i) for i in range(_SALT)]))
     )
     out = lk.join(rk, [key, "__salt"], "inner")
     return out.drop("__salt")

@@ -8,7 +8,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ooh_etl_spark.functions.text import DUCK_TOKENIZE, tokenize
+from ooh_etl_spark.functions.text import (
+    DUCK_TOKENIZE,
+    tokenize,
+    word_ngrams,
+    word_shingles,
+    word_shingles_from_tokens,
+)
 from ooh_etl_spark.operators.dedup import (
     _shingle_sets,
     exact_dedup,
@@ -73,7 +79,7 @@ def q27_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full table), sizes re-attached by join (AQE picks the
     strategy); threshold filter before output."""
     docs = load_table(spark, sf_dir, "documents")
-    return jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.5)
+    return jaccard_pairs(docs, "text", "doc_id", threshold=0.5)
 
 
 #: q27b oracle: the q27 SQL on the exact-deduped corpus view —
@@ -100,7 +106,7 @@ def q27b_jaccard_pairs_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = exact_dedup(
         load_table(spark, sf_dir, "documents"), key="text", id_col="doc_id"
     )
-    return jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.5)
+    return jaccard_pairs(docs, "text", "doc_id", threshold=0.5)
 
 
 @register("q73_jaccard_prefix_filter", _DUCK_JACCARD)
@@ -117,7 +123,7 @@ def q73_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ooh_etl_spark.operators.dedup import jaccard_pairs_prefix
 
     docs = load_table(spark, sf_dir, "documents")
-    return jaccard_pairs_prefix(docs, "text", "doc_id", n=3, threshold=0.5)
+    return jaccard_pairs_prefix(docs, "text", "doc_id")
 
 
 _DUCK_CLUSTERS = f"""
@@ -160,7 +166,7 @@ def q49_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ooh_etl_spark.operators.graph import connected_components
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.5)
+    pairs = jaccard_pairs(docs, "text", "doc_id", threshold=0.5)
     return connected_components(pairs)
 
 
@@ -408,7 +414,7 @@ def q28_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     probabilistic signatures have no SQL oracle; accuracy is asserted
     against exact Jaccard in tests."""
     docs = load_table(spark, sf_dir, "documents")
-    return minhash_lsh_pairs(docs, "text", "doc_id", jaccard_distance=0.5)
+    return minhash_lsh_pairs(docs, "text", "doc_id")
 
 
 @register("q29_simhash_pairs", None)  # xxhash64 signatures → rows-only
@@ -417,7 +423,7 @@ def q29_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hamming-banded; candidate pairs within distance threshold.
     Rows-only + property tests (bit flips bounded)."""
     docs = load_table(spark, sf_dir, "documents")
-    return simhash_pairs(docs, "text", "doc_id", max_hamming=8)
+    return simhash_pairs(docs, "text", "doc_id")
 
 
 _XL_T = 0.3  # cross-lingual threshold: translated/copied content is
@@ -478,7 +484,7 @@ def q253_crosslingual_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
     surviving pairs; the census output is bounded by |langs|².
     """
     docs = load_table(spark, sf_dir, "documents")
-    pairs = jaccard_pairs(docs, "text", "doc_id", n=3, threshold=_XL_T)
+    pairs = jaccard_pairs(docs, "text", "doc_id", threshold=_XL_T)
     langs = docs.select("doc_id", "lang")
     la = langs.select(F.col("doc_id").alias("id_a"), F.col("lang").alias("la"))
     lb = langs.select(F.col("doc_id").alias("id_b"), F.col("lang").alias("lb"))
@@ -537,7 +543,7 @@ def q257_dup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ooh_etl_spark.operators.graph import connected_components
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.5)
+    pairs = jaccard_pairs(docs, "text", "doc_id", threshold=0.5)
     labels = connected_components(pairs)
     sizes = labels.groupBy("cluster").agg(F.count(F.lit(1)).alias("sz"))
     return (
@@ -602,24 +608,9 @@ def q268_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim.
     """
     docs = load_table(spark, sf_dir, "documents")
-    from ooh_etl_spark.functions.text import tokenize
-
     toks = docs.select("doc_id", tokenize(F.col("text")).alias("toks"))
     sh = materialize(toks.select(
-        "doc_id",
-        F.when(
-            F.size("toks") >= 3,
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("toks") - 2),
-                    lambda i: F.array_join(
-                        F.slice(F.col("toks"), i, 3), " "
-                    ),
-                )
-            ),
-        )
-        .otherwise(F.array(F.array_join(F.col("toks"), " ")))
-        .alias("sh"),
+        "doc_id", word_shingles_from_tokens(F.col("toks")).alias("sh")
     ))  # shingle sets feed the size table AND both
     # inverted-index sides (the tokenize pass ran 4x otherwise)
     sz = sh.select("doc_id", F.size("sh").alias("sz"))
@@ -900,7 +891,7 @@ def q345_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # threshold=0.0 keeps every candidate pair (>=1 shared shingle)
     pairs = materialize(
-        jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.0)
+        jaccard_pairs(docs, "text", "doc_id", threshold=0.0)
         .select(
             "id_a",
             "id_b",
@@ -999,8 +990,6 @@ def q350_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle so the probe co-partitions with ZERO old-side movement
     (the persisted-index property this query's plan stands in for);
     the verify join re-attaches sizes by key."""
-    from ooh_etl_spark.functions.text import word_shingles
-
     docs = load_table(spark, sf_dir, "documents")
     cut_row = docs.agg(
         (
@@ -1013,7 +1002,7 @@ def q350_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).collect()[0]
     cut = int(cut_row["cut"])
     sh = materialize(docs.select(
-        "doc_id", word_shingles(F.col("text"), 3).alias("sh")
+        "doc_id", word_shingles(F.col("text")).alias("sh")
     ))  # shingle sets feed index, probe, and sizes
     sz = sh.select("doc_id", F.size("sh").alias("sz"))
     inv = sh.select("doc_id", F.explode("sh").alias("shingle"))
@@ -1217,21 +1206,9 @@ def q392_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     (checkpointed)."""
     docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.lower(F.col("text")), " ")
-    # NOTE: Spark's sequence(1, 0) is DESCENDING, not empty — docs
-    # shorter than the shingle width must be filtered BEFORE sequence()
     sh = materialize(
-        docs.filter(
-            F.size(F.split(F.lower(F.col("text")), " ")) >= _SRC_SHINGLE_N
-        )
-        .select(
-            "source",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(1, size(split(lower(text), ' ')) - {_SRC_SHINGLE_N} + 1),"
-                    f" x -> array_join(slice(split(lower(text), ' '), x, {_SRC_SHINGLE_N}), ' '))"
-                )
-            ).alias("g"),
-        )
+        docs.filter(F.size(toks) >= _SRC_SHINGLE_N)
+        .select("source", F.explode(word_ngrams(toks, _SRC_SHINGLE_N)).alias("g"))
         .select("source", F.md5(F.col("g")).alias("h"))
         .distinct()
     )
@@ -1696,7 +1673,7 @@ def _leakage_audit(spark: SparkSession, docs: DataFrame) -> DataFrame:
     from ooh_etl_spark.operators.graph import connected_components
 
     pairs = materialize(
-        jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.5)
+        jaccard_pairs(docs, "text", "doc_id", threshold=0.5)
         .select("id_a", "id_b")
     )
     cc = connected_components(pairs)
@@ -2093,7 +2070,7 @@ def q426_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = materialize(
-        jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.5)
+        jaccard_pairs(docs, "text", "doc_id", threshold=0.5)
         .select("id_a", "id_b")
     )
     cc = connected_components(pairs)
@@ -2207,14 +2184,12 @@ def q427_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature rows per PAIR — pair-sized, never corpus-quadratic. At
     scale you run it on a deterministic doc-hash sample; the estimator
     statistics are sample-invariant."""
-    from ooh_etl_spark.functions.text import tokenize, word_shingles_from_tokens
-
     docs = load_table(spark, sf_dir, "documents")
 
     sh = docs.select(
         "doc_id", tokenize(F.col("text")).alias("toks")
     ).select(
-        "doc_id", word_shingles_from_tokens(F.col("toks"), 3).alias("sh")
+        "doc_id", word_shingles_from_tokens(F.col("toks")).alias("sh")
     )
     inv = sh.select(
         "doc_id", F.explode_outer("sh").alias("shingle")
@@ -2232,7 +2207,7 @@ def q427_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             for k in range(_MH_K)
         ]
     )
-    pairs = jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.2).select(
+    pairs = jaccard_pairs(docs, "text", "doc_id", threshold=0.2).select(
         "id_a",
         "id_b",
         F.round(F.col("jaccard") * 10000).cast("bigint").alias("j10k"),
@@ -2368,10 +2343,8 @@ def q428_rouge2_pair_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates x doc-length, linear in the funnel output. This is the
     standing LSH-candidates -> exact-verify discipline (q31/q53)
     applied to an overlap SCORE instead of a boolean."""
-    from ooh_etl_spark.functions.text import tokenize
-
     docs = load_table(spark, sf_dir, "documents")
-    cand = jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.5).select(
+    cand = jaccard_pairs(docs, "text", "doc_id", threshold=0.5).select(
         "id_a", "id_b"
     )
     base = (
@@ -2382,19 +2355,7 @@ def q428_rouge2_pair_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "id",
             (F.size("toks") - 1).cast("bigint").alias("tot"),
-            F.explode_outer(
-                # Guarded like text_stats' bigram census: size=1 would
-                # make sequence(1, 0) DESCEND to [1, 0] and toks[1]
-                # raise under Spark 4 ANSI mode (DuckDB's
-                # generate_series(1, 0) is empty, so the oracle is
-                # already safe on 1-token docs).
-                F.expr(
-                    "CASE WHEN size(toks) >= 2 THEN"
-                    " transform(sequence(1, size(toks) - 1),"
-                    " i -> concat(toks[i-1], ' ', toks[i]))"
-                    " ELSE array() END"
-                )
-            ).alias("gram"),
+            F.explode_outer(word_ngrams(F.col("toks"), 2)).alias("gram"),
         )
         .filter(F.col("gram").isNotNull())
     )
@@ -2490,7 +2451,7 @@ def q431_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared-count aggregate with a different denominator."""
     docs = load_table(spark, sf_dir, "documents")
     pairs = jaccard_pairs(
-        docs, "text", "doc_id", n=3, threshold=None, raw_counts=True
+        docs, "text", "doc_id", threshold=None, raw_counts=True
     )
     c = (
         pairs.select(
@@ -2582,24 +2543,10 @@ def q442_softdedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ooh_etl_spark.tables import parallelize_rows
 
     docs = load_documents(spark, sf_dir)
-    from ooh_etl_spark.functions.text import tokenize
 
     t = docs.select("doc_id", "source", tokenize(F.col("text")).alias("toks"))
-    idx = F.when(
-        F.size("toks") >= _SD_N,
-        F.sequence(F.lit(1), F.size("toks") - (_SD_N - 1)),
-    ).otherwise(F.array().cast("array<int>"))
     g = materialize(t.select(
-        "doc_id",
-        "source",
-        F.explode(
-            F.transform(
-                idx,
-                lambda i: F.concat_ws(
-                    " ", F.col("toks")[i - 1], F.col("toks")[i]
-                ),
-            )
-        ).alias("gram"),
+        "doc_id", "source", F.explode(word_ngrams(F.col("toks"), _SD_N)).alias("gram")
     ))  # gram stream feeds the freq table AND the join back
     freq = g.groupBy("gram").agg(F.count(F.lit(1)).alias("c"))
     per_doc = (
@@ -2809,7 +2756,7 @@ def q451_lsh_scurve_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows; output is |configs| = 4 rows."""
     docs = load_table(spark, sf_dir, "documents")
     raw = jaccard_pairs(
-        docs, "text", "doc_id", n=3, threshold=None, raw_counts=True
+        docs, "text", "doc_id", threshold=None, raw_counts=True
     )
     bkt = (
         raw.select(
@@ -3117,7 +3064,7 @@ def q457_stop_shingle_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
     so its pair expansion is bounded by the true-dup population, not
     the corpus."""
     docs = load_table(spark, sf_dir, "documents")
-    sh = _shingle_sets(docs, "text", "doc_id", 3)
+    sh = _shingle_sets(docs, "text", "doc_id")
     inv = sh.select(F.col("id"), F.explode_outer("sh").alias("shingle"))
     dft = inv.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     caps = spark.createDataFrame(
@@ -3143,7 +3090,7 @@ def q457_stop_shingle_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("candidate_pairs"),
     )
-    tp = jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.5).select(
+    tp = jaccard_pairs(docs, "text", "doc_id", threshold=0.5).select(
         "id_a", "id_b"
     )
     invdf = inv.join(dft, "shingle")

@@ -667,7 +667,7 @@ def q240_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     j = asof_join(
         s, p, on=("user_id", "p_user"), left_ts="ts", right_ts="p_ts",
-        how="inner", direction="forward",
+        direction="forward",
     )
     return j.select(
         "event_id",

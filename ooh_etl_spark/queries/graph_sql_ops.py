@@ -593,7 +593,7 @@ def q191b_link_prediction_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the cheap part — one keyed count), so only common_n is capped:
     scores are a lower bound that EQUALS q191 exactly whenever every
     degree ≤ K. That equality is machine-checked on a cap-free corpus
-    (tests/test_round10_wave.py::test_q191b_equals_q191_on_capfree_graph),
+    (tests/test_graph_sql_ops.py::test_q191b_equals_q191_on_capfree_graph),
     the q27b/q151c funnel-variant discipline.
 
     100 TB shape: one weighted-edge aggregate (same shuffle as q191's

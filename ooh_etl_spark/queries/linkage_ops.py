@@ -1065,7 +1065,8 @@ def q413_soundex_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressed identically in both engines (the 7 run-collapse
     regexes avoid backreferences, which RE2 lacks); outputs are
     integer counts and min/max examples. Property-tested against
-    the published NARA examples (tests/test_round6_wave.py).
+    the published NARA examples
+    (tests/test_linkage_ml.py::test_q413_soundex_known_values).
 
     100 TB shape: one (name)-keyed agg collapses the corpus to the
     vocab, then one (code)-keyed agg over the vocab — both map-side

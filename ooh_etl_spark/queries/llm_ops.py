@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ooh_etl_spark.functions.text import DUCK_TOKENIZE, tokenize
+from ooh_etl_spark.functions.text import DUCK_TOKENIZE, ngram_starts, tokenize
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_documents, load_table, parallelize_rows
@@ -672,7 +672,7 @@ def q215_bpe_merge_round(spark: SparkSession, sf_dir: str) -> DataFrame:
         sym.filter(F.size("syms") >= 2)
         .select(
             "freq",
-            F.explode(F.sequence(F.lit(1), F.size("syms") - 1)).alias("i"),
+            F.explode(ngram_starts(F.col("syms"), 2)).alias("i"),
             F.col("syms"),
         )
         .select(

@@ -19,7 +19,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ooh_etl_spark.functions.text import DUCK_TOKENIZE, tokenize
+from ooh_etl_spark.functions.text import (
+    DUCK_TOKENIZE,
+    ngram_starts,
+    tokenize,
+    word_ngrams,
+)
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize, materialize_all
 from ooh_etl_spark.tables import load_documents, load_table
@@ -102,22 +107,6 @@ _DUCK_BIGRAMS = (
 )
 
 
-def _bigrams(toks: Column) -> Column:
-    """1-based adjacent-pair n-grams. Guarded: Spark ``sequence(1, 0)``
-    counts DOWN (yields [1, 0]) instead of returning empty like DuckDB
-    ``generate_series``, so single-token docs need the explicit guard."""
-    n = F.size(toks)
-    idx = F.when(n >= 2, F.sequence(F.lit(1), n - 1)).otherwise(
-        F.array().cast("array<int>")
-    )
-    return F.transform(
-        idx,
-        lambda i: F.concat(
-            F.element_at(toks, i), F.lit(" "), F.element_at(toks, i + 1)
-        ),
-    )
-
-
 @register(
     "q80_repetition_stats",
     f"""
@@ -158,7 +147,7 @@ def q80_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         F.size(toks).alias("n"),
         F.size(F.array_distinct(toks)).alias("n_distinct"),
-        _bigrams(toks).alias("bigrams"),
+        word_ngrams(toks, 2).alias("bigrams"),
     )
     topbg = (
         g.select("doc_id", F.explode_outer("bigrams").alias("bg"))
@@ -200,24 +189,6 @@ _DUCK_TRIGRAMS = (
 )
 
 
-def _trigrams(toks: Column) -> Column:
-    n = F.size(toks)
-    idx = F.when(n >= _NGRAM, F.sequence(F.lit(1), n - (_NGRAM - 1))).otherwise(
-        F.array().cast("array<int>")
-    )
-    return F.array_distinct(
-        F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(toks, i),
-                F.element_at(toks, i + 1),
-                F.element_at(toks, i + 2),
-            ),
-        )
-    )
-
-
 @register(
     "q81_decontamination",
     f"""
@@ -247,7 +218,8 @@ def q81_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole dataset)."""
     docs = load_documents(spark, sf_dir)
     toks = tokenize(F.col("text"))
-    g = docs.select("doc_id", F.explode_outer(_trigrams(toks)).alias("gram")).filter(
+    grams = F.array_distinct(word_ngrams(toks, _NGRAM))
+    g = docs.select("doc_id", F.explode_outer(grams).alias("gram")).filter(
         F.col("gram").isNotNull()
     )
     corpus = g.filter(F.col("doc_id") % _BENCH_MOD != 0)
@@ -497,12 +469,7 @@ def q152_dup_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = base.filter(F.size("toks") >= _SPAN_N).select(
         "doc_id",
         "source",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("toks") - _SPAN_N),
-                lambda i: F.array_join(F.slice("toks", i + 1, _SPAN_N), " "),
-            )
-        ).alias("gram"),
+        F.explode(word_ngrams(F.col("toks"), _SPAN_N)).alias("gram"),
     )
     dup = (
         grams.select("doc_id", "gram")
@@ -591,12 +558,7 @@ def q153_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         "lang",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("toks") - 2),
-                lambda i: F.array_join(F.slice("toks", i + 1, 2), " "),
-            )
-        ).alias("bg"),
+        F.explode(word_ngrams(F.col("toks"), 2)).alias("bg"),
     )
     cnt = bg.groupBy("bg").agg(
         F.sum((F.col("lang") == "en").cast("long")).alias("ct"),
@@ -812,7 +774,7 @@ def q162_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact_dedup(q, key="text", id_col="doc_id").select("doc_id"), "doc_id"
     ))
     dropped = (
-        jaccard_pairs(exd, "text", "doc_id", n=3, threshold=0.5)
+        jaccard_pairs(exd, "text", "doc_id", threshold=0.5)
         .select(F.col("id_b").alias("doc_id"))
         .distinct()
     )
@@ -909,12 +871,7 @@ def q163_dup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.filter(F.size("toks") >= _SPAN_N)
         .select(
             "doc_id",
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("toks") - (_SPAN_N - 1)),
-                    lambda s: F.concat_ws(" ", F.slice("toks", s, _SPAN_N)),
-                )
-            ).alias("s0", "gram"),
+            F.posexplode(word_ngrams(F.col("toks"), _SPAN_N)).alias("s0", "gram"),
         )
         .select("doc_id", (F.col("s0") + 1).alias("s"), "gram")
     )
@@ -1752,7 +1709,7 @@ def q444_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = docs.select(
         "doc_id",
         "source",
-        F.explode_outer(_trigrams(toks)).alias("gram"),
+        F.explode_outer(F.array_distinct(word_ngrams(toks, _NGRAM))).alias("gram"),
     ).filter(F.col("gram").isNotNull())
 
     # ONE md5 per gram row, k slice-probes off it (r13 opt: the k
@@ -2048,15 +2005,7 @@ def _order_grams(docs: DataFrame) -> DataFrame:
     ).select(
         "doc_id",
         "n",
-        F.explode(
-            F.when(
-                F.size("toks") >= F.col("n"),
-                F.expr(
-                    "transform(sequence(1, size(toks) - n + 1),"
-                    " i -> concat_ws(' ', slice(toks, i, n)))"
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-        ).alias("gram"),
+        F.explode(word_ngrams(F.col("toks"), F.col("n"))).alias("gram"),
     )
 
 
@@ -2231,7 +2180,8 @@ def q475_bloom_sizing_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_documents(spark, sf_dir)
     toks = tokenize(F.col("text"))
     g = docs.select(
-        "doc_id", F.explode_outer(_trigrams(toks)).alias("gram")
+        "doc_id",
+        F.explode_outer(F.array_distinct(word_ngrams(toks, _NGRAM))).alias("gram"),
     ).filter(F.col("gram").isNotNull())
     bench = materialize(
         g.filter(F.col("doc_id") % _BENCH_MOD == 0)
@@ -2545,7 +2495,11 @@ def q479_corpus_build_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bench_plan = (
         d0.filter(F.col("doc_id") % _BENCH_MOD == 0)
-        .select(F.explode_outer(_trigrams(F.col("toks"))).alias("gram"))
+        .select(
+            F.explode_outer(
+                F.array_distinct(word_ngrams(F.col("toks"), _NGRAM))
+            ).alias("gram")
+        )
         .filter(F.col("gram").isNotNull())
         .distinct()
     )
@@ -2637,7 +2591,7 @@ def q479_corpus_build_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def nd_plan() -> DataFrame:
         dropped = (
-            jaccard_pairs(exd, "text", "doc_id", n=3, threshold=0.5)
+            jaccard_pairs(exd, "text", "doc_id", threshold=0.5)
             .select(F.col("id_b").alias("doc_id"))
             .distinct()
         )
@@ -2645,7 +2599,10 @@ def q479_corpus_build_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     nd, cexd = materialize_all(nd_plan(), census(exd))  # cexd: stage-2 census
     cg = nd.select(
-        "doc_id", F.explode_outer(_trigrams(F.col("toks"))).alias("gram")
+        "doc_id",
+        F.explode_outer(
+            F.array_distinct(word_ngrams(F.col("toks"), _NGRAM))
+        ).alias("gram"),
     ).filter(F.col("gram").isNotNull())
     probed = cg.withColumn("h", F.md5("gram"))
     for j in range(_FUN_K):
@@ -2906,14 +2863,6 @@ def q480_gopher_repetition_census(spark: SparkSession, sf_dir: str) -> DataFrame
         "doc_id", "source", tokenize(F.col("text")).alias("toks")
     ).filter(F.size("toks") > 0)
 
-    def grams(n: int) -> str:
-        return (
-            f"CASE WHEN size(toks) >= {n} THEN "
-            f"transform(sequence(1, size(toks) - {n - 1}),"
-            f" i -> array_join(slice(toks, i, {n}), ' ')) "
-            "ELSE array() END"
-        )
-
     def top_bp(n: int) -> Column:
         # q465's sorted run-length fold lifted to n-grams: O(L log L)
         # per row (the first draft's distinct-x-filter scan was O(L^2),
@@ -2954,22 +2903,25 @@ def q480_gopher_repetition_census(spark: SparkSession, sf_dir: str) -> DataFrame
     g = d.select(
         "source",
         F.size("toks").alias("n_toks"),
-        *[F.expr(grams(n)).alias(f"g{n}") for n, _ in _REP_TOP],
-        F.expr(grams(_REP_DUP_N)).alias("gd"),
+        *[word_ngrams(F.col("toks"), n).alias(f"g{n}") for n, _ in _REP_TOP],
+        word_ngrams(F.col("toks"), _REP_DUP_N).alias("gd"),
     ).withColumn("ds", ds_col)
-    dup_bp = F.expr(
-        f"(10000 * size(array_distinct(flatten(transform("
-        f"filter(sequence(1, size(gd)),"
-        f" i -> array_contains(ds, element_at(gd, i))),"
-        f" i -> sequence(i, i + {_REP_DUP_N - 1})))))) div n_toks"
+    # the token positions covered by a duplicated gram
+    dup_pos = F.array_distinct(
+        F.flatten(
+            F.transform(
+                F.filter(
+                    ngram_starts(F.col("gd"), 1),
+                    lambda i: F.array_contains("ds", F.element_at("gd", i)),
+                ),
+                lambda i: F.sequence(i, i + (_REP_DUP_N - 1)),
+            )
+        )
     )
-    # sequence(1, 0) is DESCENDING in Spark, so the gram builders and
-    # the start-index list are guarded with CASE size >= n above; the
-    # dup filter rides size(gd), which is 0 for short docs.
-    m = g.select(
+    m = g.withColumn("n_dup_pos", F.size(dup_pos)).select(
         "source",
         *[top_bp(n).alias(f"top{n}_bp") for n, _ in _REP_TOP],
-        dup_bp.alias(f"dup{_REP_DUP_N}_bp"),
+        F.expr("(10000 * n_dup_pos) div n_toks").alias(f"dup{_REP_DUP_N}_bp"),
     )
     any_flag = F.expr(
         " OR ".join(f"top{n}_bp > {t}" for n, t in _REP_TOP)
@@ -3127,7 +3079,11 @@ def q481_funnel_stage_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bench = materialize(
         d0.filter(F.col("doc_id") % _BENCH_MOD == 0)
-        .select(F.explode_outer(_trigrams(F.col("toks"))).alias("gram"))
+        .select(
+            F.explode_outer(
+                F.array_distinct(word_ngrams(F.col("toks"), _NGRAM))
+            ).alias("gram")
+        )
         .filter(F.col("gram").isNotNull())
         .distinct()
     )
@@ -3185,13 +3141,16 @@ def q481_funnel_stage_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     exd = materialize(exact_dedup(raw, key="text", id_col="doc_id"))
     ke = exd.select("doc_id", F.lit(1).alias("kept"))
     kn = (
-        jaccard_pairs(exd, "text", "doc_id", n=3, threshold=0.5)
+        jaccard_pairs(exd, "text", "doc_id", threshold=0.5)
         .select(F.col("id_b").alias("doc_id"))
         .distinct()
         .withColumn("k_neardup", F.lit(1))
     )
     cg = raw.select(
-        "doc_id", F.explode_outer(_trigrams(F.col("toks"))).alias("gram")
+        "doc_id",
+        F.explode_outer(
+            F.array_distinct(word_ngrams(F.col("toks"), _NGRAM))
+        ).alias("gram"),
     ).filter(F.col("gram").isNotNull())
     probed = cg.withColumn("h", F.md5("gram"))
     for j in range(_FUN_K):

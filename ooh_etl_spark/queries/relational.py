@@ -786,7 +786,7 @@ def q336_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = nation.select(
         (F.col("n_nationkey") * 4).alias("k"), F.col("n_name").alias("bucket")
     )
-    joined = salted_join(f, d, "k", salt=8)
+    joined = salted_join(f, d, "k")
     return (
         joined.groupBy("bucket")
         .agg(

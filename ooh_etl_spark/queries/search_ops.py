@@ -289,8 +289,9 @@ def q138_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort of the corpus at scale (rank-k cutoff via TakeOrdered)."""
     docs = load_table(spark, sf_dir, "documents")
     u = ((F.col("doc_id") * F.lit(2654435761)) % F.lit(4294967296) + 1.0) / 4294967297.0
+    # try_divide: an empty doc's key is NULL, as DuckDB's division by zero
     keyed = docs.select(
-        "doc_id", "n_chars", (F.log(u) / F.col("n_chars")).alias("es_key")
+        "doc_id", "n_chars", F.try_divide(F.log(u), F.col("n_chars")).alias("es_key")
     )
     w = Window.orderBy(F.col("es_key").desc(), "doc_id")
     return (
@@ -348,7 +349,7 @@ def q238_grouped_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         "doc_id",
         "n_chars",
-        (F.log(u) / F.col("n_chars")).alias("es_key"),
+        F.try_divide(F.log(u), F.col("n_chars")).alias("es_key"),
     )
     w = Window.partitionBy("lang").orderBy(F.desc("es_key"), "doc_id")
     return (

@@ -15,7 +15,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ooh_etl_spark.functions.text import DUCK_TOKENIZE, tokenize
+from ooh_etl_spark.functions.text import (
+    DUCK_TOKENIZE,
+    tokenize,
+    word_ngrams,
+    word_pairs,
+)
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_documents, load_table
@@ -152,8 +157,6 @@ def q94_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale. Growth is measured over the BIGRAM vocabulary (the unigram
     vocab of the synthetic fixture saturates in the first bucket).
     All-integer output, engine-exact."""
-    from ooh_etl_spark.queries.quality_ops import _bigrams
-
     docs = load_documents(spark, sf_dir)
     mx = docs.agg((F.max("doc_id") + 1).alias("n"))
     tok = (
@@ -162,7 +165,7 @@ def q94_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(_GROWTH_BUCKETS * F.col("doc_id") / F.col("n"))
             .cast("bigint")
             .alias("bucket"),
-            F.explode_outer(_bigrams(tokenize(F.col("text")))).alias("term"),
+            F.explode_outer(word_ngrams(tokenize(F.col("text")), 2)).alias("term"),
         )
         .filter(F.col("term").isNotNull())
     )
@@ -322,15 +325,9 @@ def q160_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a 1-row broadcast, and the head/continuation cuts are bounded
     top-k windows over the count table, not the corpus."""
     d = load_documents(spark, sf_dir).select("doc_id", tokenize(F.col("text")).alias("toks"))
-    bg = d.select(
-        F.explode(
-            F.zip_with(
-                F.slice("toks", 1, F.size("toks") - 1),
-                F.slice("toks", 2, F.size("toks") - 1),
-                lambda h, n: F.struct(h.alias("head"), n.alias("nxt")),
-            )
-        ).alias("b")
-    ).select("b.head", "b.nxt")
+    bg = d.select(F.explode(word_pairs(F.col("toks"))).alias("b")).select(
+        "b.head", "b.nxt"
+    )
     c_hn = bg.groupBy("head", "nxt").agg(F.count(F.lit(1)).alias("c_hn"))
     c_h = c_hn.groupBy("head").agg(F.sum("c_hn").alias("c_h"))
     vocab = (
@@ -890,10 +887,9 @@ def q306_bleu_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.expr(
                             f"transform({col}, t -> struct(1 AS n, t AS gram))"
                         ),
-                        F.expr(
-                            f"transform(sequence(1, size({col}) - 1), "
-                            f"i -> struct(2 AS n, "
-                            f"concat({col}[i - 1], ' ', {col}[i]) AS gram))"
+                        F.transform(
+                            word_ngrams(F.col(col), 2),
+                            lambda g: F.struct(F.lit(2).alias("n"), g.alias("gram")),
                         ),
                     )
                 ).alias("g"),
@@ -1129,14 +1125,9 @@ def q338_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     bg = (
         docs.select(tokenize(F.col("text")).alias("toks"))
         .select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(toks) - 1), "
-                    "i -> struct(toks[i - 1] AS w1, toks[i] AS w2))"
-                )
-            ).alias("g")
+            F.explode(word_pairs(F.col("toks"))).alias("g")
         )
-        .select("g.w1", "g.w2")
+        .select(F.col("g.head").alias("w1"), F.col("g.nxt").alias("w2"))
     )
     bc = materialize(
         bg.groupBy("w1", "w2")
@@ -1507,16 +1498,9 @@ def q367_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     big = (
         docs.select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(split(lower(text), ' ')) - 1),"
-                    " i -> struct("
-                    "   element_at(split(lower(text), ' '), i) AS w1,"
-                    "   element_at(split(lower(text), ' '), i + 1) AS w2))"
-                )
-            ).alias("bg")
+            F.explode(word_pairs(F.split(F.lower(F.col("text")), " "))).alias("bg")
         )
-        .select(F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
+        .select(F.col("bg.head").alias("w1"), F.col("bg.nxt").alias("w2"))
         .filter(
             (F.col("w1") != "") & (F.col("w2") != "") & (F.col("w1") != F.col("w2"))
         )
@@ -1941,18 +1925,7 @@ def q422_bigram_novelty_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_documents(spark, sf_dir).select(
         "doc_id", "source", tokenize(F.col("text")).alias("toks")
     )
-    n = F.size("toks")
-    idx = F.when(n >= 2, F.sequence(F.lit(1), n - 1)).otherwise(
-        F.array().cast("array<int>")
-    )
-    bigrams = F.array_distinct(
-        F.transform(
-            idx,
-            lambda i: F.concat(
-                F.element_at("toks", i), F.lit(" "), F.element_at("toks", i + 1)
-            ),
-        )
-    )
+    bigrams = F.array_distinct(word_ngrams(F.col("toks"), 2))
     b = d.select("doc_id", "source", F.explode(bigrams).alias("bg"))
     w = b.select(
         "doc_id",
@@ -2169,15 +2142,10 @@ def q438_wimbd_ngram_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys with big counts, never join fan-out."""
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select("doc_id", tokenize(F.col("text")).alias("toks"))
-    grams = F.when(
-        F.size("toks") >= _WIMBD_N,
-        F.expr(
-            f"transform(sequence(1, size(toks) - {_WIMBD_N - 1}),"
-            f" i -> array_join(slice(toks, i, {_WIMBD_N}), ' '))"
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     dg = (
-        d.select("doc_id", F.explode_outer(grams).alias("gram"))
+        d.select(
+            "doc_id", F.explode_outer(word_ngrams(F.col("toks"), _WIMBD_N)).alias("gram")
+        )
         .filter(F.col("gram").isNotNull())
         .groupBy("gram", "doc_id")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -2283,25 +2251,8 @@ def q441_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     gram, tiny) — never a corpus x corpus join; the matrix itself is
     |sources|^2 rows."""
     t = load_documents(spark, sf_dir).select("source", tokenize(F.col("text")).alias("toks"))
-    idx = F.when(
-        F.size("toks") >= _OVL_N,
-        F.sequence(F.lit(1), F.size("toks") - (_OVL_N - 1)),
-    ).otherwise(F.array().cast("array<int>"))
     g = materialize(
-        t.select(
-            "source",
-            F.explode(
-                F.transform(
-                    idx,
-                    lambda i: F.concat_ws(
-                        " ",
-                        F.col("toks")[i - 1],
-                        F.col("toks")[i],
-                        F.col("toks")[i + 1],
-                    ),
-                )
-            ).alias("gram"),
-        )
+        t.select("source", F.explode(word_ngrams(F.col("toks"), _OVL_N)).alias("gram"))
         .distinct()
         # incidence list feeds sizes AND pair counts
     )
@@ -2420,16 +2371,9 @@ def q448_domain_affinity_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_documents(spark, sf_dir).select(
         "source", tokenize(F.col("text")).alias("toks")
     )
-    bg = d.select(
-        "source",
-        F.explode(
-            F.zip_with(
-                F.slice("toks", 1, F.size("toks") - 1),
-                F.slice("toks", 2, F.size("toks") - 1),
-                lambda h, n: F.struct(h.alias("head"), n.alias("nxt")),
-            )
-        ).alias("b"),
-    ).select("source", "b.head", "b.nxt")
+    bg = d.select("source", F.explode(word_pairs(F.col("toks"))).alias("b")).select(
+        "source", "b.head", "b.nxt"
+    )
     census = materialize(
         bg.groupBy("source", "head", "nxt")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -2557,16 +2501,8 @@ def q455_deleted_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select("doc_id", "source", tokenize(F.col("text")).alias("toks"))
     bg = d.select(
-        "doc_id",
-        "source",
-        F.explode(
-            F.zip_with(
-                F.slice("toks", 1, F.size("toks") - 1),
-                F.slice("toks", 2, F.size("toks") - 1),
-                lambda h, n: F.struct(h.alias("h"), n.alias("nxt")),
-            )
-        ).alias("b"),
-    ).select("doc_id", "source", "b.h", "b.nxt")
+        "doc_id", "source", F.explode(word_pairs(F.col("toks"))).alias("b")
+    ).select("doc_id", "source", F.col("b.head").alias("h"), "b.nxt")
     trb = (
         bg.filter(F.expr("CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT) % 2") == 0)
         .groupBy("h", "nxt")

@@ -41,7 +41,6 @@ from ooh_etl_spark.functions.html import (
     P_TEXT,
     TD_H4_TEXT,
     TD_TEXT,
-    WORK_SCHEDULES_PATTERN,
     cells_dict,
     concat_texts,
     extract_after_heading,
@@ -138,7 +137,7 @@ def _record_projection(app_id: str) -> tuple[Column, Column, list[Column]]:  # n
 
     columns = [
         title.alias("title"),
-        extract_after_heading(we, WORK_SCHEDULES_PATTERN, 3).alias("workSchedules"),
+        extract_after_heading(we).alias("workSchedules"),
         qualities_map(htb).alias("importantQualities"),
         _masked(qf("description"), title).alias("description"),
         # try_cast: ANSI mode is on (Spark 4 default) and a plain cast

@@ -43,8 +43,8 @@ def test_lang_id_on_real_samples(spark):
 
 
 def test_word_shingles_short_doc_fallback(spark):
-    assert one(spark, word_shingles(F.lit("a b"), 3)) == ["a b"]
-    assert one(spark, word_shingles(F.lit("a b c d"), 3)) == ["a b c", "b c d"]
+    assert one(spark, word_shingles(F.lit("a b"))) == ["a b"]
+    assert one(spark, word_shingles(F.lit("a b c d"))) == ["a b c", "b c d"]
 
 
 def test_simhash_identical_texts_equal(spark):
@@ -102,7 +102,7 @@ def test_simhash_pairs_near_dup_low_hamming(spark):
         ],
         "doc_id long, text string",
     )
-    pairs = {(r.id_a, r.id_b): r.hamming for r in simhash_pairs(df, "text", "doc_id", max_hamming=16).collect()}
+    pairs = {(r.id_a, r.id_b): r.hamming for r in simhash_pairs(df, "text", "doc_id").collect()}
     assert (1, 2) in pairs
 
 

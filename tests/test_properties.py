@@ -18,8 +18,11 @@ from pyspark.sql import functions as F
 from ooh_etl_spark.functions import html as H
 from ooh_etl_spark.functions.text import (
     DUCK_TOKENIZE,
+    ngram_starts,
     quality_score,
     tokenize,
+    word_ngrams,
+    word_pairs,
     word_shingles,
 )
 from tests import html_model as M
@@ -198,10 +201,34 @@ def test_extract_after_heading_null_or_nonempty(spark, texts):
         assert v is None or len(v) > 0  # group 3 is (.+): never ''
 
 
+@settings(max_examples=20, deadline=None)
+@given(st.lists(st.lists(st.text(alphabet="ab ", max_size=3), max_size=6), max_size=20))
+def test_word_ngram_builders_match_the_python_model(spark, token_lists):
+    # The empty list, one empty token and one token are always in the
+    # batch: they are where Spark's sequence(1, 0) counts down.
+    token_lists = [[], [""], ["a"], *token_lists]
+    df = spark.createDataFrame(list(enumerate(token_lists)), "i int, toks array<string>")
+    toks = F.col("toks")
+    cols = [word_pairs(toks).alias("pairs")]
+    for n in range(1, 5):
+        cols += [
+            ngram_starts(toks, n).alias(f"starts{n}"),
+            word_ngrams(toks, n).alias(f"int{n}"),
+            word_ngrams(toks, F.lit(n)).alias(f"col{n}"),
+        ]
+    rows = df.select("i", *cols).orderBy("i").collect()
+    for t, r in zip(token_lists, rows):
+        for n in range(1, 5):
+            model = [" ".join(t[i : i + n]) for i in range(len(t) - n + 1)]
+            assert r[f"starts{n}"] == list(range(1, len(t) - n + 2)), (t, n)
+            assert r[f"int{n}"] == model and r[f"col{n}"] == model, (t, n)
+        assert [(p.head, p.nxt) for p in r.pairs] == list(zip(t, t[1:])), t
+
+
 @settings(max_examples=30, deadline=None)
 @given(st.lists(st.text(alphabet="ab c", min_size=1, max_size=60), min_size=1, max_size=50))
 def test_shingles_never_empty_and_distinct(spark, texts):
-    for sh in run_batch(spark, texts, lambda c: word_shingles(c, 3)):
+    for sh in run_batch(spark, texts, word_shingles):
         assert len(sh) >= 1
         assert len(sh) == len(set(sh))
 

@@ -5,6 +5,8 @@ Runs at sf0.001 for speed; tools/check_oracle.py covers sf0.01.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from ooh_etl_spark.queries import QUERIES
@@ -46,6 +48,108 @@ _GATE_ORACLE = {
 )
 def test_query_matches_oracle(spark, duck, name):
     assert_matches_oracle(spark, duck, name)
+
+
+#: Documents too short for a word bigram, one of them empty. Spark's
+#: ``sequence(1, 0)`` counts down to ``[1, 0]`` where DuckDB's
+#: ``generate_series(1, 0)`` is empty, and DuckDB divides by zero to NULL
+#: where ANSI Spark raises.
+_SHORT_DOCS = [(500, "hello"), (501, ""), (502, "data")]
+
+#: Every query built on the word n-gram builders of functions/text.py
+#: (word_ngrams, word_pairs, ngram_starts and the shingles built on
+#: them), then the four that divide by a text's length.
+_SHORT_DOC_QUERIES = [
+    # word_ngrams
+    "q80_repetition_stats",
+    "q81_decontamination",
+    "q94_vocab_growth",
+    "q152_dup_ngram_spans",
+    "q153_dsir_importance",
+    "q163_dup_span_removal",
+    "q306_bleu_pairs",
+    "q392_source_overlap_matrix",
+    "q422_bigram_novelty_profile",
+    "q428_rouge2_pair_overlap",
+    "q438_wimbd_ngram_census",
+    "q441_source_overlap_matrix",
+    "q442_softdedup_weights",
+    "q444_bloom_decontaminate",
+    "q473_decon_order_curve",
+    "q475_bloom_sizing_advisor",
+    "q479_corpus_build_funnel",
+    "q480_gopher_repetition_census",
+    "q481_funnel_stage_overlap",
+    # word_pairs
+    "q160_bigram_lm",
+    "q338_kneser_ney_bigram",
+    "q367_textrank_keywords",
+    "q448_domain_affinity_matrix",
+    "q455_deleted_interpolation",
+    # ngram_starts
+    "q215_bpe_merge_round",
+    # word shingles
+    "q27_jaccard_pairs",
+    "q27b_jaccard_pairs_funnel",
+    "q28_minhash_pairs",
+    "q49_dup_clusters",
+    "q73_jaccard_prefix_filter",
+    "q162_corpus_build",
+    "q253_crosslingual_dupes",
+    "q257_dup_cluster_sizes",
+    "q268_containment_pairs",
+    "q345_dedup_threshold_sweep",
+    "q350_incremental_dedup",
+    "q423_split_leakage_audit",
+    "q423b_split_leakage_audit_funnel",
+    "q426_cluster_representatives",
+    "q427_minhash_calibration",
+    "q431_shingle_containment",
+    "q451_lsh_scurve_recall",
+    "q457_stop_shingle_ablation",
+    # division by the text length
+    "q23_doc_quality",
+    "q206_quality_yield_curve",
+    "q138_weighted_sample",
+    "q238_grouped_weighted_sample",
+]
+
+
+@pytest.fixture(scope="module")
+def short_doc_corpus(tmp_path_factory):
+    """sf0.001 with :data:`_SHORT_DOCS` appended to its documents, and a
+    DuckDB connection over it."""
+    import duckdb
+    import pandas as pd
+
+    from ooh_etl_spark.tables import TABLE_NAMES
+
+    d = tmp_path_factory.mktemp("short_docs")
+    for t in TABLE_NAMES:
+        if t != "documents":
+            os.symlink(f"{SF_DIR}/{t}.parquet", d / f"{t}.parquet")
+    docs = pd.read_parquet(f"{SF_DIR}/documents.parquet")
+    extra = pd.DataFrame(
+        [(i, text, "en", "src0", len(text)) for i, text in _SHORT_DOCS],
+        columns=docs.columns,
+    )
+    pd.concat([docs, extra], ignore_index=True).astype(docs.dtypes.to_dict()).to_parquet(
+        d / "documents.parquet", index=False
+    )
+    con = duckdb.connect()
+    for t in TABLE_NAMES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{d}/{t}.parquet')")
+    yield str(d), con
+    con.close()
+
+
+@pytest.mark.parametrize("name", _SHORT_DOC_QUERIES)
+def test_short_documents_match_oracle(spark, short_doc_corpus, name):
+    from tools.check_oracle import compare
+
+    sf_dir, con = short_doc_corpus
+    msg = compare(spark, con, name, sf_dir)
+    assert msg is None, f"{name}: {msg}"
 
 
 def test_driver_window_is_exactly_50():

@@ -224,8 +224,9 @@ def test_package_code_is_reached():
     name from a root: a registered query, a statement that runs at
     import, ``__spark_entry__.py``, ``bench.py``, ``perfbench/`` or
     ``tools/``. Every defaulted parameter of a top-level function is
-    passed by some call outside ``tests/``: a default that no caller
-    overrides is a constant. Tests are not callers, so code that only a
+    set by some call outside ``tests/``: a default that no caller
+    overrides is a constant, and passing the default itself, written
+    out, overrides nothing. Tests are not callers, so code that only a
     test reaches, such as a reference model, lives in ``tests/``."""
     roots = ("__spark_entry__.py", "bench.py", "perfbench", "tools")
     exempt_files = {
@@ -278,18 +279,23 @@ def test_package_code_is_reached():
         if rel in exempt_files or not isinstance(fn, ast.FunctionDef):
             continue
         positional = fn.args.posonlyargs + fn.args.args
+        first = len(positional) - len(fn.args.defaults)
         defaulted = [
-            (p.arg, i) for i, p in enumerate(positional) if i >= len(positional) - len(fn.args.defaults)
-        ] + [(p.arg, None) for p, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults) if d is not None]
-        for param, i in defaulted:
+            (p.arg, i, fn.args.defaults[i - first]) for i, p in enumerate(positional) if i >= first
+        ] + [(p.arg, None, d) for p, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults) if d is not None]
+        for param, i, default in defaulted:
             if (name, param) in exempt_params:
                 continue
+
+            def sets(value) -> bool:
+                return ast.dump(value) != ast.dump(default)
+
             if not any(
                 getattr(c.func, "id", getattr(c.func, "attr", None)) == name
                 and (
-                    any(k.arg in (param, None) for k in c.keywords)
+                    any(k.arg is None or k.arg == param and sets(k.value) for k in c.keywords)
                     or any(isinstance(a, ast.Starred) for a in c.args)
-                    or i is not None and len(c.args) > i
+                    or i is not None and len(c.args) > i and sets(c.args[i])
                 )
                 for c in calls
             ):
@@ -297,5 +303,23 @@ def test_package_code_is_reached():
 
     assert not unreached and not never_passed, (
         f"reached only from tests, if at all; delete or move into tests/: {unreached}; "
-        f"no caller outside tests/ passes these; make them constants: {never_passed}"
+        f"no caller outside tests/ sets these; make them constants: {never_passed}"
     )
+
+
+def test_gram_index_lists_are_built_in_one_module():
+    """Spark's ``sequence(1, 0)`` counts down to ``[1, 0]`` where
+    DuckDB's ``generate_series(1, 0)`` is empty, so a start-index list
+    bounded by an array's size indexes past a document shorter than the
+    window. ``functions/text.ngram_starts`` is the guarded builder;
+    every other such ``sequence`` in the package is an offender."""
+    pattern = re.compile(r"sequence\(\s*(F\.lit\()?[01]\)?,\s*(F\.)?size\(")
+    offenders = []
+    for path in sorted(glob.glob(f"{REPO}/ooh_etl_spark/**/*.py", recursive=True)):
+        rel = os.path.relpath(path, REPO)
+        if rel == os.path.join("ooh_etl_spark", "functions", "text.py"):
+            continue
+        with open(path) as f:
+            src = f.read()
+        offenders += [f"{rel}:{src.count(chr(10), 0, m.start()) + 1}" for m in pattern.finditer(src)]
+    assert not offenders, f"build gram start positions with functions.text.ngram_starts: {offenders}"

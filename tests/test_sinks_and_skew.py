@@ -31,7 +31,7 @@ def test_salted_join_matches_plain_join(spark):
         F.col("o_orderkey").alias("k"), "o_orderpriority"
     )
     plain = li.join(orders, "k").groupBy("o_orderpriority").count()
-    salted = salted_join(li, orders, "k", salt=4).groupBy("o_orderpriority").count()
+    salted = salted_join(li, orders, "k").groupBy("o_orderpriority").count()
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
 
 

@@ -43,7 +43,7 @@ def main() -> None:
         "  census, q194 DBSCAN symmetrization, q173/q255 degree census,",
         "  q185/kcore endpoint census, q191 symmetrization, q176 SCD2",
         "  closed+opened rows, q306 uni+bigram extraction, graph.py",
-        "  `symmetrize` (connected_components / k_core / pagerank).",
+        "  `symmetrize` (connected_components / k_core).",
         "- FIXED via `localCheckpoint` on a genuinely multi-consumed,",
         "  bounded intermediate: q194 neighbor set (was 41 parquet scans",
         "  for 1 logical scan), q173 edge list + oriented edges, q191",
@@ -68,9 +68,9 @@ def main() -> None:
         "- OK by design (branches read DIFFERENT data): q109/q177 IVM",
         "  base+delta partials, validation_ops rule census (5 distinct",
         "  filtered scans), q12's set-op semantics post-checkpoint,",
-        "  linkage pass_pairs b1/b2 (two blocking passes), sssp",
-        "  relax+dist union (different parents), sketch_ops est_row",
-        "  (1-row frames), merge_upsert (batch-sized update side).\n",
+        "  linkage pass_pairs b1/b2 (two blocking passes), sketch_ops",
+        "  est_row (1-row frames), merge_upsert (batch-sized update",
+        "  side).\n",
         "Plan tests pin the fixed shapes (`tests/test_plans.py`:",
         "q296 single join subtree, q304 shuffle budget, q312 no data",
         "scan in the planning window).\n",
