@@ -26,7 +26,7 @@ from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import parallelize_rows
 
 
-def _shingle_sets(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+def shingle_sets(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id, sh) with the token array materialized in its own projection
     so the shingle lambda does not re-evaluate the tokenizing split per
     element (see word_shingles_from_tokens)."""
@@ -96,7 +96,7 @@ def jaccard_pairs(
     # (an earlier revision re-derived per-doc sizes from the posting
     # lists and joined them back, leaving exchange reuse to the
     # planner; PLANS.md showed the subtree tripled instead).
-    sh = _shingle_sets(df, text_col, id_col).withColumn("sz", F.size("sh"))
+    sh = shingle_sets(df, text_col, id_col).withColumn("sz", F.size("sh"))
     # explode_OUTER, not explode: InferFiltersFromGenerate turns plain
     # explode into a `size(sh)>0 AND sh IS NOT NULL` filter that
     # Catalyst pushes below the repartition exchange — re-evaluating
@@ -196,7 +196,7 @@ def jaccard_pairs_prefix(df: DataFrame, text_col: str, id_col: str) -> DataFrame
     # itself feeds the frequency table AND the prefix ranking) and both
     # verification sides — the shingling pass ran 4x otherwise.
     sh = materialize(
-        _shingle_sets(df, text_col, id_col)
+        shingle_sets(df, text_col, id_col)
         .withColumn("sz", F.size("sh"))
     )
     inv = sh.select("id", "sz", F.explode_outer("sh").alias("shingle"))
@@ -254,7 +254,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     when shingle frequency explodes."""
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
-    sh = _shingle_sets(df, text_col, id_col)
+    sh = shingle_sets(df, text_col, id_col)
     tf = HashingTF(
         inputCol="sh", outputCol="features", numFeatures=1 << 18, binary=True
     )

@@ -1,4 +1,5 @@
-"""Similarity search over embedding columns (ArrayType(FloatType)).
+"""Similarity search over embedding columns (ArrayType(FloatType)), and
+the one home of the package's double-precision vector arithmetic.
 
 BASELINE.json:6 mandates ANN over embeddings. Two tiers:
 
@@ -9,18 +10,28 @@ BASELINE.json:6 mandates ANN over embeddings. Two tiers:
 - ``lsh_ann_pairs``: BucketedRandomProjectionLSH bucket join — the
   scale path when BOTH sides are large (corpus×corpus linkage).
 
-Dot products run in double precision (float arrays are upcast) so
-scores are stable and match the DuckDB oracle.
+The fold contract. ``dot``, ``sq_dist`` and ``l2_norm`` are left folds
+that start from the double 0.0 and add one element term at a time in
+array order — the order of DuckDB's ``list_dot_product`` and of the
+oracles' ``list_aggregate(..., 'sum')``. Floating-point addition is not
+associative, so that order is what makes an e6-quantized cosine and its
+id tie-break come out identical in both engines. Float arrays widen to
+double with the plain ``cast("array<double>")`` (a codegen ``Cast``, no
+lambda) before any fold whose terms must be double products: float→
+double is exact, so the widened terms are the oracle's ``::DOUBLE[]``
+terms. ``zip_with`` pads the shorter array with NULL, so arrays of
+unequal length give NULL, as does any NULL element.
+
+Every such fold in the package calls these builders, and
+``tests/test_repo_hygiene.py::test_vector_folds_live_in_one_module``
+fails on a hand-written copy anywhere else: one spelling of the order
+to keep right, and one site for a lambda-free rewrite to replace.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def _to_double(v: Column) -> Column:
-    return F.transform(v, lambda x: x.cast("double"))
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -31,12 +42,21 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
+def sq_dist(a: Column, b: Column) -> Column:
+    """Squared euclidean distance ``sum((a_i - b_i)^2)``."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
 def l2_norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
 def cosine(a: Column, b: Column) -> Column:
-    ad, bd = _to_double(a), _to_double(b)
+    ad, bd = a.cast("array<double>"), b.cast("array<double>")
     return dot(ad, bd) / (l2_norm(ad) * l2_norm(bd))
 
 
@@ -62,29 +82,20 @@ def knn_brute_force(
     q = F.broadcast(
         queries.select(
             F.col("vec_id").alias("query_id"),
-            _to_double(F.col("embedding")).alias("q_vec"),
-        ).withColumn(
-            "qn",
-            F.expr("sqrt(aggregate(q_vec, CAST(0 AS DOUBLE),"
-                   " (acc, x) -> acc + x * x))"),
-        )
+            F.col("embedding").cast("array<double>").alias("q_vec"),
+        ).withColumn("qn", l2_norm(F.col("q_vec")))
     )
     from ooh_etl_spark.tables import parallelize_rows
 
     c = parallelize_rows(corpus).select(
         F.col("vec_id").alias("neighbor_id"),
-        _to_double(F.col("embedding")).alias("c_vec"),
-    ).withColumn(
-        "cn",
-        F.expr("sqrt(aggregate(c_vec, CAST(0 AS DOUBLE),"
-               " (acc, x) -> acc + x * x))"),
-    )
+        F.col("embedding").cast("array<double>").alias("c_vec"),
+    ).withColumn("cn", l2_norm(F.col("c_vec")))
     scored = (
         c.join(q, F.col("query_id") != F.col("neighbor_id"))
         .withColumn(
             "cos",
-            F.expr("aggregate(zip_with(q_vec, c_vec, (x, y) -> x * y),"
-                   " CAST(0 AS DOUBLE), (acc, v) -> acc + v) / (qn * cn)"),
+            dot(F.col("q_vec"), F.col("c_vec")) / (F.col("qn") * F.col("cn")),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -112,7 +123,8 @@ def lsh_ann_pairs(
     from pyspark.ml.functions import array_to_vector
 
     prep = lambda df, label: df.select(  # noqa: E731
-        F.col("vec_id").alias(label), array_to_vector(_to_double(F.col("embedding"))).alias("v")
+        F.col("vec_id").alias(label),
+        array_to_vector(F.col("embedding").cast("array<double>")).alias("v"),
     )
     brp = BucketedRandomProjectionLSH(
         inputCol="v", outputCol="h", bucketLength=2.0, numHashTables=4, seed=42,

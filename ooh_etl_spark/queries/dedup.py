@@ -16,12 +16,13 @@ from ooh_etl_spark.functions.text import (
     word_shingles_from_tokens,
 )
 from ooh_etl_spark.operators.dedup import (
-    _shingle_sets,
     exact_dedup,
     jaccard_pairs,
     minhash_lsh_pairs,
+    shingle_sets,
     simhash_pairs,
 )
+from ooh_etl_spark.operators.similarity import dot, sq_dist
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_documents, load_table
@@ -213,7 +214,6 @@ def _semdedup(
     with cosine >= threshold (the q26 min-id survivor rule). The
     cluster id is the only pairwise shuffle key, so candidate volume is
     per-cluster-quadratic, never corpus-quadratic."""
-    from ooh_etl_spark.operators.similarity import dot
     from ooh_etl_spark.tables import parallelize_rows
 
     emb = parallelize_rows(load_table(spark, sf_dir, "embeddings"))
@@ -246,19 +246,14 @@ def _semdedup(
     # collect_list's arrival order, preserving the oracle's
     # row_number ORDER BY dist, cid semantics exactly.
     cagg = c.agg(F.collect_list(F.struct("cid", "ce")).alias("cents"))
-    sq = lambda cent: F.aggregate(
-        F.zip_with(F.col("e"), cent["ce"], lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda s, x: s + x,
-    )
     # Distances materialize once per centroid (transform), then the
-    # argmin folds over scored structs — the sq() fold would otherwise
+    # argmin folds over scored structs — the sq_dist fold would otherwise
     # re-evaluate per comparison branch (no CSE inside lambdas).
     argmin = F.aggregate(
         F.transform(
             "cents",
             lambda cent: F.struct(
-                sq(cent).alias("dist"), cent["cid"].alias("cid")
+                sq_dist(F.col("e"), cent["ce"]).alias("dist"), cent["cid"].alias("cid")
             ),
         ),
         F.struct(
@@ -712,7 +707,6 @@ def q291_suffix_lcp_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     payloads are clipped to {_SUF_CHARS} chars so the shuffle carries
     O(corpus tokens x {_SUF_CHARS}) bytes, not O(doc^2).
     """
-    from ooh_etl_spark.functions.text import tokenize
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
@@ -886,8 +880,6 @@ def q345_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep adds a broadcast grid join over the pair table only) — the
     whole point: tuning the threshold costs one extra bounded pass,
     not one dedup run per candidate value."""
-    from ooh_etl_spark.operators.dedup import jaccard_pairs
-
     docs = load_table(spark, sf_dir, "documents")
     # threshold=0.0 keeps every candidate pair (>=1 shared shingle)
     pairs = materialize(
@@ -1953,8 +1945,6 @@ def q425_bow_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode."""
     from pyspark.sql import Window
 
-    from ooh_etl_spark.functions.text import tokenize
-
     docs = load_table(spark, sf_dir, "documents")
     toks = tokenize(F.col("text"))
     base = docs.select(
@@ -2942,12 +2932,12 @@ def q456_semdedup_k_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     cagg = c.agg(F.collect_list(F.struct("cid", "ce")).alias("cents"))
     ds = v.crossJoin(F.broadcast(cagg)).select(
         "vec_id",
-        F.expr(
-            "transform(cents, c -> named_struct("
-            " 'cid', c.cid,"
-            " 'd2', CAST(round(1000000 * aggregate("
-            "   zip_with(e, c.ce, (x, y) -> (x - y) * (x - y)),"
-            "   CAST(0 AS DOUBLE), (a, t) -> a + t)) AS BIGINT)))"
+        F.transform(
+            "cents",
+            lambda c: F.struct(
+                c["cid"].alias("cid"),
+                F.round(1000000 * sq_dist(F.col("e"), c["ce"])).cast("bigint").alias("d2"),
+            ),
         ).alias("ds"),
     )
     rows = ds.select(
@@ -3064,7 +3054,7 @@ def q457_stop_shingle_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
     so its pair expansion is bounded by the true-dup population, not
     the corpus."""
     docs = load_table(spark, sf_dir, "documents")
-    sh = _shingle_sets(docs, "text", "doc_id")
+    sh = shingle_sets(docs, "text", "doc_id")
     inv = sh.select(F.col("id"), F.explode_outer("sh").alias("shingle"))
     dft = inv.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     caps = spark.createDataFrame(
@@ -3224,17 +3214,19 @@ def q458_ivf_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     panels = pa.agg(F.collect_list(F.struct("cid", "ce")).alias("pa")).crossJoin(
         pb.agg(F.collect_list(F.struct("cid", "ce")).alias("pb"))
     )
-    argmin = (
-        "array_min(transform({panel}, c -> named_struct("
-        " 'd2', CAST(round(1000000 * aggregate("
-        "   zip_with(e, c.ce, (x, y) -> (x - y) * (x - y)),"
-        "   CAST(0 AS DOUBLE), (a, t) -> a + t)) AS BIGINT),"
-        " 'cid', c.cid))).cid"
-    )
+    def argmin(panel: str):
+        return F.array_min(
+            F.transform(
+                panel,
+                lambda c: F.struct(
+                    F.round(1000000 * sq_dist(F.col("e"), c["ce"])).cast("bigint").alias("d2"),
+                    c["cid"].alias("cid"),
+                ),
+            )
+        )["cid"]
+
     j = v.crossJoin(F.broadcast(panels)).select(
-        "vec_id",
-        F.expr(argmin.format(panel="pa")).alias("cell_old"),
-        F.expr(argmin.format(panel="pb")).alias("cell_new"),
+        "vec_id", argmin("pa").alias("cell_old"), argmin("pb").alias("cell_new")
     )
     return (
         j.groupBy("cell_old")
@@ -3308,8 +3300,6 @@ def q463_splice_boundary_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     would re-run the tokenize scan on both sides — the q296
     multi-consumer class); the pair count is a product of the two
     census columns. The quadratic object stays arithmetic."""
-    from ooh_etl_spark.functions.text import tokenize
-
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokenize(F.col("text")).alias("toks")).filter(
         F.size("toks") >= _SPLICE_K
@@ -3374,8 +3364,6 @@ def _bow_digest() -> "F.Column":
     """Bag-of-words content fingerprint: md5 of the sorted distinct
     token set — canonical under token re-ordering (mirror/template
     detection, the rung above q450's whitespace/alnum ladder)."""
-    from ooh_etl_spark.functions.text import tokenize
-
     return F.md5(
         F.array_join(F.array_sort(F.array_distinct(tokenize(F.col("text")))), " ")
     )
@@ -3767,12 +3755,14 @@ def q477_prototypicality_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     cagg = c.agg(F.collect_list(F.struct("cid", "ce")).alias("cents"))
     asn = v.crossJoin(F.broadcast(cagg)).select(
         "label",
-        F.expr(
-            "array_min(transform(cents, c -> named_struct("
-            " 'd2', CAST(round(1000000 * aggregate("
-            "   zip_with(e, c.ce, (x, y) -> (x - y) * (x - y)),"
-            "   CAST(0 AS DOUBLE), (a, t) -> a + t)) AS BIGINT),"
-            " 'cid', c.cid)))"
+        F.array_min(
+            F.transform(
+                "cents",
+                lambda c: F.struct(
+                    F.round(1000000 * sq_dist(F.col("e"), c["ce"])).cast("bigint").alias("d2"),
+                    c["cid"].alias("cid"),
+                ),
+            )
         ).alias("a"),
     ).select(
         "label",

@@ -1835,8 +1835,6 @@ def q467_state_ttl_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user) — the same key the state store shards on, so the window
     never concentrates; the TTL grid joins the |users|-row gap census,
     not the event stream; the global max-ts is a broadcast scalar."""
-    from pyspark.sql import Window
-
     ev = load_table(spark, sf_dir, "events")
     # ts may arrive as TIMESTAMP_NTZ (fixture encoding); unix_micros
     # requires TIMESTAMP — session TZ is pinned UTC so the cast is exact.

@@ -1101,7 +1101,6 @@ def q227_quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFram
     q = per_user.groupBy("arm").agg(
         *[disc(i).alias(f"p{i}") for i in range(1, 10)]
     )
-    import itertools
 
     long = q.selectExpr(
         "arm",

@@ -85,8 +85,6 @@ def flagship_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     null-safe EXISTS filter (F1, pushed below the repartition into the
     scan), and a format_string report line (K1). This is `entry()`'s
     query — the driver smoke check."""
-    from ooh_etl_spark.tables import parallelize_rows
-
     docs = load_documents(spark, sf_dir)
     wc = word_count_map(F.col("text"))
     df = docs.withColumn("wc", wc)

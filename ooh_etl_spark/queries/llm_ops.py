@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ooh_etl_spark.functions.text import DUCK_TOKENIZE, ngram_starts, tokenize
+from ooh_etl_spark.operators.similarity import l2_norm
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_documents, load_table, parallelize_rows
@@ -180,11 +181,8 @@ def q77_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonicalizes through pandas, which cannot sort/hash list cells,
     so oracle-bearing queries never expose top-level arrays."""
     emb = parallelize_rows(load_table(spark, sf_dir, "embeddings"))
-    e = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    dot = F.aggregate(
-        F.zip_with(e, e, lambda a, b: a * b), F.lit(0.0), lambda s, x: s + x
-    )
-    norm = F.sqrt(dot)
+    e = F.col("embedding").cast("array<double>")
+    norm = l2_norm(e)
     return emb.select(
         "vec_id",
         F.round(norm, 4).alias("l2_norm"),
@@ -778,8 +776,6 @@ def q217_unigram_viterbi(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force enumeration on short words plus coverage/score
     invariants on all.
     """
-    from collections import Counter
-
     docs = load_table(spark, sf_dir, "documents")
     words = (
         docs.select(F.explode(F.split(F.lower("text"), r"\s+")).alias("word"))
@@ -962,7 +958,6 @@ def q359_length_bucket_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     q281's pattern — which avoids the global sort while preserving
     the waste profile); per-batch stats are combinable aggregates."""
     docs = load_table(spark, sf_dir, "documents")
-    from ooh_etl_spark.functions.text import tokenize
 
     d = materialize(docs.select(
         "doc_id", F.size(tokenize(F.col("text"))).alias("n_toks")

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ooh_etl_spark.functions.text import DUCK_TOKENIZE
+from ooh_etl_spark.operators.similarity import dot, sq_dist
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_documents, load_table, parallelize_rows
@@ -59,12 +60,7 @@ def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").cast("array<double>").alias("e"),
         (F.col("label") % 2).cast("bigint").alias("y"),
     )
-    z = F.aggregate(
-        F.zip_with("e", w, lambda x, wx: x * wx),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return v.withColumn("p", 1.0 / (1.0 + F.exp(-z)))
+    return v.withColumn("p", 1.0 / (1.0 + F.exp(-dot(F.col("e"), w))))
 
 
 _DUCK_SCORED = f"""
@@ -206,13 +202,8 @@ def q169_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("e").alias("eb"),
         F.col("pj").alias("pb"),
     )
-    sqsum = lambda xa, xb: F.aggregate(  # noqa: E731
-        F.zip_with(xa, xb, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    d2o = sqsum("ea", "eb")
-    d2p = sqsum("pa", "pb") / float(_JL_K)
+    d2o = sq_dist(F.col("ea"), F.col("eb"))
+    d2p = sq_dist(F.col("pa"), F.col("pb")) / float(_JL_K)
     return (
         a.join(F.broadcast(b), F.col("vec_a") < F.col("vec_b"))
         .select(
@@ -316,7 +307,6 @@ def q187_naive_bayes_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     ct = tok.groupBy("lang", "token").agg(F.count(F.lit(1)).alias("cnt"))
     nl = tok.groupBy("lang").agg(F.count(F.lit(1)).alias("n_l"))
     v = tok.agg(F.countDistinct("token").alias("v"))
-    from pyspark.sql import Window
 
     ll = (
         ct.join(F.broadcast(nl), "lang")
@@ -544,7 +534,6 @@ def q196_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     score = first embedding component, float32->double widened
     exactly in both engines before quantization."""
     emb = load_table(spark, sf_dir, "embeddings")
-    from pyspark.sql import Window
 
     scored = emb.select(
         (F.col("label") % 2).alias("y"),
@@ -638,19 +627,17 @@ def q205_knn_shapley(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale path is an IVF/LSH prefilter (q31/q53) bounding each
     query's candidate set before exact valuation."""
     emb = load_table(spark, sf_dir, "embeddings")
-    from ooh_etl_spark.operators.similarity import _to_double, dot
-
     q = F.broadcast(
         emb.filter(F.col("vec_id") < 5).select(
             F.col("vec_id").alias("query_id"),
             F.col("label").alias("qy"),
-            _to_double(F.col("embedding")).alias("qv"),
+            F.col("embedding").cast("array<double>").alias("qv"),
         )
     )
     c = emb.select(
         "vec_id",
         F.col("label").alias("cy"),
-        _to_double(F.col("embedding")).alias("cv"),
+        F.col("embedding").cast("array<double>").alias("cv"),
     )
     d = (
         c.crossJoin(q)
@@ -1837,15 +1824,12 @@ def q343_bcubed_cluster_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("cid"), F.col("e").alias("ce")
     )
     cagg = cents.agg(F.collect_list(F.struct("cid", "ce")).alias("cents"))
-    sq = lambda cent: F.aggregate(
-        F.zip_with(F.col("e"), cent["ce"], lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda s, x: s + x,
-    )
     argmin = F.aggregate(
         F.transform(
             "cents",
-            lambda cent: F.struct(sq(cent).alias("dist"), cent["cid"].alias("cid")),
+            lambda cent: F.struct(
+                sq_dist(F.col("e"), cent["ce"]).alias("dist"), cent["cid"].alias("cid")
+            ),
         ),
         F.struct(
             F.lit(float("inf")).alias("dist"),
@@ -2608,11 +2592,8 @@ def q396_ledoit_wolf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("gfrob2"),
     )
-    norm2 = F.aggregate(
-        F.transform(F.col("embedding"), lambda x: x.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x * x,
-    )
+    e = F.col("embedding").cast("array<double>")
+    norm2 = dot(e, e)
     r4 = emb.agg(
         F.sum(F.round(F.pow(norm2, 2) * 1000).cast("bigint"))
         .cast("bigint")

@@ -532,8 +532,6 @@ def q433_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Bigrams come from one posexplode of the token array, kept only
     where ``i < size(toks) - 1`` so a position pairs with a successor:
     0- and 1-token docs yield no bigram rather than a bogus one."""
-    from ooh_etl_spark.functions.text import tokenize
-
     docs = load_table(spark, sf_dir, "documents")
     toks = tokenize(F.col("text"))
     d = docs.select("doc_id", "source", toks.alias("toks"))
@@ -664,8 +662,6 @@ def q435_token_budget_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: identical to q164 — one map-side-combined per-source
     token census, a 2-value broadcast total, and the allocation math
     runs on the |sources|-row table."""
-    from ooh_etl_spark.functions.text import tokenize
-
     docs = load_table(spark, sf_dir, "documents")
     s = materialize(
         docs.select("source", F.size(tokenize(F.col("text"))).alias("n"))

@@ -1343,7 +1343,6 @@ def q179_collation_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("category"),
         "p_retailprice",
     )
-    from ooh_etl_spark.functions.money import cents_sum
 
     return (
         messy.groupBy(F.collate(F.col("category"), "UTF8_LCASE").alias("k"))
@@ -1475,7 +1474,6 @@ def q190_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("p_retailprice") * 100).cast("bigint").alias("price_c"),
         F.col("p_size").alias("sz"),
     ).agg(F.count(F.lit(1)).alias("support"))
-    from pyspark.sql import Window
 
     w = Window.orderBy("price_c", "sz").rowsBetween(Window.unboundedPreceding, -1)
     return (

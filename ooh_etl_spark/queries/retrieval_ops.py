@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ooh_etl_spark.functions.text import DUCK_TOKENIZE, tokenize
+from ooh_etl_spark.operators.similarity import cosine, dot, l2_norm, sq_dist
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_documents, load_table, parallelize_rows
@@ -108,7 +109,6 @@ def q158_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     q53's IVF cells at scale); the fusion itself joins two K-row rank
     lists — driver-trivial, broadcast either side. No score
     calibration step, which is the whole point of RRF."""
-    from ooh_etl_spark.operators.similarity import cosine
 
     docs = load_documents(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
@@ -258,11 +258,7 @@ def q159_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("s").alias("cs"),
         F.col("sub").alias("csub"),
     )
-    dist = F.aggregate(
-        F.zip_with("sub", "csub", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dist = sq_dist(F.col("sub"), F.col("csub"))
     # argmin as min(struct(dist, code_id)): lexicographic struct min ==
     # (min dist, tie -> min code_id), identical to the oracle's
     # row_number ORDER BY dist, code_id — but map-side combinable, so
@@ -452,9 +448,6 @@ def q334_mutual_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = emb.filter(F.col("vec_id") % 2 == 1).select(
         F.col("vec_id").alias("idb"), F.col("v").alias("vb")
     )
-    d = lambda x, y: F.aggregate(
-        F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda s, z: s + z
-    )
     s = materialize(
         a.crossJoin(b)
         .select(
@@ -462,11 +455,8 @@ def q334_mutual_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "idb",
             F.round(
                 1000000.0
-                * d(F.col("va"), F.col("vb"))
-                / (
-                    F.sqrt(d(F.col("va"), F.col("va")))
-                    * F.sqrt(d(F.col("vb"), F.col("vb")))
-                )
+                * dot(F.col("va"), F.col("vb"))
+                / (l2_norm(F.col("va")) * l2_norm(F.col("vb")))
             )
             .cast("bigint")
             .alias("cos_e6"),
@@ -648,9 +638,6 @@ def q334b_mutual_nn_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = keyed.filter(F.col("vec_id") % 2 == 1).select(
         F.col("vec_id").alias("idb"), F.col("v").alias("vb"), "band", "bkt"
     )
-    d = lambda x, y: F.aggregate(  # noqa: E731
-        F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda s, z: s + z
-    )
     cand = materialize(
         a.join(b, ["band", "bkt"])
         .select(
@@ -658,11 +645,8 @@ def q334b_mutual_nn_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             "idb",
             F.round(
                 1000000.0
-                * d(F.col("va"), F.col("vb"))
-                / (
-                    F.sqrt(d(F.col("va"), F.col("va")))
-                    * F.sqrt(d(F.col("vb"), F.col("vb")))
-                )
+                * dot(F.col("va"), F.col("vb"))
+                / (l2_norm(F.col("va")) * l2_norm(F.col("vb")))
             )
             .cast("bigint")
             .alias("cos_e6"),
@@ -838,9 +822,6 @@ def q341_srp_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     va = emb.select(F.col("vec_id").alias("id_a"), F.col("e").alias("ea"))
     vb = emb.select(F.col("vec_id").alias("id_b"), F.col("e").alias("eb"))
-    dot = lambda x, y: F.aggregate(
-        F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda s, z: s + z
-    )
     return (
         cand.join(va, "id_a")
         .join(vb, "id_b")
@@ -851,10 +832,7 @@ def q341_srp_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(
                 1000000.0
                 * dot(F.col("ea"), F.col("eb"))
-                / (
-                    F.sqrt(dot(F.col("ea"), F.col("ea")))
-                    * F.sqrt(dot(F.col("eb"), F.col("eb")))
-                )
+                / (l2_norm(F.col("ea")) * l2_norm(F.col("eb")))
             )
             .cast("bigint")
             .alias("cos_e6"),
@@ -931,9 +909,6 @@ def q342_colbert_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = emb.filter(F.col("doc") >= _MV_NQ).select(
         F.col("doc").alias("cdoc"), F.col("e").alias("ce")
     )
-    dot = lambda x, y: F.aggregate(
-        F.zip_with(x, y, lambda p, r: p * r), F.lit(0.0), lambda s, z: s + z
-    )
     s = (
         c.crossJoin(F.broadcast(q))
         .select(
@@ -943,10 +918,7 @@ def q342_colbert_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(
                 1000000.0
                 * dot(F.col("qe"), F.col("ce"))
-                / (
-                    F.sqrt(dot(F.col("qe"), F.col("qe")))
-                    * F.sqrt(dot(F.col("ce"), F.col("ce")))
-                )
+                / (l2_norm(F.col("qe")) * l2_norm(F.col("ce")))
             )
             .cast("bigint")
             .alias("cos_e6"),
@@ -1049,7 +1021,6 @@ def q375_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     POOL-BOUNDED candidate table — K steps x pool-size cosine
     evaluations, a q322-style bounded parameter-server pattern whose
     driver state is K vectors (the selected set), never the corpus."""
-    from ooh_etl_spark.operators.similarity import cosine  # noqa: PLC0415
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select(
@@ -1179,7 +1150,6 @@ def q403_expected_reciprocal_rank(spark: SparkSession, sf_dir: str) -> DataFrame
     100 TB shape: one broadcast-query cosine pass + a top-K
     TakeOrdered (ANN-cell prunable at scale, q53); everything after
     is K-row window arithmetic."""
-    from ooh_etl_spark.operators.similarity import cosine
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == _ERR_QVEC).select(
@@ -1466,11 +1436,7 @@ def q446_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("s").alias("cs"),
         F.col("sub").alias("csub"),
     )
-    d2 = F.aggregate(
-        F.zip_with("sub", "csub", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    d2 = sq_dist(F.col("sub"), F.col("csub"))
     codes = (
         subs.join(F.broadcast(cb), F.col("s") == F.col("cs"))
         .withColumn("d", d2)
@@ -1509,14 +1475,7 @@ def q446_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "qid",
             "vec_id",
-            F.round(
-                F.aggregate(
-                    F.zip_with("qe", "e", lambda x, y: (x - y) * (x - y)),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                * 1000000000
-            )
+            F.round(sq_dist(F.col("qe"), F.col("e")) * 1000000000)
             .cast("bigint")
             .alias("d_nano"),
         )

@@ -5,7 +5,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ooh_etl_spark.operators.similarity import cosine, knn_brute_force, lsh_ann_pairs
+from ooh_etl_spark.operators.similarity import (
+    cosine,
+    dot,
+    knn_brute_force,
+    l2_norm,
+    lsh_ann_pairs,
+)
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_table, parallelize_rows
@@ -105,8 +111,6 @@ def q236_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus) is the production knob, and recall of the ANN paths
     (q31/q53) against these exact rankings is already pinned in tests.
     """
-    from ooh_etl_spark.operators.similarity import knn_brute_force
-
     emb = load_table(spark, sf_dir, "embeddings")
     labels = emb.select("vec_id", "label")
     top = knn_brute_force(
@@ -201,8 +205,6 @@ def q243_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     IDCG needs only n_rel and the rank grid, a bounded generate
     sequence.
     """
-    from ooh_etl_spark.operators.similarity import knn_brute_force
-
     emb = load_table(spark, sf_dir, "embeddings")
     labels = emb.select("vec_id", "label")
     top = knn_brute_force(
@@ -383,50 +385,46 @@ def q437_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     two norms per pair (~6 passes) — bit-identical float sequence
     (same fold order, same norm product order), verified against the
     oracle at both sfs."""
-    from ooh_etl_spark.tables import parallelize_rows
-    from pyspark.sql import Window
+    dd = F.col("embedding").cast("array<double>")
 
-    dd = "transform(embedding, x -> CAST(x AS DOUBLE))"
-    l2 = "sqrt(aggregate({v}, CAST(0 AS DOUBLE), (acc, x) -> acc + x * x))"
-
-    def e6(qv: str, qn: str, nv: str, nn: str) -> str:
+    def e6(qv, qn, nv, nn) -> F.Column:
         # round(1e6 * (dot / (|a| * |b|))) — identical expression tree
         # to round(1_000_000 * cosine(a, b)) over pre-cast arrays.
-        return (
-            f"CAST(round(1000000 * (aggregate(zip_with({qv}, {nv},"
-            f" (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-            f" / ({qn} * {nn}))) AS BIGINT)"
-        )
+        return F.round(1000000 * (dot(qv, nv) / (qn * nn))).cast("bigint")
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents = (
         emb.filter(F.col("vec_id") < _RC_C)
-        .select(F.col("vec_id").alias("cent_id"), F.expr(dd).alias("cv"))
-        .withColumn("cn", F.expr(l2.format(v="cv")))
+        .select(F.col("vec_id").alias("cent_id"), dd.alias("cv"))
+        .withColumn("cn", l2_norm(F.col("cv")))
     )
     panel = cents.agg(
         F.collect_list(F.struct("cent_id", "cv", "cn")).alias("panel")
     )
     corpus = (
         parallelize_rows(emb)
-        .select(F.col("vec_id").alias("nid"), F.expr(dd).alias("nv"))
-        .withColumn("nn", F.expr(l2.format(v="nv")))
+        .select(F.col("vec_id").alias("nid"), dd.alias("nv"))
+        .withColumn("nn", l2_norm(F.col("nv")))
     )
     qs = (
         emb.filter(F.col("vec_id") < _RC_NQ)
-        .select(F.col("vec_id").alias("qid"), F.expr(dd).alias("qv"))
-        .withColumn("qn", F.expr(l2.format(v="qv")))
+        .select(F.col("vec_id").alias("qid"), dd.alias("qv"))
+        .withColumn("qn", l2_norm(F.col("qv")))
     )
     # argmax by (cos_e6 DESC, cent_id ASC) == array_min of
     # struct(-cos_e6, cent_id): bigint negation is exact.
-    argmin = (
-        "array_min(transform(panel, c -> named_struct("
-        f" 'neg', -{e6('nv', 'nn', 'c.cv', 'c.cn')},"
-        " 'cid', c.cent_id))).cid"
-    )
+    argmin = F.array_min(
+        F.transform(
+            "panel",
+            lambda c: F.struct(
+                (-e6(F.col("nv"), F.col("nn"), c["cv"], c["cn"])).alias("neg"),
+                c["cent_id"].alias("cid"),
+            ),
+        )
+    )["cid"]
     ca = materialize(
         corpus.crossJoin(F.broadcast(panel))
-        .select("nid", "nv", "nn", F.expr(argmin).alias("cell"))
+        .select("nid", "nv", "nn", argmin.alias("cell"))
         # feeds truth join AND every probe level
     )
     qc = (
@@ -435,7 +433,7 @@ def q437_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "probe_rank",
             F.row_number().over(
                 Window.partitionBy("qid").orderBy(
-                    F.expr(e6("qv", "qn", "cv", "cn")).desc(), "cent_id"
+                    e6(F.col("qv"), F.col("qn"), F.col("cv"), F.col("cn")).desc(), "cent_id"
                 )
             ),
         )
@@ -447,7 +445,7 @@ def q437_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rank",
             F.row_number().over(
                 Window.partitionBy("qid").orderBy(
-                    F.expr(e6("qv", "qn", "nv", "nn")).desc(), "nid"
+                    e6(F.col("qv"), F.col("qn"), F.col("nv"), F.col("nn")).desc(), "nid"
                 )
             ),
         )
@@ -466,7 +464,7 @@ def q437_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "nprobe",
             "qid",
             "nid",
-            F.expr(e6("qv", "qn", "nv", "nn")).alias("cos_e6"),
+            e6(F.col("qv"), F.col("qn"), F.col("nv"), F.col("nn")).alias("cos_e6"),
         )
         # feeds the ANN ranking AND the volume count
     )
@@ -600,10 +598,6 @@ def q31b_ann_lsh_det(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f" 0L, (acc, t) -> acc + t) >= 0 THEN {1 << p} ELSE 0 END)"
             )
         return F.expr("(" + " + ".join(terms) + ")")
-
-    from ooh_etl_spark.operators.similarity import cosine
-    from ooh_etl_spark.tables import parallelize_rows
-    from pyspark.sql import Window
 
     e = parallelize_rows(emb).select(
         "vec_id", "embedding", bucket_col().alias("bucket")

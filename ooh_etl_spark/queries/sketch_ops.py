@@ -575,7 +575,6 @@ def q246_bloom_from_primitives(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.sum((~F.col("present")).cast("int")).alias("n_absent"),
     )
-    import math
 
     return stats.select(
         F.col("n_inserted").cast("bigint").alias("n_inserted"),

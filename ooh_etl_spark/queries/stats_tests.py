@@ -49,7 +49,6 @@ def q145_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy — the test itself costs nothing."""
     docs = load_table(spark, sf_dir, "documents")
     obs = docs.groupBy("lang", "source").agg(F.count(F.lit(1)).alias("o"))
-    from pyspark.sql import Window
 
     row_n = F.sum("o").over(Window.partitionBy("lang"))
     col_n = F.sum("o").over(Window.partitionBy("source"))
@@ -94,7 +93,6 @@ def q146_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells, emitted in 1e-6 nat units."""
     docs = load_table(spark, sf_dir, "documents")
     obs = docs.groupBy("lang", "source").agg(F.count(F.lit(1)).alias("o"))
-    from pyspark.sql import Window
 
     m = obs.select(
         "o",
@@ -216,7 +214,6 @@ def q149_id_gap_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-key range and merges, since islands compose across
     range boundaries."""
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_type") == "click")
-    from pyspark.sql import Window
 
     c = ev.select(
         "event_id",
@@ -336,7 +333,6 @@ def q161_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.when(F.col("o_orderpriority") == _KS_B, 1)).alias("b"),
         )
     )
-    from pyspark.sql import Window
 
     w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
     cdf = pool.select(

@@ -427,7 +427,6 @@ def q231_pysource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the API-surface proof, with the same exactly-once contract.
     """
     import time
-    import uuid
 
     from ooh_etl_spark.sources.pysource import register_occupation_stream
 

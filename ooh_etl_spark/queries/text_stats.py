@@ -454,8 +454,6 @@ def q195_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     join keys on the word — hot stop-words are AQE skew-splits. This
     is q160's bigram LM machinery pointed at association rather than
     prediction."""
-    from ooh_etl_spark.functions.text import tokenize
-
     docs = load_documents(spark, sf_dir)
     tok = docs.select(tokenize(F.col("text")).alias("t"))
     big = tok.select(
@@ -554,8 +552,6 @@ def q241_source_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the V-row vocabulary table per source (bounded), with the
     corpus totals as 1-row broadcasts.
     """
-    from ooh_etl_spark.functions.text import tokenize
-
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "source", F.explode(tokenize(F.col("text"))).alias("w")
@@ -1016,8 +1012,6 @@ def q317_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     phrase scores are two keyed aggregates whose cardinality is the
     vocabulary/phrase space, not the corpus; top-k lands in
     TakeOrderedAndProject."""
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.posexplode(tokenize(F.col("text"))).alias("pos", "tok")

@@ -17,6 +17,7 @@ import duckdb
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR, assert_matches_oracle, run
+from tests.vector_model import dot
 
 from ooh_etl_spark.plans.audit import (
     has_cartesian,
@@ -711,21 +712,15 @@ def test_q205_matches_independent_shapley_recursion(spark):
     vecs = {r.vec_id: list(r.e) for r in raw.itertuples()}
     labels = {r.vec_id: r.label for r in raw.itertuples()}
 
-    def fold_dot(a, b):  # left fold, matching the engines exactly
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + x * y
-        return acc
-
     K = 5
     for qid in range(5):
         qv, qy = vecs[qid], labels[qid]
         rows = []
-        qq = fold_dot(qv, qv)
+        qq = dot(qv, qv)
         for vid, cv in vecs.items():
             if vid == qid:
                 continue
-            d2 = qq + fold_dot(cv, cv) - 2 * fold_dot(qv, cv)
+            d2 = qq + dot(cv, cv) - 2 * dot(qv, cv)
             rows.append((d2, vid, 1 if labels[vid] == qy else 0))
         rows.sort()  # (dist2, vec_id) ascending — the engines' order
         n = len(rows)

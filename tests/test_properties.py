@@ -25,7 +25,9 @@ from ooh_etl_spark.functions.text import (
     word_pairs,
     word_shingles,
 )
+from ooh_etl_spark.operators.similarity import cosine, dot, l2_norm, sq_dist
 from tests import html_model as M
+from tests import vector_model as V
 
 
 def run_batch(spark, texts: list[str], col_fn):
@@ -223,6 +225,45 @@ def test_word_ngram_builders_match_the_python_model(spark, token_lists):
             assert r[f"starts{n}"] == list(range(1, len(t) - n + 2)), (t, n)
             assert r[f"int{n}"] == model and r[f"col{n}"] == model, (t, n)
         assert [(p.head, p.nxt) for p in r.pairs] == list(zip(t, t[1:])), t
+
+
+def _same(got, want) -> bool:
+    nan = lambda v: isinstance(v, float) and v != v  # noqa: E731
+    return got == want or nan(got) and nan(want)
+
+
+_f32 = st.floats(width=32)
+_vector = st.none() | st.lists(_f32, max_size=5) | st.lists(st.none() | _f32, max_size=5)
+
+
+@settings(max_examples=20, deadline=None)
+@given(st.lists(st.tuples(_vector, _vector), max_size=20))
+def test_vector_builders_match_the_python_fold(spark, pairs):
+    # Empty arrays, unequal lengths and a NULL element are always in
+    # the batch; hypothesis adds NaN, infinities and subnormals.
+    fixed = [([], []), ([1.5], [0.5, 2.0]), ([None, 1.0], [2.0, 3.0]), ([0.375, -3.0], [7.0, 0.625])]
+    pairs = fixed + pairs
+    # cosine divides by the norm product, which ANSI Spark rejects at 0
+    nonzero = [0 not in (V.l2_norm(a), V.l2_norm(b)) for a, b in pairs]
+    df = spark.createDataFrame(
+        [(i, a, b, nz) for i, ((a, b), nz) in enumerate(zip(pairs, nonzero))],
+        "i int, a array<float>, b array<float>, nz boolean",
+    )
+    ad, bd = F.col("a").cast("array<double>"), F.col("b").cast("array<double>")
+    rows = df.select(
+        "i",
+        ad.alias("ad"),
+        dot(ad, bd).alias("dot"),
+        sq_dist(ad, bd).alias("sq_dist"),
+        l2_norm(ad).alias("l2_norm"),
+        F.when(F.col("nz"), cosine(F.col("a"), F.col("b"))).alias("cosine"),
+    ).orderBy("i").collect()
+    for (a, b), nz, r in zip(pairs, nonzero, rows):
+        assert r.ad == a or all(map(_same, r.ad, a)), a
+        assert _same(r.dot, V.dot(a, b)), (a, b)
+        assert _same(r.sq_dist, V.sq_dist(a, b)), (a, b)
+        assert _same(r.l2_norm, V.l2_norm(a)), a
+        assert _same(r.cosine, V.cosine(a, b) if nz else None), (a, b)
 
 
 @settings(max_examples=30, deadline=None)

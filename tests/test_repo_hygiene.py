@@ -219,6 +219,60 @@ def _names(node) -> set[str]:
     return out
 
 
+_ROOTS = ("__spark_entry__.py", "bench.py", "perfbench", "tools")
+
+
+def package_graph():
+    """The package's name graph, read from its AST: ``(defs, roots,
+    queries)``. ``defs`` maps (module, name) to each top-level function
+    and class that is not a registered query; ``roots`` is every name
+    mentioned by a statement that runs at import, a decorator, a
+    registered query, ``__spark_entry__.py``, ``bench.py``,
+    ``perfbench/`` or ``tools/``; ``queries`` maps each registered
+    query's name to the names its definition mentions."""
+    modules = [(rel, n) for rel, n in _ast_nodes("ooh_etl_spark") if isinstance(n, ast.Module)]
+    registrars = {
+        t.id: n.value.args[0].value
+        for _, mod in modules
+        for n in ast.walk(mod)
+        if isinstance(n, ast.Assign) and getattr(getattr(n.value, "func", None), "id", None) == "register"
+        for t in n.targets
+    }
+
+    def query_name(decorator):
+        if getattr(getattr(decorator, "func", None), "id", None) == "register":
+            return decorator.args[0].value
+        return registrars.get(getattr(decorator, "id", None))
+
+    defs, roots, queries = {}, set(), {}
+    for rel, mod in modules:
+        for st in mod.body:
+            decorators = getattr(st, "decorator_list", [])
+            names = [n for n in map(query_name, decorators) if n]
+            if isinstance(st, (ast.FunctionDef, ast.ClassDef)) and not names:
+                defs[(rel, st.name)] = st
+                roots |= set().union(*map(_names, decorators))
+            else:
+                roots |= _names(st)
+                queries.update(dict.fromkeys(names, _names(st)))
+            # register("name", oracle)(fn), a call after fn's definition
+            call = getattr(st, "value", None)
+            if isinstance(st, ast.Expr) and query_name(getattr(call, "func", None)):
+                queries[query_name(call.func)] = _names(defs[(rel, call.args[0].id)])
+    roots |= set().union(*(_names(n) for _, n in _ast_nodes(*_ROOTS) if isinstance(n, ast.Module)))
+    return defs, roots, queries
+
+
+def reached_from(defs, frontier: set[str]) -> set[tuple[str, str]]:
+    """The keys of ``defs`` reached by name from ``frontier``."""
+    reached: set[tuple[str, str]] = set()
+    while frontier:
+        hit = {k for k in defs if k[1] in frontier} - reached
+        reached |= hit
+        frontier = set().union(*(_names(defs[k]) for k in hit))
+    return reached
+
+
 def test_package_code_is_reached():
     """Every top-level function and class of the package is reached by
     name from a root: a registered query, a statement that runs at
@@ -228,7 +282,6 @@ def test_package_code_is_reached():
     overrides is a constant, and passing the default itself, written
     out, overrides nothing. Tests are not callers, so code that only a
     test reaches, such as a reference model, lives in ``tests/``."""
-    roots = ("__spark_entry__.py", "bench.py", "perfbench", "tools")
     exempt_files = {
         # The plan-assertion library: tests/test_plans.py and the
         # window-posture audit are its callers.
@@ -241,39 +294,15 @@ def test_package_code_is_reached():
     # silent int64 wrap; tests/test_money_stress.py pins it.
     exempt_params = {("cents_sum", "wide"), ("cents_avg", "wide")}
 
-    modules = [(rel, n) for rel, n in _ast_nodes("ooh_etl_spark") if isinstance(n, ast.Module)]
-    registrars = {"register"} | {
-        t.id
-        for _, mod in modules
-        for n in ast.walk(mod)
-        if isinstance(n, ast.Assign) and getattr(getattr(n.value, "func", None), "id", None) == "register"
-        for t in n.targets
-    }
-    defs, frontier = {}, set()
-    for rel, mod in modules:
-        for st in mod.body:
-            decorators = getattr(st, "decorator_list", [])
-            registered = any(
-                getattr(getattr(d, "func", d), "id", None) in registrars for d in decorators
-            )
-            if isinstance(st, (ast.FunctionDef, ast.ClassDef)) and not registered:
-                defs[(rel, st.name)] = st
-                frontier |= set().union(*map(_names, decorators))
-            else:
-                frontier |= _names(st)
-    frontier |= set().union(*(_names(n) for _, n in _ast_nodes(*roots) if isinstance(n, ast.Module)))
-    reached: set[tuple[str, str]] = set()
-    while frontier:
-        hit = {k for k in defs if k[1] in frontier} - reached
-        reached |= hit
-        frontier = set().union(*(_names(defs[k]) for k in hit))
+    defs, roots, _ = package_graph()
+    reached = reached_from(defs, roots)
     unreached = [
         f"{rel}:{defs[(rel, name)].lineno} {name}"
         for rel, name in sorted(defs.keys() - reached)
         if rel not in exempt_files
     ]
 
-    calls = [n for _, n in _ast_nodes("ooh_etl_spark", *roots) if isinstance(n, ast.Call)]
+    calls = [n for _, n in _ast_nodes("ooh_etl_spark", *_ROOTS) if isinstance(n, ast.Call)]
     never_passed = []
     for (rel, name), fn in sorted(defs.items()):
         if rel in exempt_files or not isinstance(fn, ast.FunctionDef):
@@ -323,3 +352,104 @@ def test_gram_index_lists_are_built_in_one_module():
             src = f.read()
         offenders += [f"{rel}:{src.count(chr(10), 0, m.start()) + 1}" for m in pattern.finditer(src)]
     assert not offenders, f"build gram start positions with functions.text.ngram_starts: {offenders}"
+
+
+#: A double zero in Spark SQL text.
+_SQL_ZERO = r"(?:cast\(0(?:\.0)? as double\)|0(?:\.0)?d|0\.0)"
+#: Hand-written double vector folds in Spark SQL text, whitespace
+#: collapsed. The lookbehind skips DuckDB's ``list_aggregate`` and
+#: ``list_transform``.
+_SQL_FOLDS = re.compile(
+    rf"(?<![\w.])aggregate\( ?zip_with\(.*?, \((\w+), (\w+)\) -> "
+    rf"(?:\1 \* \2|\(\1 - \2\) \* \(\1 - \2\))\), ?{_SQL_ZERO}"
+    rf"|(?<![\w.])aggregate\([^()]*?, ?{_SQL_ZERO}, ?\((\w+), (\w+)\) -> \3 \+ \4 \* \4\)"
+    rf"|(?<![\w.])aggregate\( ?transform\(.*?, (\w+) -> \5 \* \5\), ?{_SQL_ZERO}"
+    rf"|(?<![\w.])transform\([^()]*?, (\w+) -> cast\(\6 as double\)\)",
+    re.I,
+)
+#: The same folds spelled with Column lambdas (``ast.unparse`` text).
+_COLUMN_FOLDS = {
+    "zip_with": re.compile(r"lambda (\w+), (\w+): (?:\1 \* \2|\(\1 - \2\) \* \(\1 - \2\))"),
+    "aggregate": re.compile(r"lambda (\w+), (\w+): \1 \+ \2 \* \2"),
+    "transform": re.compile(r"lambda (\w+): (?:\1 \* \1|\1\.cast\('double'\))"),
+}
+
+
+def test_vector_folds_live_in_one_module():
+    """A double dot product, squared distance or squared norm is a left
+    fold from 0.0 in array order, the order DuckDB's oracles sum in, and
+    float arrays widen with ``cast("array<double>")``. The builders of
+    ``operators/similarity.py`` are the only spelling of that: a
+    ``zip_with`` product or squared difference, an ``acc + x * x`` or
+    ``x -> x * x`` fold, or a cast-to-double lambda anywhere else in the
+    package is an offender, in Column code and in Spark SQL strings.
+    Integer and decimal accumulators (a BIGINT or DECIMAL zero over
+    quantised terms) are not double folds and stay where they are."""
+    home = os.path.join("ooh_etl_spark", "operators", "similarity.py")
+    offenders = set()
+    for rel, node in _ast_nodes("ooh_etl_spark"):
+        if rel == home:
+            continue
+        if isinstance(node, ast.Call) and node.args and isinstance(node.args[-1], ast.Lambda):
+            pattern = _COLUMN_FOLDS.get(getattr(node.func, "attr", getattr(node.func, "id", None)))
+            if pattern and pattern.fullmatch(ast.unparse(node.args[-1])):
+                offenders.add(f"{rel}:{node.lineno}")
+        elif isinstance(node, ast.JoinedStr) or isinstance(getattr(node, "value", None), str):
+            parts = node.values if isinstance(node, ast.JoinedStr) else [node]
+            text = "".join(p.value if isinstance(p, ast.Constant) else "{}" for p in parts)
+            if _SQL_FOLDS.search(re.sub(r"\s+", " ", text)):
+                offenders.add(f"{rel}:{node.lineno}")
+    assert not offenders, (
+        "fold vectors with operators.similarity's dot, sq_dist, l2_norm or cosine, "
+        f"and widen with cast('array<double>'): {sorted(offenders)}"
+    )
+
+
+def test_no_private_name_crosses_a_module():
+    """A ``_``-prefixed name is its module's own business: a package
+    module that imports one from another module couples to a helper
+    whose signature can change under it with no test watching."""
+    offenders = [
+        f"{rel}:{node.lineno} {alias.name}"
+        for rel, node in _ast_nodes("ooh_etl_spark")
+        if isinstance(node, ast.ImportFrom)
+        for alias in node.names
+        if alias.name.startswith("_")
+    ]
+    assert not offenders, f"make these public or keep them in their module: {offenders}"
+
+
+def test_every_import_is_needed():
+    """In the package, a function-local import of a name its module
+    already imports at top level is a second copy, and an import whose
+    name the module never uses (nor lists in ``__all__``) is dead. A
+    package ``__init__`` imports its submodules to run them (query
+    modules register on import), and the protobuf probe in
+    ``queries/streaming.py`` tests that the import itself works."""
+    probe = ("ooh_etl_spark/queries/streaming.py", "descriptor")
+    offenders = []
+    for rel, mod in _ast_nodes("ooh_etl_spark"):
+        if not isinstance(mod, ast.Module):
+            continue
+        package = os.path.dirname(os.path.join(REPO, rel))
+        imports = [
+            (node, alias, alias.asname or alias.name.split(".")[0])
+            for node in ast.walk(mod)
+            if isinstance(node, (ast.Import, ast.ImportFrom))
+            and getattr(node, "module", None) != "__future__"
+            for alias in node.names
+        ]
+        top = {bound for node, _, bound in imports if node in mod.body}
+        used = {n.id for n in ast.walk(mod) if isinstance(n, ast.Name)} | {
+            e.value  # re-exports listed in __all__
+            for st in mod.body
+            if isinstance(st, ast.Assign) and getattr(st.targets[0], "id", None) == "__all__"
+            for e in st.value.elts
+        }
+        for node, alias, bound in imports:
+            submodule = rel.endswith("__init__.py") and os.path.exists(f"{package}/{alias.name}.py")
+            if node not in mod.body and bound in top:
+                offenders.append(f"{rel}:{node.lineno} {bound} (imported at top level)")
+            elif bound not in used and not submodule and (rel, bound) != probe:
+                offenders.append(f"{rel}:{node.lineno} {bound} (unused)")
+    assert not offenders, f"delete these imports: {offenders}"
