@@ -22,6 +22,9 @@ double is exact, so the widened terms are the oracle's ``::DOUBLE[]``
 terms. ``zip_with`` pads the shorter array with NULL, so arrays of
 unequal length give NULL, as does any NULL element.
 
+``centroid_d2`` and ``nearest_centroid`` build the e6-quantised
+nearest-centroid assignment over a broadcast panel on ``sq_dist``.
+
 Every such fold in the package calls these builders, and
 ``tests/test_repo_hygiene.py::test_vector_folds_live_in_one_module``
 fails on a hand-written copy anywhere else: one spelling of the order
@@ -58,6 +61,31 @@ def l2_norm(a: Column) -> Column:
 def cosine(a: Column, b: Column) -> Column:
     ad, bd = a.cast("array<double>"), b.cast("array<double>")
     return dot(ad, bd) / (l2_norm(ad) * l2_norm(bd))
+
+
+def centroid_d2(e: Column, panel: Column) -> Column:
+    """The e6-quantised squared distance from ``e`` to each centroid of a
+    broadcast panel (``array<struct<cid, ce>>``), as
+    ``array<struct<d2: bigint, cid>>`` in panel order.
+
+    Quantising before any comparison makes the nearest centroid the
+    same in both engines, and ``d2`` leading ``cid`` in the struct is
+    the tie rule: ``array_min`` of this array, or of any filter of it,
+    is the nearest centroid with ties to the smaller cid, the oracles'
+    ``ORDER BY d2, cid``."""
+    return F.transform(
+        panel,
+        lambda c: F.struct(
+            F.round(1000000 * sq_dist(e, c["ce"])).cast("bigint").alias("d2"),
+            c["cid"].alias("cid"),
+        ),
+    )
+
+
+def nearest_centroid(e: Column, panel: Column) -> Column:
+    """The ``struct<d2, cid>`` of the centroid nearest ``e`` in the
+    panel (:func:`centroid_d2`'s rule: ties to the smaller cid)."""
+    return F.array_min(centroid_d2(e, panel))
 
 
 def knn_brute_force(

@@ -22,7 +22,7 @@ from ooh_etl_spark.operators.dedup import (
     shingle_sets,
     simhash_pairs,
 )
-from ooh_etl_spark.operators.similarity import dot, sq_dist
+from ooh_etl_spark.operators.similarity import centroid_d2, dot, nearest_centroid, sq_dist
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_documents, load_table
@@ -2931,22 +2931,13 @@ def q456_semdedup_k_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cagg = c.agg(F.collect_list(F.struct("cid", "ce")).alias("cents"))
     ds = v.crossJoin(F.broadcast(cagg)).select(
-        "vec_id",
-        F.transform(
-            "cents",
-            lambda c: F.struct(
-                c["cid"].alias("cid"),
-                F.round(1000000 * sq_dist(F.col("e"), c["ce"])).cast("bigint").alias("d2"),
-            ),
-        ).alias("ds"),
+        "vec_id", centroid_d2(F.col("e"), F.col("cents")).alias("ds")
     )
     rows = ds.select(
         "vec_id",
         F.expr(
             f"explode(transform(array({', '.join(str(k) for k in _SEMK_GRID)}),"
-            " k -> named_struct('k', k, 'a',"
-            "   array_min(transform(filter(ds, d -> d.cid < k),"
-            "     d -> named_struct('d2', d.d2, 'cid', d.cid))))))"
+            " k -> named_struct('k', k, 'a', array_min(filter(ds, d -> d.cid < k)))))"
         ).alias("p"),
     ).select(F.col("p.k").alias("k"), F.col("p.a.cid").alias("cid"), F.col("p.a.d2").alias("d2"))
     cl = rows.groupBy("k", "cid").agg(
@@ -3214,19 +3205,11 @@ def q458_ivf_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     panels = pa.agg(F.collect_list(F.struct("cid", "ce")).alias("pa")).crossJoin(
         pb.agg(F.collect_list(F.struct("cid", "ce")).alias("pb"))
     )
-    def argmin(panel: str):
-        return F.array_min(
-            F.transform(
-                panel,
-                lambda c: F.struct(
-                    F.round(1000000 * sq_dist(F.col("e"), c["ce"])).cast("bigint").alias("d2"),
-                    c["cid"].alias("cid"),
-                ),
-            )
-        )["cid"]
-
+    e = F.col("e")
     j = v.crossJoin(F.broadcast(panels)).select(
-        "vec_id", argmin("pa").alias("cell_old"), argmin("pb").alias("cell_new")
+        "vec_id",
+        nearest_centroid(e, F.col("pa"))["cid"].alias("cell_old"),
+        nearest_centroid(e, F.col("pb"))["cid"].alias("cell_new"),
     )
     return (
         j.groupBy("cell_old")
@@ -3755,15 +3738,7 @@ def q477_prototypicality_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     cagg = c.agg(F.collect_list(F.struct("cid", "ce")).alias("cents"))
     asn = v.crossJoin(F.broadcast(cagg)).select(
         "label",
-        F.array_min(
-            F.transform(
-                "cents",
-                lambda c: F.struct(
-                    F.round(1000000 * sq_dist(F.col("e"), c["ce"])).cast("bigint").alias("d2"),
-                    c["cid"].alias("cid"),
-                ),
-            )
-        ).alias("a"),
+        nearest_centroid(F.col("e"), F.col("cents")).alias("a"),
     ).select(
         "label",
         F.col("a.cid").alias("cid"),

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from ooh_etl_spark.functions.money import cents_sum
 from ooh_etl_spark.queries.registry import register
-from ooh_etl_spark.tables import load_table
+from ooh_etl_spark.tables import load_table, table_schema
 
 
 @register(
@@ -137,15 +137,13 @@ def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     readStream needs a declared schema, and the fixture's on-disk ``ts``
     encoding has drifted across driver regenerations (int64 nanos under
     ``nanosAsLong``, later ``timestamp[us]``). Rather than hard-code
-    either, take the schema from the batch reader's parquet footer and
-    apply the SAME dtype-guarded nanos→micros conversion load_table
-    uses — whichever encoding the next regeneration picks, stream time
-    stays equal to batch time.
+    either, take the schema the batch reader uses
+    (``tables.table_schema``, read from the parquet footer once per
+    session) and apply the SAME dtype-guarded nanos→micros conversion
+    load_table uses — whichever encoding the next regeneration picks,
+    stream time stays equal to batch time.
     """
-    from ooh_etl_spark.tables import table_path
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    footer_schema = spark.read.parquet(table_path(sf_dir, "events")).schema
+    footer_schema = table_schema(spark, sf_dir, "events")
     # The file-stream source wants a directory; scope it to the events
     # table with a glob filter (same pattern a log-landing dir would use).
     raw = (

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ooh_etl_spark.operators.similarity import cosine, dot, l2_norm, sq_dist
+from ooh_etl_spark.operators.similarity import cosine, dot, l2_norm, nearest_centroid, sq_dist
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_table, parallelize_rows
@@ -728,18 +728,9 @@ def q461_ivf_posting_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("vec_id").alias("cid"), F.col("e").alias("ce"))
         .agg(F.collect_list(F.struct("cid", "ce")).alias("panel"))
     )
-    argmin = F.array_min(
-        F.transform(
-            "panel",
-            lambda c: F.struct(
-                F.round(1000000 * sq_dist(F.col("e"), c["ce"])).cast("bigint").alias("d2"),
-                c["cid"].alias("cid"),
-            ),
-        )
-    )["cid"]
     cells = (
         v.crossJoin(F.broadcast(panel))
-        .select(argmin.alias("cell"))
+        .select(nearest_centroid(F.col("e"), F.col("panel"))["cid"].alias("cell"))
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n_vecs"))
     )

@@ -1006,9 +1006,10 @@ _DUCK_SINK_RT = """
 @register("q358_sink_roundtrip", _DUCK_SINK_RT)
 def q358_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-format SINK round-trip proof: the orders projection is
-    WRITTEN to CSV, JSON, and parquet and read back with DECLARED
-    schemas (parquet carries its own), and each
-    read-back computes the order-free content fingerprint (bit-XOR of
+    WRITTEN to CSV, JSON, and parquet and read back with the one
+    DECLARED schema (parquet too: its footer agrees, and inferring it
+    again would be a Spark job of its own), and each read-back
+    computes the order-free content fingerprint (bit-XOR of
     per-row md5 prefixes — q178's commutative checksum). The ORACLE
     computes the same fingerprint from the source table directly, so
     a hash match per format proves the write→read cycle is LOSSLESS
@@ -1042,7 +1043,7 @@ def q358_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{base}/csv"
         ),
         "json": spark.read.schema(schema).json(f"{base}/json"),
-        "parquet": spark.read.parquet(f"{base}/parquet"),
+        "parquet": spark.read.schema(schema).parquet(f"{base}/parquet"),
     }
 
     def fingerprint(df: DataFrame, fmt: str) -> DataFrame:

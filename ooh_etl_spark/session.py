@@ -19,6 +19,9 @@ plans* deploy unchanged to a multi-executor cluster:
   execution recompiled about 145 of its classes. Holding the whole
   headline set cost 124 MB more heap after a full GC and 9.6 MB more
   metaspace than the default (one headline session each, 4 GB heap).
+- PySpark's DataFrame debugging off (``DATAFRAME_DEBUGGING``): the
+  call-site capture it runs on every DataFrame and Column API call is a
+  fixed driver cost that construction pays hundreds of times per query.
 """
 
 from __future__ import annotations
@@ -37,6 +40,20 @@ from pyspark.sql import SparkSession
 #: each execution evicted the classes the next one needed. A static SQL
 #: conf: it takes effect only in the builder that starts the JVM.
 CODEGEN_CACHE_ENTRIES = 2048
+
+#: ``spark.python.sql.dataFrameDebugging.enabled``. When on (PySpark's
+#: default), every wrapped DataFrame and Column API call reads
+#: ``spark.sql.stackTracesInDataFrameContext`` over py4j, walks the
+#: Python stack, tries to import ``ipykernel`` (a failing import here)
+#: and sets and clears the JVM's ``PySparkCurrentOrigin``. A cProfile of
+#: one q479 execution (2.74 s, 4 vCPUs) put that at over 1.1 ms on each
+#: of its 210 wrapped calls: 0.124 s in ``_capture_call_site`` and 0.114 s
+#: in the failed imports. What it gives up: a runtime error no longer
+#: carries the Python ``file:line`` "DataFrame query context". The error
+#: class, its message and the context of SQL-string expressions stay.
+#: PySpark reads the setting once per process, from the first active
+#: session, so it belongs in the builder.
+DATAFRAME_DEBUGGING = "false"
 
 
 def default_parallelism() -> int:
@@ -79,6 +96,7 @@ def get_spark(app_name: str = "ooh_etl_spark") -> SparkSession:
         # Keep catalog-table files (bucketed-join tests) out of the repo.
         .config("spark.sql.warehouse.dir", "/tmp/spark-warehouse")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.sql.dataFrameDebugging.enabled", DATAFRAME_DEBUGGING)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -5,6 +5,19 @@ engine: plain ``spark.read.parquet`` so Catalyst keeps predicate
 pushdown, column pruning, and partition pruning (parquet row-group
 stats) fully available. No caching here — at 100 TB you want the
 vectorized reader + pushed filters, not a driver-pinned cache.
+
+The scan is read with a declared schema. Without one, Spark opens the
+file footers to infer it, and that inference is a Spark job of its own
+on every call: about 125–160 ms and one construct job per scan, three
+per ``checkpoint_funnel`` pass. ``table_schema`` infers each table's
+schema once per SparkContext and hands the result to every later scan.
+It is a memo rather than a pinned ``StructType`` per table because the
+on-disk encoding of ``events.ts`` has changed between regenerations of
+the data (int64 nanos under ``nanosAsLong``, later ``timestamp[us]``;
+``tests/test_fixture_drift.py``): the memo keeps whatever the files say,
+and the dtype-guarded nanos branch below stays exact for both. The memo
+assumes what TESTDATA.md states: a table's files do not change while a
+session runs. A new SparkContext reads them again.
 """
 
 from __future__ import annotations
@@ -13,6 +26,7 @@ import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructType
 
 TABLE_NAMES = (
     "region",
@@ -32,15 +46,33 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+#: Inferred table schemas by (application id, table path).
+_SCHEMAS: dict[tuple[str, str], StructType] = {}
+
+
+def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The parquet schema of one table, inferred from its footers the
+    first time this SparkContext asks for it (one Spark job) and
+    remembered after that. Keyed on the application id, so a restarted
+    context infers again."""
+    path = table_path(sf_dir, name)
+    key = (spark.sparkContext.applicationId, path)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
+    return schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, name))
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        # TIMESTAMP(NANOS) read as int64 nanos; truncate to micros with
-        # integer division (exact — double division would lose bits at
-        # int64 magnitude), matching DuckDB's nanos→micros truncation.
+    schema = table_schema(spark, sf_dir, name)
+    df = spark.read.schema(schema).parquet(table_path(sf_dir, name))
+    if name == "events" and schema["ts"].dataType == LongType():
+        # TIMESTAMP(NANOS) read as int64 nanos (session.get_spark sets
+        # nanosAsLong); truncate to micros with integer division (exact
+        # — double division would lose bits at int64 magnitude),
+        # matching DuckDB's nanos→micros truncation.
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
     return df
 

@@ -149,6 +149,56 @@ def test_sessions_are_built_in_one_module():
     assert not offenders, f"start Spark with ooh_etl_spark.session.get_spark: {offenders}"
 
 
+def _chain(node):
+    """The calls and attributes of a method chain, outermost first:
+    ``spark.read.schema(s).parquet(p)`` gives ``parquet(...)``,
+    ``.parquet``, ``schema(...)``, ``.schema``, ``.read``, ``spark``."""
+    while node is not None:
+        yield node
+        node = getattr(node, "func", None) or getattr(node, "value", None)
+
+
+def test_parquet_reads_declare_a_schema():
+    """A ``spark.read.parquet`` without ``.schema(...)`` infers the
+    schema from the file footers in a Spark job of its own, on every
+    call. Tables get theirs once per session from ``tables.table_schema``,
+    which holds the package's one inferring read; any other parquet read
+    in the package declares its schema."""
+    tables = os.path.join("ooh_etl_spark", "tables.py")
+    home = next(
+        range(node.lineno, node.end_lineno + 1)
+        for rel, node in _ast_nodes(tables)
+        if isinstance(node, ast.FunctionDef) and node.name == "table_schema"
+    )
+
+    def reads_parquet(parts) -> bool:
+        attrs = [getattr(p, "attr", None) for p in parts]
+        formats = [
+            a.value
+            for p in parts
+            if isinstance(p, ast.Call) and getattr(p.func, "attr", None) == "format"
+            for a in p.args
+            if isinstance(a, ast.Constant)
+        ]
+        return (
+            (attrs[1] == "parquet" or attrs[1] == "load" and "parquet" in formats)
+            and "read" in attrs
+            and "schema" not in attrs
+        )
+
+    offenders = [
+        f"{rel}:{node.lineno}"
+        for rel, node in _ast_nodes("ooh_etl_spark")
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and reads_parquet(list(_chain(node)))
+        and not (rel == tables and node.lineno in home)
+    ]
+    assert not offenders, (
+        f"read with .schema(...), or load tables through tables.load_table: {offenders}"
+    )
+
+
 def test_no_hard_coded_checkout_path():
     """Code finds the repo from ``__file__`` (tools) or pytest's rootdir
     import (tests). A literal checkout path makes a run from any other
@@ -373,6 +423,9 @@ _COLUMN_FOLDS = {
     "aggregate": re.compile(r"lambda (\w+), (\w+): \1 \+ \2 \* \2"),
     "transform": re.compile(r"lambda (\w+): (?:\1 \* \1|\1\.cast\('double'\))"),
 }
+#: An e6-quantised squared distance, the nearest-centroid rule's key
+#: (``similarity.centroid_d2``), as ``ast.unparse`` text.
+_QUANTISED_D2 = re.compile(r"(?:F\.)?round\((?:1000000|1e6|1000000\.0) \* sq_dist\(")
 
 
 def test_vector_folds_live_in_one_module():
@@ -384,7 +437,10 @@ def test_vector_folds_live_in_one_module():
     ``x -> x * x`` fold, or a cast-to-double lambda anywhere else in the
     package is an offender, in Column code and in Spark SQL strings.
     Integer and decimal accumulators (a BIGINT or DECIMAL zero over
-    quantised terms) are not double folds and stay where they are."""
+    quantised terms) are not double folds and stay where they are. An
+    e6-quantised ``sq_dist`` is the nearest-centroid rule of
+    ``centroid_d2``/``nearest_centroid`` and is an offender elsewhere
+    too."""
     home = os.path.join("ooh_etl_spark", "operators", "similarity.py")
     offenders = set()
     for rel, node in _ast_nodes("ooh_etl_spark"):
@@ -399,8 +455,15 @@ def test_vector_folds_live_in_one_module():
             text = "".join(p.value if isinstance(p, ast.Constant) else "{}" for p in parts)
             if _SQL_FOLDS.search(re.sub(r"\s+", " ", text)):
                 offenders.add(f"{rel}:{node.lineno}")
+        if (
+            isinstance(node, ast.Call)
+            and getattr(node.func, "attr", getattr(node.func, "id", None)) == "round"
+            and _QUANTISED_D2.match(ast.unparse(node))
+        ):
+            offenders.add(f"{rel}:{node.lineno}")
     assert not offenders, (
         "fold vectors with operators.similarity's dot, sq_dist, l2_norm or cosine, "
+        "assign centroids with its centroid_d2 or nearest_centroid, "
         f"and widen with cast('array<double>'): {sorted(offenders)}"
     )
 

@@ -1,9 +1,20 @@
-"""Session configuration that every harness inherits from ``get_spark``."""
+"""Session configuration that every harness inherits from ``get_spark``,
+and the driver work that it keeps off each query construction."""
 
 from __future__ import annotations
 
+import shutil
+
+import pytest
+from pyspark.errors import ArithmeticException
+from pyspark.errors.utils import is_debugging_enabled
+from pyspark.sql import functions as F
+
+from ooh_etl_spark.queries import QUERIES
 from ooh_etl_spark.session import codegen_compilations
-from tests.conftest import run
+from ooh_etl_spark.tables import load_table
+from perfbench.sparktrace import job_group
+from tests.conftest import SF_DIR, run
 
 
 def test_repeat_execution_compiles_no_classes(spark):
@@ -15,3 +26,53 @@ def test_repeat_execution_compiles_no_classes(spark):
     before = codegen_compilations(spark)
     run(spark, "q479_corpus_build_funnel").collect()
     assert codegen_compilations(spark) - before == 0
+
+
+def _group_stages(spark, group: str, body) -> list[list[str]]:
+    """Run ``body()`` under a job group; each of its jobs' stage names."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    with job_group(sc, group):
+        body()
+    return [
+        [tracker.getStageInfo(s).name for s in tracker.getJobInfo(j).stageIds]
+        for j in sorted(tracker.getJobIdsForGroup(group))
+    ]
+
+
+def _inference_jobs(stages: list[list[str]]) -> list[list[str]]:
+    return [names for names in stages if any(n.startswith("parquet at ") for n in names)]
+
+
+def test_table_schema_is_read_once_per_session(spark, tmp_path):
+    """Without a declared schema every ``spark.read.parquet`` opens the
+    footers in a one-task Spark job. ``load_table`` reads each table's
+    schema once per session, so the first scan of a path runs that one
+    job and no later scan or query construction runs it again."""
+    shutil.copy(f"{SF_DIR}/orders.parquet", tmp_path / "orders.parquet")
+    first = _group_stages(spark, "schema-first", lambda: load_table(spark, str(tmp_path), "orders"))
+    assert len(first) == 1 and _inference_jobs(first) == first, first
+    again = _group_stages(spark, "schema-again", lambda: load_table(spark, str(tmp_path), "orders"))
+    assert again == [], again
+
+    build = QUERIES["q333_hits_authority"].fn
+    build(spark, SF_DIR)
+    rebuilt = _group_stages(spark, "schema-q333", lambda: build(spark, SF_DIR))
+    assert rebuilt, "q333's construction runs its checkpoint jobs in the group"
+    assert _inference_jobs(rebuilt) == [], rebuilt
+
+
+def test_dataframe_debugging_is_off_and_errors_keep_their_class(spark):
+    """``get_spark`` turns off PySpark's per-call call-site capture
+    (``session.DATAFRAME_DEBUGGING``). An ANSI runtime error still raises
+    with its error class."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()
+    df = spark.range(3).select((F.lit(1) / (F.col("id") - F.col("id"))).alias("q"))
+    with pytest.raises(ArithmeticException) as err:
+        df.collect()
+    assert err.value.getCondition() == "DIVIDE_BY_ZERO"
+    over = spark.range(1).select((F.col("id") + F.lit(2**31)).cast("int").alias("n"))
+    with pytest.raises(ArithmeticException) as err:
+        over.collect()
+    assert err.value.getCondition() == "CAST_OVERFLOW"

@@ -14,7 +14,13 @@ $SPARK_GRAFT_SF_DIR (default sf0.1):
 and (with ``--plans TAG``) writes ``plans/r14/<query>_<TAG>.txt`` with
 the ``explain("formatted")`` output plus a one-line plan-shape summary
 (Exchange count, join strategies, Python-eval nodes) so plan claims in
-OPTIMIZATION_r14.md are checkable.
+OPTIMIZATION_r14.md are checkable, and ``plans/r14/<query>_<TAG>.tree.txt``
+with that summary and the operator tree alone (``plan_tree``). The
+formatted details are not stable between two sessions running the same
+code (expression ids, ``plan_id``s, the checkout path in file scans, the
+order of ``Expand`` projections), so compare two runs with the tree
+files: ``diff <(cd a && tail -n +2 ...)`` of the ``.tree.txt`` files
+shows only real plan changes.
 
 Usage:
   python tools/opt_measure.py [--reps N] [--plans before|after] [query ...]
@@ -52,6 +58,22 @@ def plan_summary(plan: str) -> str:
         f"shuffle_exchanges={ex} parquet_scans={scans} "
         f"joins={joins or '[]'} python_nodes={py or '[]'}"
     )
+
+
+def plan_tree(plan: str) -> str:
+    """The operator-tree lines of a formatted plan (subquery trees
+    included) with node numbers, expression ids, ``plan_id``s, other
+    numbers and the checkout path stripped: what stays the same between
+    two sessions that build the same plan."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    lines = []
+    for line in plan.splitlines():
+        if not re.fullmatch(r"[\s:+\-|*]*[A-Za-z][\w .]*\(\d+\)", line):
+            continue
+        line = line.replace(root, "<checkout>")
+        line = re.sub(r"#\d+L?|plan_id=\d+|\s*\(\d+\)$", "", line)
+        lines.append(re.sub(r"\d+", "N", line).rstrip())
+    return "\n".join(lines) + "\n"
 
 
 def main() -> None:
@@ -99,6 +121,8 @@ def main() -> None:
             with open(path, "w") as f:
                 f.write(f"# {name} @ {sf_dir} — {plan_summary(plan)}\n\n")
                 f.write(plan)
+            with open(path[: -len(".txt")] + ".tree.txt", "w") as f:
+                f.write(f"# {plan_summary(plan)}\n{plan_tree(plan)}")
         if reps == 0:
             print(f"{name}: plan dumped", flush=True)
             continue
