@@ -238,7 +238,7 @@ def ooh_entry(spark, xml_path: str, expected: str):
     against a pipeline of about a second."""
     from ooh_etl_spark.sources.xml import (
         long_quality_filter,
-        occupation_records,
+        project_records,
         read_occupations,
         report_lines,
     )
@@ -249,7 +249,7 @@ def ooh_entry(spark, xml_path: str, expected: str):
         # 18-column xpath/regex projection is the expensive part and
         # spreads across cores after a round-robin repartition.
         occ = parallelize_rows(read_occupations(spark, xml_path))
-        pdf = report_lines(long_quality_filter(occupation_records(occ))).toPandas()
+        pdf = report_lines(long_quality_filter(project_records(occ))).toPandas()
         got = oohgen.report_digest(zip(pdf.title, pdf.line))
         if got != expected:
             raise RuntimeError(

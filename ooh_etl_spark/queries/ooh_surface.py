@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.sources.xml import (
     long_quality_filter,
-    occupation_records,
+    project_records,
     read_occupations,
     report_lines,
 )
@@ -45,7 +45,7 @@ def map_to_sorted_string(m: Column) -> Column:
 
 
 def _records(spark: SparkSession) -> DataFrame:
-    return occupation_records(read_occupations(spark, FIXTURE))
+    return project_records(read_occupations(spark, FIXTURE))
 
 
 def q_ooh_records(spark: SparkSession, sf_dir: str) -> DataFrame:  # noqa: ARG001

@@ -51,6 +51,14 @@ CODEGEN_CACHE_ENTRIES = 2048
 #: in the failed imports. What it gives up: a runtime error no longer
 #: carries the Python ``file:line`` "DataFrame query context". The error
 #: class, its message and the context of SQL-string expressions stay.
+#: The DataFrame context is still printed, but it names the JVM
+#: reflection frame of the py4j call (``"divide" was called from
+#: java.base/jdk.internal.reflect.NativeMethodAccessorImpl.invoke0(Native
+#: Method)``, or a ``GeneratedMethodAccessor`` once the JVM has inflated
+#: that call), not the Python line that built the expression: read the
+#: error class, not that line. PySpark's ``DataFrameQueryContextLogger``
+#: also logs each such error as one JSON line, JVM stack included, to
+#: stderr.
 #: PySpark reads the setting once per process, from the first active
 #: session, so it belongs in the builder.
 DATAFRAME_DEBUGGING = "false"

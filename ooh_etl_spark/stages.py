@@ -4,10 +4,13 @@ eagerly computed stages.
 A query that reuses a frame (several consumers, an iterated operator,
 a census beside the chain it measures) materialises it at the stage
 boundary so each consumer plans from the computed rows instead of
-re-deriving the whole upstream lineage. Queries call :func:`materialize`
-for one frame and :func:`materialize_all` for frames that share no
-lineage and can run as concurrent jobs; neither is called anywhere
-else.
+re-deriving the whole upstream lineage. :func:`materialize` cuts one
+frame and :func:`materialize_all` cuts frames that share no lineage as
+concurrent jobs. Queries call them, and so do three library modules
+whose frames always have several consumers: the iterated operators of
+``operators/dedup.py`` and ``operators/graph.py``, and
+``sources/xml.py::occupation_records``, whose records feed both the
+pipeline's report and its parquet sink.
 
 Plan audits want the opposite: the full lineage back to the scans, so
 a pin can assert on the shuffles a checkpoint would hide. Under

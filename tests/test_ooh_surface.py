@@ -193,6 +193,52 @@ def test_record_projection_columns_are_built_once_per_context(spark):
     assert (after.hits, after.misses) == (before.hits + 1, before.misses)
 
 
+# --- one record stage per pipeline execution ---------------------------------
+def test_occupation_records_are_computed_once_for_report_and_sink(spark):
+    # The pipeline's report and sink plan from the computed records: the
+    # XML scan and the xpath evaluations ran once, when it was built.
+    from ooh_etl_spark.plans.audit import physical_plan
+    from ooh_etl_spark.queries.ooh_surface import FIXTURE
+    from ooh_etl_spark.sources.xml import (
+        long_quality_filter,
+        occupation_records,
+        read_occupations,
+        report_lines,
+    )
+
+    records = occupation_records(read_occupations(spark, FIXTURE))
+    report = report_lines(long_quality_filter(records))
+    assert len(report.collect()) == 2
+    for df in (records, report):
+        plan = physical_plan(df)
+        assert "Scan ExistingRDD" in plan and "localCheckpoint" in plan, plan
+        assert "Scan xml" not in plan and "XPathListEvaluator" not in plan, plan
+
+
+def test_project_records_report_prunes_the_scan_to_its_fields(spark):
+    # The report-only shape (bench.py's ooh_xml_10k, q_ooh_report) stays
+    # lazy: the scan reads the four fields the report needs and the plan
+    # evaluates one xpath, importantQualities' own.
+    import re
+
+    from ooh_etl_spark.plans.audit import physical_plan
+    from ooh_etl_spark.queries.ooh_surface import FIXTURE
+    from ooh_etl_spark.sources.xml import (
+        long_quality_filter,
+        project_records,
+        read_occupations,
+        report_lines,
+    )
+
+    report = report_lines(long_quality_filter(project_records(read_occupations(spark, FIXTURE))))
+    assert len(report.collect()) == 2
+    plan = physical_plan(report)
+    [output] = re.findall(r"Scan xml \nOutput \[\d+\]: \[(.*)\]", plan)
+    fields = re.findall(r"(\w+)#\d+", output)
+    assert fields == ["title", "qf_median_pay_annual", "qf_employment_outlook", "how_to_become_one"], plan
+    assert plan.count("XPathListEvaluator") == 1, plan
+
+
 # --- bench.py's ooh_xml_10k entry --------------------------------------------
 def test_bench_ooh_entry_checks_the_generated_report(spark, tmp_path):
     # The entry returns the report only when it matches the digest oohgen

@@ -165,14 +165,15 @@ def _canonical(records):
     ]
 
 
+@pytest.mark.parametrize("entry", ["project_records", "occupation_records"])
 @settings(max_examples=20, deadline=None)
 @given(st.lists(_occupation, min_size=1, max_size=12))
-def test_grouped_xpath_records_equal_per_fragment_functions(spark, rows):
+def test_grouped_xpath_records_equal_per_fragment_functions(spark, entry, rows):
     # One xpath evaluation per row (xpath_grouped) must give exactly the
     # per-fragment results for all 21 columns, including for NULL and
     # <p>-less fragments, empty CDATA, dirty characters, and masked or
-    # NULL-title rows.
-    from ooh_etl_spark.sources.xml import OCCUPATION_SCHEMA, occupation_records
+    # NULL-title rows; the computed records equal the lazy ones.
+    from ooh_etl_spark.sources import xml
 
     occ = spark.createDataFrame(
         [
@@ -180,9 +181,9 @@ def test_grouped_xpath_records_equal_per_fragment_functions(spark, rows):
              swtd, shtb, swe, spay, (sim,), (we,), (htb,))
             for t, swtd, shtb, swe, spay, sim, we, htb in rows
         ],
-        OCCUPATION_SCHEMA,
+        xml.OCCUPATION_SCHEMA,
     )
-    got, want = occupation_records(occ), _per_fragment_records(occ)
+    got, want = getattr(xml, entry)(occ), _per_fragment_records(occ)
     assert got.columns == want.columns
     assert _canonical(got) == _canonical(want)
 

@@ -3,6 +3,7 @@ and the driver work that it keeps off each query construction."""
 
 from __future__ import annotations
 
+import re
 import shutil
 
 import pytest
@@ -65,13 +66,22 @@ def test_table_schema_is_read_once_per_session(spark, tmp_path):
 def test_dataframe_debugging_is_off_and_errors_keep_their_class(spark):
     """``get_spark`` turns off PySpark's per-call call-site capture
     (``session.DATAFRAME_DEBUGGING``). An ANSI runtime error still raises
-    with its error class."""
+    with its error class. Its "DataFrame query context" names the py4j
+    reflection frame, not the Python line that built the expression."""
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
     assert not is_debugging_enabled()
     df = spark.range(3).select((F.lit(1) / (F.col("id") - F.col("id"))).alias("q"))
     with pytest.raises(ArithmeticException) as err:
         df.collect()
     assert err.value.getCondition() == "DIVIDE_BY_ZERO"
+    # The frame is NativeMethodAccessorImpl.invoke0 until the JVM
+    # inflates the reflective call into a GeneratedMethodAccessor class
+    # (as it does in a long session); both are jdk.internal.reflect.
+    [context] = err.value.getQueryContext()
+    assert (context.contextType().name, context.fragment()) == ("DataFrame", "divide")
+    assert re.match(r"(java\.base/)?jdk\.internal\.reflect\.\w+\.invoke0?\(", context.callSite())
+    assert f'== DataFrame ==\n"divide" was called from\n{context.callSite()}' in str(err.value)
+    assert "test_session.py" not in str(err.value)
     over = spark.range(1).select((F.col("id") + F.lit(2**31)).cast("int").alias("n"))
     with pytest.raises(ArithmeticException) as err:
         over.collect()

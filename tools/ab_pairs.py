@@ -18,6 +18,13 @@ for neither arm) and the medians differ by more than the parent's
 interquartile range over its median. A median worse than the parent's
 by more than the metric's bound is flagged as a regression. The last
 stdout line is the whole result as JSON.
+
+Each arm keeps ``perfbench/run.py``'s contamination flags: the whole
+run's (``run_contamination.contaminated``) and each timed pass's
+(``pass_contaminated``). An arm with any flag set is flagged: its pair
+line names it, and the verdict lines and the JSON count the pairs with
+a flagged arm. Flagged pairs stay in every verdict; they are reported,
+never dropped.
 """
 
 from __future__ import annotations
@@ -58,13 +65,30 @@ def run_arm(checkout: str, workload: str, seed: int, seconds: float) -> dict:
     proc = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
     if proc.returncode != 0:
         raise RuntimeError(f"{' '.join(cmd)} in {checkout} exited {proc.returncode}:\n{proc.stderr[-2000:]}")
-    result = json.loads(proc.stdout.strip().splitlines()[-1])
+    *_, report_line, result_line = proc.stdout.strip().splitlines()
+    report, result = json.loads(report_line)["report"], json.loads(result_line)
     return {
         "correct": result["correct"],
         "attempted": result["attempted"],
         "failed": result["failed"],
+        "run_contaminated": report["run_contamination"]["contaminated"],
+        "pass_contaminated": report["pass_contaminated"],
         **{k: v["value"] for k, v in result["metrics"].items()},
     }
+
+
+def flagged(arm: dict) -> bool:
+    """True when the run or any of its timed passes was contaminated."""
+    return arm["run_contaminated"] or any(arm["pass_contaminated"])
+
+
+def flag_note(arm: dict) -> str:
+    """`` [run, passes 2/5 contaminated]``: what was flagged in ``arm``."""
+    passes = arm["pass_contaminated"]
+    parts = ["run"] if arm["run_contaminated"] else []
+    if any(passes):
+        parts.append(f"passes {sum(passes)}/{len(passes)}")
+    return f" [{', '.join(parts)} contaminated]"
 
 
 def verdict(metric: dict, parent: list[float], change: list[float]) -> dict:
@@ -116,7 +140,8 @@ def main() -> int:
                     f"{m['name']} {arms['parent'][m['name']]:.4g} -> {arms['change'][m['name']]:.4g}"
                     for m in metrics
                 )
-                + f"  failed {arms['parent']['failed']}/{arms['change']['failed']}",
+                + f"  failed {arms['parent']['failed']}/{arms['change']['failed']}"
+                + "".join(f"  {arm}{flag_note(arms[arm])}" for arm in order if flagged(arms[arm])),
                 flush=True,
             )
 
@@ -126,12 +151,14 @@ def main() -> int:
         )
         for m in metrics
     }
+    contaminated_pairs = sum(flagged(p["parent"]) or flagged(p["change"]) for p in pairs)
     for name, v in verdicts.items():
         (p1, pmed, p3), (c1, cmed, c3) = v["parent_quartiles"], v["change_quartiles"]
         print(
             f"# {name}: parent {pmed:.4g} [{p1:.4g}, {p3:.4g}] change {cmed:.4g} [{c1:.4g}, {c3:.4g}]"
             f" gain {v['gain']:+.1%} vs parent IQR/median {v['parent_iqr_over_median']:.2f},"
             f" change won {v['change_wins']}/{v['pairs']}"
+            f" ({contaminated_pairs} pairs with a contaminated run)"
             + (" -> GAIN" if v["gain_claimed"] else "")
             + (" -> REGRESSION" if v["regression"] else ""),
             flush=True,
@@ -140,7 +167,8 @@ def main() -> int:
     incorrect = {arm: sum(not p[arm]["correct"] for p in pairs) for arm in ("parent", "change")}
     print(f"# failed executions {failed}, runs not correct {incorrect}", flush=True)
     print(json.dumps({"rev": args.rev, "workload": args.workload, "failed": failed,
-                      "incorrect_runs": incorrect, "pairs": pairs, "verdicts": verdicts}))
+                      "incorrect_runs": incorrect, "contaminated_pairs": contaminated_pairs,
+                      "pairs": pairs, "verdicts": verdicts}))
     return 0
 
 
