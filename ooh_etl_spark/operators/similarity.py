@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ooh_etl_spark.functions.money import quantise
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -76,7 +78,7 @@ def centroid_d2(e: Column, panel: Column) -> Column:
     return F.transform(
         panel,
         lambda c: F.struct(
-            F.round(1000000 * sq_dist(e, c["ce"])).cast("bigint").alias("d2"),
+            quantise(sq_dist(e, c["ce"]), 6).alias("d2"),
             c["cid"].alias("cid"),
         ),
     )

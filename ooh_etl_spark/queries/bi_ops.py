@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ooh_etl_spark.functions.money import quantise
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_table
@@ -44,7 +45,7 @@ def q127_mom_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     m = orders.groupBy(
         F.year("o_orderdate").alias("yr"), F.month("o_orderdate").alias("mo")
-    ).agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).cast("bigint").alias("rev_c"))
+    ).agg(F.sum(quantise("o_totalprice", 2)).cast("bigint").alias("rev_c"))
     w = Window.orderBy("yr", "mo")
     prev = F.lag("rev_c").over(w)
     return m.select(
@@ -94,9 +95,7 @@ def q128_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     p = li.groupBy("l_partkey").agg(
         F.sum(
-            F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast(
-                "bigint"
-            )
+            quantise(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2)
         )
         .cast("bigint")
         .alias("rev_c")
@@ -254,8 +253,8 @@ def q131_rank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bal",
         F.rank().over(w).alias("rnk"),
         F.dense_rank().over(w).alias("drnk"),
-        F.round(F.percent_rank().over(w) * 10000).cast("bigint").alias("pct_rank_bp"),
-        F.round(F.cume_dist().over(w) * 10000).cast("bigint").alias("cume_bp"),
+        quantise(F.percent_rank().over(w), 4).alias("pct_rank_bp"),
+        quantise(F.cume_dist().over(w), 4).alias("cume_bp"),
         F.ntile(4).over(w).alias("quartile"),
         F.round(F.nth_value("bal", 2).over(wfull), 2).alias("second_bal"),
     ).orderBy("c_mktsegment", "rnk")
@@ -384,7 +383,7 @@ def q197_gini_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     nation = load_table(spark, sf_dir, "nation")
     rev = orders.groupBy("o_custkey").agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias("rev_c")
+        F.sum(quantise("o_totalprice", 2)).alias("rev_c")
     )
     cr = cust.join(rev, cust.c_custkey == rev.o_custkey).select(
         "c_custkey", "c_nationkey", "rev_c"
@@ -406,7 +405,7 @@ def q197_gini_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("n_name").alias("nation"),
             F.col("n_customers").cast("bigint").alias("n_customers"),
-            F.round(1000000 * gini).cast("bigint").alias("gini_e6"),
+            quantise(gini, 6).alias("gini_e6"),
         )
         .orderBy("nation")
     )
@@ -457,9 +456,7 @@ def q200_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("s_nationkey", "s_suppkey")
         .agg(
             F.sum(
-                F.round(
-                    F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-                ).cast("bigint")
+                quantise(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2)
             ).alias("rev_c")
         )
     )
@@ -473,14 +470,11 @@ def q200_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("n_name").alias("nation"),
             F.col("n_suppliers").cast("bigint").alias("n_suppliers"),
-            F.round(
-                1000000
-                * (
-                    F.col("sumsq").cast("double")
-                    / (F.col("tot").cast("double") * F.col("tot").cast("double"))
-                )
+            quantise(
+                F.col("sumsq").cast("double")
+                / (F.col("tot").cast("double") * F.col("tot").cast("double")),
+                6,
             )
-            .cast("bigint")
             .alias("hhi_e6"),
         )
         .orderBy("nation")
@@ -527,7 +521,7 @@ def q208_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     p = li.groupBy(
         F.col("l_returnflag").alias("flag"),
-        F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("price_c"),
+        quantise("l_extendedprice", 2).alias("price_c"),
     ).agg(F.sum(F.col("l_quantity").cast("bigint")).alias("w"))
     w_cum = Window.partitionBy("flag").orderBy("price_c").rowsBetween(
         Window.unboundedPreceding, 0
@@ -713,15 +707,15 @@ def q252_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_extendedprice") > 0)
         & (F.col("l_discount") < 1)
     )
-    lq = F.round(F.log(F.col("l_quantity")) * 1000000).cast("bigint")
-    lp = F.round(
+    lq = quantise(F.log(F.col("l_quantity")), 6)
+    lp = quantise(
         F.log(
             F.col("l_extendedprice")
             * (1 - F.col("l_discount"))
             / F.col("l_quantity")
-        )
-        * 1000000
-    ).cast("bigint")
+        ),
+        6,
+    )
     obs = li.select(lq.alias("lq_u"), lp.alias("lp_u"))
     dec = lambda c: F.col(c).cast("decimal(38,0)")
     s = obs.agg(
@@ -736,7 +730,7 @@ def q252_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return s.select(
         F.col("n").cast("bigint").alias("n"),
-        F.round(1000000.0 * slope).cast("bigint").alias("elasticity_e6"),
+        quantise(slope, 6).alias("elasticity_e6"),
         F.round(
             (F.col("sy") * 1.0 / F.col("n") - slope * F.col("sx") / F.col("n"))
             / 1000.0
@@ -806,9 +800,7 @@ def q254_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.max("ts").alias("last_ts"),
             F.count(F.lit(1)).alias("frequency"),
-            F.sum(F.round(F.col("value") * 100).cast("bigint")).alias(
-                "monetary_c"
-            ),
+            F.sum(quantise("value", 2)).alias("monetary_c"),
         )
         .select(
             "user_id",
@@ -898,9 +890,7 @@ def q256_pareto_elbow(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines agree exactly and the argmax is unchanged.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    cents = F.round(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-    ).cast("bigint")
+    cents = quantise(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2)
     rev = li.groupBy("l_partkey").agg(F.sum(cents).alias("rev_c"))
     w = Window.orderBy(F.desc("rev_c"), "l_partkey")
     ranked = rev.select(
@@ -1004,7 +994,7 @@ def q288_mix_shift_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         (ms >= F.floor((F.col("lo") + F.col("hi")) / 2).cast("bigint"))
         .cast("int")
         .alias("period"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("rev_c"),
+        quantise("o_totalprice", 2).alias("rev_c"),
     )
     seg = (
         t.join(F.broadcast(cust.select("c_custkey", "c_mktsegment")),
@@ -1137,7 +1127,7 @@ def q373_price_indices(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(F.col("pk"))
         .groupBy("pk", "mo")
         .agg(
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("bigint"))
+            F.sum(quantise("l_extendedprice", 2))
             .cast("bigint")
             .alias("spend_c"),
             F.sum(F.round(F.col("l_quantity")).cast("bigint"))
@@ -1183,10 +1173,9 @@ def q373_price_indices(spark: SparkSession, sf_dir: str) -> DataFrame:
     return idx.select(
         F.format_string("%04d-%02d", F.expr("mo div 100"), F.expr("mo % 100")).alias("month"),
         "n_parts",
-        F.round(1000000.0 * F.col("lasp")).cast("bigint").alias("laspeyres_e6"),
-        F.round(1000000.0 * F.col("paas")).cast("bigint").alias("paasche_e6"),
-        F.round(1000000.0 * F.sqrt(F.col("lasp") * F.col("paas")))
-        .cast("bigint")
+        quantise("lasp", 6).alias("laspeyres_e6"),
+        quantise("paas", 6).alias("paasche_e6"),
+        quantise(F.sqrt(F.col("lasp") * F.col("paas")), 6)
         .alias("fisher_e6"),
     ).orderBy("month")
 
@@ -1242,7 +1231,7 @@ def q390_inequality_indices(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scale advantage over rank-based inequality measures."""
     orders = load_table(spark, sf_dir, "orders")
     x = orders.select(
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("c")
+        quantise("o_totalprice", 2).alias("c")
     )
     m = x.agg(
         F.count(F.lit(1)).cast("bigint").alias("n0"),
@@ -1251,8 +1240,8 @@ def q390_inequality_indices(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = F.col("c") / F.col("mu")
     terms = x.crossJoin(F.broadcast(m)).select(
         F.round(1000000.0 * r * F.log(r)).cast("bigint").alias("t_u"),
-        F.round(1000000.0 * F.log(r)).cast("bigint").alias("l_u"),
-        F.round(1000000.0 * F.sqrt(r)).cast("bigint").alias("s_u"),
+        quantise(F.log(r), 6).alias("l_u"),
+        quantise(F.sqrt(r), 6).alias("s_u"),
     )
     agg = terms.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -1269,9 +1258,7 @@ def q390_inequality_indices(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(-F.col("sl") * 1.0 / F.col("n") / 1000).cast("bigint").alias(
             "theil_l_e3"
         ),
-        F.round(1000.0 * (1.0 - smean * smean)).cast("bigint").alias(
-            "atkinson_half_e3"
-        ),
+        quantise(1.0 - smean * smean, 3).alias("atkinson_half_e3"),
     )
 
 
@@ -1364,10 +1351,8 @@ def q391_reorder_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("pk").alias("partkey"),
         "n_days",
         "active_days",
-        F.round(1000.0 * F.col("mu")).cast("bigint").alias("daily_mean_milli"),
-        F.round(1000.0 * F.sqrt(F.col("var"))).cast("bigint").alias(
-            "daily_sd_milli"
-        ),
+        quantise("mu", 3).alias("daily_mean_milli"),
+        quantise(F.sqrt(F.col("var")), 3).alias("daily_sd_milli"),
         F.ceil(
             F.col("mu") * _ROP_LEAD_DAYS
             + (_ROP_Z_E6 / 1000000.0) * F.sqrt(F.col("var") * _ROP_LEAD_DAYS)

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ooh_etl_spark.functions.money import quantise
 from ooh_etl_spark.functions.text import (
     DUCK_TOKENIZE,
     tokenize,
@@ -497,7 +498,7 @@ def q253_crosslingual_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
         xl.groupBy("lang_a", "lang_b")
         .agg(
             F.count(F.lit(1)).alias("n_pairs"),
-            F.round(10000 * F.max("jaccard")).cast("bigint").alias("max_jac_bp"),
+            quantise(F.max("jaccard"), 4).alias("max_jac_bp"),
         )
         .orderBy("lang_a", "lang_b")
     )
@@ -887,7 +888,7 @@ def q345_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "id_a",
             "id_b",
-            F.round(10000.0 * F.col("jaccard")).cast("bigint").alias("j_bp"),
+            quantise("jaccard", 4).alias("j_bp"),
         )
         # one pair computation feeds every threshold
     )
@@ -2200,7 +2201,7 @@ def q427_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = jaccard_pairs(docs, "text", "doc_id", threshold=0.2).select(
         "id_a",
         "id_b",
-        F.round(F.col("jaccard") * 10000).cast("bigint").alias("j10k"),
+        quantise("jaccard", 4).alias("j10k"),
     )
     a = sig.select(
         F.col("doc_id").alias("id_a"),

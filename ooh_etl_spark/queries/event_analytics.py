@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ooh_etl_spark.functions.money import quantise
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_table
@@ -216,7 +217,7 @@ def q100_first_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = (
         ev.filter(F.col("event_type") == "purchase")
         .groupBy("user_id")
-        .agg(F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("user_rev_c"))
+        .agg(F.sum(quantise("value", 2)).alias("user_rev_c"))
     )
     return (
         ft.join(rev, "user_id", "left")
@@ -751,7 +752,7 @@ def q242_leakage_safe_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 F.when(
                     F.col("event_type") == "purchase",
-                    F.round(F.col("value") * 100).cast("bigint"),
+                    quantise("value", 2),
                 ).otherwise(0)
             ).alias("rev_pre_c"),
             F.countDistinct("event_type").alias("n_types_pre"),
@@ -1201,7 +1202,7 @@ def q273_revenue_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("bigint")
             .alias("week_offset"),
-            F.round(F.col("value") * 100).cast("bigint").alias("v_c"),
+            quantise("value", 2).alias("v_c"),
         )
         .groupBy("cohort_wk", "week_offset")
         .agg(F.sum("v_c").alias("rev_c"))
@@ -1421,7 +1422,7 @@ def q304_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         phi.crossJoin(F.broadcast(tot))
         .select(
             "channel",
-            F.round(1000000.0 * F.col("phi")).cast("bigint").alias("phi_e6"),
+            quantise("phi", 6).alias("phi_e6"),
             F.round(10000.0 * F.col("phi") / F.col("t"))
             .cast("bigint")
             .alias("share_bp"),
@@ -1507,9 +1508,7 @@ def q344_coec_position_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "n_events",
         "clicks",
-        F.round(1000.0 * F.col("expected")).cast("bigint").alias(
-            "expected_milli"
-        ),
+        quantise("expected", 3).alias("expected_milli"),
         F.round(1000.0 * F.col("clicks") / F.col("expected"))
         .cast("bigint")
         .alias("coec_milli"),
@@ -1601,7 +1600,7 @@ def q347_markov_heldout_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(
-                F.round(-1000000.0 * F.log(p)).cast("bigint")
+                quantise(-F.log(p), 6)
             )
             .cast("bigint")
             .alias("nll_u"),
@@ -1610,10 +1609,7 @@ def q347_markov_heldout_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     return nll.select(
         F.col("n").cast("bigint").alias("n_transitions"),
         "nll_u",
-        F.round(
-            F.exp(F.col("nll_u") / (1000000.0 * F.col("n"))) * 1000
-        )
-        .cast("bigint")
+        quantise(F.exp(F.col("nll_u") / (1000000.0 * F.col("n"))), 3)
         .alias("perplexity_milli"),
     )
 
@@ -1682,27 +1678,20 @@ def q380_negbin_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     mv = mom.select(F.col("n"), mu.alias("mu"), var.alias("var"))
     return mv.select(
         F.col("n").alias("n_users"),
-        F.round(1000.0 * F.col("mu")).cast("bigint").alias("mean_milli"),
-        F.round(1000.0 * F.col("var")).cast("bigint").alias("var_milli"),
+        quantise("mu", 3).alias("mean_milli"),
+        quantise("var", 3).alias("var_milli"),
         F.round(1000000.0 * (F.col("var") - F.col("mu")) / (F.col("mu") * F.col("mu")))
         .cast("bigint")
         .alias("alpha_e6"),
-        F.round(
-            1000.0
-            * F.when(
-                F.col("var") > F.col("mu"),
-                F.col("mu") * F.col("mu") / (F.col("var") - F.col("mu")),
-            ).otherwise(0.0)
+        quantise(
+            F.when(
+              F.col("var") > F.col("mu"),
+              F.col("mu") * F.col("mu") / (F.col("var") - F.col("mu")),
+          ).otherwise(0.0),
+            3,
         )
-        .cast("bigint")
         .alias("r_milli"),
-        F.round(
-            1000000.0
-            * F.when(F.col("var") > F.col("mu"), F.col("mu") / F.col("var")).otherwise(
-                1.0
-            )
-        )
-        .cast("bigint")
+        quantise(F.when(F.col("var") > F.col("mu"), F.col("mu") / F.col("var")).otherwise(1.0), 6)
         .alias("p_e6"),
         F.when(F.col("var") > F.col("mu"), 1).otherwise(0).cast("bigint").alias(
             "overdispersed"

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ooh_etl_spark.functions.money import quantise
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_table
@@ -111,8 +112,8 @@ def q140_wilson_ctr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("day", "yyyy-MM-dd").alias("day"),
         "clicks",
         "views",
-        F.round(10000 * p).cast("bigint").alias("ctr_bp"),
-        F.round(10000 * wilson).cast("bigint").alias("wilson_lower_bp"),
+        quantise(p, 4).alias("ctr_bp"),
+        quantise(wilson, 4).alias("wilson_lower_bp"),
     ).orderBy("day")
 
 
@@ -399,7 +400,7 @@ def q184_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     approaches 9.2e18 — at that point the stats sums (only) move to
     decimal(38,0), the money-policy wide accumulator."""
     events = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("bigint")
+    cents = quantise("value", 2)
     cut = F.lit(_CUPED_CUT).cast("timestamp")
     per_user = events.groupBy("user_id").agg(
         F.sum(F.when(F.col("ts") < cut, cents).otherwise(F.lit(0))).alias("pre_c"),
@@ -420,16 +421,13 @@ def q184_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             (F.col("user_id") % 2).alias("arm"),
             "post_c",
-            F.round(
-                (
-                    F.col("post_c")
-                    - theta * (F.col("pre_c") - F.col("sp") / (F.col("n") * 1.0))
-                )
-                * 10
+            quantise(
+                F.col("post_c")
+                - theta * (F.col("pre_c") - F.col("sp") / (F.col("n") * 1.0)),
+                1,
             )
-            .cast("bigint")
             .alias("adj_milli"),
-            F.round(theta * 1_000_000).cast("bigint").alias("theta_ppm"),
+            quantise(theta, 6).alias("theta_ppm"),
         )
     )
     return (
@@ -490,7 +488,7 @@ def q189_fd_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     a narrow map + a |bins|-key aggregate with map-side partials —
     the same two-pass shape as q114's winsorized mean."""
     orders = load_table(spark, sf_dir, "orders")
-    c = orders.select(F.round(F.col("o_totalprice") * 100).cast("bigint").alias("price_c"))
+    c = orders.select(quantise("o_totalprice", 2).alias("price_c"))
     s = c.agg(
         F.count(F.lit(1)).alias("n"),
         F.min("price_c").alias("min_c"),
@@ -574,7 +572,7 @@ def q192_welch_t_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole test is map-side partials + six numbers."""
     events = load_table(spark, sf_dir, "events")
     per_user = events.groupBy("user_id").agg(
-        F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("metric_c")
+        F.sum(quantise("value", 2)).alias("metric_c")
     )
     s = (
         per_user.select(
@@ -612,10 +610,9 @@ def q192_welch_t_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m.select(
         "n_a",
         "n_b",
-        F.round(F.col("mean_a") * 10).cast("bigint").alias("mean_a_milli"),
-        F.round(F.col("mean_b") * 10).cast("bigint").alias("mean_b_milli"),
-        F.round((F.col("mean_b") - F.col("mean_a")) / F.sqrt(se2) * 1_000_000)
-        .cast("bigint")
+        quantise("mean_a", 1).alias("mean_a_milli"),
+        quantise("mean_b", 1).alias("mean_b_milli"),
+        quantise((F.col("mean_b") - F.col("mean_a")) / F.sqrt(se2), 6)
         .alias("t_micro"),
         F.round(
             F.pow(se2, 2)
@@ -701,7 +698,7 @@ def q193_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     c = orders.select(
         F.col("o_orderkey").alias("k"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("price_c"),
+        quantise("o_totalprice", 2).alias("price_c"),
     )
     rep = c.select(
         "k",
@@ -883,13 +880,7 @@ def q211_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("d") == 0, F.lit(0))
         .when(
             F.col("d") < F.col("n_risk"),
-            F.round(
-                1000000
-                * F.log(
-                    (F.col("n_risk") - F.col("d")).cast("double")
-                    / F.col("n_risk")
-                )
-            ).cast("bigint"),
+            quantise(F.log((F.col("n_risk") - F.col("d")).cast("double") / F.col("n_risk")), 6),
         )
         .otherwise(F.lit(-99000000))
         .alias("f_micro"),
@@ -975,7 +966,7 @@ def q226_msprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q192's contract, extended with one quantized output).
     """
     ev = load_table(spark, sf_dir, "events")
-    vc = F.round(F.col("value") * 100).cast("bigint")
+    vc = quantise("value", 2)
     daily = (
         ev.select(
             F.col("ts").cast("date").alias("d"),
@@ -1027,7 +1018,7 @@ def q226_msprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("d", "yyyy-MM-dd").alias("day"),
         F.col("n_a").cast("bigint").alias("n_a"),
         F.col("n_b").cast("bigint").alias("n_b"),
-        F.round(1000000 * log_lambda).cast("bigint").alias("log_lambda_micro"),
+        quantise(log_lambda, 6).alias("log_lambda_micro"),
         (log_lambda >= math.log(1.0 / _MSPRT_ALPHA))
         .cast("bigint")
         .alias("rejected"),
@@ -1085,7 +1076,7 @@ def q227_quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFram
     per_user = (
         ev.groupBy("user_id")
         .agg(
-            F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("metric_c")
+            F.sum(quantise("value", 2)).alias("metric_c")
         )
         .select(
             (F.col("user_id") % 2).alias("arm"),
@@ -1185,7 +1176,7 @@ def q235_diff_in_differences(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(0)
         .alias("post"),
-        F.round(F.col("value") * 100).cast("bigint").alias("vc"),
+        quantise("value", 2).alias("vc"),
     )
     # checkpoint the 4-cell table: the four pick() consumers would
     # otherwise each re-run the corpus aggregate (audited: 8 parquet
@@ -1211,8 +1202,7 @@ def q235_diff_in_differences(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(10.0 * F.col("t0_sx") / F.col("t0_n")).cast("bigint").alias("treat_pre_m"),
         F.round(10.0 * F.col("c1_sx") / F.col("c1_n")).cast("bigint").alias("ctrl_post_m"),
         F.round(10.0 * F.col("c0_sx") / F.col("c0_n")).cast("bigint").alias("ctrl_pre_m"),
-        F.round(10.0 * ((m("t1") - m("t0")) - (m("c1") - m("c0"))))
-        .cast("bigint")
+        quantise((m("t1") - m("t0")) - (m("c1") - m("c0")), 1)
         .alias("did_m"),
     )
 
@@ -1261,7 +1251,7 @@ def q266_minimum_detectable_effect(spark: SparkSession, sf_dir: str) -> DataFram
     """
     ev = load_table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
-        F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("metric_c")
+        F.sum(quantise("value", 2)).alias("metric_c")
     ).select((F.col("user_id") % 2).alias("arm"), "metric_c")
     s = per_user.groupBy("arm").agg(
         F.count(F.lit(1)).alias("n"),
@@ -1286,7 +1276,7 @@ def q266_minimum_detectable_effect(spark: SparkSession, sf_dir: str) -> DataFram
     return m.select(
         F.col("n_a").cast("bigint").alias("n_a"),
         F.col("n_b").cast("bigint").alias("n_b"),
-        F.round(2.8016 * se * 10).cast("bigint").alias("mde_abs_milli"),
+        quantise(2.8016 * se, 1).alias("mde_abs_milli"),
         F.round(10000.0 * 2.8016 * se / pooled).cast("bigint").alias("mde_rel_bp"),
     )
 
@@ -1408,7 +1398,7 @@ def q271_ratio_metric_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(
             F.when(
                 F.col("event_type") == "purchase",
-                F.round(F.col("value") * 100).cast("bigint"),
+                quantise("value", 2),
             ).otherwise(0)
         ).alias("rev_c"),
         F.count(F.lit(1)).alias("n_ev"),
@@ -1504,7 +1494,7 @@ def q280_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     v = ev.select(
         (F.col("user_id") % 2).alias("arm"),
-        F.round(F.col("value") * 1000000).cast("bigint").alias("v_u"),
+        quantise("value", 6).alias("v_u"),
     )
     hist = v.groupBy("v_u").agg(
         F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).alias("a"),
@@ -1576,7 +1566,7 @@ def q283_cohens_d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
-        F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("metric_c")
+        F.sum(quantise("value", 2)).alias("metric_c")
     ).select((F.col("user_id") % 2).alias("arm"), "metric_c")
     s = per_user.groupBy("arm").agg(
         F.count(F.lit(1)).alias("n"),
@@ -1662,7 +1652,7 @@ def q289_novelty_effect_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("w"),
         (F.col("user_id") % 2).alias("arm"),
-        F.round(F.col("value") * 100).cast("bigint").alias("vc"),
+        quantise("value", 2).alias("vc"),
     )
     cell = materialize(wk.groupBy("w", "arm").agg(
         F.count(F.lit(1)).alias("n"), F.sum("vc").alias("sx")
@@ -1766,8 +1756,8 @@ def q293_bayes_ucb_bandit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "arm",
         F.col("n").cast("bigint").alias("n"),
         "conv",
-        F.round(1000000 * mean).cast("bigint").alias("post_mean_e6"),
-        F.round(1000000 * ucb).cast("bigint").alias("ucb_e6"),
+        quantise(mean, 6).alias("post_mean_e6"),
+        quantise(ucb, 6).alias("ucb_e6"),
         F.row_number()
         .over(Window.orderBy(F.desc_nulls_last(ucb), F.col("arm")))
         .cast("bigint")
@@ -1939,7 +1929,7 @@ def q302_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     to |strata| rows, a scalar total, a 1-row cross join back — the
     q293/q300 'heavy aggregate, tiny decision table' shape again."""
     ev = load_table(spark, sf_dir, "events")
-    vc = F.round(F.col("value") * 100).cast("bigint")
+    vc = quantise("value", 2)
     s = ev.groupBy(F.col("event_type").alias("stratum")).agg(
         F.count(F.lit(1)).alias("nh"),
         F.sum(vc).cast("bigint").alias("sv"),
@@ -2184,9 +2174,7 @@ def q321_matching_att(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust.select(F.col("c_custkey").alias("k"))
         .join(
             orders.groupBy(F.col("o_custkey").alias("k")).agg(
-                F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias(
-                    "s"
-                )
+                F.sum(quantise("o_totalprice", 2)).alias("s")
             ),
             "k",
             "left",
@@ -2199,7 +2187,7 @@ def q321_matching_att(spark: SparkSession, sf_dir: str) -> DataFrame:
     units = cust.select(
         F.col("c_custkey").alias("k"),
         F.col("c_nationkey").alias("nk"),
-        F.round(F.col("c_acctbal") * 100).cast("bigint").alias("bal_c"),
+        quantise("c_acctbal", 2).alias("bal_c"),
         F.when(F.col("c_mktsegment") == "BUILDING", 1).otherwise(0).alias(
             "treated"
         ),
@@ -2319,7 +2307,7 @@ def q328_iv_wald(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     d = orders.select(
         (F.col("o_orderkey") % 2).cast("bigint").alias("z"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("x"),
+        quantise("o_totalprice", 2).alias("x"),
         F.when(F.col("o_orderpriority") == "1-URGENT", 1)
         .otherwise(0)
         .alias("y"),
@@ -2420,7 +2408,7 @@ def q348_factorial_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = ev.select(
         (F.col("user_id") % 2).alias("fa"),
         (F.expr("user_id div 2") % 2).alias("fb"),
-        F.round(F.col("value") * 100).cast("bigint").alias("vc"),
+        quantise("value", 2).alias("vc"),
     )
     cell = d.groupBy("fa", "fb").agg(
         F.count(F.lit(1)).alias("n"),
@@ -2448,7 +2436,7 @@ def q348_factorial_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     inter = (F.col("m11") - F.col("m10")) - (F.col("m01") - F.col("m00"))
     return m.select(
         F.col("nn").alias("n"),
-        F.round(10.0 * inter).cast("bigint").alias("interaction_m"),
+        quantise(inter, 1).alias("interaction_m"),
         F.round(
             10.0 * ((F.col("m11") + F.col("m10")) - (F.col("m01") + F.col("m00"))) / 2
         )
@@ -2514,7 +2502,7 @@ def q356_copeland_tournament(spark: SparkSession, sf_dir: str) -> DataFrame:
     day = materialize(ev.groupBy(
         F.col("event_type").alias("item"), F.col("ts").cast("date").alias("d")
     ).agg(
-        F.sum(F.round(F.col("value") * 100).cast("bigint"))
+        F.sum(quantise("value", 2))
         .cast("bigint")
         .alias("s"),
         F.count(F.lit(1)).alias("n"),
@@ -2591,7 +2579,7 @@ def q357_bradley_terry_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     day = materialize(ev.groupBy(
         F.col("event_type").alias("item"), F.col("ts").cast("date").alias("d")
     ).agg(
-        F.sum(F.round(F.col("value") * 100).cast("bigint"))
+        F.sum(quantise("value", 2))
         .cast("bigint")
         .alias("s"),
         F.count(F.lit(1)).alias("n"),
@@ -2717,16 +2705,14 @@ def q365_rdd_local_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     spend = orders.groupBy("o_custkey").agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
+        F.sum(quantise("o_totalprice", 2))
         .cast("bigint")
         .alias("spend_c")
     )
     y = (
         cust.select(
             "c_custkey",
-            (F.round(F.col("c_acctbal") * 100).cast("bigint") - _RDD_CUT_C).alias(
-                "u"
-            ),
+            (quantise("c_acctbal", 2) - _RDD_CUT_C).alias("u"),
         )
         .join(spend, F.col("c_custkey") == F.col("o_custkey"), "left")
         .select("u", F.coalesce(F.col("spend_c"), F.lit(0)).alias("spend_c"))
@@ -2768,11 +2754,9 @@ def q365_rdd_local_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("n_right"),
         F.round(F.max(left)).cast("bigint").alias("intercept_left_c"),
         F.round(F.max(right)).cast("bigint").alias("intercept_right_c"),
-        F.round(1000000 * F.max(F.when(F.col("side") == "left", F.col("slope"))))
-        .cast("bigint")
+        quantise(F.max(F.when(F.col("side") == "left", F.col("slope"))), 6)
         .alias("slope_left_u"),
-        F.round(1000000 * F.max(F.when(F.col("side") == "right", F.col("slope"))))
-        .cast("bigint")
+        quantise(F.max(F.when(F.col("side") == "right", F.col("slope"))), 6)
         .alias("slope_right_u"),
         F.round(F.max(right) - F.max(left)).cast("bigint").alias("jump_c"),
     )
@@ -3017,8 +3001,8 @@ def q393_fwl_partial_out(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(cust.select("c_custkey", "c_acctbal", "c_nationkey")),
         F.col("o_custkey") == F.col("c_custkey"),
     ).select(
-        F.round(F.col("c_acctbal") * 100).cast("bigint").alias("x"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("y"),
+        quantise("c_acctbal", 2).alias("x"),
+        quantise("o_totalprice", 2).alias("y"),
         F.col("c_nationkey").cast("bigint").alias("z"),
     ))
     zm = d.groupBy("z").agg(
@@ -3130,7 +3114,7 @@ def q394_aa_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     h = (F.col("o_orderkey") * F.lit(2654435761)) % F.lit(4294967296)
     lab = orders.select(
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("y"),
+        quantise("o_totalprice", 2).alias("y"),
         (h % _AA_SPLITS).cast("bigint").alias("exp_id"),
         (F.floor(h / _AA_SPLITS).cast("bigint") % 2).alias("arm"),
     )
@@ -3172,8 +3156,7 @@ def q394_aa_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("bigint")
         .alias("fp_rate_bp"),
-        F.round(1000.0 * F.max(F.abs(F.col("tstat"))))
-        .cast("bigint")
+        quantise(F.max(F.abs(F.col("tstat"))), 3)
         .alias("max_abs_t_milli"),
     )
 
@@ -3269,7 +3252,7 @@ def q402_obrien_fleming(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.unix_timestamp(F.col("o_orderdate")) / 86400)
         .cast("bigint")
         .alias("dt"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("price_c"),
+        quantise("o_totalprice", 2).alias("price_c"),
         (
             F.conv(
                 F.substring(
@@ -3342,8 +3325,8 @@ def q402_obrien_fleming(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wide.select(
         F.col("lk").alias("look"),
         (F.col("na") + F.col("nb")).alias("n_cum"),
-        F.round(1000.0 * zval).cast("bigint").alias("z_milli"),
-        F.round(1000.0 * boundary).cast("bigint").alias("boundary_milli"),
+        quantise(zval, 3).alias("z_milli"),
+        quantise(boundary, 3).alias("boundary_milli"),
         F.when(F.abs(zval) > boundary, 1).otherwise(0).cast("bigint").alias("crossed"),
     ).orderBy("look")
 
@@ -3425,7 +3408,7 @@ def q410_jackknife_ratio_se(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.o_custkey == F.col("c_custkey"),
     ).select(
         F.col("c_nationkey").alias("nk"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("vc"),
+        quantise("o_totalprice", 2).alias("vc"),
     )
     # 25-row group frame feeds tot, the replicates, and the final
     # select: checkpoint so the corpus agg runs ONCE (the q296-class
@@ -3466,8 +3449,8 @@ def q410_jackknife_ratio_se(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tot.crossJoin(F.broadcast(jk)).select(
         F.col("gg").alias("n_groups"),
         F.round(ratio).cast("bigint").alias("ratio_c"),
-        F.round(var_j * 1000000.0).cast("bigint").alias("jack_var_e6"),
-        F.round(F.sqrt(var_j) * 1000.0).cast("bigint").alias("jack_se_milli"),
+        quantise(var_j, 6).alias("jack_var_e6"),
+        quantise(F.sqrt(var_j), 3).alias("jack_se_milli"),
         F.round(ratio - 1.959964 * F.sqrt(var_j)).cast("bigint").alias("ci_lo_c"),
         F.round(ratio + 1.959964 * F.sqrt(var_j)).cast("bigint").alias("ci_hi_c"),
     )

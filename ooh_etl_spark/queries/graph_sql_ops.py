@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ooh_etl_spark.functions.money import quantise
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_table, load_tables
@@ -1080,9 +1081,7 @@ def q354_label_spreading(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("label") == 2, 1).otherwise(0))
         .cast("bigint")
         .alias("n_label2"),
-        F.round(F.avg("n_votes") * 1000).cast("bigint").alias(
-            "avg_votes_milli"
-        ),
+        quantise(F.avg("n_votes"), 3).alias("avg_votes_milli"),
     )
 
 
@@ -1195,15 +1194,12 @@ def q374_copurchase_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_nodes",
             F.coalesce(F.col("e_c"), F.lit(0)).cast("bigint").alias("e_intra"),
             "d_c",
-            F.round(
-                1000000.0
-                * (
-                    F.coalesce(F.col("e_c"), F.lit(0)) * 1.0 / F.col("m")
-                    - (F.col("d_c") / (2.0 * F.col("m")))
-                    * (F.col("d_c") / (2.0 * F.col("m")))
-                )
+            quantise(
+                F.coalesce(F.col("e_c"), F.lit(0)) * 1.0 / F.col("m")
+                - (F.col("d_c") / (2.0 * F.col("m")))
+                * (F.col("d_c") / (2.0 * F.col("m"))),
+                6,
             )
-            .cast("bigint")
             .alias("q_contrib_e6"),
         )
     )

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ooh_etl_spark.functions.money import quantise
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_table
@@ -635,11 +636,7 @@ def q307_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_cand",
             "n_truth",
             "n_found",
-            F.round(
-                10000.0
-                * (1.0 - F.col("n_cand") * 2.0 / (F.col("n") * (F.col("n") - 1)))
-            )
-            .cast("bigint")
+            quantise(1.0 - F.col("n_cand") * 2.0 / (F.col("n") * (F.col("n") - 1)), 4)
             .alias("reduction_ratio_bp"),
             F.round(10000.0 * F.col("n_found") / F.col("n_truth"))
             .cast("bigint")
@@ -771,13 +768,11 @@ def q319_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("f.*")
     return fields.select(
         "field",
-        F.round(10000 * F.col("m")).cast("bigint").alias("m_bp"),
-        F.round(10000 * F.col("u")).cast("bigint").alias("u_bp"),
-        F.round(1000 * F.log(F.col("m") / F.col("u")))
-        .cast("bigint")
+        quantise("m", 4).alias("m_bp"),
+        quantise("u", 4).alias("u_bp"),
+        quantise(F.log(F.col("m") / F.col("u")), 3)
         .alias("agree_weight_milli"),
-        F.round(1000 * F.log((1 - F.col("m")) / (1 - F.col("u"))))
-        .cast("bigint")
+        quantise(F.log((1 - F.col("m")) / (1 - F.col("u"))), 3)
         .alias("disagree_weight_milli"),
     ).orderBy("field")
 
@@ -826,7 +821,7 @@ def q335_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey",
         "c_nationkey",
         "c_mktsegment",
-        F.round(F.col("c_acctbal") * 100).cast("bigint").alias("bal_c"),
+        quantise("c_acctbal", 2).alias("bal_c"),
     )
     return (
         m.groupBy("cluster_key")
@@ -1234,8 +1229,8 @@ def q419_fs_em_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("s")
     ).select(
         F.col("s.field").alias("field"),
-        F.round(1000000 * F.col("s.m_new")).cast("bigint").alias("m_e6"),
-        F.round(1000000 * F.col("s.u_new")).cast("bigint").alias("u_e6"),
-        F.round(1000000 * F.col("s.p_new")).cast("bigint").alias("p_e6"),
+        quantise("s.m_new", 6).alias("m_e6"),
+        quantise("s.u_new", 6).alias("u_e6"),
+        quantise("s.p_new", 6).alias("p_e6"),
     )
     return out.orderBy("field")

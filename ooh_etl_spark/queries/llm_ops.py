@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ooh_etl_spark.functions.money import quantise
 from ooh_etl_spark.functions.text import DUCK_TOKENIZE, ngram_starts, tokenize
 from ooh_etl_spark.operators.similarity import l2_norm
 from ooh_etl_spark.queries.registry import register
@@ -1173,7 +1174,7 @@ def q388_speculative_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = dist.agg(
         F.count(F.lit(1)).cast("bigint").alias("vocab"),
-        F.sum(F.round(1000000000 * F.least(F.col("p"), F.col("q"))).cast("bigint"))
+        F.sum(quantise(F.least(F.col("p"), F.col("q")), 9))
         .cast("bigint")
         .alias("acc_n"),
         F.sum(

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ooh_etl_spark.functions.money import quantise
 from ooh_etl_spark.functions.text import DUCK_TOKENIZE
 from ooh_etl_spark.operators.similarity import dot, sq_dist
 from ooh_etl_spark.queries.registry import register
@@ -107,8 +108,7 @@ def q168_logreg_gradient(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "dim",
-            F.round((F.col("p") - F.col("y")) * F.col("x") * 1_000_000)
-            .cast("bigint")
+            quantise((F.col("p") - F.col("y")) * F.col("x"), 6)
             .alias("gmu"),
         )
         .groupBy("dim")
@@ -246,7 +246,7 @@ def q170_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = s.select(
         F.least(F.floor(F.col("p") * 10).cast("bigint"), F.lit(9)).alias("bin"),
         "y",
-        F.round(F.col("p") * 1_000_000).cast("bigint").alias("pmu"),
+        quantise("p", 6).alias("pmu"),
     )
     return (
         b.groupBy("bin")
@@ -315,11 +315,7 @@ def q187_naive_bayes_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lang",
             "token",
             "cnt",
-            F.round(
-                1_000_000
-                * F.log((F.col("cnt") + 1.0) / (F.col("n_l") + F.col("v")))
-            )
-            .cast("bigint")
+            quantise(F.log((F.col("cnt") + 1.0) / (F.col("n_l") + F.col("v"))), 6)
             .alias("loglik_micro"),
             F.row_number()
             .over(
@@ -434,11 +430,9 @@ def q188_naive_bayes_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lang",
             "n_l",
             "v",
-            F.round(1_000_000 * F.log(F.col("d_l") * 1.0 / F.col("d")))
-            .cast("bigint")
+            quantise(F.log(F.col("d_l") * 1.0 / F.col("d")), 6)
             .alias("prior_micro"),
-            F.round(1_000_000 * F.log(1.0 / (F.col("n_l") + F.col("v"))))
-            .cast("bigint")
+            quantise(F.log(1.0 / (F.col("n_l") + F.col("v"))), 6)
             .alias("default_micro"),
         )
         # |classes| rows; feeds scoring AND loglik
@@ -446,10 +440,7 @@ def q188_naive_bayes_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     ll = ct.join(params, "lang").select(
         "lang",
         "token",
-        F.round(
-            1_000_000 * F.log((F.col("cnt") + 1.0) / (F.col("n_l") + F.col("v")))
-        )
-        .cast("bigint")
+        quantise(F.log((F.col("cnt") + 1.0) / (F.col("n_l") + F.col("v"))), 6)
         .alias("loglik_micro"),
     )
     llr = ll.select(
@@ -537,8 +528,7 @@ def q196_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     scored = emb.select(
         (F.col("label") % 2).alias("y"),
-        F.round(F.element_at("embedding", 1).cast("double") * 1000000)
-        .cast("bigint")
+        quantise(F.element_at("embedding", 1).cast("double"), 6)
         .alias("s"),
     )
     hist = scored.groupBy("s").agg(
@@ -825,7 +815,7 @@ def q233_lift_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = _scored(spark, sf_dir)
     hist = (
         s.select(
-            F.round(1000000 * F.col("p")).cast("bigint").alias("p_e6"), "y"
+            quantise("p", 6).alias("p_e6"), "y"
         )
         .groupBy("p_e6")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("y").alias("pos"))
@@ -923,7 +913,7 @@ def q234_embedding_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     q = F.transform(
         F.col("embedding"),
-        lambda x: F.round(x.cast("double") * 1000000).cast("bigint"),
+        lambda x: quantise(x.cast("double"), 6),
     )
     base = emb.select(q.alias("q"))
     dim = (
@@ -1032,8 +1022,7 @@ def q274_youden_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     scored = emb.select(
         (F.col("label") % 2).cast("int").alias("y"),
-        F.round(F.element_at("embedding", 1).cast("double") * 1000000)
-        .cast("bigint")
+        quantise(F.element_at("embedding", 1).cast("double"), 6)
         .alias("s"),
     )
     hist = scored.groupBy("s").agg(
@@ -1108,7 +1097,7 @@ def q275_expected_calibration_error(
                 "bin"
             ),
             "y",
-            F.round(F.col("p") * 1000000).cast("bigint").alias("conf_e6"),
+            quantise("p", 6).alias("conf_e6"),
         )
         .groupBy("bin")
         .agg(
@@ -1182,8 +1171,7 @@ def q276_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     scored = emb.select(
         (F.col("label") % 2).cast("int").alias("y"),
-        F.round(F.element_at("embedding", 1).cast("double") * 1000000)
-        .cast("bigint")
+        quantise(F.element_at("embedding", 1).cast("double"), 6)
         .alias("s"),
     )
     hist = scored.groupBy("s").agg(
@@ -1237,9 +1225,7 @@ def q277_brier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full model-eval readout.
     """
     s = _scored(spark, sf_dir)
-    sq = F.round(
-        (F.col("p") - F.col("y")) * (F.col("p") - F.col("y")) * 1000000
-    ).cast("bigint")
+    sq = quantise((F.col("p") - F.col("y")) * (F.col("p") - F.col("y")), 6)
     return s.agg(
         F.count(F.lit(1)).alias("n"),
         F.floor(F.sum(sq) / F.count(F.lit(1))).cast("bigint").alias("brier_e6"),
@@ -1274,12 +1260,12 @@ def q278_logloss(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow pass, 1-row aggregate.
     """
     s = _scored(spark, sf_dir)
-    term = F.round(
-        -1000000.0
-        * F.when(F.col("y") == 1, F.log(F.col("p"))).otherwise(
-            F.log(1.0 - F.col("p"))
-        )
-    ).cast("bigint")
+    term = quantise(
+        -F.when(F.col("y") == 1, F.log(F.col("p"))).otherwise(
+          F.log(1.0 - F.col("p"))
+      ),
+        6,
+    )
     return s.agg(
         F.count(F.lit(1)).alias("n"),
         F.floor(F.sum(term) / F.count(F.lit(1)))
@@ -1392,7 +1378,7 @@ def q294_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(1000000.0 * F.col("pos") / F.col("n"))
             .cast("bigint")
             .alias("raw_ppm"),
-            F.round(1000000.0 * F.col("fitted")).cast("bigint").alias("fitted_ppm"),
+            quantise("fitted", 6).alias("fitted_ppm"),
         )
         .orderBy("bin")
     )
@@ -1468,7 +1454,7 @@ def q298_conformal_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
         "event_id",
-        F.round(F.col("value") * 100).cast("bigint").alias("vc"),
+        quantise("value", 2).alias("vc"),
         (F.col("event_id") % 2 == 0).alias("is_cal"),
     )
     # checkpoint the bounded per-type tables (calibration stats and
@@ -1486,10 +1472,7 @@ def q298_conformal_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "is_cal",
         "n_cal",
-        F.round(
-            F.abs(F.col("vc") - F.col("s_cal") * 1.0 / F.col("n_cal")) * 10000
-        )
-        .cast("bigint")
+        quantise(F.abs(F.col("vc") - F.col("s_cal") * 1.0 / F.col("n_cal")), 4)
         .alias("r_e4"),
     )
     wr = Window.partitionBy("event_type").orderBy("r_e4", "event_id")
@@ -1620,7 +1603,7 @@ def q303_ips_offline_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(1000.0 * F.col("sw") * F.col("sw") / F.col("sww"))
         .cast("bigint")
         .alias("ess_e3"),
-        F.round(1000000.0 * F.col("behavior_avg")).cast("bigint").alias("behavior_e6"),
+        quantise("behavior_avg", 6).alias("behavior_e6"),
     )
 
 
@@ -1701,16 +1684,9 @@ def q305_qini_uplift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("score_bucket").cast("bigint").alias("score_bucket"),
         "n_t",
         "n_c",
-        F.round(
-            10000.0
-            * (F.col("y_t") * 1.0 / F.col("n_t") - F.col("y_c") * 1.0 / F.col("n_c"))
-        )
-        .cast("bigint")
+        quantise(F.col("y_t") * 1.0 / F.col("n_t") - F.col("y_c") * 1.0 / F.col("n_c"), 4)
         .alias("uplift_bp"),
-        F.round(
-            1000.0 * (F.col("cy_t") - F.col("cy_c") * F.col("cn_t") * 1.0 / F.col("cn_c"))
-        )
-        .cast("bigint")
+        quantise(F.col("cy_t") - F.col("cy_c") * F.col("cn_t") * 1.0 / F.col("cn_c"), 3)
         .alias("qini_e3"),
     ).orderBy(F.desc("score_bucket"))
 
@@ -1868,12 +1844,8 @@ def q343_bcubed_cluster_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return pr.select(
-        F.round(1000000.0 * F.col("p")).cast("bigint").alias(
-            "bcubed_precision_e6"
-        ),
-        F.round(1000000.0 * F.col("r")).cast("bigint").alias(
-            "bcubed_recall_e6"
-        ),
+        quantise("p", 6).alias("bcubed_precision_e6"),
+        quantise("r", 6).alias("bcubed_recall_e6"),
         F.round(1000000.0 * 2 * F.col("p") * F.col("r") / (F.col("p") + F.col("r")))
         .cast("bigint")
         .alias("bcubed_f1_e6"),
@@ -1960,12 +1932,8 @@ def q355_woe_information_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bin",
         "pos",
         "neg",
-        F.round(1000000.0 * F.col("w")).cast("bigint").alias("woe_e6"),
-        F.round(
-            1000000.0
-            * F.sum(F.col("dd") * F.col("w")).over(Window.partitionBy())
-        )
-        .cast("bigint")
+        quantise("w", 6).alias("woe_e6"),
+        quantise(F.sum(F.col("dd") * F.col("w")).over(Window.partitionBy()), 6)
         .alias("iv_e6"),
     ).orderBy("bin")
 
@@ -2023,7 +1991,7 @@ def q360_best_of_n_reward(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a power-law twist."""
     ev = load_table(spark, sf_dir, "events")
     r = ev.filter(F.col("event_type") == "purchase").select(
-        F.round(F.col("value") * 100).cast("bigint").alias("v_c")
+        quantise("value", 2).alias("v_c")
     )
     hist = materialize(r.groupBy("v_c").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
@@ -2180,13 +2148,11 @@ def q364_doubly_robust_ope(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "n",
             "matched",
-            F.round(1000000.0 * F.col("dm")).cast("bigint").alias("dm_e6"),
-            F.round(1000000.0 * F.col("ips")).cast("bigint").alias("ips_e6"),
-            F.round(1000000.0 * F.col("corr"))
-            .cast("bigint")
+            quantise("dm", 6).alias("dm_e6"),
+            quantise("ips", 6).alias("ips_e6"),
+            quantise("corr", 6)
             .alias("correction_e6"),
-            F.round(1000000.0 * (F.col("dm") + F.col("corr")))
-            .cast("bigint")
+            quantise(F.col("dm") + F.col("corr"), 6)
             .alias("dr_e6"),
         )
     )
@@ -2276,7 +2242,7 @@ def q385_mdlp_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded, each level one pass."""
     orders = load_table(spark, sf_dir, "orders")
     x = materialize(orders.select(
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("v"),
+        quantise("o_totalprice", 2).alias("v"),
         F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0).alias("y"),
     ))
     # Spark requires a foldable percentage: compute all nine deciles in
@@ -2367,8 +2333,8 @@ def q385_mdlp_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("t").cast("bigint").alias("threshold_c"),
             "nl",
             "nr",
-            F.round(1000000.0 * g).cast("bigint").alias("gain_e6"),
-            F.round(1000000.0 * mdl).cast("bigint").alias("mdl_cost_e6"),
+            quantise(g, 6).alias("gain_e6"),
+            quantise(mdl, 6).alias("mdl_cost_e6"),
             F.when(g > mdl, 1).otherwise(0).cast("bigint").alias("accepted"),
         )
         .orderBy("decile")
@@ -2595,7 +2561,7 @@ def q396_ledoit_wolf(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = F.col("embedding").cast("array<double>")
     norm2 = dot(e, e)
     r4 = emb.agg(
-        F.sum(F.round(F.pow(norm2, 2) * 1000).cast("bigint"))
+        F.sum(quantise(F.pow(norm2, 2), 3))
         .cast("bigint")
         .alias("sum_norm4_m")
     )
@@ -2624,13 +2590,11 @@ def q396_ledoit_wolf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return lw.select(
         "n",
-        F.round(1000000.0 * F.col("mu")).cast("bigint").alias("mu_e6"),
-        F.round(1000000.0 * F.col("dispersion2"))
-        .cast("bigint")
+        quantise("mu", 6).alias("mu_e6"),
+        quantise("dispersion2", 6)
         .alias("dispersion2_e6"),
-        F.round(1000000.0 * F.col("b2")).cast("bigint").alias("b2_e6"),
-        F.round(1000000.0 * F.least(F.col("b2") / F.col("dispersion2"), F.lit(1.0)))
-        .cast("bigint")
+        quantise("b2", 6).alias("b2_e6"),
+        quantise(F.least(F.col("b2") / F.col("dispersion2"), F.lit(1.0)), 6)
         .alias("shrinkage_e6"),
     )
 
@@ -2696,8 +2660,7 @@ def q411_cost_optimal_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     scored = emb.select(
         (F.col("label") % 2).cast("int").alias("y"),
-        F.round(F.element_at("embedding", 1).cast("double") * 1000000)
-        .cast("bigint")
+        quantise(F.element_at("embedding", 1).cast("double"), 6)
         .alias("s"),
     )
     hist = scored.groupBy("s").agg(

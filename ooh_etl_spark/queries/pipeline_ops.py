@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ooh_etl_spark.functions.money import quantise
 from ooh_etl_spark.functions.text import DUCK_TOKENIZE, tokenize
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize
@@ -369,7 +370,7 @@ def q223_pseudonymized_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         F.sha2(F.concat(F.lit("pepper-v1:"), F.col("o_custkey").cast("string")), 256)
         .alias("tok"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("price_c"),
+        quantise("o_totalprice", 2).alias("price_c"),
     )
     nat = load_table(spark, sf_dir, "nation")
     j = orders.join(cust, "tok")
@@ -437,10 +438,8 @@ def q383_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) / 4294967296.0
     scored = orders.select(
         "o_orderkey",
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("price_c"),
-        (-F.log(u) / (F.round(F.col("o_totalprice") * 100).cast("bigint"))).alias(
-            "e"
-        ),
+        quantise("o_totalprice", 2).alias("price_c"),
+        (-F.log(u) / (quantise("o_totalprice", 2))).alias("e"),
     )
     w = Window.orderBy("e", "o_orderkey")
     return (
@@ -450,7 +449,7 @@ def q383_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("rk").cast("bigint").alias("rank"),
             "o_orderkey",
             "price_c",
-            F.round(1000000000.0 * F.col("e")).cast("bigint").alias("key_e9"),
+            quantise("e", 9).alias("key_e9"),
         )
         .orderBy("rank")
     )
@@ -588,14 +587,13 @@ def q433_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = stats.crossJoin(F.broadcast(tot)).select(
         "bucket",
-        F.round(
-            1_000_000
-            * F.log(
-                ((F.col("c_tgt") + 1.0) / (F.col("n_tgt") + _DSIR_B))
-                / ((F.col("c_all") + 1.0) / (F.col("n_all") + _DSIR_B))
-            )
+        quantise(
+            F.log(
+              ((F.col("c_tgt") + 1.0) / (F.col("n_tgt") + _DSIR_B))
+              / ((F.col("c_all") + 1.0) / (F.col("n_all") + _DSIR_B))
+          ),
+            6,
         )
-        .cast("bigint")
         .alias("term_micro"),
     )
     return (
@@ -873,14 +871,7 @@ def q447_temperature_mixture_curve(spark: SparkSession, sf_dir: str) -> DataFram
             "source",
             "toks",
             "total",
-            F.round(
-                1000000000
-                * F.pow(
-                    1.0 * F.col("toks") / F.col("total"),
-                    1000.0 / F.col("tau_milli"),
-                )
-            )
-            .cast("bigint")
+            quantise(F.pow(1.0 * F.col("toks") / F.col("total"), 1000.0 / F.col("tau_milli"),), 9)
             .alias("w_e9"),
         )
     )

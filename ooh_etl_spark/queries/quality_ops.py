@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ooh_etl_spark.functions.money import quantise
 from ooh_etl_spark.functions.text import (
     DUCK_TOKENIZE,
     ngram_starts,
@@ -567,13 +568,11 @@ def q153_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = cnt.agg(
         F.sum("ct").alias("nt"), F.sum("cs").alias("ns"), F.count(F.lit(1)).alias("v")
     )
-    ratio_u = F.round(
-        1000000
-        * (
-            F.log((F.col("ct") + 1.0) / (F.col("nt") + F.col("v")))
-            - F.log((F.col("cs") + 1.0) / (F.col("ns") + F.col("v")))
-        )
-    ).cast("bigint")
+    ratio_u = quantise(
+        F.log((F.col("ct") + 1.0) / (F.col("nt") + F.col("v")))
+        - F.log((F.col("cs") + 1.0) / (F.col("ns") + F.col("v"))),
+        6,
+    )
     w = (
         bg.join(cnt, "bg")
         .crossJoin(F.broadcast(tot))
@@ -649,9 +648,7 @@ def q155_ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame
     # of documents in one plan; now 2).
     cnt = materialize(tok.groupBy("w").agg(F.count(F.lit(1)).alias("c")))
     tot = cnt.agg(F.sum("c").cast("bigint").alias("n_corpus"))
-    surprisal_u = F.round(
-        1000000 * F.log(F.col("n_corpus") * F.lit(1.0) / F.col("c"))
-    ).cast("bigint")
+    surprisal_u = quantise(F.log(F.col("n_corpus") * F.lit(1.0) / F.col("c")), 6)
     per = (
         tok.join(cnt, "w")
         .crossJoin(F.broadcast(tot))
@@ -960,7 +957,7 @@ def q164_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("n_tokens").cast("bigint").alias("tokens"))
     )
     q = s.withColumn(
-        "q_micro", F.round(F.sqrt("tokens") * 1000000).cast("bigint")
+        "q_micro", quantise(F.sqrt("tokens"), 6)
     )
     tot = q.agg(F.sum("q_micro").cast("bigint").alias("q_total"))
     return (
@@ -1034,8 +1031,7 @@ def q206_quality_yield_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = quality_features(F.col("text"))
     bp = docs.select(
         feats["n_tokens"].alias("n_tokens"),
-        F.round(quality_score(F.col("text"), rounded=False) * 10000, 0)
-        .cast("long")
+        quantise(quality_score(F.col("text"), rounded=False), 4)
         .alias("q_bp"),
     )
     buckets = (
@@ -1313,9 +1309,8 @@ def q382_source_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(1000.0 * F.col("s") / F.col("n"))
             .cast("bigint")
             .alias("corpus_mean_milli"),
-            F.round(1000.0 * loo_mean).cast("bigint").alias("loo_mean_milli"),
-            F.round(1000.0 * (loo_mean - F.col("s") * 1.0 / F.col("n")))
-            .cast("bigint")
+            quantise(loo_mean, 3).alias("loo_mean_milli"),
+            quantise(loo_mean - F.col("s") * 1.0 / F.col("n"), 3)
             .alias("loo_delta_milli"),
         )
         .orderBy(F.desc("loo_delta_milli"), "source")
@@ -2261,19 +2256,18 @@ def q475_bloom_sizing_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("(10000 * n_fp_raw) div n_absent_raw")
             .cast("bigint")
             .alias("fpr_bp"),
-            F.round(
-                10000
-                * F.pow(
-                    1.0
-                    - F.exp(
-                        -F.col("k_hashes").cast("double")
-                        * F.col("n_ins")
-                        / F.col("m_bits")
-                    ),
-                    F.col("k_hashes").cast("double"),
-                )
+            quantise(
+                F.pow(
+                  1.0
+                  - F.exp(
+                      -F.col("k_hashes").cast("double")
+                      * F.col("n_ins")
+                      / F.col("m_bits")
+                  ),
+                  F.col("k_hashes").cast("double"),
+              ),
+                4,
             )
-            .cast("bigint")
             .alias("theory_bp"),
             F.expr("(1000 * m_bits) div greatest(n_ins, 1)")
             .cast("bigint")

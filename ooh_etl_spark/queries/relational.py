@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ooh_etl_spark.functions.money import cents_avg, cents_sum
+from ooh_etl_spark.functions.money import cents_avg, cents_sum, quantise
 from ooh_etl_spark.functions.text import DUCK_TOKENIZE
 from ooh_etl_spark.operators.relational import asof_join, top_k_per_group
 from ooh_etl_spark.queries.registry import register
@@ -334,8 +334,7 @@ def q07_acctbal_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             (
                 F.round(
                     F.avg(
-                        F.round((F.col("c_acctbal") - F.col("s_acctbal")) * 100, 0)
-                        .cast("long")
+                        quantise(F.col("c_acctbal") - F.col("s_acctbal"), 2)
                     )
                     / 100,
                     2,
@@ -781,7 +780,7 @@ def q336_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("l_orderkey") % 100 < 90, 0)
         .otherwise(F.col("l_orderkey") % 100)
         .alias("k"),
-        F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("rev_c"),
+        quantise("l_extendedprice", 2).alias("rev_c"),
     )
     d = nation.select(
         (F.col("n_nationkey") * 4).alias("k"), F.col("n_name").alias("bucket")
@@ -1100,7 +1099,7 @@ def q337_pivot_segment_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("n_name").alias("nation"),
             F.col("c_mktsegment").alias("seg"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("rev_c"),
+            quantise("o_totalprice", 2).alias("rev_c"),
         )
     )
     wide = (
@@ -1471,7 +1470,7 @@ def q190_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 2-phase form."""
     p = load_table(spark, sf_dir, "part")
     pts = p.groupBy(
-        F.round(F.col("p_retailprice") * 100).cast("bigint").alias("price_c"),
+        quantise("p_retailprice", 2).alias("price_c"),
         F.col("p_size").alias("sz"),
     ).agg(F.count(F.lit(1)).alias("support"))
 

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ooh_etl_spark.functions.money import quantise
 from ooh_etl_spark.functions.text import DUCK_TOKENIZE, tokenize
 from ooh_etl_spark.operators.similarity import cosine, dot, l2_norm, sq_dist
 from ooh_etl_spark.queries.registry import register
@@ -147,7 +148,7 @@ def q158_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number()
         .over(
             Window.orderBy(
-                F.round(F.col("score") * 10000).cast("bigint").desc(), "doc_id"
+                quantise("score", 4).desc(), "doc_id"
             )
         )
         .alias("r_bm25"),
@@ -170,7 +171,7 @@ def q158_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number()
         .over(
             Window.orderBy(
-                F.round(F.col("cos") * 10000).cast("bigint").desc(), "doc_id"
+                quantise("cos", 4).desc(), "doc_id"
             )
         )
         .alias("r_cos"),
@@ -185,7 +186,7 @@ def q158_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "r_bm25",
             "r_cos",
-            F.round(rrf * 1000000).cast("bigint").alias("rrf_ppm"),
+            quantise(rrf, 6).alias("rrf_ppm"),
         )
         .orderBy(F.col("rrf_ppm").desc(), "doc_id")
         .limit(_TOP)
@@ -282,9 +283,7 @@ def q159_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         best.groupBy("vec_id")
         .agg(
             code_str.alias("pq_code"),
-            F.sum(F.round(F.col("dist") * 1000000000).cast("bigint")).alias(
-                "err_nano"
-            ),
+            F.sum(quantise("dist", 9)).alias("err_nano"),
         )
         .orderBy("vec_id")
     )
@@ -775,8 +774,7 @@ def q341_srp_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         comp.join(F.broadcast(planes), "d")
         .groupBy("vec_id", "j")
         .agg(
-            F.round(1000000.0 * F.sum(F.col("sgn") * F.col("x")))
-            .cast("bigint")
+            quantise(F.sum(F.col("sgn") * F.col("x")), 6)
             .alias("p_e6")
         )
     )
@@ -1170,7 +1168,7 @@ def q403_expected_reciprocal_rank(spark: SparkSession, sf_dir: str) -> DataFrame
         F.row_number()
         .over(
             Window.orderBy(
-                F.round(F.col("cos") * 10000).cast("bigint").desc(), "vec_id"
+                quantise("cos", 4).desc(), "vec_id"
             )
         )
         .alias("r"),
@@ -1315,7 +1313,7 @@ def q434_bm25_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("qid", "doc_id")
         .agg(F.sum(term_score).alias("score"))
     )
-    score_e4 = F.round(F.col("score") * 10000).cast("bigint")
+    score_e4 = quantise("score", 4)
     ranked = bm.select(
         "qid",
         "doc_id",
@@ -1451,7 +1449,7 @@ def q446_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("qid"),
             "s",
             "code_id",
-            F.round(d2 * 1000000000).cast("bigint").alias("d_nano"),
+            quantise(d2, 9).alias("d_nano"),
         )
     )
     adc = (
@@ -1475,8 +1473,7 @@ def q446_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "qid",
             "vec_id",
-            F.round(sq_dist(F.col("qe"), F.col("e")) * 1000000000)
-            .cast("bigint")
+            quantise(sq_dist(F.col("qe"), F.col("e")), 9)
             .alias("d_nano"),
         )
     )

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ooh_etl_spark.functions.money import quantise
 from ooh_etl_spark.functions.text import DUCK_TOKENIZE, tokenize
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize
@@ -108,7 +109,7 @@ def q135_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         scored.select(
-            "doc_id", F.round(F.col("score") * 10000).cast("bigint").alias("score_bp")
+            "doc_id", quantise("score", 4).alias("score_bp")
         )
         .orderBy(F.col("score_bp").desc(), "doc_id")
         .limit(_TOP)
@@ -229,7 +230,7 @@ def q137_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast."""
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
+    cents = quantise("o_totalprice", 2)
     g = orders.agg(
         F.sum(cents).cast("bigint").alias("tot_c"), F.count(F.lit(1)).alias("n")
     )
@@ -426,9 +427,7 @@ def q400_rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     agg = li.groupBy(F.col("l_partkey").alias("pk")).agg(
         F.sum(
-            F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast(
-                "bigint"
-            )
+            quantise(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2)
         )
         .cast("bigint")
         .alias("rev_c"),
@@ -565,17 +564,16 @@ def q404_dirichlet_query_likelihood(spark: SparkSession, sf_dir: str) -> DataFra
         .select(
             "doc_id",
             "dl",
-            F.round(
-                1000000.0
-                * F.log(
-                    (
-                        F.coalesce(F.col("tf"), F.lit(0))
-                        + _QL_MU * F.col("cf") / F.col("c_total")
-                    )
-                    / (F.col("dl") + _QL_MU)
-                )
+            quantise(
+                F.log(
+                  (
+                      F.coalesce(F.col("tf"), F.lit(0))
+                      + _QL_MU * F.col("cf") / F.col("c_total")
+                  )
+                  / (F.col("dl") + _QL_MU)
+              ),
+                6,
             )
-            .cast("bigint")
             .alias("term_e6"),
         )
         .groupBy("doc_id", "dl")
@@ -724,7 +722,7 @@ def q415_rocchio_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         contrib = bm_term if weight_col is None else F.col(weight_col) * bm_term
         return t.groupBy("doc_id").agg(
-            F.sum(F.round(1000000.0 * contrib).cast("bigint"))
+            F.sum(quantise(contrib, 6))
             .cast("bigint")
             .alias("score_e6")
         )

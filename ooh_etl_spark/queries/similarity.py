@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ooh_etl_spark.functions.money import quantise
 from ooh_etl_spark.operators.similarity import (
     cosine,
     dot,
@@ -226,32 +227,30 @@ def q243_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     log2 = lambda c: F.log(c) / F.log(F.lit(2.0))
     gains = j.groupBy("query_id").agg(
-        F.round(
-            1000000.0
-            * F.sum(
-                F.when(F.col("qy") == F.col("ny"), 1.0).otherwise(0.0)
-                / log2(F.col("rank") + 1.0)
-            )
+        quantise(
+            F.sum(
+              F.when(F.col("qy") == F.col("ny"), 1.0).otherwise(0.0)
+              / log2(F.col("rank") + 1.0)
+          ),
+            6,
         )
-        .cast("bigint")
         .alias("dcg_e6"),
         F.sum((F.col("qy") == F.col("ny")).cast("int")).alias("n_rel"),
     )
     ideal = gains.select(
         "query_id",
         "dcg_e6",
-        F.round(
-            1000000.0
-            * F.aggregate(
-                F.sequence(F.lit(1), F.lit(_EVAL_K)),
-                F.lit(0.0),
-                lambda acc, r: acc
-                + F.when(r <= F.col("n_rel"), 1.0 / log2(r + 1.0)).otherwise(
-                    0.0
-                ),
-            )
+        quantise(
+            F.aggregate(
+              F.sequence(F.lit(1), F.lit(_EVAL_K)),
+              F.lit(0.0),
+              lambda acc, r: acc
+              + F.when(r <= F.col("n_rel"), 1.0 / log2(r + 1.0)).otherwise(
+                  0.0
+              ),
+          ),
+            6,
         )
-        .cast("bigint")
         .alias("idcg_e6"),
     )
     return ideal.agg(
@@ -390,7 +389,7 @@ def q437_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     def e6(qv, qn, nv, nn) -> F.Column:
         # round(1e6 * (dot / (|a| * |b|))) — identical expression tree
         # to round(1_000_000 * cosine(a, b)) over pre-cast arrays.
-        return F.round(1000000 * (dot(qv, nv) / (qn * nn))).cast("bigint")
+        return quantise(dot(qv, nv) / (qn * nn), 6)
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents = (
@@ -613,8 +612,7 @@ def q31b_ann_lsh_det(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            F.round(1_000_000 * cosine(F.col("qv"), F.col("embedding")))
-            .cast("bigint")
+            quantise(cosine(F.col("qv"), F.col("embedding")), 6)
             .alias("cos_e6"),
         )
     )

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ooh_etl_spark.functions.money import quantise
 from ooh_etl_spark.functions.text import DUCK_TOKENIZE, tokenize
 from ooh_etl_spark.operators.sketches import bloom_semi_join, exact_heavy_hitters
 from ooh_etl_spark.queries.registry import register
@@ -84,9 +85,7 @@ def q121_bloom_prefilter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     matched = bloom_semi_join(li, "l_orderkey", hv, "o_orderkey")
     return matched.agg(
         F.sum(
-            F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast(
-                "bigint"
-            )
+            quantise(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2)
         )
         .cast("bigint")
         .alias("revenue_c"),
@@ -384,8 +383,7 @@ def q221_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     allregs = regs.unionByName(merged)
     est = allregs.groupBy("event_type").agg(
         F.sum(
-            F.round(F.pow(F.lit(2.0), -F.col("m_j")) * 1_000_000_000_000_000)
-            .cast("bigint")
+            quantise(F.pow(F.lit(2.0), -F.col("m_j")), 15)
         ).alias("s_int"),
         F.count(F.lit(1)).alias("n_present"),
     )
@@ -584,14 +582,13 @@ def q246_bloom_from_primitives(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(10000.0 * F.col("n_false_pos") / F.col("n_absent"))
         .cast("bigint")
         .alias("fpr_bp"),
-        F.round(
-            10000
-            * F.pow(
-                1.0 - F.exp(-float(_BF_K) * F.col("n_inserted") / 1024.0),
-                float(_BF_K),
-            )
+        quantise(
+            F.pow(
+              1.0 - F.exp(-float(_BF_K) * F.col("n_inserted") / 1024.0),
+              float(_BF_K),
+          ),
+            4,
         )
-        .cast("bigint")
         .alias("theory_bp"),
     )
 
@@ -955,7 +952,7 @@ def q429_mergeable_quantile_summary(
     li = load_table(spark, sf_dir, "lineitem")
     x = li.select(
         (F.col("l_orderkey") % _Q_SHARDS).cast("bigint").alias("shard"),
-        F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("cents"),
+        quantise("l_extendedprice", 2).alias("cents"),
     )
     # n rides the coarse bucket census below (one fewer corpus scan)
     by_shard = Window.partitionBy("shard")

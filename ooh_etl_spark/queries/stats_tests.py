@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ooh_etl_spark.functions.money import quantise
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_table
@@ -62,7 +63,7 @@ def q145_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m.agg(
         F.count(F.lit(1)).alias("n_cells"),
         F.lit(dof).cast("bigint").alias("dof"),
-        F.round(10000 * chi2).cast("bigint").alias("chi2_e4"),
+        quantise(chi2, 4).alias("chi2_e4"),
     )
 
 
@@ -104,7 +105,7 @@ def q146_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o") * 1.0 / F.col("n"))
         * F.log(F.col("o") * 1.0 * F.col("n") / (F.col("row_n") * F.col("col_n")))
     )
-    return m.agg(F.round(1000000 * mi).cast("bigint").alias("mi_nats_e6"))
+    return m.agg(quantise(mi, 6).alias("mi_nats_e6"))
 
 
 @register(
@@ -264,7 +265,7 @@ def q150_pythagorean_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     sits exactly on .5 — the same tolerance every money aggregate in
     this repo carries)."""
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 0)
-    cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
+    cents = quantise("o_totalprice", 2)
     t = orders.select("o_orderstatus", cents.alias("cents"))
     return (
         t.groupBy("o_orderstatus")
@@ -345,16 +346,15 @@ def q161_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         cdf.crossJoin(F.broadcast(n))
         .groupBy("na", "nb")
         .agg(
-            F.round(
+            quantise(
                 F.max(
                     F.abs(
                         F.col("ca") * 1.0 / F.col("na")
                         - F.col("cb") * 1.0 / F.col("nb")
                     )
-                )
-                * 1000000
+                ),
+                6,
             )
-            .cast("bigint")
             .alias("ks_ppm")
         )
         .select(
@@ -659,7 +659,7 @@ def q258_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = ev.crossJoin(F.broadcast(cut)).select(
         "event_type",
         (ms >= F.col("t0")).cast("int").alias("half"),
-        F.round(F.col("value") * 100).cast("bigint").alias("v_c"),
+        quantise("value", 2).alias("v_c"),
     )
     edges = v.groupBy("event_type").agg(
         F.min("v_c").alias("vmin"), F.max("v_c").alias("vmax")
@@ -738,7 +738,7 @@ def q263_value_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = (
         ev.select(
             "event_type",
-            F.round(F.col("value") * 100).cast("bigint").alias("v_c"),
+            quantise("value", 2).alias("v_c"),
         )
         .groupBy("event_type", "v_c")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -816,7 +816,7 @@ def q279_median_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     v = ev.select(
         "event_type",
-        F.round(F.col("value") * 1000000).cast("bigint").alias("v_u"),
+        quantise("value", 6).alias("v_u"),
     )
     n = v.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     # checkpoint the bounded rank table (|types| rows) and cumulative
@@ -968,7 +968,7 @@ def q281_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return s.select(
         n.cast("bigint").alias("n"),
-        F.round(1000000.0 * rho).cast("bigint").alias("spearman_e6"),
+        quantise(rho, 6).alias("spearman_e6"),
     )
 
 
@@ -1046,14 +1046,7 @@ def q282_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return chi.select(
         F.col("n").cast("bigint").alias("n"),
-        F.round(
-            1000000.0
-            * F.sqrt(
-                F.col("chi2")
-                / (F.col("n") * F.least(F.col("r") - 1, F.col("c") - 1))
-            )
-        )
-        .cast("bigint")
+        quantise(F.sqrt(F.col("chi2") / (F.col("n") * F.least(F.col("r") - 1, F.col("c") - 1))), 6)
         .alias("cramers_v_e6"),
     )
 
@@ -1137,7 +1130,7 @@ def q295_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows_c = ev.select(
         "event_type",
         F.when(F.weekday("ts") >= 5, 1).otherwise(0).alias("we"),
-        F.round(F.col("value") * 100).cast("bigint").alias("vc"),
+        quantise("value", 2).alias("vc"),
     )
     g = rows_c.groupBy("event_type").agg(
         F.sum(F.when(F.col("we") == 0, 1).otherwise(0)).cast("bigint").alias("n_wd"),
@@ -1193,8 +1186,8 @@ def q295_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             "n_wd",
             "n_we",
-            F.round(1000 * F.col("zv")).cast("bigint").alias("z_milli"),
-            F.round(1000000000 * F.col("pv")).cast("bigint").alias("p_e9"),
+            quantise("zv", 3).alias("z_milli"),
+            quantise("pv", 9).alias("p_e9"),
             "rk",
             F.when(F.col("rk") <= F.col("rmax"), 1)
             .otherwise(0)
@@ -1332,7 +1325,7 @@ def q308_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-width bins first and the same plan holds on the bin table."""
     ev = load_table(spark, sf_dir, "events")
     s = ev.select(
-        F.round(F.col("value") * 100).cast("bigint").alias("vc"),
+        quantise("value", 2).alias("vc"),
         F.when(F.weekday("ts") >= 5, 1).otherwise(0).alias("we"),
     )
     h = s.groupBy("vc").agg(
@@ -1359,13 +1352,11 @@ def q308_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("n_wd").cast("bigint").alias("n_wd"),
         F.max("n_we").cast("bigint").alias("n_we"),
         F.sum(
-            F.round(F.abs(F.col("fa") - F.col("fb")) * (F.col("nxt") - F.col("vc")) * 1000000)
-            .cast("bigint")
+            quantise(F.abs(F.col("fa") - F.col("fb")) * (F.col("nxt") - F.col("vc")), 6)
         )
         .cast("bigint")
         .alias("w1_microcents"),
-        F.round(1000000 * F.max(F.abs(F.col("fa") - F.col("fb"))))
-        .cast("bigint")
+        quantise(F.max(F.abs(F.col("fa") - F.col("fb"))), 6)
         .alias("ks_e6"),
     )
 
@@ -1440,7 +1431,7 @@ def q320_holm_bonferroni(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows_c = ev.select(
         "event_type",
         F.when(F.weekday("ts") >= 5, 1).otherwise(0).alias("we"),
-        F.round(F.col("value") * 100).cast("bigint").alias("vc"),
+        quantise("value", 2).alias("vc"),
     )
     g = rows_c.groupBy("event_type").agg(
         F.sum(F.when(F.col("we") == 0, 1).otherwise(0)).cast("bigint").alias("n_wd"),
@@ -1489,9 +1480,8 @@ def q320_holm_bonferroni(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stepped.select(
         "event_type",
         "rk",
-        F.round(1000000000 * F.col("pv")).cast("bigint").alias("p_e9"),
-        F.round(1000000000 * F.least(F.lit(1.0), F.col("adj_running")))
-        .cast("bigint")
+        quantise("pv", 9).alias("p_e9"),
+        quantise(F.least(F.lit(1.0), F.col("adj_running")), 9)
         .alias("p_holm_e9"),
         F.when(F.col("adj_running") <= 0.05, 1)
         .otherwise(0)
@@ -1634,7 +1624,7 @@ def q325_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
     group at these value scales; the documented escalation is the
     decimal(38,0) accumulator (q255's lesson)."""
     ev = load_table(spark, sf_dir, "events")
-    vc = F.round(F.col("value") * 100).cast("bigint")
+    vc = quantise("value", 2)
     g = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(vc).cast("bigint").alias("s"),
@@ -1716,7 +1706,7 @@ def q326_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     v = ev.select(
         "event_type",
-        F.round(F.col("value") * 1000000).cast("bigint").alias("v_u"),
+        quantise("value", 6).alias("v_u"),
     )
     hist = materialize(v.groupBy("v_u").agg(F.count(F.lit(1)).alias("c")))
     wcum = Window.orderBy("v_u").rowsBetween(Window.unboundedPreceding, -1)
@@ -1816,7 +1806,7 @@ def q331_cramer_von_mises(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     s = ev.filter(F.col("event_type").isin("click", "view")).select(
         F.when(F.col("event_type") == "click", "a").otherwise("b").alias("grp"),
-        F.round(F.col("value") * 100).cast("bigint").alias("v_c"),
+        quantise("value", 2).alias("v_c"),
     )
     hist = materialize(
         s.groupBy("v_c")
@@ -1941,7 +1931,7 @@ def q363_boxcox_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.round(1000000 * (F.pow(xk, lam_f) - 1.0) / lam_f))
         .cast("bigint")
     )
-    lx_u = F.round(1000000 * F.log(xk)).cast("bigint")
+    lx_u = quantise(F.log(xk), 6)
     rows = orders.crossJoin(F.broadcast(lam)).select(
         "lam_deci", y_u.alias("y_u"), lx_u.alias("lx_u")
     )
@@ -1970,7 +1960,7 @@ def q363_boxcox_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ll.select(
         "lam_deci",
         "n",
-        F.round(1000.0 * F.col("ll")).cast("bigint").alias("ll_milli"),
+        quantise("ll", 3).alias("ll_milli"),
         F.when(
             F.round(1000.0 * F.col("ll"))
             == F.max(F.round(1000.0 * F.col("ll"))).over(w),
@@ -2269,9 +2259,8 @@ def q370_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stat.select(
         F.col("b").alias("n_blocks"),
         F.col("k").alias("n_treatments"),
-        F.round(1000.0 * F.col("chi2")).cast("bigint").alias("chi2_milli"),
-        F.round(1000000.0 * F.col("c_tie"))
-        .cast("bigint")
+        quantise("chi2", 3).alias("chi2_milli"),
+        quantise("c_tie", 6)
         .alias("tie_correction_e6"),
         F.round(1000.0 * F.col("chi2") / F.col("c_tie"))
         .cast("bigint")
@@ -2339,7 +2328,7 @@ def q371_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     cancellation caveat)."""
     orders = load_table(spark, sf_dir, "orders")
     x = orders.select(
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("c")
+        quantise("o_totalprice", 2).alias("c")
     )
     m = x.agg(
         F.count(F.lit(1)).alias("n"),
@@ -2372,9 +2361,9 @@ def q371_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return mom.select(
         "n",
-        F.round(1000000.0 * F.col("skew")).cast("bigint").alias("skew_e6"),
-        F.round(1000000.0 * F.col("kurt")).cast("bigint").alias("kurt_e6"),
-        F.round(1000.0 * jb).cast("bigint").alias("jb_milli"),
+        quantise("skew", 6).alias("skew_e6"),
+        quantise("kurt", 6).alias("kurt_e6"),
+        quantise(jb, 3).alias("jb_milli"),
         F.when(jb > 5.991465, 1).otherwise(0).cast("bigint").alias("reject_normal"),
     )
 
@@ -2437,7 +2426,7 @@ def q377_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     x = ev.select(
         F.col("event_type").alias("g"),
-        F.round(F.col("value") * 100).cast("bigint").alias("v_c"),
+        quantise("value", 2).alias("v_c"),
     )
     med = x.groupBy("g").agg(
         F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY v_c)").alias("med_c")
@@ -2472,7 +2461,7 @@ def q377_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return parts.select(
         F.col("k").alias("n_groups"),
         F.col("nn").alias("n_obs"),
-        F.round(1000.0 * f_stat).cast("bigint").alias("f_milli"),
+        quantise(f_stat, 3).alias("f_milli"),
         F.when(f_stat > 2.372, 1).otherwise(0).cast("bigint").alias(
             "reject_homogeneity"
         ),
@@ -2555,7 +2544,7 @@ def q378_kish_design_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mom.select(
         "n",
         F.col("k").alias("n_sources"),
-        F.round(1000000.0 * deff).cast("bigint").alias("deff_e6"),
+        quantise(deff, 6).alias("deff_e6"),
         F.round(F.col("n") / deff).cast("bigint").alias("n_eff"),
     )
 
@@ -2623,10 +2612,10 @@ def q384_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy(F.col("c_nationkey").alias("nk"))
         .agg(
-            F.sum(F.round(F.col("c_acctbal") * 100).cast("bigint"))
+            F.sum(quantise("c_acctbal", 2))
             .cast("bigint")
             .alias("bal_c"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
+            F.sum(quantise("o_totalprice", 2))
             .cast("bigint")
             .alias("rev_c"),
         )
@@ -2759,7 +2748,7 @@ def q386_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_nationkey").alias("nk"), F.year("o_orderdate").alias("yr")
         )
         .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
+            F.sum(quantise("o_totalprice", 2))
             .cast("bigint")
             .alias("rev_c")
         )
@@ -2806,7 +2795,7 @@ def q386_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.crossJoin(F.broadcast(ties)).select(
         F.col("n").alias("n_pairs"),
         F.round(F.col("wplus2") / 2.0).cast("bigint").alias("w_plus"),
-        F.round(1000.0 * zval).cast("bigint").alias("z_milli"),
+        quantise(zval, 3).alias("z_milli"),
         F.when(F.abs(zval) > 1.959964, 1).otherwise(0).cast("bigint").alias(
             "reject_no_shift"
         ),
@@ -2901,7 +2890,7 @@ def q408_storey_qvalues(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.o_custkey == F.col("c_custkey"),
     ).select(
         F.col("c_nationkey").alias("nk"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("vc"),
+        quantise("o_totalprice", 2).alias("vc"),
         (
             F.conv(
                 F.substring(
@@ -2986,11 +2975,10 @@ def q408_storey_qvalues(spark: SparkSession, sf_dir: str) -> DataFrame:
     return qv.select(
         "nk",
         "rk",
-        F.round(1000.0 * F.col("zv")).cast("bigint").alias("z_milli"),
-        F.round(1000000000.0 * F.col("pv")).cast("bigint").alias("p_e9"),
-        F.round(1000000.0 * F.col("pi0")).cast("bigint").alias("pi0_e6"),
-        F.round(1000000.0 * F.least(F.col("qval"), F.lit(1.0)))
-        .cast("bigint")
+        quantise("zv", 3).alias("z_milli"),
+        quantise("pv", 9).alias("p_e9"),
+        quantise("pi0", 6).alias("pi0_e6"),
+        quantise(F.least(F.col("qval"), F.lit(1.0)), 6)
         .alias("q_e6"),
     ).orderBy("rk")
 
@@ -3069,7 +3057,7 @@ def q409_page_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.year("o_orderdate").cast("bigint").alias("yr"),
         )
         .agg(
-            F.round(F.avg(F.round(F.col("o_totalprice") * 100).cast("bigint")))
+            F.round(F.avg(quantise("o_totalprice", 2)))
             .cast("bigint")
             .alias("v")
         )
@@ -3125,7 +3113,7 @@ def q409_page_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("k").alias("n_treatments"),
         F.round(F.col("lstat")).cast("bigint").alias("page_l"),
         F.round(F.col("mean_l")).cast("bigint").alias("mean_l"),
-        F.round(1000.0 * z).cast("bigint").alias("z_milli"),
+        quantise(z, 3).alias("z_milli"),
         F.when(F.abs(z) > 1.959964, 1).otherwise(0).cast("bigint").alias(
             "reject_no_trend"
         ),
@@ -3217,7 +3205,7 @@ def q412_chow_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("d")
         )
-        .agg(F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("y_c"))
+        .agg(F.sum(quantise("value", 2)).alias("y_c"))
         # the bounded day grid feeds every downstream pass: checkpoint
         # so the corpus aggregate runs ONCE (q296-class rule)
     )
@@ -3279,6 +3267,6 @@ def q412_chow_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round((F.col("e_p") - F.col("e_12")) / 1000000.0)
         .cast("bigint")
         .alias("ssr_drop_e6c2"),
-        F.round(1000.0 * fstat).cast("bigint").alias("f_milli"),
+        quantise(fstat, 3).alias("f_milli"),
         F.when(fstat > 3.0, 1).otherwise(0).cast("bigint").alias("reject_stability"),
     )

@@ -16,7 +16,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ooh_etl_spark.functions.money import cents_sum
+from ooh_etl_spark.functions.money import cents_sum, quantise
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.tables import load_table, table_schema
 
@@ -396,7 +396,7 @@ def q220_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         "nation",
-        F.round(F.col("value") * 100).cast("bigint").alias("value_c"),
+        quantise("value", 2).alias("value_c"),
     )
     return _run_to_completion(enriched, spark).orderBy("event_id")
 

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ooh_etl_spark.functions.money import quantise
 from ooh_etl_spark.functions.text import (
     DUCK_TOKENIZE,
     fingerprint_md5,
@@ -178,9 +179,8 @@ def q23_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_doc = docs.select(
         "lang",
         feats["n_tokens"].alias("n_tokens"),
-        F.round(feats["stopword_ratio"] * 10000, 0).cast("long").alias("stop_bp"),
-        F.round(quality_score(F.col("text"), rounded=False) * 10000, 0)
-        .cast("long")
+        quantise(feats["stopword_ratio"], 4).alias("stop_bp"),
+        quantise(quality_score(F.col("text"), rounded=False), 4)
         .alias("q_bp"),
     )
     return per_doc.groupBy("lang").agg(

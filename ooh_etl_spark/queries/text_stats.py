@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ooh_etl_spark.functions.money import quantise
 from ooh_etl_spark.functions.text import (
     DUCK_TOKENIZE,
     tokenize,
@@ -61,10 +62,7 @@ def q92_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("term").isNotNull())
     tf = tok.groupBy("doc_id", "lang", "term").agg(F.count(F.lit(1)).alias("c"))
     ent = tf.groupBy("doc_id", "lang").agg(
-        F.round(
-            (F.log(F.sum("c")) - F.sum(F.col("c") * F.log("c")) / F.sum("c")) * 10000
-        )
-        .cast("bigint")
+        quantise(F.log(F.sum("c")) - F.sum(F.col("c") * F.log("c")) / F.sum("c"), 4)
         .alias("ent_bp")
     )
     return (
@@ -116,8 +114,7 @@ def q93_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("rk") <= _ZIPF_TOP)
     return ranked.agg(
         F.count(F.lit(1)).alias("n_terms"),
-        F.round(F.regr_slope(F.log("c"), F.log("rk")) * 10000)
-        .cast("bigint")
+        quantise(F.regr_slope(F.log("c"), F.log("rk")), 4)
         .alias("slope_bp"),
     )
 
@@ -473,13 +470,7 @@ def q195_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
             "w1",
             "w2",
             "cab",
-            F.round(
-                1_000_000
-                * F.log(
-                    F.col("cab") * F.col("n") * 1.0 / (F.col("c1") * F.col("c2"))
-                )
-            )
-            .cast("bigint")
+            quantise(F.log(F.col("cab") * F.col("n") * 1.0 / (F.col("c1") * F.col("c2"))), 6)
             .alias("pmi_micro"),
         )
         .orderBy(F.col("pmi_micro").desc(), "w1", "w2")
@@ -667,14 +658,12 @@ def q251_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_sents.alias("n_sents"),
         n_vg.alias("n_vgroups"),
     ).filter(F.col("n_words") > 0)
-    flesch = F.round(
-        100
-        * (
-            206.835
-            - 1.015 * (F.col("n_words") * 1.0 / F.col("n_sents"))
-            - 84.6 * (F.col("n_vgroups") * 1.0 / F.col("n_words"))
-        )
-    ).cast("bigint")
+    flesch = quantise(
+        206.835
+        - 1.015 * (F.col("n_words") * 1.0 / F.col("n_sents"))
+        - 84.6 * (F.col("n_vgroups") * 1.0 / F.col("n_words")),
+        2,
+    )
     return (
         scored.withColumn("flesch_c", flesch)
         .groupBy("lang")
@@ -938,7 +927,7 @@ def q306_bleu_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(10000.0 * F.col("h2") / F.col("t2"))
             .cast("bigint")
             .alias("p2_bp"),
-            F.round(1000000.0 * bleu).cast("bigint").alias("bleu_e6"),
+            quantise(bleu, 6).alias("bleu_e6"),
         )
         .orderBy("doc_id")
     )
@@ -1051,7 +1040,7 @@ def q317_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .join(wscore, "w")
         .groupBy("phrase", "n_occurrences")
-        .agg(F.round(1000 * F.sum("score")).cast("bigint").alias("score_milli"))
+        .agg(quantise(F.sum("score"), 3).alias("score_milli"))
     )
     return (
         scored.select(
@@ -1143,18 +1132,15 @@ def q338_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
             "w1",
             "w2",
             "c",
-            F.round(
-                1000000000.0
-                * (
-                    F.greatest(F.col("c") - d_disc, F.lit(0.0)) / F.col("cw1")
-                    + d_disc
-                    * F.col("fanout")
-                    / F.col("cw1")
-                    * F.col("n_left")
-                    / F.col("b")
-                )
+            quantise(
+                F.greatest(F.col("c") - d_disc, F.lit(0.0)) / F.col("cw1")
+                + d_disc
+                * F.col("fanout")
+                / F.col("cw1")
+                * F.col("n_left")
+                / F.col("b"),
+                9,
             )
-            .cast("bigint")
             .alias("p_kn_e9"),
         )
         .orderBy(F.desc("c"), "w1", "w2")
@@ -1610,13 +1596,9 @@ def q398_flesch_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "w",
         "s",
-        F.round(
-            1000.0 * (206.835 - 1.015 * F.col("w") - 84.6 * F.col("s") / F.col("w"))
-        )
-        .cast("bigint")
+        quantise(206.835 - 1.015 * F.col("w") - 84.6 * F.col("s") / F.col("w"), 3)
         .alias("fre_milli"),
-        F.round(1000.0 * (0.39 * F.col("w") + 11.8 * F.col("s") / F.col("w") - 15.59))
-        .cast("bigint")
+        quantise(0.39 * F.col("w") + 11.8 * F.col("s") / F.col("w") - 15.59, 3)
         .alias("fk_milli"),
     )
     return (
@@ -1709,8 +1691,7 @@ def q407_chao1_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("bigint")
         .alias("chao1_bc"),
-        F.round(10000.0 * (1.0 - F.col("f1") * 1.0 / F.col("n_tokens")))
-        .cast("bigint")
+        quantise(1.0 - F.col("f1") * 1.0 / F.col("n_tokens"), 4)
         .alias("coverage_bp"),
     )
 
@@ -1774,11 +1755,9 @@ def q420_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         p.groupBy("lang")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.round(10000 * F.regr_slope(F.log("v"), F.log("n")))
-            .cast("bigint")
+            quantise(F.regr_slope(F.log("v"), F.log("n")), 4)
             .alias("heaps_beta_bp"),
-            F.round(10000 * F.regr_intercept(F.log("v"), F.log("n")))
-            .cast("bigint")
+            quantise(F.regr_intercept(F.log("v"), F.log("n")), 4)
             .alias("heaps_logk_bp"),
             F.sum("v").cast("bigint").alias("sum_types"),
             F.sum("n").cast("bigint").alias("sum_tokens"),
@@ -2053,8 +2032,7 @@ def q432_source_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             F.col("ns").cast("bigint").alias("n_tokens"),
             F.col("vocab").cast("bigint").alias("vocab"),
-            F.round(10000 * (1 - F.col("q_present")))
-            .cast("bigint")
+            quantise(1 - F.col("q_present"), 4)
             .alias("absent_mass_bp"),
             F.round(
                 1000
@@ -2394,14 +2372,13 @@ def q448_domain_affinity_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             "e",
             "s",
             "m",
-            F.round(
-                -1000000.0
-                * F.log(
-                    (F.coalesce(F.col("c_hn"), F.lit(0)) + 1.0)
-                    / (F.coalesce(F.col("c_h"), F.lit(0)) + F.col("v"))
-                )
+            quantise(
+                -F.log(
+                  (F.coalesce(F.col("c_hn"), F.lit(0)) + 1.0)
+                  / (F.coalesce(F.col("c_h"), F.lit(0)) + F.col("v"))
+              ),
+                6,
             )
-            .cast("bigint")
             .alias("t_micro"),
         )
     )

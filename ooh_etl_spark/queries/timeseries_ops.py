@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ooh_etl_spark.functions.money import quantise
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_table
@@ -67,7 +68,7 @@ def q106_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.max("value"), 2).alias("high"),
             F.round(F.min("value"), 2).alias("low"),
             F.round(F.max_by("value", ord_key), 2).alias("close"),
-            F.sum(F.round(F.col("value") * 100).cast("bigint")).cast("bigint").alias("volume_c"),
+            F.sum(quantise("value", 2)).cast("bigint").alias("volume_c"),
         )
         .orderBy("event_type", "bar_start")
     )
@@ -104,8 +105,8 @@ def q107_zscore_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio so the |z| > 3 cut is engine-exact."""
     ev = load_table(spark, sf_dir, "events")
     stats = ev.groupBy("event_type").agg(
-        F.round(F.avg("value") * 1000000).cast("bigint").alias("mean_u"),
-        F.round(F.stddev_pop("value") * 1000000).cast("bigint").alias("std_u"),
+        quantise(F.avg("value"), 6).alias("mean_u"),
+        quantise(F.stddev_pop("value"), 6).alias("std_u"),
     )
     scored = ev.join(F.broadcast(stats), "event_type").select(
         "event_id",
@@ -207,7 +208,7 @@ def q109_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     def summarize(df: DataFrame) -> DataFrame:
         return df.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.round(F.col("value") * 100).cast("bigint")).cast("bigint").alias("sum_c"),
+            F.sum(quantise("value", 2)).cast("bigint").alias("sum_c"),
         )
 
     base = summarize(ev.filter(F.col("ts") < _DELTA_FROM))
@@ -551,14 +552,7 @@ def q207_decayed_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
     wtd = daily.crossJoin(F.broadcast(ref)).select(
         "event_type",
         "cnt",
-        F.round(
-            1000000
-            * F.pow(
-                0.5,
-                F.floor(F.datediff(F.col("ref_day"), F.col("day")) / 7.0),
-            )
-        )
-        .cast("bigint")
+        quantise(F.pow(0.5, F.floor(F.datediff(F.col("ref_day"), F.col("day")) / 7.0),), 6)
         .alias("w_e6"),
     )
     return (
@@ -621,7 +615,7 @@ def q213_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     v = ev.select(
         "event_type",
-        F.round(F.col("value") * 1000000).cast("bigint").alias("v_u"),
+        quantise("value", 6).alias("v_u"),
     )
 
     def disc_med(c: str) -> F.Column:
@@ -914,7 +908,7 @@ def q248_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = ev.select(
         "event_type",
         "ts",
-        F.round(F.col("value") * 100).cast("bigint").alias("v_c"),
+        quantise("value", 2).alias("v_c"),
         F.lead("ts").over(w).alias("nxt"),
     ).filter(F.col("nxt").isNotNull())
     seg = o.select(
@@ -1084,7 +1078,7 @@ def q259_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(F.col("event_type") == "purchase")
         .groupBy(F.col("ts").cast("date").alias("d"))
         .agg(
-            F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("y_c")
+            F.sum(quantise("value", 2)).alias("y_c")
         )
         .orderBy("d")
     )
@@ -1142,7 +1136,7 @@ def q261_peak_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(F.col("event_type") == "purchase")
         .groupBy(F.col("ts").cast("date").alias("d"))
         .agg(
-            F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("y_c")
+            F.sum(quantise("value", 2)).alias("y_c")
         )
     )
     w = Window.orderBy("d")
@@ -1205,7 +1199,7 @@ def q262_daily_tail_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = ev.select(
         "event_type",
         F.col("ts").cast("date").alias("d"),
-        F.round(F.col("value") * 1000000).cast("bigint").alias("v_u"),
+        quantise("value", 6).alias("v_u"),
     )
 
     def disc(p: float) -> F.Column:
@@ -1291,9 +1285,8 @@ def q284_seasonality_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     ss_tot = F.col("syy") - F.col("sy") * F.col("sy") * 1.0 / F.col("n")
     return tot.select(
         F.col("n").cast("bigint").alias("n_hours"),
-        F.round(1000000.0 * F.col("ss_res")).cast("bigint").alias("ss_res_e6"),
-        F.round(10000.0 * (1.0 - F.col("ss_res") / ss_tot))
-        .cast("bigint")
+        quantise("ss_res", 6).alias("ss_res_e6"),
+        quantise(1.0 - F.col("ss_res") / ss_tot, 4)
         .alias("seasonality_r2_bp"),
     )
 
@@ -1343,7 +1336,7 @@ def q287_tukey_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     v = ev.select(
         "event_type",
-        F.round(F.col("value") * 1000000).cast("bigint").alias("v_u"),
+        quantise("value", 6).alias("v_u"),
     )
 
     def disc(p: float) -> F.Column:
@@ -1456,8 +1449,7 @@ def q315_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     gm = grid.crossJoin(F.broadcast(m))
     den = gm.agg(
         F.sum(
-            F.round((F.col("x") - F.col("mu")) * (F.col("x") - F.col("mu")) * 1000000)
-            .cast("bigint")
+            quantise((F.col("x") - F.col("mu")) * (F.col("x") - F.col("mu")), 6)
         )
         .cast("bigint")
         .alias("d")
@@ -1471,9 +1463,7 @@ def q315_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("k")
         .agg(
             F.sum(
-                F.round(
-                    (F.col("x") - F.col("mu")) * (F.col("xb") - F.col("mu")) * 1000000
-                ).cast("bigint")
+                quantise((F.col("x") - F.col("mu")) * (F.col("xb") - F.col("mu")), 6)
             )
             .cast("bigint")
             .alias("nm")
@@ -1561,10 +1551,10 @@ def q316_spectral_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     tm = t.crossJoin(F.broadcast(m)).crossJoin(F.broadcast(periods))
     ang = 2 * 3.141592653589793 * F.col("t") / F.col("p")
     terms = tm.groupBy("p").agg(
-        F.sum(F.round((F.col("x") - F.col("mu")) * F.cos(ang) * 1000000).cast("bigint"))
+        F.sum(quantise((F.col("x") - F.col("mu")) * F.cos(ang), 6))
         .cast("bigint")
         .alias("sc"),
-        F.sum(F.round((F.col("x") - F.col("mu")) * F.sin(ang) * 1000000).cast("bigint"))
+        F.sum(quantise((F.col("x") - F.col("mu")) * F.sin(ang), 6))
         .cast("bigint")
         .alias("ss"),
         F.max(F.col("n")).alias("n"),
@@ -1628,7 +1618,7 @@ def q330_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("d")
         )
         .agg(
-            F.sum(F.round(F.col("value") * 100).cast("bigint"))
+            F.sum(quantise("value", 2))
             .cast("bigint")
             .alias("rev_c")
         )
@@ -1874,8 +1864,8 @@ def q362_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             F.col("n").alias("n_days"),
             "s",
-            F.round(1000.0 * F.col("var_s")).cast("bigint").alias("var_s_milli"),
-            F.round(1000.0 * F.col("z")).cast("bigint").alias("z_milli"),
+            quantise("var_s", 3).alias("var_s_milli"),
+            quantise("z", 3).alias("z_milli"),
             F.when((F.col("s") > 0) & (F.col("z") > 1.959964), 1)
             .when((F.col("s") < 0) & (F.col("z") < -1.959964), -1)
             .otherwise(0)
@@ -1963,8 +1953,7 @@ def q372_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     cen = grid.crossJoin(F.broadcast(m))
     den = cen.agg(
         F.sum(
-            F.round((F.col("x") - F.col("mu")) * (F.col("x") - F.col("mu")) * 1000000)
-            .cast("bigint")
+            quantise((F.col("x") - F.col("mu")) * (F.col("x") - F.col("mu")), 6)
         )
         .cast("bigint")
         .alias("d")
@@ -1980,9 +1969,7 @@ def q372_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("k")
         .agg(
             F.sum(
-                F.round(
-                    (F.col("x") - F.col("mu")) * (F.col("xb") - F.col("mu")) * 1000000
-                ).cast("bigint")
+                quantise((F.col("x") - F.col("mu")) * (F.col("xb") - F.col("mu")), 6)
             )
             .cast("bigint")
             .alias("nm")
@@ -2168,7 +2155,7 @@ def q376_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n").cast("bigint").alias("window_n"),
             "n_blocks",
             "rs_mean_u",
-            F.round(1000000.0 * F.col("hh")).cast("bigint").alias("hurst_e6"),
+            quantise("hh", 6).alias("hurst_e6"),
         )
         .orderBy("window_n")
     )
@@ -2377,7 +2364,7 @@ def q397_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("d")
         )
-        .agg(F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("y_c"))
+        .agg(F.sum(quantise("value", 2)).alias("y_c"))
         # the bounded day grid feeds every downstream pass: checkpoint
         # so the corpus aggregate runs ONCE (q296-class rule)
     )
@@ -2429,9 +2416,9 @@ def q397_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     dw = F.col("sdd").cast("double") / F.col("see").cast("double")
     return dw_agg.select(
         "n_days",
-        F.round(1000.0 * F.col("b")).cast("bigint").alias("slope_cents_milli"),
-        F.round(1000.0 * dw).cast("bigint").alias("dw_milli"),
-        F.round(1000.0 * (1.0 - dw / 2.0)).cast("bigint").alias("rho_milli"),
+        quantise("b", 3).alias("slope_cents_milli"),
+        quantise(dw, 3).alias("dw_milli"),
+        quantise(1.0 - dw / 2.0, 3).alias("rho_milli"),
         F.when(dw < 1.5, 1).otherwise(0).cast("bigint").alias("positive_autocorr"),
     )
 
@@ -2509,7 +2496,7 @@ def q401_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("d")
         )
-        .agg(F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("y_c"))
+        .agg(F.sum(quantise("value", 2)).alias("y_c"))
         # bounded day grid, multiple consumers: checkpoint (q296-class)
     )
     wt = Window.partitionBy().orderBy("d")
@@ -2644,7 +2631,7 @@ def q405_kalman_local_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         ev.filter(F.col("event_type") == "purchase")
         .groupBy(F.col("ts").cast("date").alias("d"))
-        .agg(F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("y_c"))
+        .agg(F.sum(quantise("value", 2)).alias("y_c"))
         .orderBy("d")
         .limit(_KALMAN_DAYS)
     )
@@ -2749,7 +2736,7 @@ def q406_cooks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("d")
         )
-        .agg(F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("y_c"))
+        .agg(F.sum(quantise("value", 2)).alias("y_c"))
         # the bounded day grid feeds every downstream pass: checkpoint
         # so the corpus aggregate runs ONCE (q296-class rule)
     )
@@ -2798,7 +2785,7 @@ def q406_cooks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     cook = res.crossJoin(F.broadcast(mse)).select(
         "t",
         "e_c",
-        F.round(1000000.0 * F.col("h")).cast("bigint").alias("lev_e6"),
+        quantise("h", 6).alias("lev_e6"),
         F.round(
             1000000.0
             * (
@@ -2900,7 +2887,7 @@ def q414_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         ev.filter(F.col("event_type") == "purchase")
         .groupBy(F.col("ts").cast("date").alias("d"))
-        .agg(F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("y_c"))
+        .agg(F.sum(quantise("value", 2)).alias("y_c"))
         .orderBy("d")
         .limit(_HW_DAYS)
     )

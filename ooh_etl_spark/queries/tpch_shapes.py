@@ -45,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ooh_etl_spark.functions.money import cents_sum, quantise
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.tables import load_documents, load_table
 
@@ -117,7 +118,7 @@ def q61_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(_REV).alias("volume"),
         )
     )
-    vol_c = F.round(F.col("volume") * 100).cast("bigint")
+    vol_c = quantise("volume", 2)
     cents = vol.groupBy("yr").agg(
         F.sum(
             F.when(F.col("supp_nation") == "NATION_3", vol_c).otherwise(F.lit(0))
@@ -173,7 +174,7 @@ def q62_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("l_quantity") < F.col("t"))
         .agg(
             F.round(
-                F.sum(F.round(F.col("l_extendedprice") * 100).cast("bigint"))
+                F.sum(quantise("l_extendedprice", 2))
                 / 100.0
                 / 7.0,
                 2,
@@ -406,8 +407,6 @@ def q52_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(c, orders.o_custkey == c.c_custkey)
         .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
     )
-    from ooh_etl_spark.functions.money import cents_sum
-
     return j.groupBy("cust_nation", "supp_nation", F.year("l_shipdate").alias("yr")).agg(
         cents_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("volume")
     )
@@ -421,7 +420,7 @@ def _rev() -> F.Column:
 
 
 def _cents(col: F.Column) -> F.Column:
-    return F.round(col * 100).cast("bigint")
+    return quantise(col, 2)
 
 
 @register(
@@ -840,7 +839,7 @@ def q124_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") >= "1999-01-01"
     )
-    bal_c = F.round(F.col("c_acctbal") * 100).cast("bigint")
+    bal_c = quantise("c_acctbal", 2)
     avg_bal = cust.filter(F.col("c_acctbal") > 0).agg(
         F.round(F.avg(bal_c)).cast("bigint").alias("avg_c")
     )

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ooh_etl_spark.functions.money import quantise
 from ooh_etl_spark.functions.text import DUCK_TOKENIZE
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.tables import load_table
@@ -147,7 +148,7 @@ def q172_grouped_agg_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "lang",
             "n_used",
-            F.round(F.col("tm") * 1000).cast("bigint").alias("trimmed_mean_milli"),
+            quantise("tm", 3).alias("trimmed_mean_milli"),
         )
         .orderBy("lang")
     )

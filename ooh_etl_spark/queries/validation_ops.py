@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ooh_etl_spark.functions.money import quantise
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.tables import load_table
 
@@ -129,15 +130,15 @@ def q112_column_profiler(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-row sum is exact integers; the shuffle carries 4 groups."""
     li = load_table(spark, sf_dir, "lineitem")
     u = li.unpivot([], _PROFILE_COLS, "col", "x")
-    xu = F.round(F.col("x") * 1000000).cast("bigint")
+    xu = quantise("x", 6)
     return (
         u.groupBy("col")
         .agg(
             F.count(F.lit(1)).alias("n"),
             (F.count(F.lit(1)) - F.count("x")).alias("n_null"),
             F.countDistinct("x").alias("n_distinct"),
-            F.round(F.min("x") * 1000000).cast("bigint").alias("min_u"),
-            F.round(F.max("x") * 1000000).cast("bigint").alias("max_u"),
+            quantise(F.min("x"), 6).alias("min_u"),
+            quantise(F.max("x"), 6).alias("max_u"),
             F.round(F.sum(xu) / F.count("x")).cast("bigint").alias("mean_u"),
         )
         .orderBy("col")
@@ -227,8 +228,7 @@ def q114_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = ev.join(F.broadcast(b), "event_type").select(
         "event_type",
-        F.round(F.least(F.greatest(F.col("value"), F.col("p05")), F.col("p95")) * 100)
-        .cast("bigint")
+        quantise(F.least(F.greatest(F.col("value"), F.col("p05")), F.col("p95")), 2)
         .alias("v_c"),
     )
     return (
@@ -281,7 +281,7 @@ def q311_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     observed = li.observe(
         obs,
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.round(F.col("l_extendedprice") * 100).cast("bigint"))
+        F.sum(quantise("l_extendedprice", 2))
         .cast("bigint")
         .alias("revenue_cents"),
         F.sum(

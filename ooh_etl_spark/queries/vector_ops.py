@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ooh_etl_spark.functions.money import quantise
 from ooh_etl_spark.operators.similarity import cosine, dot, l2_norm, nearest_centroid, sq_dist
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize
@@ -71,7 +72,7 @@ def q102_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.groupBy("cid")
         .agg(
             F.count(F.lit(1)).alias("n_members"),
-            F.sum(F.round(F.col("dist") * 1000000).cast("bigint"))
+            F.sum(quantise("dist", 6))
             .cast("bigint")
             .alias("inertia_u"),
         )
@@ -113,7 +114,7 @@ def q103_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode(
             F.transform(
                 F.col("e"),
-                lambda x: F.round(F.col("dot") * x * 1000000).cast("bigint"),
+                lambda x: quantise(F.col("dot") * x, 6),
             )
         ).alias("pos", "c_u")
     )
@@ -155,7 +156,7 @@ def q104_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode(
             F.transform(
                 F.slice(F.col("embedding").cast("array<double>"), 1, _STAT_DIMS),
-                lambda x: F.round(x * 1000000).cast("bigint"),
+                lambda x: quantise(x, 6),
             )
         ).alias("pos", "x_u")
     )
@@ -206,7 +207,7 @@ def q105_cosine_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     cos = cosine(F.col("ea"), F.col("eb"))
     p = (
         a.join(F.broadcast(b), F.col("ida") < F.col("idb"))
-        .select(F.round(10000 * cos).cast("bigint").alias("cos_bp"))
+        .select(quantise(cos, 4).alias("cos_bp"))
     )
     return (
         p.groupBy(F.floor(F.col("cos_bp") / float(_BIN_BP)).cast("bigint").alias("bin"))
@@ -306,11 +307,7 @@ def q309_mmd_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         return F.exp(-sq_dist(F.col(u), F.col(v)) / (2 * _MMD_SIGMA2))
 
     hs = quads.select(
-        F.round(
-            1000000000
-            * (k("x1", "x2") + k("y1", "y2") - k("x1", "y2") - k("x2", "y1"))
-        )
-        .cast("bigint")
+        quantise(k("x1", "x2") + k("y1", "y2") - k("x1", "y2") - k("x2", "y1"), 9)
         .alias("h_e9")
     )
     return hs.agg(
@@ -430,7 +427,7 @@ def q322_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _kc_dist_nano(e, vec):
     """Fold ||e - vec||^2 against a literal vector, in nano units."""
     lit = F.array(*[F.lit(float(x)) for x in vec])
-    return F.round(1000000000 * sq_dist(e, lit)).cast("bigint")
+    return quantise(sq_dist(e, lit), 9)
 
 
 # --- q324: Matryoshka truncation fidelity (round 6) ------------------------
@@ -544,16 +541,15 @@ def q324_matryoshka_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
         rho.groupBy(F.col("d").cast("bigint").alias("dim"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_queries"),
-            F.round(
-                1000000.0
-                * F.avg(
-                    1.0
-                    - 6.0
-                    * F.col("d2")
-                    / (F.col("n") * (F.col("n") * 1.0 * F.col("n") - 1))
-                )
+            quantise(
+                F.avg(
+                  1.0
+                  - 6.0
+                  * F.col("d2")
+                  / (F.col("n") * (F.col("n") * 1.0 * F.col("n") - 1))
+              ),
+                6,
             )
-            .cast("bigint")
             .alias("mean_spearman_e6"),
         )
         .orderBy("dim")
@@ -814,7 +810,7 @@ def q469_embedding_norm_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = emb.select(
         "label",
         F.when(bad, F.lit(-1).cast("bigint"))
-        .otherwise(F.round(1000000 * dot(e, e)).cast("bigint"))
+        .otherwise(quantise(dot(e, e), 6))
         .alias("sq_e6"),
         F.when(bad, 1).otherwise(0).alias("has_nan"),
     )

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ooh_etl_spark.functions.money import quantise
 from ooh_etl_spark.queries.registry import register
 from ooh_etl_spark.stages import materialize
 from ooh_etl_spark.tables import load_documents, load_table
@@ -88,7 +89,7 @@ def q176_scd2_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     the MERGE formulation is Delta/Iceberg's apply-changes."""
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("k"),
-        F.round(F.col("c_acctbal") * 100).cast("bigint").alias("bal_c"),
+        quantise("c_acctbal", 2).alias("bal_c"),
     )
     # Integer division (DIV) — Spark's DIV and DuckDB's // both
     # truncate toward zero, so negative balances land the same cent.
@@ -180,7 +181,7 @@ def q177_join_view_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("price_c"),
+        quantise("o_totalprice", 2).alias("price_c"),
     )
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
@@ -337,7 +338,7 @@ def q245_cdc_apply_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     base = orders.filter(F.col("o_orderkey") % 4 == 0).select(
         F.col("o_orderkey").alias("k"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("val_c"),
+        quantise("o_totalprice", 2).alias("val_c"),
     )
     changes = orders.filter(
         (F.col("o_orderkey") % 8).isin(1, 4)
@@ -725,8 +726,7 @@ def q314_zonemap_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("bigint")
         .alias("files_hit_if_sorted"),
-        F.round(10000.0 * (1.0 - F.col("files_hit") * 1.0 / F.col("n_files")))
-        .cast("bigint")
+        quantise(1.0 - F.col("files_hit") * 1.0 / F.col("n_files"), 4)
         .alias("skip_bp_current"),
     )
 
@@ -809,8 +809,7 @@ def q329_sort_key_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = orders.select(
         F.unix_timestamp(F.col("o_orderdate")).cast("bigint").alias("qcol"),
         F.col("o_custkey").alias("c_custkey"),
-        F.round(F.col("o_totalprice") * 100)
-        .cast("bigint")
+        quantise("o_totalprice", 2)
         .alias("c_totalprice"),
         F.col("o_orderkey").alias("c_orderkey"),
     )
@@ -879,7 +878,7 @@ def q329_sort_key_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return m.select(
         "candidate",
-        F.round(1000000.0 * rho).cast("bigint").alias("rank_corr_e6"),
+        quantise(rho, 6).alias("rank_corr_e6"),
         F.row_number()
         .over(Window.orderBy(F.abs(rho).desc(), F.col("candidate")))
         .cast("bigint")
@@ -1032,7 +1031,7 @@ def q358_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     proj = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("price_c"),
+        quantise("o_totalprice", 2).alias("price_c"),
     )
     schema = "o_orderkey long, o_custkey long, price_c long"
     proj.write.mode("overwrite").option("header", True).csv(f"{base}/csv")

@@ -12,6 +12,8 @@ plans* deploy unchanged to a multi-executor cluster:
 - Session timezone pinned to UTC so timestamp semantics match the
   DuckDB oracle (naive-UTC) byte for byte.
 - Arrow enabled for any pandas interchange (vectorized UDF boundary).
+- Driver heap sized to the host (``default_driver_memory``): half of
+  physical memory, capped at 16g, unless ``SPARK_GRAFT_DRIVER_MEM`` says.
 - Generated-class cache sized to the measured working set
   (``CODEGEN_CACHE_ENTRIES``): bench.py's 52 headline entries compile
   1,247 distinct Janino classes in one session at sf0.001 and sf0.1,
@@ -68,6 +70,15 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` unless ``SPARK_GRAFT_DRIVER_MEM`` is set:
+    half of the host's physical memory, capped at 16g. A fixed 16g is
+    above a 15.7 GB host's memory, and two such JVMs (an oracle run
+    beside the test suite) got one OOM-killed there."""
+    half_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2 // 2**20
+    return f"{min(half_mb, 16 * 1024)}m"
+
+
 def get_spark(app_name: str = "ooh_etl_spark") -> SparkSession:
     """Build (or reuse) the engine's SparkSession."""
     cpus = default_parallelism()
@@ -88,7 +99,10 @@ def get_spark(app_name: str = "ooh_etl_spark") -> SparkSession:
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         # Progress-bar carriage returns interleave with stdout and
         # corrupted the driver's parse of bench.py's final JSON line

@@ -16,13 +16,15 @@ import os
 
 import duckdb
 import pytest
-# Oracle-replica / deep-functional suite: excluded from the default
-# fast-core gate run (see pytest.ini); run with `-m slow`.
-pytestmark = pytest.mark.slow
+from pyspark.sql import functions as F
 
-
+from ooh_etl_spark.functions.money import quantise
 from ooh_etl_spark.tables import TABLE_NAMES
 from tests.conftest import assert_matches_oracle
+
+# The sf0.1 oracle replicas and the accumulator stress tests are
+# marked slow: excluded from the default fast-core gate run (see
+# pytest.ini); run with `-m slow`. The quantise checks below are fast.
 
 SF01_DIR = "/root/testdata/sf0.1"
 
@@ -45,11 +47,13 @@ def duck_sf01():
     return con
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize("name", MONEY_QUERIES)
 def test_money_query_matches_oracle_at_sf01(spark, duck_sf01, name):
     assert_matches_oracle(spark, duck_sf01, name, sf_dir=SF01_DIR)
 
 
+@pytest.mark.slow
 def test_cents_sum_wide_matches_narrow_on_normal_magnitudes(spark):
     # The decimal(38,0) accumulator is the same policy, so at sane
     # magnitudes the two paths agree to the cent.
@@ -61,6 +65,7 @@ def test_cents_sum_wide_matches_narrow_on_normal_magnitudes(spark):
     assert float(narrow) == float(wide)
 
 
+@pytest.mark.slow
 def test_cents_sum_wide_survives_int64_accumulator_overflow(spark):
     # 4 rows of ~4.6e18 cents: the integer-cent total (~1.8e19)
     # exceeds int64 (9.2e18). The default bigint accumulator fails
@@ -84,6 +89,7 @@ def test_cents_sum_wide_survives_int64_accumulator_overflow(spark):
         assert float(narrow) != pytest.approx(4 * big, rel=1e-12)
 
 
+@pytest.mark.slow
 def test_cents_avg_ignores_nulls_like_sql_avg(spark):
     # count(col) denominator: NULL rows are excluded, matching SQL
     # avg() — a count(*) denominator would dilute the average.
@@ -94,3 +100,36 @@ def test_cents_avg_ignores_nulls_like_sql_avg(spark):
     )
     got = df.agg(cents_avg("v").alias("a")).collect()[0]["a"]
     assert float(got) == 1.50
+
+
+QUANTISE_SCALES = [1, 2, 3, 4, 6, 9]
+
+
+@pytest.mark.parametrize("scale", QUANTISE_SCALES)
+def test_quantise_matches_duckdb_round_cast(spark, scale):
+    """``quantise(x, s)`` and the oracles' ``CAST(round(x * 10^s) AS
+    BIGINT)`` give the same integer for exact half-units of both signs,
+    ordinary doubles, bigint and int32 inputs, and NULL. The int32 2148
+    at scale 6 is past where the old int-literal spelling
+    ``F.round(i * 1000000)`` overflows under ANSI."""
+    unit = 10.0**scale
+    d = [2.5 / unit, -2.5 / unit, 0.5 / unit, -0.5 / unit, 0.1, 1 / 3, -123.456789, 2.675, None]
+    b = [123456789, -7, 0, None]
+    i = [2148, -2148, 2147, None]
+    rows = [(x, b[n % len(b)], i[n % len(i)]) for n, x in enumerate(d)]
+    sdf = spark.createDataFrame(rows, "d double, b bigint, i int")
+    got = sdf.select(
+        quantise("d", scale).alias("d"),
+        quantise(F.col("b"), scale).alias("b"),
+        quantise(F.col("i"), scale).alias("i"),
+    ).collect()
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (n INTEGER, d DOUBLE, b BIGINT, i INTEGER)")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?, ?)", [(n, *r) for n, r in enumerate(rows)])
+    want = con.execute(
+        f"SELECT CAST(round(d * 10^{scale}) AS BIGINT), CAST(round(b * 10^{scale}) AS BIGINT),"
+        f" CAST(round(i * 10^{scale}) AS BIGINT) FROM t ORDER BY n"
+    ).fetchall()
+    assert [tuple(r) for r in got] == want
+    assert got[-1]["d"] is None
+    assert sdf.schema["i"].dataType.simpleString() == "int"

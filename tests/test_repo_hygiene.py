@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import ast
 import glob
+import math
 import os
 import re
 import subprocess
@@ -425,7 +426,9 @@ _COLUMN_FOLDS = {
 }
 #: An e6-quantised squared distance, the nearest-centroid rule's key
 #: (``similarity.centroid_d2``), as ``ast.unparse`` text.
-_QUANTISED_D2 = re.compile(r"(?:F\.)?round\((?:1000000|1e6|1000000\.0) \* sq_dist\(")
+_QUANTISED_D2 = re.compile(
+    r"(?:F\.)?round\((?:1000000|1e6|1000000\.0) \* sq_dist\(|quantise\(sq_dist\(.*\), 6\)$"
+)
 
 
 def test_vector_folds_live_in_one_module():
@@ -457,7 +460,7 @@ def test_vector_folds_live_in_one_module():
                 offenders.add(f"{rel}:{node.lineno}")
         if (
             isinstance(node, ast.Call)
-            and getattr(node.func, "attr", getattr(node.func, "id", None)) == "round"
+            and getattr(node.func, "attr", getattr(node.func, "id", None)) in ("round", "quantise")
             and _QUANTISED_D2.match(ast.unparse(node))
         ):
             offenders.add(f"{rel}:{node.lineno}")
@@ -465,6 +468,64 @@ def test_vector_folds_live_in_one_module():
         "fold vectors with operators.similarity's dot, sq_dist, l2_norm or cosine, "
         "assign centroids with its centroid_d2 or nearest_centroid, "
         f"and widen with cast('array<double>'): {sorted(offenders)}"
+    )
+
+
+def _power_of_ten(node: ast.expr) -> bool:
+    """A positive or negated power-of-ten number literal other than 1
+    (``x * 1.0`` widens to double; it is not a unit)."""
+    if isinstance(node, ast.UnaryOp) and isinstance(node.op, ast.USub):
+        node = node.operand
+    v = node.value if isinstance(node, ast.Constant) else None
+    return type(v) in (int, float) and v > 0 and v != 1 and 10 ** round(math.log10(v)) == v
+
+
+def _hand_quantised(node: ast.AST) -> bool:
+    """``F.round(<product>).cast("bigint")`` whose product, or its
+    negation, has a power-of-ten operand at the top level. ``round(x, 0)``
+    and ``cast("long")`` are the same spelling."""
+    if not (
+        isinstance(node, ast.Call)
+        and getattr(node.func, "attr", None) == "cast"
+        and [ast.unparse(a) for a in node.args] in (["'bigint'"], ["'long'"])
+    ):
+        return False
+    rnd = node.func.value
+    if not (
+        isinstance(rnd, ast.Call)
+        and getattr(rnd.func, "attr", getattr(rnd.func, "id", None)) == "round"
+        and [ast.unparse(a) for a in rnd.args[1:]] in ([], ["0"])
+    ):
+        return False
+    prod = rnd.args[0]
+    if isinstance(prod, ast.UnaryOp) and isinstance(prod.op, ast.USub):
+        prod = prod.operand
+    return (
+        isinstance(prod, ast.BinOp)
+        and isinstance(prod.op, ast.Mult)
+        and (_power_of_ten(prod.left) or _power_of_ten(prod.right))
+    )
+
+
+def test_fixed_point_quantisation_lives_in_one_module():
+    """Rounding each row to an integer number of ``10**-k`` units before
+    any cross-row sum keeps sums exact under any partitioning (SCALE.md,
+    "Numeric determinism"). ``functions/money.py::quantise`` is the one
+    Column spelling of that rule, with a double unit; a hand-written
+    ``F.round(1e6 * x).cast("bigint")`` (either operand order, int or
+    double unit, any power of ten) anywhere else in the package is an
+    offender. ``F.round(1e6 * x / n)`` and ``F.round(1e6 * a * b)`` are
+    not: their top-level operand is not the unit, and reordering them
+    could change the rounding. Spark SQL strings share their spelling
+    with the DuckDB twins and are not checked."""
+    home = os.path.join("ooh_etl_spark", "functions", "money.py")
+    offenders = [
+        f"{rel}:{node.lineno}"
+        for rel, node in _ast_nodes("ooh_etl_spark")
+        if rel != home and _hand_quantised(node)
+    ]
+    assert not offenders, (
+        f"quantise with functions.money.quantise(col, scale): {len(offenders)} sites {offenders}"
     )
 
 

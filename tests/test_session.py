@@ -3,6 +3,7 @@ and the driver work that it keeps off each query construction."""
 
 from __future__ import annotations
 
+import os
 import re
 import shutil
 
@@ -12,7 +13,7 @@ from pyspark.errors.utils import is_debugging_enabled
 from pyspark.sql import functions as F
 
 from ooh_etl_spark.queries import QUERIES
-from ooh_etl_spark.session import codegen_compilations
+from ooh_etl_spark.session import codegen_compilations, default_driver_memory
 from ooh_etl_spark.tables import load_table
 from perfbench.sparktrace import job_group
 from tests.conftest import SF_DIR, run
@@ -27,6 +28,17 @@ def test_repeat_execution_compiles_no_classes(spark):
     before = codegen_compilations(spark)
     run(spark, "q479_corpus_build_funnel").collect()
     assert codegen_compilations(spark) - before == 0
+
+
+def test_driver_heap_defaults_to_half_the_host(spark):
+    """The default ``spark.driver.memory`` leaves the other half of the
+    host to the OS, the Python workers and a second JVM; a fixed 16g was
+    above a 15.7 GB host's memory. ``SPARK_GRAFT_DRIVER_MEM`` overrides it."""
+    mb = int(default_driver_memory().removesuffix("m"))
+    phys_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**20
+    assert 0 < mb <= 16 * 1024 and 2 * mb <= phys_mb
+    want = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory()
+    assert spark.conf.get("spark.driver.memory") == want
 
 
 def _group_stages(spark, group: str, body) -> list[list[str]]:

@@ -32,6 +32,11 @@ its canonicalization treats the two as equal).
 
 Usage:  python tools/check_oracle.py [--strict] [sf_dir] [query ...]
 
+Exit status: 0 all green, 1 some query failed, 2 an unknown query name,
+3 the session's JVM stopped answering (an ``ABORT`` line names the query
+it died on and how many were not run; their results would all be the
+same ``Connection refused``).
+
 ``--strict`` first runs the static oracle-dtype gate (DESCRIBE every
 registered oracle; assert no output column type outside the
 driver-safe set — this is the <10 s check that would have caught the
@@ -180,6 +185,14 @@ def compare(spark, con, name: str, sf_dir: str) -> str | None:
     return None
 
 
+def jvm_alive(spark) -> bool:
+    """Whether the session's JVM still answers a py4j call."""
+    try:
+        return not spark.sparkContext._jsc.sc().isStopped()
+    except Exception:  # noqa: BLE001 - a dead gateway raises py4j or socket errors
+        return False
+
+
 def main() -> int:
     argv = [a for a in sys.argv[1:] if a != "--strict"]
     strict = "--strict" in sys.argv[1:]
@@ -212,21 +225,25 @@ def main() -> int:
         print(f"unknown query names: {sorted(unknown)}")
         return 2
     failures = []
-    ran = 0
-    for name in qs:
-        if only and name not in only:
-            continue
-        ran += 1
+    names = [name for name in qs if not only or name in only]
+    for ran, name in enumerate(names, 1):
         t0 = time.time()
         msg = compare(spark, con, name, sf_dir)
         if msg is None:
             status = "OK" if name in oracles else "ROWS-ONLY"
             print(f"{status:>9} {name}: ({time.time()-t0:.1f}s)", flush=True)
-        else:
-            failures.append(name)
-            print(f"FAIL {name}: {msg}", flush=True)
+            continue
+        failures.append(name)
+        print(f"FAIL {name}: {msg}", flush=True)
+        if msg.startswith("spark error") and not jvm_alive(spark):
+            print(
+                f"ABORT {name}: the Spark JVM no longer answers; "
+                f"{len(names) - ran} queries not run, {ran - len(failures)}/{ran} green",
+                flush=True,
+            )
+            return 3
 
-    print(f"\n{ran - len(failures)}/{ran} green")
+    print(f"\n{len(names) - len(failures)}/{len(names)} green")
     return 1 if failures else 0
 
 
