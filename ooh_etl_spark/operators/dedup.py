@@ -95,7 +95,7 @@ def jaccard_pairs(
     # size-table joins and no second traversal of the shingle exchange
     # (an earlier revision re-derived per-doc sizes from the posting
     # lists and joined them back, leaving exchange reuse to the
-    # planner; PLANS.md showed the subtree tripled instead).
+    # planner; the formatted plan showed the subtree tripled instead).
     sh = shingle_sets(df, text_col, id_col).withColumn("sz", F.size("sh"))
     # explode_OUTER, not explode: InferFiltersFromGenerate turns plain
     # explode into a `size(sh)>0 AND sh IS NOT NULL` filter that

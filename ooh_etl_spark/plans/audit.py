@@ -9,6 +9,7 @@ expression pipelines stay inside WholeStageCodegen.
 from __future__ import annotations
 
 import io
+import re
 from contextlib import redirect_stdout
 
 from pyspark.sql import DataFrame
@@ -43,8 +44,6 @@ def shuffle_count(plan: str) -> int:
     the plan. Broadcast exchanges are excluded — they move a dimension,
     not the data. The formatted plan prints one
     ``Arguments: <partitioning>(...`` detail line per Exchange node."""
-    import re
-
     return len(
         re.findall(
             r"Arguments: (?:hashpartitioning|rangepartitioning|"
@@ -54,11 +53,26 @@ def shuffle_count(plan: str) -> int:
     )
 
 
+#: The node names of Spark's physical operators that run Python code:
+#: the UDF/UDTF evaluators (``ArrowEvalPython``, ``BatchEvalPython``,
+#: ``ArrowAggregatePython``, ``ArrowWindowPython``, their ``UDTF``
+#: forms) and the pandas/Arrow function operators (``MapInPandas``,
+#: ``MapInArrow``, ``FlatMapGroupsInPandas``, ``FlatMapCoGroupsInArrow``,
+#: ...). A ``PythonUDF`` expression is not a node and does not match.
+_PYTHON_NODE = re.compile(
+    r"\b((?:Arrow|Batch)\w*Python(?:UDTF)?|\w+In(?:Pandas|Arrow)(?:WithState)?)\b"
+)
+
+
+def python_nodes(plan: str) -> list[str]:
+    """The distinct Python-running node names in ``plan``, sorted: the
+    places where rows leave the JVM for a Python worker."""
+    return sorted(set(_PYTHON_NODE.findall(plan)))
+
+
 def reads_only(plan: str, cols: set[str]) -> bool:
     """True if every parquet ReadSchema is a subset of ``cols`` —
     column pruning reached the scan."""
-    import re
-
     for m in re.finditer(r"ReadSchema: struct<([^>]*)>", plan):
         fields = {f.split(":")[0].strip() for f in m.group(1).split(",") if f.strip()}
         if not fields <= cols:
@@ -74,8 +88,6 @@ def _tree_lines(plan_str: str) -> list[tuple[int, str]]:
     sit exactly 3 columns deeper, so "subtree of node at depth d" is
     the run of following lines with depth > d.
     """
-    import re
-
     out: list[tuple[int, str]] = []
     for line in plan_str.splitlines():
         if not line.strip():

@@ -12,6 +12,11 @@ whose frames always have several consumers: the iterated operators of
 ``sources/xml.py::occupation_records``, whose records feed both the
 pipeline's report and its parquet sink.
 
+Spark does not share an uncached subtree between the consumers of one
+plan (``df.select(a).union(df.select(b))`` computes ``df`` twice).
+Read ``df`` once with a single ``explode(array(...))`` pass, or cut it
+with :func:`materialize`.
+
 Plan audits want the opposite: the full lineage back to the scans, so
 a pin can assert on the shuffles a checkpoint would hide. Under
 :func:`full_lineage` both calls return their inputs unchanged.

@@ -22,6 +22,7 @@ from tests.vector_model import dot
 from ooh_etl_spark.plans.audit import (
     has_cartesian,
     physical_plan,
+    python_nodes,
     shuffle_count,
 )
 from ooh_etl_spark.queries import QUERIES
@@ -105,7 +106,7 @@ def test_q167_grid_equals_brute_force(spark):
 def test_q167_no_cartesian_one_cell_shuffle(spark):
     plan = physical_plan(QUERIES["q167_geo_grid_join"].fn(spark, SF_DIR))
     assert not has_cartesian(plan), plan
-    assert "BatchEvalPython" not in plan, plan
+    assert python_nodes(plan) == [], plan
 
 
 def test_q168_gradient_shape_and_descent(spark):

@@ -7,12 +7,15 @@ broadcast, no accidental cartesian products.
 
 from __future__ import annotations
 
+import re
+
 from ooh_etl_spark.plans.audit import (
     has_broadcast_join,
     has_cartesian,
     has_sort_merge_join,
     physical_plan,
     pushed_filters,
+    python_nodes,
     reads_only,
     shuffle_count,
 )
@@ -168,7 +171,7 @@ def test_q121_bloom_join_is_jvm_only(spark):
     # UDF: no Python evaluation node anywhere in the fact path, and the
     # exact pass is a broadcast left-semi (fact side never shuffles).
     plan = plan_of(spark, "q121_bloom_prefilter_join")
-    assert "BatchEvalPython" not in plan and "PythonUDF" not in plan, plan
+    assert python_nodes(plan) == [] and "PythonUDF" not in plan, plan
     assert has_broadcast_join(plan), plan
     assert not has_cartesian(plan), plan
 
@@ -833,3 +836,56 @@ def test_q432_no_doc_x_vocab_densification(spark):
     keysets = _exchange_key_sets(plan)
     assert {"source", "tok"} in keysets, keysets
     assert reads_only(plan, {"source", "text"}), plan
+
+
+def test_python_nodes_names_every_python_operator():
+    # The node names this Spark plans for the registry, as tree lines
+    # and as detail headers; expressions and column names never count.
+    plan = """
++- ArrowAggregatePython (9)
+   +- ArrowEvalPython (8)
+      +- BatchEvalPython (7)
+         +- BatchEvalPythonUDTF (6)
+            +- MapInArrow (5)
+               +- MapInPandas (4)
+                  +- Scan parquet  (1)
+(6) BatchEvalPythonUDTF
+Arguments: [pythonUDF0#12, PythonUDF(f)], PythonUDTF
+(9) ArrowAggregatePython
+"""
+    assert python_nodes(plan) == [
+        "ArrowAggregatePython",
+        "ArrowEvalPython",
+        "BatchEvalPython",
+        "BatchEvalPythonUDTF",
+        "MapInArrow",
+        "MapInPandas",
+    ]
+    assert python_nodes("+- FlatMapGroupsInPandas (3)\n") == ["FlatMapGroupsInPandas"]
+    assert python_nodes("Project [PythonUDF(x) AS y#3]\n+- Scan parquet  (1)\n") == []
+
+
+def test_every_plan_matches_golden(spark):
+    """Every registered query's plan block (tools/opt_measure.py
+    ``plan_block``: summaries with and without stage cuts, and the
+    deployed operator tree) equals its block in plans/golden.txt."""
+    from tools.opt_measure import GOLDEN, plan_block
+
+    with open(GOLDEN) as f:
+        golden = {
+            block.split("\n", 1)[0][len("## "):]: block
+            for block in re.split(r"(?m)^(?=## )", f.read())
+            if block.startswith("## ")
+        }
+    missing = sorted(set(QUERIES) - set(golden))
+    unregistered = sorted(set(golden) - set(QUERIES))
+    differ = [
+        name
+        for name in sorted(set(QUERIES) & set(golden))
+        if plan_block(spark, name) != golden[name]
+    ]
+    assert not (differ or missing or unregistered), (
+        f"plans/golden.txt: differing {differ}, "
+        f"missing {missing}, unregistered {unregistered}; regenerate with "
+        "`python tools/opt_measure.py --plans` and review `git diff plans/golden.txt`"
+    )

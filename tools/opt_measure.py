@@ -1,7 +1,8 @@
-"""Per-query measurement harness for the optimization rounds (guide §1).
+"""Per-query measurement harness, and the writer of the plan golden.
 
-For each named query (default: the bench HEADLINE list) this times, at
-$SPARK_GRAFT_SF_DIR (default sf0.1):
+``python tools/opt_measure.py [--reps N] [query ...]`` times each named
+query (default: the bench HEADLINE list) at $SPARK_GRAFT_SF_DIR (default
+sf0.1):
 
 - ``toPandas`` reps — the bench methodology, so numbers here are
   directly comparable to bench.py medians; and
@@ -11,19 +12,12 @@ $SPARK_GRAFT_SF_DIR (default sf0.1):
   state it is 0; anything else means the query's generated classes do
   not stay in Spark's codegen cache between executions.
 
-and (with ``--plans TAG``) writes ``plans/r14/<query>_<TAG>.txt`` with
-the ``explain("formatted")`` output plus a one-line plan-shape summary
-(Exchange count, join strategies, Python-eval nodes) so plan claims in
-OPTIMIZATION_r14.md are checkable, and ``plans/r14/<query>_<TAG>.tree.txt``
-with that summary and the operator tree alone (``plan_tree``). The
-formatted details are not stable between two sessions running the same
-code (expression ids, ``plan_id``s, the checkout path in file scans, the
-order of ``Expand`` projections), so compare two runs with the tree
-files: ``diff <(cd a && tail -n +2 ...)`` of the ``.tree.txt`` files
-shows only real plan changes.
-
-Usage:
-  python tools/opt_measure.py [--reps N] [--plans before|after] [query ...]
+``python tools/opt_measure.py --plans`` times nothing. It rewrites
+``plans/golden.txt``: one ``plan_block`` per registered query at sf0.001,
+sorted by name. ``tests/test_plans.py::test_every_plan_matches_golden``
+builds the same blocks and fails on any difference, so a change that
+moves a plan regenerates the file, and ``git diff plans/golden.txt``
+shows what moved.
 """
 
 from __future__ import annotations
@@ -34,9 +28,13 @@ import re
 import statistics
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-from ooh_etl_spark.plans.audit import shuffle_count  # noqa: E402
+from ooh_etl_spark.plans.audit import physical_plan, python_nodes, shuffle_count  # noqa: E402
+
+GOLDEN = os.path.join(ROOT, "plans", "golden.txt")
+GOLDEN_SF_DIR = "/root/testdata/sf0.001"
 
 
 def plan_summary(plan: str) -> str:
@@ -50,9 +48,7 @@ def plan_summary(plan: str) -> str:
             )
         )
     )
-    py = sorted(
-        set(re.findall(r"(BatchEvalPython|ArrowEvalPython|MapInArrow|MapInPandas|FlatMapGroupsInPandas)", plan))
-    )
+    py = python_nodes(plan)
     scans = plan.count("Scan parquet")
     return (
         f"shuffle_exchanges={ex} parquet_scans={scans} "
@@ -65,30 +61,73 @@ def plan_tree(plan: str) -> str:
     included) with node numbers, expression ids, ``plan_id``s, other
     numbers and the checkout path stripped: what stays the same between
     two sessions that build the same plan."""
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     lines = []
     for line in plan.splitlines():
         if not re.fullmatch(r"[\s:+\-|*]*[A-Za-z][\w .]*\(\d+\)", line):
             continue
-        line = line.replace(root, "<checkout>")
+        line = line.replace(ROOT, "<checkout>")
         line = re.sub(r"#\d+L?|plan_id=\d+|\s*\(\d+\)$", "", line)
         lines.append(re.sub(r"\d+", "N", line).rstrip())
     return "\n".join(lines) + "\n"
 
 
+def plan_block(spark, name: str) -> str:
+    """The golden block of registered query ``name`` at sf0.001:
+
+    - ``## <name>``;
+    - ``deployed:`` the ``plan_summary`` of the plan the query returns,
+      and ``lambda=1`` when that plan runs a ``lambdafunction``;
+    - ``lineage:`` the same for the query built under
+      ``stages.full_lineage()``, whose plan reaches the scans that a
+      materialised stage hides from the deployed plan;
+    - the deployed ``plan_tree``.
+    """
+    from ooh_etl_spark.queries import QUERIES
+    from ooh_etl_spark.stages import full_lineage
+
+    fn = QUERIES[name].fn
+    deployed = physical_plan(fn(spark, GOLDEN_SF_DIR))
+    with full_lineage():
+        lineage = physical_plan(fn(spark, GOLDEN_SF_DIR))
+
+    def line(plan: str) -> str:
+        return f"{plan_summary(plan)} lambda={int('lambdafunction' in plan)}"
+
+    return (
+        f"## {name}\ndeployed: {line(deployed)}\nlineage: {line(lineage)}\n"
+        f"{plan_tree(deployed)}"
+    )
+
+
+def write_golden() -> None:
+    from ooh_etl_spark.queries import QUERIES
+    from ooh_etl_spark.session import get_spark
+
+    spark = get_spark("opt_measure")
+    blocks = [plan_block(spark, name) for name in sorted(QUERIES)]
+    with open(GOLDEN, "w") as f:
+        f.write(
+            "# Plan golden: one block per registered query at sf0.001.\n"
+            "# Regenerate with `python tools/opt_measure.py --plans`.\n"
+        )
+        f.writelines(blocks)
+    print(f"wrote {os.path.relpath(GOLDEN, ROOT)}: {len(blocks)} queries")
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     args = sys.argv[1:]
+    if "--plans" in args:
+        if args != ["--plans"]:
+            sys.exit("--plans takes no other argument")
+        write_golden()
+        return
     reps = 5
-    plans_tag = None
     names: list[str] = []
     i = 0
     while i < len(args):
         if args[i] == "--reps":
             reps = int(args[i + 1])
-            i += 2
-        elif args[i] == "--plans":
-            plans_tag = args[i + 1]
             i += 2
         else:
             names.append(args[i])
@@ -96,7 +135,6 @@ def main() -> None:
 
     from bench import HEADLINE, spread, time_reps
 
-    from ooh_etl_spark.plans.audit import physical_plan
     from ooh_etl_spark.queries import get_queries
     from ooh_etl_spark.session import codegen_compilations, get_spark
 
@@ -106,26 +144,10 @@ def main() -> None:
     spark = get_spark("opt_measure")
     spark.range(1).count()
 
-    plans_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r14"
-    )
-    if plans_tag:
-        os.makedirs(plans_dir, exist_ok=True)
-
     out: dict[str, dict] = {}
     for name in names:
         fn = qs[name]
-        if plans_tag:
-            plan = physical_plan(fn(spark, sf_dir))
-            path = os.path.join(plans_dir, f"{name}_{plans_tag}.txt")
-            with open(path, "w") as f:
-                f.write(f"# {name} @ {sf_dir} — {plan_summary(plan)}\n\n")
-                f.write(plan)
-            with open(path[: -len(".txt")] + ".tree.txt", "w") as f:
-                f.write(f"# {plan_summary(plan)}\n{plan_tree(plan)}")
-        if reps == 0:
-            print(f"{name}: plan dumped", flush=True)
-            continue
+
         def to_pandas(d: str):
             return fn(spark, d).toPandas()
 
